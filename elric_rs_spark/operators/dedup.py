@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from elric_rs_spark.buildlog import session_memo
 from elric_rs_spark.registry import query
 from elric_rs_spark.tables import load_table
 from elric_rs_spark.functions.hashing import (
@@ -111,23 +112,13 @@ def q_text_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q_dedup_minhash, and the query is also CONSTRUCTED by two label-memo
 # consumers (q_dedup_clusters, curation_full) — without a memo the
 # eager gram pin below would re-run the corpus pass per construction.
-# Same discipline as _PMH_PAIR_CACHE: keyed on (applicationId, sf_dir),
-# built from parquet inputs inside the first consumer's timed region.
-_KERNEL_GRAMS_CACHE: dict[tuple[str, str], DataFrame] = {}
-_KERNEL_GRAMS_BUILDS = 0
-
-
+# Built through buildlog.session_memo inside the first consumer's timed
+# region.
 def _kernel_grams_for(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized (doc_id, g) hashed-gram table for the xxhash64 MinHash
     kernel family, pinned DISK_ONLY once per (session, sf_dir)."""
-    global _KERNEL_GRAMS_BUILDS
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _KERNEL_GRAMS_CACHE.get(key)
-    if cached is not None:
-        return cached
-    from elric_rs_spark import buildlog
 
-    with buildlog.timed("kernel_grams"):
+    def build() -> DataFrame:
         # Repartition before the CPU-heavy hash pipeline: a compact
         # parquet scan yields few input splits, which would serialize
         # the per-token hashing on one core; at cluster scale this
@@ -136,7 +127,7 @@ def _kernel_grams_for(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark.sparkContext.defaultParallelism, "doc_id"
         )
         hashed = d.select("doc_id", _token_hashes(F.col("text")).alias("th"))
-        grams = (
+        return (
             hashed.select(
                 "doc_id",
                 F.array_distinct(
@@ -146,9 +137,8 @@ def _kernel_grams_for(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.size("g") > 0)
             .localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
         )
-    _KERNEL_GRAMS_CACHE[key] = grams
-    _KERNEL_GRAMS_BUILDS += 1
-    return grams
+
+    return session_memo(spark, sf_dir, "kernel_grams", build)
 
 
 @query("q_dedup_minhash")  # rows-only: hash family not reproducible in SQL oracle
@@ -1058,21 +1048,14 @@ _PORTABLE_PAIR_CTES = _portable_pair_ctes()
 # pair-sized) result, memoize. The gram/signature stages (the dominant
 # cost) run exactly once per session; the checkpoint materializes only
 # verified pairs, never the corpus-sized gram arrays.
-# _PMH_PAIR_BUILDS is the test-visible build counter (tests/test_plans.py
-# proves one build serves all three consumers).
-_PMH_PAIR_CACHE: dict[tuple[str, str], DataFrame] = {}
-_PMH_PAIR_BUILDS = 0
 
 # Session-scoped memo of connected-components LABEL tables (r11): the
 # star-contraction loop is DRIVER-ITERATIVE — each round is 2+ eager
 # jobs (checkpoint + signature collect), ~2 s of fixed overhead per
 # consumer at any scale — and five queries run it over one of exactly
 # two edge sets (the memoized portable pairs; the xxhash kernel pairs).
-# Same discipline as _PMH_PAIR_CACHE: keyed on (applicationId, sf_dir),
-# built from parquet inputs inside the first consumer's timed region,
-# pair-bounded rows pinned via localCheckpoint.
-_CC_LABEL_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-_CC_LABEL_BUILDS = 0
+# Built inside the first consumer's timed region, pair-bounded rows
+# pinned via localCheckpoint.
 
 
 def labels_for(
@@ -1083,18 +1066,12 @@ def labels_for(
     'kernel' = q_dedup_minhash's). Callers must pass the SAME logical
     edge set for a given (sf_dir, kind) — the memo key asserts identity
     by construction site, not by plan comparison."""
-    global _CC_LABEL_BUILDS
-    key = (spark.sparkContext.applicationId, sf_dir, kind)
-    cached = _CC_LABEL_CACHE.get(key)
-    if cached is not None:
-        return cached
-    from elric_rs_spark import buildlog
-
-    with buildlog.timed(f"cc_labels_{kind}"):
-        labels = connected_components(edges).localCheckpoint()
-    _CC_LABEL_CACHE[key] = labels
-    _CC_LABEL_BUILDS += 1
-    return labels
+    return session_memo(
+        spark,
+        sf_dir,
+        f"cc_labels_{kind}",
+        lambda: connected_components(edges).localCheckpoint(),
+    )
 
 
 def portable_pairs_for(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1103,21 +1080,14 @@ def portable_pairs_for(spark: SparkSession, sf_dir: str) -> DataFrame:
     curation cascades canNOT share this: they run the banding on a
     filtered survivor set (composition order matters), so they call
     portable_pairs on their own grams."""
-    global _PMH_PAIR_BUILDS
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _PMH_PAIR_CACHE.get(key)
-    if cached is not None:
-        return cached
-    from elric_rs_spark import buildlog
 
-    with buildlog.timed("portable_pairs"):
+    def build() -> DataFrame:
         d = load_table(spark, sf_dir, "documents")
         grams_arr = F.array_distinct(_word_ngrams(F.col("text"), 3))
         grams = d.select("doc_id", grams_arr.alias("g")).filter(F.size("g") > 0)
-        pairs = portable_pairs(spark, grams).localCheckpoint()
-    _PMH_PAIR_CACHE[key] = pairs
-    _PMH_PAIR_BUILDS += 1
-    return pairs
+        return portable_pairs(spark, grams).localCheckpoint()
+
+    return session_memo(spark, sf_dir, "portable_pairs", build)
 
 
 @query(

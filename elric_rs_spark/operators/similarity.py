@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from elric_rs_spark.buildlog import session_memo
 from elric_rs_spark.registry import query
 from elric_rs_spark.tables import load_table
 from elric_rs_spark.functions.vector import (
@@ -1279,28 +1280,18 @@ def _pivf_anchors(spark: SparkSession) -> DataFrame:
 # (VERDICT r05 #4) had. Same cure: build once per (session, sf_dir),
 # localCheckpoint the (n_vecs x cells)-row result, memoize. The
 # production analogue is a stored assignment table written next to the
-# IVF index. _PIVF_CELLDOTS_BUILDS is the test-visible build counter
-# (tests/test_plans.py proves one build serves all three consumers).
-_PIVF_CELLDOTS_CACHE: dict[tuple[str, str], DataFrame] = {}
-_PIVF_CELLDOTS_BUILDS = 0
+# IVF index.
 
 
 def pivf_celldots_for(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized (vec_id, c, dot) coarse-assignment table over the full
     embeddings corpus, built once per (session, sf_dir)."""
-    global _PIVF_CELLDOTS_BUILDS
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _PIVF_CELLDOTS_CACHE.get(key)
-    if cached is not None:
-        return cached
-    from elric_rs_spark import buildlog
 
-    with buildlog.timed("pivf_celldots"):
+    def build() -> DataFrame:
         e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-        out = _pivf_celldots(spark, _micro_comp(e)).localCheckpoint()
-    _PIVF_CELLDOTS_CACHE[key] = out
-    _PIVF_CELLDOTS_BUILDS += 1
-    return out
+        return _pivf_celldots(spark, _micro_comp(e)).localCheckpoint()
+
+    return session_memo(spark, sf_dir, "pivf_celldots", build)
 
 
 def _pivf_celldots(spark: SparkSession, comp: DataFrame) -> DataFrame:

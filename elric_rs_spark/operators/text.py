@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from elric_rs_spark.buildlog import session_memo
 from elric_rs_spark.functions.hashing import word_ngrams as _word_ngrams
 from elric_rs_spark.registry import query
 from elric_rs_spark.tables import load_table
@@ -1180,9 +1181,8 @@ sel AS (SELECT DISTINCT doc_id, fp FROM mins WHERE wn = {WINNOW_W})"""
 # full chain (posexplode -> md5/conv gram hash -> two doc-keyed window
 # passes -> distinct), and Catalyst additionally recomputes it per plan
 # branch on top — 4 documents scans in q_winnow_fingerprint's before
-# plan, 8 in q_dedup_winnow's (plans/r11/*_{before,after}.txt). Same
-# discipline as dedup._PMH_PAIR_CACHE: keyed on (applicationId, sf_dir),
-# built from parquet inputs inside the FIRST consumer's timed region;
+# plan, 8 in q_dedup_winnow's (plans/r11/*_{before,after}.txt). Built
+# through buildlog.session_memo inside the FIRST consumer's timed region;
 # the pinned rows are the selected-fingerprint set (~2/(w+1) of gram
 # rows — the winnowing density bound), DISK_ONLY so corpus-proportional
 # rows never hold deserialized JVM heap. n_grams is deliberately NOT
@@ -1194,8 +1194,6 @@ sel AS (SELECT DISTINCT doc_id, fp FROM mins WHERE wn = {WINNOW_W})"""
 # Production shape: a stored fingerprint/posting table every overlap
 # job scans — written once, read by each consumer; this memo is that
 # table, session-scoped.
-_WINNOW_SEL_CACHE: dict[tuple[str, str], DataFrame] = {}
-_WINNOW_SEL_BUILDS = 0
 
 
 def winnow_sel_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1242,20 +1240,14 @@ def winnow_sel_for(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized (doc_id, fp) winnowing table, built once per
     (session, sf_dir) and shared by q_winnow_fingerprint and
     q_dedup_winnow."""
-    global _WINNOW_SEL_BUILDS
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _WINNOW_SEL_CACHE.get(key)
-    if cached is not None:
-        return cached
-    from elric_rs_spark import buildlog
-
-    with buildlog.timed("winnow_sel"):
-        pinned = winnow_sel_plan(spark, sf_dir).localCheckpoint(
+    return session_memo(
+        spark,
+        sf_dir,
+        "winnow_sel",
+        lambda: winnow_sel_plan(spark, sf_dir).localCheckpoint(
             eager=True, storageLevel=StorageLevel.DISK_ONLY
-        )
-    _WINNOW_SEL_CACHE[key] = pinned
-    _WINNOW_SEL_BUILDS += 1
-    return pinned
+        ),
+    )
 
 
 @query(

@@ -46,10 +46,12 @@ def dir_parquet_bytes(sf_dir: str) -> int:
                 # Spark-written dataset: foo.parquet/ is a DIRECTORY and
                 # getsize would return the ~4KB inode size, silently
                 # disengaging the spill fix — sum the part files instead
+                # (not the _SUCCESS / .crc sidecars)
                 total += sum(
                     os.path.getsize(os.path.join(root, name))
                     for root, _, names in os.walk(p)
                     for name in names
+                    if name.endswith(".parquet")
                 )
             else:
                 total += os.path.getsize(p)

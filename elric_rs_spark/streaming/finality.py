@@ -15,8 +15,7 @@ Two implementations:
    foreachBatch (single-consumer, exactly the reference's topology) and
    unit-tested against the reference's own three loader tests.
 2. `apply_finality_stateful` — the distributed form via
-   `transformWithStateInPandas`-style `applyInPandasWithState`, keyed by
-   stream id, state = the buffered blocks. Scales to many independent
+   `applyInPandasWithState`, keyed by stream id, state = the buffered blocks. Scales to many independent
    streams; each stream's buffer is tiny (<=12 rows) so state stays small
    no matter the data volume.
 """
@@ -84,7 +83,7 @@ FINALITY_STATE_SCHEMA = (
 
 
 def _replay_pdf(buf: FinalityBuffer, pdf, stream_id: str) -> list[tuple]:
-    """Shared kernel: replay one pandas frame of messages through the
+    """Slow-path kernel: replay one pandas frame of messages through the
     buffer, returning flushed output tuples.
 
     Arrival order, not block order: block numbers repeat in the reorg
@@ -279,87 +278,3 @@ def apply_finality_stateful(block_df):
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
-
-# ---------------------------------------------------------------------------
-# transformWithStateInPandas form (Spark 4's successor API): typed
-# ListState instead of one packed state tuple, same replay kernel.
-# Runtime requirements: the RocksDB state store provider
-# (spark.sql.streaming.stateStore.providerClass=...RocksDBStateStoreProvider)
-# AND the python `protobuf` package — TWS's state-server protocol itself
-# speaks protobuf (verified: absent protobuf fails the driver worker with
-# "cannot import google.protobuf.descriptor"). This container has no
-# protobuf, so the TWS form is tested where available and the
-# applyInPandasWithState form (above) remains the default everywhere.
-# ---------------------------------------------------------------------------
-
-_TWS_STATE_SCHEMA = (
-    "block_num long, block_id string, cursor string, "
-    "final_height long, payload string"
-)
-
-
-try:
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-except ImportError:  # pragma: no cover - pre-4.0 PySpark
-    # The TWS API is optional; its absence must not take down the
-    # applyInPandasWithState form or FinalityBuffer (apply_finality_tws
-    # itself will fail loudly at call time).
-    class StatefulProcessor:  # type: ignore[no-redef]
-        pass
-
-    StatefulProcessorHandle = object  # type: ignore[assignment]
-
-
-class FinalityProcessor(StatefulProcessor):
-    """T7/T8 on transformWithStateInPandas: the buffered blocks live in a
-    typed ListState (one row per buffered block) instead of
-    applyInPandasWithState's single packed tuple — clearer state evolution
-    and per-element append semantics at scale. Module-level class: the TWS
-    driver worker pickles the processor instance."""
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._buf = handle.getListState("buffer", _TWS_STATE_SCHEMA)
-
-    def handleInputRows(self, key, rows, timerValues):
-        import pandas as pd
-
-        (stream_id,) = key
-        buf = FinalityBuffer(
-            buffer=[Block(*t) for t in self._buf.get()]
-            if self._buf.exists()
-            else []
-        )
-        out_rows: list[tuple] = []
-        for pdf in rows:
-            out_rows.extend(_replay_pdf(buf, pdf, stream_id))
-        if buf.buffer:
-            self._buf.put(
-                [
-                    (b.block_num, b.block_id, b.cursor, b.final_block_height,
-                     b.payload)
-                    for b in buf.buffer
-                ]
-            )
-        else:
-            # put([]) is rejected by the state store
-            # (ILLEGAL_STATE_STORE_VALUE.EMPTY_LIST_VALUE); a drained
-            # buffer — everything flushed or undone — must clear() instead
-            self._buf.clear()
-        yield pd.DataFrame(out_rows, columns=_OUTPUT_COLS)
-
-    def close(self) -> None:
-        pass
-
-
-def apply_finality_tws(block_df):
-    """transformWithStateInPandas form of apply_finality_stateful — same
-    input/output contract, state in a typed ListState."""
-    return block_df.groupBy("stream_id").transformWithStateInPandas(
-        statefulProcessor=FinalityProcessor(),
-        outputStructType=FINALITY_OUTPUT_SCHEMA,
-        outputMode="Append",
-        timeMode="None",
-    )

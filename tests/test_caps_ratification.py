@@ -92,8 +92,8 @@ class TestBuildlogAttribution:
         from elric_rs_spark.operators import aggregates
 
         sf_dir = GRADED_SF_DIRS[0]
-        key = (spark.sparkContext.applicationId, sf_dir)
-        aggregates._KMV_SKETCH_CACHE.pop(key, None)
+        key = (spark.sparkContext.applicationId, sf_dir, "kmv_flag_sketch")
+        buildlog.MEMO.pop(key, None)
         n0 = len(buildlog.BUILDS)
         aggregates.kmv_flag_sketch_for(spark, sf_dir)
         assert len(buildlog.BUILDS) == n0 + 1

@@ -409,67 +409,97 @@ class TestCurationRound4Plans:
         assert "CartesianProduct" not in plan
         assert "BroadcastNestedLoopJoin" not in plan
 
-    def test_graph_quartet_single_edge_build(self, spark):
-        """The co-purchase edge table is the quartet's dominant cost and
-        must materialize ONCE per (session, sf_dir) — each graph query
-        reads the shared localCheckpoint-ed fixture instead of re-running
-        the per-order supplier self-join (VERDICT r04 next-round #3; the
-        production shape is an explicit edge table every job scans)."""
-        from elric_rs_spark.operators import graph
 
-        key = (spark.sparkContext.applicationId, SF_DIR)
-        graph._COPURCHASE_CACHE.pop(key, None)
-        before = graph._COPURCHASE_BUILDS
-        for name in ("q_pagerank", "q_graph_triangles", "q_graph_labelprop"):
-            QUERIES[name](spark, SF_DIR).collect()
-        assert graph._COPURCHASE_BUILDS == before + 1
-        # and the checkpointed fixture's lineage is shuffle-free for
-        # consumers: a strong-tie scan over it plans zero lineitem reads
+# Each session memo (buildlog.session_memo) and the queries that share it.
+# One build must serve every consumer per (session, sf_dir): the shared
+# stage is each family's dominant cost, and before the memos every
+# consumer (and often every plan branch) re-ran it.
+MEMO_CONSUMERS = {
+    "copurchase_edges": ("q_pagerank", "q_graph_triangles", "q_graph_labelprop"),
+    "portable_pairs": (
+        "q_dedup_minhash_portable",
+        "q_dedup_clusters_portable",
+        "q_dedup_cross_source",
+    ),
+    "pivf_celldots": ("q_sim_ivf_portable", "q_sim_ivf_curve", "q_sim_ivfpq"),
+    "kmv_flag_sketch": (
+        "q_agg_approx_portable",
+        "q_sketch_union",
+        "q_sketch_intersect",
+    ),
+    "kernel_grams": ("q_dedup_minhash", "q_dedup_clusters"),
+    "winnow_sel": ("q_winnow_fingerprint", "q_dedup_winnow"),
+    "cc_labels_portable": ("q_dedup_clusters_portable", "q_split_leakage_safe"),
+    "cc_labels_kernel": ("q_dedup_clusters", "q_curation_full"),
+}
+
+
+@pytest.mark.parametrize("memo", sorted(MEMO_CONSUMERS))
+def test_session_memo_single_build(spark, memo):
+    from elric_rs_spark import buildlog
+
+    buildlog.MEMO.pop((spark.sparkContext.applicationId, SF_DIR, memo), None)
+    n0 = len(buildlog.BUILDS)
+    for name in MEMO_CONSUMERS[memo]:
+        QUERIES[name](spark, SF_DIR).collect()
+    assert [b["name"] for b in buildlog.BUILDS[n0:]].count(memo) == 1
+    # consumers read the pinned table, not the stage that built it: no
+    # lineitem scan behind the edge table, no md5 signature pipeline
+    # behind the pair set
+    if memo == "copurchase_edges":
         plan = physical_plan(QUERIES["q_graph_triangles"](spark, SF_DIR))
         assert "lineitem" not in plan, plan
-
-    def test_portable_pair_single_build(self, spark):
-        """The full-corpus verified MinHash pair set is shared: the
-        minhash twin, the cluster extraction, and the cross-source
-        leakage audit must trigger exactly ONE gram/signature/verify
-        build per (session, sf_dir) (VERDICT r05 next-round #4 — the
-        graph-quartet treatment applied to the dedup family). The
-        curation cascades are deliberately NOT consumers: they band a
-        filtered survivor set, so composition order forces a fresh
-        build on their own grams."""
-        from elric_rs_spark.operators import dedup
-
-        key = (spark.sparkContext.applicationId, SF_DIR)
-        dedup._PMH_PAIR_CACHE.pop(key, None)
-        before = dedup._PMH_PAIR_BUILDS
-        for name in (
-            "q_dedup_minhash_portable",
-            "q_dedup_clusters_portable",
-            "q_dedup_cross_source",
-        ):
-            QUERIES[name](spark, SF_DIR).collect()
-        assert dedup._PMH_PAIR_BUILDS == before + 1
-        # the memoized pair set is checkpointed: consumers' plans must
-        # not re-run the signature pipeline (no md5 over gram text in
-        # the minhash twin's lineage after the first build)
+    if memo == "portable_pairs":
         plan = physical_plan(QUERIES["q_dedup_minhash_portable"](spark, SF_DIR))
         assert "md5" not in plan.lower(), plan
 
-    def test_ivf_celldots_single_build(self, spark):
-        """The IVF coarse-assignment table (vec x cell exact dots) is
-        shared: the portable IVF search, the nprobe curve, and the
-        IVF-PQ combined search must trigger exactly ONE anchors-join
-        aggregate per (session, sf_dir) — the graph-quartet/pair-build
-        treatment applied to the similarity family. Production shape:
-        a stored assignment table written next to the IVF index."""
-        from elric_rs_spark.operators import similarity
 
-        key = (spark.sparkContext.applicationId, SF_DIR)
-        similarity._PIVF_CELLDOTS_CACHE.pop(key, None)
-        before = similarity._PIVF_CELLDOTS_BUILDS
-        for name in ("q_sim_ivf_portable", "q_sim_ivf_curve", "q_sim_ivfpq"):
-            QUERIES[name](spark, SF_DIR).collect()
-        assert similarity._PIVF_CELLDOTS_BUILDS == before + 1
+# Runs in its own driver: one JVM holds one SparkContext, and stopping
+# the shared test session would strand every later test.
+_MEMO_LIFETIME_SCRIPT = """
+import os, sys
+from elric_rs_spark import buildlog
+from elric_rs_spark.operators import graph
+from elric_rs_spark.session import get_spark
+
+sf = sys.argv[1]
+first_spark = get_spark("memo_lifetime_1", cpus="2")
+first = graph.copurchase_raw(first_spark, sf)
+table_dir = os.path.dirname(first.inputFiles()[0].removeprefix("file://"))
+assert os.path.isdir(table_dir), table_dir
+first_spark.stop()
+assert not os.path.exists(table_dir), table_dir
+second_spark = get_spark("memo_lifetime_2", cpus="2")
+second = graph.copurchase_raw(second_spark, sf)
+assert second is not first
+assert [b["name"] for b in buildlog.BUILDS] == ["copurchase_edges"] * 2
+assert {k[0] for k in buildlog.MEMO} == {second_spark.sparkContext.applicationId}
+assert second.count() > 0
+second_spark.stop()
+"""
+
+
+def test_session_memo_dies_with_its_session():
+    """The co-purchase table is deleted by spark.stop(), and a new
+    session rebuilds instead of reusing the dead session's DataFrame."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g")
+    env["PYTHONPATH"] = os.pathsep.join(
+        p for p in (root, env.get("PYTHONPATH", "")) if p
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", _MEMO_LIFETIME_SCRIPT, SF_DIR],
+        cwd=root,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
 
 
 class TestKmvTwoLevelPlan:
@@ -487,7 +517,7 @@ class TestKmvTwoLevelPlan:
         # r11: the build is shared via aggregates.kmv_flag_sketch_for
         # (one salted corpus pass per session — the celldots/pair-build
         # treatment), so the salted-shape invariants are asserted on
-        # the BUILD plan itself; test_kmv_sketch_single_build below
+        # the BUILD plan itself; test_session_memo_single_build above
         # pins that every family member consumes that one build.
         from elric_rs_spark.operators import aggregates
 
@@ -560,57 +590,6 @@ class TestKmvTwoLevelPlan:
             "WindowGroupLimit" in ln and "kmv_salt" in ln and "Partial" in ln
             for ln in lines
         ), f"{name}: no map-side bottom-K cap before the salted exchange"
-
-    def test_kmv_sketch_single_build(self, spark):
-        """All three KMV consumers share ONE salted corpus pass per
-        (session, sf_dir) — the celldots/pair-build treatment (r11):
-        before the memo, q_sketch_union and q_sketch_intersect each
-        re-ran the md5 + double-sort + WindowGroupLimit corpus build
-        from 2-3 plan branches (up to six corpus passes per suite)."""
-        from elric_rs_spark.operators import aggregates
-
-        key = (spark.sparkContext.applicationId, SF_DIR)
-        aggregates._KMV_SKETCH_CACHE.pop(key, None)
-        before = aggregates._KMV_SKETCH_BUILDS
-        for name in (
-            "q_agg_approx_portable",
-            "q_sketch_union",
-            "q_sketch_intersect",
-        ):
-            QUERIES[name](spark, SF_DIR).collect()
-        assert aggregates._KMV_SKETCH_BUILDS == before + 1
-
-    def test_kernel_grams_single_build(self, spark):
-        """The xxhash64 MinHash kernel's gram table builds ONCE per
-        (session, sf_dir) — q_dedup_minhash reads it from three plan
-        branches and two label-memo consumers (q_dedup_clusters,
-        curation_full) re-construct the query; before the r11 pin the
-        finalized plan materialized the (doc_id, text) shuffle twice
-        and derived the gram pipeline three times per execution."""
-        from elric_rs_spark.operators import dedup
-
-        key = (spark.sparkContext.applicationId, SF_DIR)
-        dedup._KERNEL_GRAMS_CACHE.pop(key, None)
-        before = dedup._KERNEL_GRAMS_BUILDS
-        for name in ("q_dedup_minhash", "q_dedup_clusters"):
-            QUERIES[name](spark, SF_DIR).collect()
-        assert dedup._KERNEL_GRAMS_BUILDS == before + 1
-
-    def test_winnow_sel_single_build(self, spark):
-        """Both winnow consumers share ONE winnowing chain per
-        (session, sf_dir) — the KMV/celldots treatment (r11): before
-        the memo, q_winnow_fingerprint ran the posexplode + md5/conv +
-        double-window chain from 2 plan branches (4 documents scans)
-        and q_dedup_winnow from 3 (8 scans); the chain itself ran
-        twice per suite."""
-        from elric_rs_spark.operators import text
-
-        key = (spark.sparkContext.applicationId, SF_DIR)
-        text._WINNOW_SEL_CACHE.pop(key, None)
-        before = text._WINNOW_SEL_BUILDS
-        for name in ("q_winnow_fingerprint", "q_dedup_winnow"):
-            QUERIES[name](spark, SF_DIR).collect()
-        assert text._WINNOW_SEL_BUILDS == before + 1
 
     def test_winnow_sel_one_exchange_build(self, spark):
         """The combined (doc_id, fp, n_grams) build computes all three
@@ -741,6 +720,7 @@ class TestPagerankFormIdentity:
         from elric_rs_spark.operators import graph
 
         sf = "/root/testdata/sf0.01"
+        monkeypatch.setattr(graph, "PR_WIDE_INPUT_BYTES", 2**63)
         small = sorted(
             map(tuple, QUERIES["q_pagerank"](spark, sf).collect())
         )

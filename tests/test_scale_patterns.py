@@ -3019,6 +3019,18 @@ class TestShufflePartitionsFor:
         got = shuffle_partitions_for(str(tmp_path), cpus=2)
         assert got == max(2, (40 << 20) // _PARQUET_BYTES_PER_PARTITION)
 
+    def test_dataset_sidecars_not_counted(self, tmp_path):
+        from elric_rs_spark.session import dir_parquet_bytes
+
+        d = tmp_path / "t.parquet"
+        d.mkdir()
+        (d / "part-00000.snappy.parquet").write_bytes(b"x" * 1000)
+        (d / ".part-00000.snappy.parquet.crc").write_bytes(b"c" * 16)
+        (d / "_SUCCESS").write_bytes(b"s" * 8)
+        (d / "._SUCCESS.crc").write_bytes(b"c" * 8)
+        (tmp_path / "flat.parquet").write_bytes(b"x" * 24)
+        assert dir_parquet_bytes(str(tmp_path)) == 1024
+
     def test_missing_dir_falls_back_to_cpus(self):
         from elric_rs_spark.session import shuffle_partitions_for
 

@@ -303,54 +303,6 @@ class TestStatefulFinalityStreaming:
         assert ids[6] == "blk-R6" and ids[7] == "blk-R7"
         assert len(rows) == 9  # 0..8 exactly once, reorged ids for 6/7
 
-    def test_transform_with_state_form(self, spark, tmpdir):
-        """apply_finality_tws (Spark 4 transformWithStateInPandas, typed
-        ListState, RocksDB state store) must produce exactly the same
-        finality semantics as the applyInPandasWithState form — including
-        an in-batch undo with same-numbered replacement blocks.
-
-        Skipped without the python protobuf package: TWS's own
-        state-server protocol requires google.protobuf (the driver worker
-        dies in initialization without it — environment constraint, same
-        root cause as the gated .spkg/grpc extras)."""
-        pytest.importorskip("google.protobuf.descriptor")
-        from elric_rs_spark.streaming.finality import apply_finality_tws
-
-        conf_key = "spark.sql.streaming.stateStore.providerClass"
-        prev = spark.conf.get(conf_key, None)
-        spark.conf.set(
-            conf_key,
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
-        try:
-            landing = f"{tmpdir}/landing"
-            msgs = _blocks(spark, 21, reorg_depth=25, undo_at=20, undo_to=15)
-            msgs += _blocks(spark, 40, reorg_depth=5)[21:]
-            land_blocks(spark, msgs, landing)
-            stream = read_block_stream(spark, landing)
-            q = (
-                apply_finality_tws(stream)
-                .writeStream.format("memory")
-                .queryName("fin_tws")
-                .outputMode("append")
-                .option("checkpointLocation", f"{tmpdir}/ckpt")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(120)
-            nums = sorted(
-                r.block_num for r in spark.table("fin_tws").collect()
-            )
-            # undo at 20 back to 15 dropped 16..20 from the buffer; the
-            # final watermark (block 39 -> 34) flushes 0..34 minus those
-            assert nums == [n for n in range(35) if not (15 < n <= 20)]
-        finally:
-            if prev is None:
-                spark.conf.unset(conf_key)
-            else:
-                spark.conf.set(conf_key, prev)
-
     def test_seq_continues_across_process_restart(self, spark, tmpdir):
         """The arrival counter must resume from the max seq already in the
         landing dir after a process restart — a counter restarting at 0
