@@ -10,8 +10,8 @@
 T6 type-string parser (fail-fast on unknown types, like the reference's
 panic), and persists the resulting {table: {column: type}} catalog under
 the sink directory — the stand-in for creating the tables in a live
-ClickHouse (no server in this environment; the parsed-URL options dict is
-exactly what the JDBC writer consumes when one exists, streaming/sink.py).
+ClickHouse (no server in this environment; `run` validates the URL and
+writes the per-table parquet layout, streaming/sink.py).
 
 `run` loads that catalog (the reference reads table_info back from
 ClickHouse at startup, table_info.rs:204-208), optionally decodes the

@@ -44,7 +44,7 @@ def parse_database_url(url: str) -> dict[str, str]:
     and database from URL parts, every query parameter forwarded as a
     per-query option (ref main.rs:244-272)."""
     u = urlparse(url)
-    if u.scheme not in ("clickhouse", "http", "https", "jdbc:clickhouse"):
+    if u.scheme not in ("clickhouse", "http", "https"):
         raise ValueError(f"unsupported database url scheme: {u.scheme!r}")
     opts: dict[str, str] = {
         "host": u.hostname or "localhost",
@@ -58,11 +58,6 @@ def parse_database_url(url: str) -> dict[str, str]:
     for k, v in parse_qsl(u.query):
         opts[k] = v
     return opts
-
-
-def jdbc_url(opts: dict[str, str]) -> str:
-    """Spark-writer form of the parsed options."""
-    return f"jdbc:clickhouse://{opts['host']}:{opts['port']}/{opts['database']}"
 
 
 # ---------------------------------------------------------------------------

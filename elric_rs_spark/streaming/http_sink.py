@@ -1,265 +1,74 @@
-"""ClickHouse HTTP insert sink (SURVEY.md S5's live-wire form).
+"""ClickHouse HTTP writer for the typed per-table sink (SURVEY.md S5's
+live-wire form).
 
 The reference streams typed rows into ClickHouse through the native
 client (ref loader.rs:49-80) and proves the loader against a RECORDING
 mock server, not a live database (ref loader.rs:358-402's `test::Mock`).
-This module is the Spark twin of that wire path, built on ClickHouse's
-public HTTP interface (`POST /?query=INSERT INTO t (cols) FORMAT
-RowBinary`, docs.clickhouse.com/interfaces/http + /interfaces/formats):
+`ClickHouseHttpWriter` is the Spark twin of that wire path, built on
+ClickHouse's public HTTP interface: `POST /?query=INSERT INTO t (cols)
+FORMAT ArrowStream` (docs.clickhouse.com/interfaces/http +
+/interfaces/formats). ArrowStream carries its own schema, so no Spark ->
+ClickHouse type table is kept here: ClickHouse casts each Arrow field to
+the declared column type on insert (decimal128(20,0) -> UInt64, binary
+-> FixedString(8), timestamp[us, UTC] -> DateTime, ...). That cast is
+documented ClickHouse behaviour; the tests run against a recording mock
+(tests/test_sink.py), not a live server.
 
-- `encode_row_binary` / `decode_row_binary`: the public RowBinary
-  framing (little-endian fixed-width numerics, ULEB128-length strings,
-  0x01/0x00-prefixed Nullable) for the types our typed-cast layer
-  produces. Pure stdlib — no driver dependency, so the path is testable
-  in this container (no live ClickHouse, no clickhouse-connect).
-- `ClickHouseHttpInserter`: one INSERT per (table, partition) batch,
-  columns in ALPHABETICAL order — the same order the reference derives
-  from its schema map (ref loader.rs:86-99; our cast.py does the same).
-- `PerTableHttpSink`: the foreachBatch handler — split by table, POST
-  each table's rows, then POST the cursor row LAST (data first, cursor
-  second: a crash can repeat a block but never lose one the cursor
-  claims, ref loader.rs:119-122 / 195-210).
-
-Scale shape: `write_batch` posts per PARTITION via `foreachPartition`
-(each executor ships its own rows; the driver never collects data), so
-insert bandwidth scales with the cluster. The cursor write is a one-row
-driver-side POST after every data partition has acked — the same
-barrier foreachBatch already provides. At 100 TB you'd raise
-`batch_rows` so each POST carries ClickHouse's preferred ~100k-row
-blocks (async_insert absorbs the rest, admin.clickhouse_writer_options).
+`pipeline.TypedPerTableSink` picks this writer for an `http(s)://`
+target. Each append posts once per PARTITION from `mapInArrow` (the
+executors ship their own rows as Arrow batches; no rows are collected)
+and sums the acked row counts as the action. Columns go
+in ALPHABETICAL order, the order the reference derives from its schema
+map (ref loader.rs:86-99). Retries stay with Spark: a failed POST fails
+its task, the task failure fails the append, so the sink raises before
+the cursor append and the restarted query replays the epoch.
 """
 
 from __future__ import annotations
 
-import struct
 import urllib.parse
 import urllib.request
-from dataclasses import dataclass, field
-from datetime import date, datetime, timezone
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# Spark type name (df.schema[col].dataType.simpleString()) -> ClickHouse
-# type used in the INSERT framing. The subset the typed-cast layer
-# (types.py) emits toward the sink; extend both codec branches together.
-SPARK_TO_CLICKHOUSE = {
-    "tinyint": "Int8",
-    "smallint": "Int16",
-    "int": "Int32",
-    "bigint": "Int64",
-    "float": "Float32",
-    "double": "Float64",
-    "string": "String",
-    "date": "Date32",
-    "timestamp": "DateTime64(6)",
-    "boolean": "UInt8",
-}
-
-_EPOCH_DATE = date(1970, 1, 1)
+# the reference's end timeout (ref loader.rs:57); read when the POST
+# closure is built, before it ships to the executors
+TIMEOUT_S = 20.0
 
 
-def _write_uleb128(n: int, out: bytearray) -> None:
-    while True:
-        b = n & 0x7F
-        n >>= 7
-        if n:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return
+class ClickHouseHttpWriter:
+    """Append DataFrames to ClickHouse tables over HTTP as ArrowStream."""
 
+    def __init__(self, endpoint: str):
+        self.endpoint = endpoint.rstrip("/")  # e.g. http://host:8123
 
-def _read_uleb128(buf: bytes, pos: int) -> tuple[int, int]:
-    shift = n = 0
-    while True:
-        b = buf[pos]
-        pos += 1
-        n |= (b & 0x7F) << shift
-        if not (b & 0x80):
-            return n, pos
-        shift += 7
-
-
-_NUM_FMT = {
-    "Int8": "<b", "Int16": "<h", "Int32": "<i", "Int64": "<q",
-    "UInt8": "<B", "Float32": "<f", "Float64": "<d",
-}
-
-
-def _encode_value(v, ch_type: str, out: bytearray) -> None:
-    if ch_type in _NUM_FMT:
-        out += struct.pack(_NUM_FMT[ch_type], v)
-    elif ch_type == "String":
-        raw = v.encode("utf-8") if isinstance(v, str) else bytes(v)
-        _write_uleb128(len(raw), out)
-        out += raw
-    elif ch_type == "Date32":
-        out += struct.pack("<i", (v - _EPOCH_DATE).days)
-    elif ch_type == "DateTime64(6)":
-        if v.tzinfo is None:
-            v = v.replace(tzinfo=timezone.utc)
-        # whole seconds + separate microsecond field: no float round-trip
-        micros = int(v.timestamp()) * 1_000_000 + v.microsecond
-        out += struct.pack("<q", micros)
-    else:
-        raise ValueError(f"unsupported ClickHouse type for RowBinary: {ch_type}")
-
-
-def _decode_value(buf: bytes, pos: int, ch_type: str):
-    if ch_type in _NUM_FMT:
-        fmt = _NUM_FMT[ch_type]
-        size = struct.calcsize(fmt)
-        return struct.unpack_from(fmt, buf, pos)[0], pos + size
-    if ch_type == "String":
-        n, pos = _read_uleb128(buf, pos)
-        return buf[pos : pos + n].decode("utf-8"), pos + n
-    if ch_type == "Date32":
-        days = struct.unpack_from("<i", buf, pos)[0]
-        return date.fromordinal(_EPOCH_DATE.toordinal() + days), pos + 4
-    if ch_type == "DateTime64(6)":
-        micros = struct.unpack_from("<q", buf, pos)[0]
-        return (
-            datetime.fromtimestamp(micros / 1_000_000, tz=timezone.utc)
-            .replace(tzinfo=None),
-            pos + 8,
-        )
-    raise ValueError(f"unsupported ClickHouse type for RowBinary: {ch_type}")
-
-
-def encode_row_binary(rows, ch_types: list[str], nullable: list[bool]) -> bytes:
-    """RowBinary-encode `rows` (iterable of sequences, column order
-    matching `ch_types`). Nullable columns carry the public 0x01-is-NULL
-    prefix byte."""
-    out = bytearray()
-    for row in rows:
-        for v, t, nl in zip(row, ch_types, nullable):
-            if nl:
-                if v is None:
-                    out.append(1)
-                    continue
-                out.append(0)
-            elif v is None:
-                raise ValueError("NULL in non-Nullable RowBinary column")
-            _encode_value(v, t, out)
-    return bytes(out)
-
-
-def decode_row_binary(body: bytes, ch_types: list[str], nullable: list[bool]):
-    """Inverse of encode_row_binary — the recording mock server uses it
-    to assert typed round-trips (the reference's Mock handler records
-    raw blocks the same way, ref loader.rs:393-396)."""
-    rows, pos = [], 0
-    while pos < len(body):
-        row = []
-        for t, nl in zip(ch_types, nullable):
-            if nl:
-                flag = body[pos]
-                pos += 1
-                if flag:
-                    row.append(None)
-                    continue
-            v, pos = _decode_value(body, pos, t)
-            row.append(v)
-        rows.append(tuple(row))
-    return rows
-
-
-def insert_statement(table: str, cols: list[str], ch_types: list[str],
-                     nullable: list[bool]) -> str:
-    """`INSERT INTO t (a, b) FORMAT RowBinary` with columns in the order
-    given — callers pass ALPHABETICAL order (T5's contract)."""
-    del ch_types, nullable  # RowBinary carries no inline types
-    return f"INSERT INTO {table} ({', '.join(cols)}) FORMAT RowBinary"
-
-
-@dataclass
-class ClickHouseHttpInserter:
-    """POST RowBinary blocks to a ClickHouse HTTP endpoint. One instance
-    per target table; picklable (stdlib state only) so foreachPartition
-    can ship it to executors."""
-
-    endpoint: str  # e.g. http://host:8123
-    table: str
-    cols: list[str]
-    ch_types: list[str]
-    nullable: list[bool]
-    timeout_s: float = 30.0
-
-    def insert(self, rows) -> None:
-        body = encode_row_binary(rows, self.ch_types, self.nullable)
-        if not body:
-            return
-        stmt = insert_statement(self.table, self.cols, self.ch_types, self.nullable)
+    def append(self, df: DataFrame, table: str) -> int:
+        """INSERT `df` into `table`; returns the rows ClickHouse acked."""
+        cols = sorted(df.columns)
+        stmt = f"INSERT INTO {table} ({', '.join(cols)}) FORMAT ArrowStream"
         url = f"{self.endpoint}/?query={urllib.parse.quote(stmt)}"
-        req = urllib.request.Request(url, data=body, method="POST")
-        req.add_header("Content-Type", "application/octet-stream")
-        with urllib.request.urlopen(req, timeout=self.timeout_s) as resp:
-            resp.read()
+        timeout = TIMEOUT_S
 
+        def _post(batches):
+            batches = [b for b in batches if b.num_rows]
+            if not batches:  # empty partition: nothing to insert
+                return
+            out = pa.BufferOutputStream()
+            with pa.ipc.new_stream(out, batches[0].schema) as w:
+                for b in batches:
+                    w.write_batch(b)
+            req = urllib.request.Request(url, data=out.getvalue().to_pybytes(),
+                                         method="POST")
+            req.add_header("Content-Type", "application/octet-stream")
+            with urllib.request.urlopen(req, timeout=timeout) as resp:
+                resp.read()
+            n = sum(b.num_rows for b in batches)
+            yield pa.RecordBatch.from_pydict({"rows": [n]})
 
-def _typed_plan(df: DataFrame, drop: tuple[str, ...]) -> tuple[list[str], list[str], list[bool]]:
-    """(cols, ch_types, nullable) for a DataFrame, columns alphabetical."""
-    cols = sorted(c for c in df.columns if c not in drop)
-    ch_types, nullable = [], []
-    for c in cols:
-        fieldt = df.schema[c]
-        simple = fieldt.dataType.simpleString()
-        if simple not in SPARK_TO_CLICKHOUSE:
-            raise ValueError(f"no ClickHouse mapping for column {c}: {simple}")
-        ch_types.append(SPARK_TO_CLICKHOUSE[simple])
-        nullable.append(bool(fieldt.nullable))
-    return cols, ch_types, nullable
+        acked = df.select(*cols).mapInArrow(_post, "rows long")
+        return acked.agg(F.sum("rows")).collect()[0][0] or 0
 
-
-@dataclass
-class PerTableHttpSink:
-    """foreachBatch handler posting typed rows straight to ClickHouse
-    over HTTP — the live-wire sibling of PerTableParquetSink (same
-    topology: split by table, data first, cursor second)."""
-
-    endpoint: str
-    cursor_table: str = "cursors"
-    tables_written: set = field(default_factory=set)
-
-    def write_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        batch_df = batch_df.withColumn(
-            "epoch_id", F.lit(epoch_id).cast("bigint")
-        ).cache()
-        try:
-            tables = [r[0] for r in batch_df.select("table").distinct().collect()]
-            for t in sorted(tables):
-                part = batch_df.filter(F.col("table") == t).drop("table")
-                cols, ch_types, nullable = _typed_plan(part, drop=())
-                ins = ClickHouseHttpInserter(
-                    self.endpoint, t, cols, ch_types, nullable
-                )
-                sel = part.select(*cols)
-
-                def _post(rows_iter, _ins=ins, _n=len(cols)):
-                    block = [tuple(r) for r in rows_iter]
-                    if block:
-                        _ins.insert(block)
-
-                # per-partition POST: executors ship their own rows; the
-                # driver never holds the data
-                sel.foreachPartition(_post)
-                self.tables_written.add(t)
-            # cursor write strictly AFTER every data insert has returned
-            # (foreachPartition is an action — it has acked by here)
-            cursor = (
-                batch_df.groupBy("stream_id")
-                .agg(
-                    F.max_by("cursor", "block_num").alias("cursor"),
-                    F.max("block_num").alias("block_num"),
-                    F.max_by("block_id", "block_num").alias("block_id"),
-                )
-                .withColumn("epoch_id", F.lit(epoch_id).cast("bigint"))
-            )
-            cols, ch_types, nullable = _typed_plan(cursor, drop=())
-            ins = ClickHouseHttpInserter(
-                self.endpoint, self.cursor_table, cols, ch_types, nullable
-            )
-            ins.insert([tuple(r) for r in cursor.select(*cols).collect()])
-        finally:
-            batch_df.unpersist()
+    def append_cursor(self, df: DataFrame) -> int:
+        return self.append(df, "cursors")

@@ -4,6 +4,11 @@ change-set decode (T1) -> field-map + composite-PK merge (T2/T3) ->
 split-by-table (T4) -> typed cast in alphabetical column order (T5/T6) ->
 per-table sink + cursor checkpoint, data first (S5/S6/T9).
 
+`TypedPerTableSink` is the one per-table `foreachBatch` sink. Its
+target picks the writer every append goes through: a directory gets
+`sink.ParquetWriter`, an `http(s)://` ClickHouse endpoint gets
+`http_sink.ClickHouseHttpWriter` (ArrowStream INSERTs).
+
 Two decode paths produce the same (table, fields, pk) intermediate and
 share the merge/cast/sink stages:
 - `decode_changes` — JSON stand-in payloads (`[{"table": t, "fields":
@@ -31,6 +36,8 @@ from pyspark.sql import functions as F
 
 from elric_rs_spark.cast import typed_cast
 from elric_rs_spark.streaming.finality import apply_finality_stateful
+from elric_rs_spark.streaming.http_sink import ClickHouseHttpWriter
+from elric_rs_spark.streaming.sink import ParquetWriter
 
 CHANGES_JSON_SCHEMA = (
     "array<struct<table: string, fields: map<string,string>, "
@@ -172,13 +179,21 @@ class TypedPerTableSink:
     by table, cast each table's string map to its declared schema
     (alphabetical column order), append to the per-table sink, then write
     the max cursor per stream — data first, cursor second, so a crash can
-    repeat a block but never lose data the cursor claims is done."""
+    repeat a block but never lose data the cursor claims is done.
 
-    def __init__(self, base_dir: str, table_schemas: dict[str, dict[str, str]],
+    `target` is a directory (parquet: `{target}/data/{table}` and
+    `{target}/cursors`) or an `http(s)://` ClickHouse endpoint (one
+    ArrowStream INSERT per table partition, then one into `cursors`)."""
+
+    def __init__(self, target: str, table_schemas: dict[str, dict[str, str]],
                  mode: str = "strict", decode=decode_changes):
         import inspect
 
-        self.base_dir = base_dir
+        self.writer = (
+            ClickHouseHttpWriter(target)
+            if target.startswith(("http://", "https://"))
+            else ParquetWriter(target)
+        )
         self.table_schemas = table_schemas
         self.mode = mode
         self.decode = decode  # decode_changes (JSON) or decode_changes_protobuf
@@ -202,11 +217,7 @@ class TypedPerTableSink:
                         "stream_id", "block_num", "block_id", "row_map"
                     )
                     typed = typed_cast(rows, "row_map", schema, mode=self.mode)
-                    (
-                        typed.withColumn("epoch_id", F.lit(epoch_id))
-                        .write.mode("append")
-                        .parquet(f"{self.base_dir}/data/{t}")
-                    )
+                    self.writer.append(typed.withColumn("epoch_id", F.lit(epoch_id)), t)
                 # cursor AFTER all table writes (ref loader.rs:111-125)
                 cursor = (
                     block_df.groupBy("stream_id")
@@ -217,7 +228,7 @@ class TypedPerTableSink:
                     )
                     .withColumn("epoch_id", F.lit(epoch_id))
                 )
-                cursor.write.mode("append").parquet(f"{self.base_dir}/cursors")
+                self.writer.append_cursor(cursor)
             finally:
                 changes.unpersist()
         finally:

@@ -1,82 +1,35 @@
-"""Per-table fan-out sink + cursor checkpointing (SURVEY.md S5/S6/T9).
+"""Parquet writer for the typed per-table sink, plus the read side of
+its parquet layout: the exactly-once view and cursor recovery
+(SURVEY.md S5/S6/S7/T9).
 
-Reference semantics: one streaming inserter per target table, rows routed
-by table name (ref loader.rs:49-60, 231-247); after each flushed block the
-cursor row {id, cursor, block_num, block_id} is written (ref
-loader.rs:195-210) — data first, cursor second, so a crash can repeat a
-block but never lose data that the cursor claims is done (at-least-once).
-
-Spark form: `writeStream.foreachBatch(...)`. Inside a batch:
-1. decode + typed-cast the payload,
-2. split by table and append each group to its sink,
-3. write the max cursor per stream to the cursors sink.
-The (query_id, epoch_id) pair makes retried batches idempotent when the
-sink is a ReplacingMergeTree / MERGE-capable target; for the parquet test
-sink we tag rows with epoch_id so replays are detectable.
-
-The ClickHouse-specific wiring (JDBC url, async_insert=1,
-wait_for_async_insert=0, LZ4) is config in `clickhouse_writer_options`;
-with no live ClickHouse in this container, the JDBC path is exercised only
-through its options-dict unit test, and parquet stands in everywhere else.
+`pipeline.TypedPerTableSink` is the one per-table `foreachBatch` sink;
+it picks `ParquetWriter` for a directory target. The layout is one
+parquet dir per table, `{base}/data/{table}`, and the cursor rows in
+`{base}/cursors`, every row tagged with its epoch_id. The sink appends
+data first and the cursor last (ref loader.rs:119-122, 195-210), so a
+crash can repeat a block but never lose data that the cursor claims is
+done (at-least-once write); `read_exactly_once` collapses the replays
+on read, the parquet analogue of the reference's ReplacingMergeTree.
 """
 
 from __future__ import annotations
-
-from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def clickhouse_writer_options(url: str) -> dict[str, str]:
-    """Writer options mirroring the reference's insert tuning
-    (ref loader.rs:56-58: 15s period; Cargo.toml:21: LZ4)."""
-    return {
-        "url": url,
-        "driver": "com.clickhouse.jdbc.ClickHouseDriver",
-        "async_insert": "1",
-        "wait_for_async_insert": "0",
-        "compress": "lz4",
-        "batchsize": "100000",
-        "isolationLevel": "NONE",
-    }
+class ParquetWriter:
+    """Append DataFrames to `{base_dir}/data/{table}` and
+    `{base_dir}/cursors` as parquet."""
 
+    def __init__(self, base_dir: str):
+        self.base_dir = base_dir
 
-@dataclass
-class PerTableParquetSink:
-    """Test sink: routes rows by `table` column into per-table parquet dirs
-    and appends the cursor row per epoch — the reference's topology with
-    parquet standing in for ClickHouse."""
+    def append(self, df: DataFrame, table: str) -> None:
+        df.write.mode("append").parquet(f"{self.base_dir}/data/{table}")
 
-    base_dir: str
-    tables_written: set = field(default_factory=set)
-
-    def write_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        batch_df = batch_df.withColumn("epoch_id", F.lit(epoch_id)).cache()
-        try:
-            # T4 split-by-table fan-out (ref loader.rs:231-247)
-            tables = [r[0] for r in batch_df.select("table").distinct().collect()]
-            for t in sorted(tables):
-                (
-                    batch_df.filter(F.col("table") == t)
-                    .drop("table")
-                    .write.mode("append")
-                    .parquet(f"{self.base_dir}/data/{t}")
-                )
-                self.tables_written.add(t)
-            # S6 cursor write AFTER data (ref loader.rs:119-122 ordering)
-            cursor = (
-                batch_df.groupBy("stream_id")
-                .agg(
-                    F.max_by("cursor", "block_num").alias("cursor"),
-                    F.max("block_num").alias("block_num"),
-                    F.max_by("block_id", "block_num").alias("block_id"),
-                )
-                .withColumn("epoch_id", F.lit(epoch_id))
-            )
-            cursor.write.mode("append").parquet(f"{self.base_dir}/cursors")
-        finally:
-            batch_df.unpersist()
+    def append_cursor(self, df: DataFrame) -> None:
+        df.write.mode("append").parquet(f"{self.base_dir}/cursors")
 
 
 def read_exactly_once(

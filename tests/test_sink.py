@@ -1,46 +1,87 @@
-"""Mock-ClickHouse HTTP round-trip for the S5 sink (VERDICT r04
-next-round #4) — the Spark twin of the reference's recording-mock loader
-test (ref loader.rs:358-402): a local HTTP server records every INSERT
-the sink posts; assertions cover typed RowBinary round-trips,
-alphabetical column order, per-partition data inserts arriving BEFORE
-the cursor insert, and epoch-tagged replay idempotence. No live
-ClickHouse anywhere.
+"""Mock-ClickHouse HTTP round-trips for the typed per-table sink's
+ClickHouse writer — the Spark twin of the reference's recording-mock
+loader test (ref loader.rs:358-402): a local HTTP server records every
+INSERT the sink posts and decodes its ArrowStream body; assertions cover
+typed Arrow fields, alphabetical column order, per-partition data
+inserts arriving BEFORE the cursor insert, epoch-tagged replay
+idempotence, and failure injection (5xx, timeout, one failed partition
+of many): the batch raises, no cursor is posted, and a replay of the
+same epoch posts the rows of a clean run. No live ClickHouse anywhere.
 """
 
 from __future__ import annotations
 
 import threading
+import time
 import urllib.parse
-from datetime import date, datetime
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
+import pyarrow as pa
 import pytest
 
-from elric_rs_spark.streaming.http_sink import (
-    ClickHouseHttpInserter,
-    PerTableHttpSink,
-    decode_row_binary,
-    encode_row_binary,
-    insert_statement,
-)
+from elric_rs_spark.streaming import http_sink
+from elric_rs_spark.streaming.http_sink import ClickHouseHttpWriter
+from elric_rs_spark.streaming.pipeline import TypedPerTableSink, run_pipeline
+from elric_rs_spark.streaming.source import land_blocks
+from tests.test_pipeline import APPROVALS_SCHEMA, TRANSFERS_SCHEMA, _blocks, _payload
+from tests.test_streaming import _change_blocks
 
 
 class _Recorder:
-    """Thread-safe (query, body) log — the test's `test::Mock`."""
+    """Thread-safe (query, body) log — the test's `test::Mock`.
+    `fail(query, n)` -> HTTP status to answer the n-th INSERT into the
+    query's table with (None = 200); `delay_s` is slept before answering
+    a request that `fail` picked."""
 
     def __init__(self):
         self.lock = threading.Lock()
         self.requests: list[tuple[str, bytes]] = []
+        self.fail = None
+        self.delay_s = 0.0
+        self.last_at = time.monotonic()
 
-    def record(self, query: str, body: bytes) -> None:
+    def record(self, query: str, body: bytes) -> int | None:
         with self.lock:
+            n = sum(_table(q) == _table(query) for q, _ in self.requests)
             self.requests.append((query, body))
+            self.last_at = time.monotonic()
+            return self.fail(query, n) if self.fail else None
+
+    def heal(self, quiet_s: float = 1.0) -> None:
+        """Drop the failure rules and the log, once the failed batch's
+        other partitions (Spark kills them asynchronously) have gone quiet
+        — a late POST from them must not count toward the replay."""
+        deadline = time.monotonic() + 30
+        while time.monotonic() - self.last_at < quiet_s:
+            assert time.monotonic() < deadline, "mock never went quiet"
+            time.sleep(0.1)
+        with self.lock:
+            self.fail = None
+            self.delay_s = 0.0
+            self.requests.clear()
 
     def tables_in_order(self) -> list[str]:
-        out = []
-        for q, _ in self.requests:
-            out.append(q.split("INSERT INTO ", 1)[1].split(" ", 1)[0])
-        return out
+        return [_table(q) for q, _ in self.requests]
+
+    def rows(self, table: str) -> list[dict]:
+        return [r for q, body in self.requests if _table(q) == table
+                for r in _arrow(body).to_pylist()]
+
+
+def _table(query: str) -> str:
+    return query.split("INSERT INTO ", 1)[1].split(" ", 1)[0]
+
+
+def _cols(query: str) -> list[str]:
+    return query.split("(", 1)[1].split(")", 1)[0].split(", ")
+
+
+def _arrow(body: bytes) -> pa.Table:
+    return pa.ipc.open_stream(body).read_all()
+
+
+def _sorted(rows: list[dict]) -> list[dict]:
+    return sorted(rows, key=lambda r: repr(sorted(r.items())))
 
 
 @pytest.fixture()
@@ -53,9 +94,14 @@ def mock_clickhouse():
                 urllib.parse.urlparse(self.path).query
             ).get("query", [""])[0]
             body = self.rfile.read(int(self.headers.get("Content-Length", 0)))
-            rec.record(q, body)
-            self.send_response(200)
-            self.end_headers()
+            status = rec.record(q, body)
+            if status is not None and rec.delay_s:
+                time.sleep(rec.delay_s)
+            try:
+                self.send_response(status or 200)
+                self.end_headers()
+            except OSError:  # the client gave up (timeout test)
+                pass
 
         def log_message(self, *a):  # quiet
             pass
@@ -70,66 +116,41 @@ def mock_clickhouse():
         srv.server_close()
 
 
-class TestRowBinaryCodec:
-    def test_round_trip_all_types(self):
-        ch = ["Int64", "Float64", "String", "Date32", "DateTime64(6)", "UInt8"]
-        nl = [False, True, False, False, False, False]
-        rows = [
-            (1, 2.5, "héllo", date(2024, 2, 29), datetime(2024, 1, 2, 3, 4, 5, 123456), 1),
-            (-9007199254740993, None, "", date(1969, 12, 31), datetime(1970, 1, 1), 0),
-        ]
-        assert decode_row_binary(encode_row_binary(rows, ch, nl), ch, nl) == rows
+def _batch(spark, nums, partitions: int = 1):
+    """Finalized blocks, each with one transfers and one approvals change."""
+    return _change_blocks(spark, [
+        (n, [("transfers", {"v": str(n)}), ("approvals", {"v": str(n)})])
+        for n in nums
+    ]).repartition(partitions)
 
-    def test_long_string_uleb128(self):
-        s = "x" * 300  # length needs 2 ULEB128 bytes
-        body = encode_row_binary([(s,)], ["String"], [False])
-        assert body[:2] == bytes([0xAC, 0x02])
-        assert decode_row_binary(body, ["String"], [False]) == [(s,)]
 
-    def test_null_in_non_nullable_raises(self):
-        with pytest.raises(ValueError, match="NULL"):
-            encode_row_binary([(None,)], ["Int64"], [False])
+CATALOG = {"transfers": {"v": "UInt64"}, "approvals": {"v": "String"}}
 
 
 class TestHttpInserter:
-    def test_insert_statement_and_wire(self, mock_clickhouse):
+    def test_insert_statement_and_wire(self, spark, mock_clickhouse):
         endpoint, rec = mock_clickhouse
-        ins = ClickHouseHttpInserter(
-            endpoint, "transfers", ["amount", "block_num"],
-            ["Int64", "Int64"], [False, False],
-        )
-        ins.insert([(10, 7), (20, 8)])
+        df = spark.createDataFrame([(7, 10), (8, 20)], "block_num long, amount long")
+        assert ClickHouseHttpWriter(endpoint).append(df.coalesce(1), "transfers") == 2
         assert len(rec.requests) == 1
         q, body = rec.requests[0]
-        assert q == "INSERT INTO transfers (amount, block_num) FORMAT RowBinary"
-        assert decode_row_binary(body, ["Int64", "Int64"], [False, False]) == [
-            (10, 7), (20, 8),
+        assert q == "INSERT INTO transfers (amount, block_num) FORMAT ArrowStream"
+        assert _arrow(body).to_pylist() == [
+            {"amount": 10, "block_num": 7}, {"amount": 20, "block_num": 8},
         ]
 
-    def test_empty_block_posts_nothing(self, mock_clickhouse):
+    def test_empty_block_posts_nothing(self, spark, mock_clickhouse):
         endpoint, rec = mock_clickhouse
-        ins = ClickHouseHttpInserter(endpoint, "t", ["a"], ["Int64"], [False])
-        ins.insert([])
+        df = spark.createDataFrame([], "a long").repartition(4)
+        assert ClickHouseHttpWriter(endpoint).append(df, "t") == 0
         assert rec.requests == []
 
 
-class TestPerTableHttpSinkRoundTrip:
-    def _batch(self, spark):
-        return spark.createDataFrame(
-            [
-                ("s1", "transfers", 7, "blk-7", "7", '{"v":7}'),
-                ("s1", "approvals", 7, "blk-7", "7", '{"v":7}'),
-                ("s1", "transfers", 8, "blk-8", "8", '{"v":8}'),
-            ],
-            "stream_id string, table string, block_num long, block_id string, "
-            "cursor string, payload string",
-        )
-
+class TestHttpSinkRoundTrip:
     def test_fanout_types_order_and_cursor_last(self, spark, mock_clickhouse):
         endpoint, rec = mock_clickhouse
-        sink = PerTableHttpSink(endpoint)
-        sink.write_batch(self._batch(spark), epoch_id=3)
-        assert sink.tables_written == {"approvals", "transfers"}
+        sink = TypedPerTableSink(endpoint, CATALOG)
+        sink.write_batch(_batch(spark, [7, 8], partitions=2), epoch_id=3)
 
         order = rec.tables_in_order()
         # data inserts first (any per-partition interleaving), the one
@@ -139,42 +160,147 @@ class TestPerTableHttpSinkRoundTrip:
 
         # alphabetical column order in every INSERT (T5 contract)
         for q, _ in rec.requests:
-            cols = q.split("(", 1)[1].split(")", 1)[0].split(", ")
-            assert cols == sorted(cols), q
+            assert _cols(q) == sorted(_cols(q)), q
+            assert q.endswith(" FORMAT ArrowStream"), q
 
-        # typed round-trip of the transfers rows
-        data_cols = ["block_id", "block_num", "cursor", "epoch_id", "payload", "stream_id"]
-        ch = ["String", "Int64", "String", "Int64", "String", "String"]
-        nl = [True, True, True, False, True, True]
-        got = []
+        # typed round-trip of the transfers rows: UInt64 -> decimal(20,0)
         for q, body in rec.requests:
-            if q.startswith("INSERT INTO transfers "):
-                assert q == insert_statement("transfers", data_cols, ch, nl)
-                got += decode_row_binary(body, ch, nl)
-        assert sorted(got) == [
-            ("blk-7", 7, "7", 3, '{"v":7}', "s1"),
-            ("blk-8", 8, "8", 3, '{"v":8}', "s1"),
-        ]
+            if _table(q) == "transfers":
+                assert _arrow(body).schema.field("v").type == pa.decimal128(20, 0)
+        got = [(r["block_id"], r["block_num"], r["epoch_id"], int(r["v"]))
+               for r in rec.rows("transfers")]
+        assert sorted(got) == [("blk-7", 7, 3, 7), ("blk-8", 8, 3, 8)]
 
         # cursor payload: max cursor by block_num, epoch-tagged
-        cq, cbody = rec.requests[-1]
-        ccols = ["block_id", "block_num", "cursor", "epoch_id", "stream_id"]
-        cch = ["String", "Int64", "String", "Int64", "String"]
-        cnl = [True, True, True, False, True]
-        assert cq == insert_statement("cursors", ccols, cch, cnl)
-        assert decode_row_binary(cbody, cch, cnl) == [("blk-8", 8, "8", 3, "s1")]
+        assert rec.rows("cursors") == [
+            {"block_id": "blk-8", "block_num": 8, "cursor": "8", "epoch_id": 3,
+             "stream_id": "s1"},
+        ]
 
     def test_epoch_replay_reposts_same_rows(self, spark, mock_clickhouse):
         """foreachBatch replays a completed epoch after a crash: the sink
-        posts byte-identical blocks tagged with the SAME epoch_id, so a
+        posts the same rows tagged with the SAME epoch_id, so a
         ReplacingMergeTree target collapses them (at-least-once wire,
-        exactly-once read — same contract the parquet sink proves via
+        exactly-once read — same contract the parquet layout proves via
         read_exactly_once)."""
         endpoint, rec = mock_clickhouse
-        sink = PerTableHttpSink(endpoint)
-        batch = self._batch(spark)
+        sink = TypedPerTableSink(endpoint, CATALOG)
+        batch = _batch(spark, [7, 8], partitions=2)
         sink.write_batch(batch, epoch_id=5)
-        first = sorted(rec.requests)
+        first = {t: _sorted(rec.rows(t)) for t in ("transfers", "approvals", "cursors")}
         rec.requests.clear()
         sink.write_batch(batch, epoch_id=5)  # replay
-        assert sorted(rec.requests) == first
+        assert {t: _sorted(rec.rows(t)) for t in first} == first
+
+
+class TestFailureInjection:
+    """A failed POST fails its Spark task, the task failure fails the
+    batch, and the cursor is never posted; replaying the epoch against
+    the healed server posts exactly a clean run's rows."""
+
+    EPOCH = 9
+    TABLES = ("approvals", "transfers", "cursors")
+
+    def _clean_rows(self, rec, endpoint, batch):
+        TypedPerTableSink(endpoint, CATALOG).write_batch(batch, epoch_id=self.EPOCH)
+        rows = {t: _sorted(rec.rows(t)) for t in self.TABLES}
+        rec.heal()
+        return rows
+
+    def _fail_then_replay(self, rec, endpoint, batch, fail, match, delay_s=0.0):
+        clean = self._clean_rows(rec, endpoint, batch)
+        assert clean["transfers"] and clean["cursors"]
+        rec.fail, rec.delay_s = fail, delay_s
+        sink = TypedPerTableSink(endpoint, CATALOG)
+        with pytest.raises(Exception, match=match):
+            sink.write_batch(batch, epoch_id=self.EPOCH)
+        assert "cursors" not in rec.tables_in_order()
+        rec.heal()
+        sink.write_batch(batch, epoch_id=self.EPOCH)  # the restarted query's replay
+        assert rec.tables_in_order()[-1] == "cursors"
+        assert {t: _sorted(rec.rows(t)) for t in self.TABLES} == clean
+
+    def test_first_post_500(self, spark, mock_clickhouse):
+        endpoint, rec = mock_clickhouse
+        batch = _batch(spark, range(4), partitions=2)
+        self._fail_then_replay(
+            rec, endpoint, batch,
+            fail=lambda q, n: 500 if _table(q) == "transfers" and n == 0 else None,
+            match="HTTP Error 500",
+        )
+
+    def test_hang_past_timeout(self, spark, mock_clickhouse, monkeypatch):
+        endpoint, rec = mock_clickhouse
+        monkeypatch.setattr(http_sink, "TIMEOUT_S", 0.5)
+        batch = _batch(spark, range(4), partitions=2)
+        self._fail_then_replay(
+            rec, endpoint, batch,
+            fail=lambda q, n: 200 if _table(q) == "approvals" and n == 0 else None,
+            match="timed out", delay_s=2.0,
+        )
+
+    def test_one_partition_of_many_fails(self, spark, mock_clickhouse):
+        endpoint, rec = mock_clickhouse
+        batch = _batch(spark, range(16), partitions=4)
+        assert batch.rdd.getNumPartitions() == 4
+        self._fail_then_replay(
+            rec, endpoint, batch,
+            fail=lambda q, n: 500 if _table(q) == "transfers" and n == 2 else None,
+            match="HTTP Error 500",
+        )
+
+
+class TestLoaderIntoMock:
+    def test_run_pipeline_into_mock(self, spark, mock_clickhouse, tmp_path):
+        """The reference's `test::Mock` loader test (ref loader.rs:358-402)
+        on the live-wire path: finality + undo -> decode -> typed cast ->
+        ArrowStream INSERTs, cursor last."""
+        endpoint, rec = mock_clickhouse
+        # blocks 0..15 (watermark n-5), then an undo back to 12 orphans the
+        # buffered 13..15, and a fork 13..24 replaces them; the watermark at
+        # fork block 24 is 19, so 0..12 + fork 13..19 are final
+        msgs = _blocks(16, reorg_depth=5)
+        msgs.append({
+            "stream_id": "s1", "msg_type": "undo", "block_num": 15,
+            "block_id": None, "block_ts": None, "cursor": None,
+            "final_block_height": None, "last_valid_block": 12, "payload": None,
+        })
+        msgs += [
+            {
+                "stream_id": "s1", "msg_type": "new", "block_num": n,
+                "block_id": f"fork-{n:08d}", "block_ts": None, "cursor": f"f{n}",
+                "final_block_height": n - 5, "last_valid_block": None,
+                "payload": _payload(n),
+            }
+            for n in range(13, 25)
+        ]
+        land_blocks(spark, msgs, str(tmp_path / "landing"))
+        schema = dict(TRANSFERS_SCHEMA, evt_tx_hash="String", evt_index="UInt32")
+        sink = TypedPerTableSink(
+            endpoint, {"transfers": schema, "approvals": APPROVALS_SCHEMA}
+        )
+        q = run_pipeline(spark, str(tmp_path / "landing"), str(tmp_path / "ckpt"), sink)
+        assert q.awaitTermination(120)
+        assert q.exception() is None
+
+        final = {(n, f"blk-{n:08d}") for n in range(13)} | {
+            (n, f"fork-{n:08d}") for n in range(13, 20)
+        }
+        for t in ("transfers", "approvals"):
+            got = [(r["block_num"], r["block_id"]) for r in rec.rows(t)]
+            assert sorted(got) == sorted(final), t
+
+        for q_, _ in rec.requests:
+            assert _cols(q_) == sorted(_cols(q_)), q_
+
+        assert rec.tables_in_order()[-1] == "cursors"
+        last = rec.rows("cursors")[-1]
+        assert (last["block_num"], last["block_id"], last["cursor"]) == (
+            19, "fork-00000019", "f19")
+
+        types = {
+            _table(q_): _arrow(body).schema for q_, body in rec.requests
+        }
+        assert types["approvals"].field("amount").type == pa.decimal128(20, 0)
+        assert types["transfers"].field("contract_address").type == pa.binary()
+        assert types["transfers"].field("evt_block_time").type == pa.timestamp("us", tz="UTC")

@@ -5,11 +5,13 @@ test_process_data) plus Spark-native end-to-end checks:
 - FinalityBuffer state machine (pure Python, exact reference semantics)
 - ReconnectingReader backoff/resume (ref substreams_stream.rs:53-149)
 - applyInPandasWithState finality op on a real Structured Streaming query
-- PerTableParquetSink fan-out + cursor write ordering + recovery
+- TypedPerTableSink fan-out + cursor write ordering + recovery
 """
 
 from __future__ import annotations
 
+import json
+import os
 import pathlib
 import tempfile
 
@@ -21,11 +23,8 @@ from elric_rs_spark.streaming.finality import (
     FinalityBuffer,
     apply_finality_stateful,
 )
-from elric_rs_spark.streaming.sink import (
-    PerTableParquetSink,
-    clickhouse_writer_options,
-    load_persisted_cursor,
-)
+from elric_rs_spark.streaming.pipeline import TypedPerTableSink
+from elric_rs_spark.streaming.sink import load_persisted_cursor
 from elric_rs_spark.streaming.source import (
     BLOCK_STREAM_SCHEMA,
     FatalStreamError,
@@ -376,23 +375,36 @@ class TestStatefulFinalityStreaming:
 # ---------------------------------------------------------------------------
 
 
+def _change_blocks(spark, blocks):
+    """Finalized-block rows as the sink receives them: `blocks` is
+    [(block_num, [(table, fields), ...]), ...], one JSON change-set
+    payload per block."""
+    return spark.createDataFrame(
+        [
+            ("s1", n, f"blk-{n}", str(n),
+             json.dumps([{"table": t, "fields": f, "pk": {}} for t, f in changes]))
+            for n, changes in blocks
+        ],
+        "stream_id string, block_num long, block_id string, cursor string, "
+        "payload string",
+    )
+
+
 class TestSink:
     def test_fanout_and_cursor_recovery(self, spark, tmpdir):
-        sink = PerTableParquetSink(base_dir=tmpdir)
-        batch = spark.createDataFrame(
-            [
-                ("s1", "transfers", 7, "blk-7", "7", '{"v":7}'),
-                ("s1", "approvals", 7, "blk-7", "7", '{"v":7}'),
-                ("s1", "transfers", 8, "blk-8", "8", '{"v":8}'),
-            ],
-            "stream_id string, table string, block_num long, block_id string, "
-            "cursor string, payload string",
+        sink = TypedPerTableSink(
+            tmpdir, {"transfers": {"v": "String"}, "approvals": {"v": "String"}}
         )
+        batch = _change_blocks(spark, [
+            (7, [("transfers", {"v": "7"}), ("approvals", {"v": "7"})]),
+            (8, [("transfers", {"v": "8"})]),
+        ])
         sink.write_batch(batch, epoch_id=0)
-        assert sink.tables_written == {"transfers", "approvals"}
+        assert set(os.listdir(f"{tmpdir}/data")) == {"transfers", "approvals"}
         transfers = spark.read.parquet(f"{tmpdir}/data/transfers")
         assert transfers.count() == 2
         assert "table" not in transfers.columns
+        assert spark.read.parquet(f"{tmpdir}/data/approvals").count() == 1
         # S7 recovery: latest cursor by block_num (ref main.rs:299-310)
         assert load_persisted_cursor(spark, tmpdir, "s1") == "8"
         assert load_persisted_cursor(spark, tmpdir, "nope") is None
@@ -401,12 +413,8 @@ class TestSink:
         """Retried epochs re-append with the same epoch_id, so exact-once
         consumers can dedup on (epoch_id, block_num) — the parquet analogue
         of ReplacingMergeTree idempotence (README.md:9-11)."""
-        sink = PerTableParquetSink(base_dir=tmpdir)
-        batch = spark.createDataFrame(
-            [("s1", "t", 1, "b1", "1", "x")],
-            "stream_id string, table string, block_num long, block_id string, "
-            "cursor string, payload string",
-        )
+        sink = TypedPerTableSink(tmpdir, {"t": {"v": "String"}})
+        batch = _change_blocks(spark, [(1, [("t", {"v": "x"})])])
         sink.write_batch(batch, epoch_id=5)
         sink.write_batch(batch, epoch_id=5)  # replay
         df = spark.read.parquet(f"{tmpdir}/data/t")
@@ -418,24 +426,13 @@ class TestSink:
         """T9 ordering: the cursor row is written only after the data write
         of the same epoch succeeded — verified here by checking both sides
         exist for the epoch (the write order is enforced in write_batch)."""
-        sink = PerTableParquetSink(base_dir=tmpdir)
-        batch = spark.createDataFrame(
-            [("s1", "t", 3, "b3", "3", "x")],
-            "stream_id string, table string, block_num long, block_id string, "
-            "cursor string, payload string",
-        )
+        sink = TypedPerTableSink(tmpdir, {"t": {"v": "String"}})
+        batch = _change_blocks(spark, [(3, [("t", {"v": "x"})])])
         sink.write_batch(batch, epoch_id=1)
         cursors = spark.read.parquet(f"{tmpdir}/cursors")
         data = spark.read.parquet(f"{tmpdir}/data/t")
         assert cursors.filter(F.col("epoch_id") == 1).count() == 1
         assert data.filter(F.col("epoch_id") == 1).count() == 1
-
-    def test_clickhouse_options_parity(self):
-        opts = clickhouse_writer_options("jdbc:clickhouse://localhost:8123/db")
-        # ref loader.rs:56-58 streamed async inserts; Cargo.toml:21 LZ4
-        assert opts["async_insert"] == "1"
-        assert opts["wait_for_async_insert"] == "0"
-        assert opts["compress"] == "lz4"
 
 
 class TestRestartRecovery:
