@@ -116,13 +116,17 @@ _PROTO_CHANGES_SCHEMA = (
 )
 
 
-def decode_changes_protobuf(block_df: DataFrame) -> DataFrame:
+def decode_changes_protobuf(block_df: DataFrame, mode: str = "strict") -> DataFrame:
     """T1 on the real wire format: payload = base64 `DatabaseChanges`
     protobuf bytes, decoded by functions/protowire.py in one Arrow-batched
     mapInPandas pass (the sanctioned Python path — batch transfer, no
     per-row pickling). Emits the same (table, fields, pk) intermediate as
     the JSON path, then the SAME Catalyst merge stage, so pk semantics
-    cannot drift between decoders."""
+    cannot drift between decoders.
+
+    Malformed-payload policy as in `decode_changes`: mode='strict'
+    raises on the first payload that fails to decode (bad base64 or bad
+    wire bytes); mode='permissive' skips that block's rows."""
     import base64
 
     from elric_rs_spark.functions.protowire import table_change_rows
@@ -134,8 +138,14 @@ def decode_changes_protobuf(block_df: DataFrame) -> DataFrame:
                 "table", "fields", "pk",
             )}
             for row in pdf.itertuples(index=False):
-                raw = base64.b64decode(row.payload) if row.payload else b""
-                for tc in table_change_rows(raw):
+                try:
+                    raw = base64.b64decode(row.payload) if row.payload else b""
+                    changes = table_change_rows(raw)
+                except ValueError:
+                    if mode == "strict":
+                        raise
+                    continue
+                for tc in changes:
                     out["stream_id"].append(row.stream_id)
                     out["block_num"].append(row.block_num)
                     out["block_id"].append(row.block_id)
@@ -143,9 +153,11 @@ def decode_changes_protobuf(block_df: DataFrame) -> DataFrame:
                     out["table"].append(tc["table"])
                     out["fields"].append(tc["fields"])
                     out["pk"].append(tc["pk"])
-            import pandas as pd
+            # an empty frame has object columns Arrow cannot type as maps
+            if out["table"]:
+                import pandas as pd
 
-            yield pd.DataFrame(out)
+                yield pd.DataFrame(out)
 
     cols = ["stream_id", "block_num", "block_id", "cursor", "payload"]
     changes = block_df.select(*cols).mapInPandas(_decode, _PROTO_CHANGES_SCHEMA)
@@ -187,8 +199,6 @@ class TypedPerTableSink:
 
     def __init__(self, target: str, table_schemas: dict[str, dict[str, str]],
                  mode: str = "strict", decode=decode_changes):
-        import inspect
-
         self.writer = (
             ClickHouseHttpWriter(target)
             if target.startswith(("http://", "https://"))
@@ -197,20 +207,13 @@ class TypedPerTableSink:
         self.table_schemas = table_schemas
         self.mode = mode
         self.decode = decode  # decode_changes (JSON) or decode_changes_protobuf
-        # thread the sink's strict/permissive mode into the decoder when
-        # it supports one — a permissive sink must not die on the first
-        # malformed payload before the cast stage ever sees it
-        self._decode_takes_mode = "mode" in inspect.signature(decode).parameters
 
     def write_batch(self, block_df: DataFrame, epoch_id: int) -> None:
         block_df = block_df.cache()
         try:
-            decoded = (
-                self.decode(block_df, mode=self.mode)
-                if self._decode_takes_mode
-                else self.decode(block_df)
-            )
-            changes = decoded.cache()
+            # the sink's strict/permissive mode reaches the decoder too — a
+            # permissive sink must not die on the first malformed payload
+            changes = self.decode(block_df, mode=self.mode).cache()
             try:
                 for t, schema in sorted(self.table_schemas.items()):
                     rows = changes.filter(F.col("table") == t).select(

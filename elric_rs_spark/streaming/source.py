@@ -126,51 +126,6 @@ def demux(messages: Iterable[dict]) -> Iterator[dict]:
     return (m for m in messages if m.get("msg_type") in ("new", "undo"))
 
 
-def fixture_new_message(num: int, ts, props, reorg_depth: int = 12) -> dict:
-    """THE fixture message contract — single definition shared by the
-    Spark-collect replay below and the pyarrow-backed Data Source replay
-    (streaming/datasource.py), so the two paths cannot drift."""
-    return {
-        "stream_id": "fixture",
-        "msg_type": "new",
-        "block_num": num,
-        "block_id": f"blk-{num:08d}",
-        "block_ts": ts,
-        "cursor": str(num),
-        "final_block_height": max(num - reorg_depth, 0),
-        "last_valid_block": None,
-        "payload": props,
-    }
-
-
-def fixture_undo_message(num: int) -> dict:
-    """Undo signal dropping back 3 blocks (shared contract, see above)."""
-    return {
-        "stream_id": "fixture",
-        "msg_type": "undo",
-        "block_num": num,
-        "block_id": None,
-        "block_ts": None,
-        "cursor": None,
-        "final_block_height": None,
-        "last_valid_block": max(num - 3, 0),
-        "payload": None,
-    }
-
-
-def fixture_stream_from_rows(
-    rows: Iterable[tuple], reorg_depth: int = 12, undo_at: int | None = None
-) -> list[dict]:
-    """(event_id, ts, props) tuples -> the deterministic block stream."""
-    out: list[dict] = []
-    for event_id, ts, props in rows:
-        num = int(event_id)
-        out.append(fixture_new_message(num, ts, props, reorg_depth))
-        if undo_at is not None and num == undo_at:
-            out.append(fixture_undo_message(num))
-    return out
-
-
 def fixture_replay(
     spark: SparkSession,
     sf_dir: str,
@@ -179,7 +134,8 @@ def fixture_replay(
 ) -> list[dict]:
     """Deterministic block-stream built from events.parquet: event_id is
     the block number, the watermark trails by `reorg_depth`. Optionally
-    injects an undo signal after block `undo_at` (test hook for T8)."""
+    injects an undo signal dropping back 3 blocks after block `undo_at`
+    (test hook for T8)."""
     from elric_rs_spark.tables import load_table
 
     rows = (
@@ -188,9 +144,33 @@ def fixture_replay(
         .orderBy("event_id")
         .collect()
     )
-    return fixture_stream_from_rows(
-        ((r.event_id, r.ts, r.props) for r in rows), reorg_depth, undo_at
-    )
+    out: list[dict] = []
+    for r in rows:
+        num = int(r.event_id)
+        out.append({
+            "stream_id": "fixture",
+            "msg_type": "new",
+            "block_num": num,
+            "block_id": f"blk-{num:08d}",
+            "block_ts": r.ts,
+            "cursor": str(num),
+            "final_block_height": max(num - reorg_depth, 0),
+            "last_valid_block": None,
+            "payload": r.props,
+        })
+        if num == undo_at:
+            out.append({
+                "stream_id": "fixture",
+                "msg_type": "undo",
+                "block_num": num,
+                "block_id": None,
+                "block_ts": None,
+                "cursor": None,
+                "final_block_height": None,
+                "last_valid_block": max(num - 3, 0),
+                "payload": None,
+            })
+    return out
 
 
 def land_blocks(

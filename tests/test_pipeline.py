@@ -347,6 +347,28 @@ class TestMalformedPayloadPolicy:
         df = self._frame(spark).filter("block_num <> 2")
         assert len(decode_changes(df, mode="strict").collect()) == 4
 
+    def test_protobuf_decode_follows_mode(self, spark):
+        """The wire decoder honours the same policy: a truncated payload
+        is skipped in permissive mode and raises in strict mode."""
+        import base64
+
+        from elric_rs_spark.streaming.pipeline import decode_changes_protobuf
+        from tests.test_protowire import enc_database_changes, enc_table_change
+
+        wire = enc_database_changes(enc_table_change("approvals", {"owner": "o1"}))
+        df = spark.createDataFrame(
+            [
+                ("s1", 1, "b1", "c1", base64.b64encode(wire).decode()),
+                ("s1", 2, "b2", "c2", base64.b64encode(wire[:-3]).decode()),
+            ],
+            "stream_id string, block_num long, block_id string, "
+            "cursor string, payload string",
+        )
+        good = decode_changes_protobuf(df, mode="permissive").collect()
+        assert [(r.block_num, r.row_map) for r in good] == [(1, {"owner": "o1"})]
+        with pytest.raises(Exception, match="ProtoWireError|truncated"):
+            decode_changes_protobuf(df, mode="strict").collect()
+
 
 class TestCheckpointRestart:
     def test_kill_and_resume_no_loss_no_dup(self, spark, tmpdir):

@@ -204,42 +204,52 @@ def test_parser_nullable_lowcard_wrappers(name):
     assert parse_column_type(f"Nullable(LowCardinality({name}))").nullable is True
 
 
-class TestEmitCountEquivalence:
-    """The finality fast path (_emit_count over integer lists) must agree
-    with the sequential FinalityBuffer.push replay on EVERY undo-free
-    arrival sequence — buffered prefix included."""
+class TestReplayEquivalence:
+    """The finality kernel (_replay over row positions) must agree with
+    the sequential FinalityBuffer push/undo replay on EVERY arrival
+    sequence, undos and a buffered prefix included: same emitted rows in
+    the same order, same rows left buffered."""
 
     @given(
         st.lists(st.integers(min_value=0, max_value=60), min_size=0, max_size=8),
         st.lists(
             st.tuples(
+                st.booleans(),  # undo row?
                 st.integers(min_value=0, max_value=60),  # block_num
-                st.integers(min_value=0, max_value=60),  # final_block_height
+                # final_block_height, or last_valid_block for an undo
+                st.integers(min_value=0, max_value=60),
             ),
             min_size=1,
             max_size=40,
         ),
         st.integers(min_value=1, max_value=12),
     )
-    @settings(max_examples=300, deadline=None)
-    def test_matches_sequential_push(self, buf_nums, rows, cap):
-        from elric_rs_spark.streaming.finality import (
-            Block,
-            FinalityBuffer,
-            _emit_count,
-        )
+    @settings(max_examples=500, deadline=None)
+    def test_matches_buffer_model(self, buf_nums, rows, cap):
+        from elric_rs_spark.streaming.finality import _replay
 
+        # payload = row position, so the model's blocks name their rows
+        m = len(buf_nums)
         buf = FinalityBuffer(
             buffer_len=cap,
-            buffer=[Block(n, f"b{n}", str(n), 0) for n in buf_nums],
+            buffer=[Block(n, f"b{n}", str(n), 0, p) for p, n in enumerate(buf_nums)],
         )
-        emitted = 0
-        for num, wm in rows:
-            emitted += len(buf.push(Block(num, f"b{num}", str(num), wm)))
-        got = _emit_count(
-            buf_nums, [num for num, _ in rows], [wm for _, wm in rows], cap
+        emitted = []
+        for p, (is_undo, num, mark) in enumerate(rows, start=m):
+            if is_undo:
+                buf.undo(mark)
+            else:
+                flushed = buf.push(Block(num, f"b{num}", str(num), mark, p))
+                emitted += [b.payload for b in flushed]
+        emit, keep = _replay(
+            buf_nums + [num for _, num, _ in rows],
+            [u for u, _, _ in rows],
+            [mark for _, _, mark in rows],
+            m,
+            cap,
         )
-        assert got == emitted
+        assert emit == emitted
+        assert keep == [b.payload for b in buf.buffer]
 
 
 def test_lm_score_rounding_boundary_margin():

@@ -1,10 +1,11 @@
-"""Vanilla-session oracle check for a subset of queries (round-12 tool).
+"""Vanilla-session oracle check for every query or a subset of them.
 
-Usage: python tools/oracle_check.py q1,q2,... [sf_dir1,sf_dir2,...]
-Defaults to sf0.001 + sf0.01 (the driver's gate scales). Uses a VANILLA
-SparkSession (the verify-skill discipline: never only get_spark) and the
-same comparator as tests/test_queries_oracle.py. Rows-only queries (no
-oracle SQL) are executed and must return rows.
+Usage: python tools/oracle_check.py ALL|q1,q2,... [sf_dir1,sf_dir2,...]
+`ALL` checks every registered query and first runs `entry(spark)`, the
+way the driver does. Defaults to sf0.001 + sf0.01 (the driver's gate
+scales). Uses a VANILLA SparkSession (the verify-skill discipline: never
+only get_spark) and the same comparator as tests/test_queries_oracle.py.
+Rows-only queries (no oracle SQL) are executed and must return rows.
 """
 
 from __future__ import annotations
@@ -19,7 +20,6 @@ from pyspark.sql import SparkSession  # noqa: E402
 
 
 def main() -> None:
-    names = [q.strip() for q in sys.argv[1].split(",") if q.strip()]
     sf_dirs = (
         sys.argv[2].split(",")
         if len(sys.argv) > 2
@@ -36,6 +36,11 @@ def main() -> None:
     from oracle_harness import compare
 
     qs, osql = m.queries(), m.oracle_sql()
+    if sys.argv[1] == "ALL":
+        print("entry rows:", len(m.entry(spark).collect()), flush=True)
+        names = sorted(qs)
+    else:
+        names = [q.strip() for q in sys.argv[1].split(",") if q.strip()]
     bad = 0
     for sf in sf_dirs:
         for n in names:
