@@ -10,20 +10,30 @@ Spark-side design: a reader thread drains the upstream iterator into a
 parquet landing directory; Structured Streaming tails that directory with
 `spark.readStream.schema(...).parquet(...)`. This decouples upstream
 liveness from micro-batch cadence (SURVEY.md §7 risk 5) and gives replay
-for free. The gRPC dependency is optional — the container has no grpcio —
-so the transport is injected as any Python iterator; `fixture_replay`
-provides a deterministic stand-in built from events.parquet.
+for free. The reader thread writes each chunk itself with pyarrow, as
+one parquet file renamed into place from a hidden temp name, so landing
+starts no Spark job and no Python worker; the directory is a local path
+on the driver. The gRPC dependency is optional (grpcio need not be
+installed), so the transport is injected as any Python iterator;
+`fixture_replay` provides a deterministic stand-in built from
+events.parquet.
 """
 
 from __future__ import annotations
 
+import datetime
+import functools
 import itertools
 import os
 import time
 from collections.abc import Callable, Iterable, Iterator
 from dataclasses import dataclass
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 BLOCK_STREAM_SCHEMA = (
     "stream_id string, msg_type string, block_num long, block_id string, "
@@ -173,21 +183,84 @@ def fixture_replay(
     return out
 
 
+@functools.cache
+def _arrow_schema() -> pa.Schema:
+    # parsing the DDL needs a live SparkContext, hence built on first use
+    return to_arrow_schema(StructType.fromDDL(BLOCK_STREAM_SCHEMA))
+
+
+def _utc(ts: datetime.datetime | None) -> datetime.datetime | None:
+    # createDataFrame's rule: a naive datetime is local time, an aware
+    # one is its instant
+    return None if ts is None else ts.astimezone(datetime.timezone.utc)
+
+
+def _chunk_table(chunk: list[dict], seqs: list[int]) -> pa.Table:
+    schema = _arrow_schema()
+    cols = []
+    for f in schema:
+        if f.name == "seq":
+            vals = seqs
+        elif pa.types.is_timestamp(f.type):
+            vals = [_utc(m.get(f.name)) for m in chunk]
+        else:
+            vals = [m.get(f.name) for m in chunk]
+        cols.append(pa.array(vals, type=f.type))
+    return pa.Table.from_arrays(cols, schema=schema)
+
+
+def _land_file(table: pa.Table, landing_dir: str, name: str, after_ms: int) -> int:
+    """Write `table` to a hidden temp file, give it an mtime later than
+    `after_ms`, and rename it to `name`. Returns the mtime in ms.
+
+    The file-stream source orders new files by mtime in ms and breaks
+    ties in listing order, and a chunk lands in about a millisecond: two
+    chunks sharing a millisecond could be drained in the wrong order
+    across micro-batches, so each file is stamped after the last one."""
+    tmp = os.path.join(landing_dir, f".{name}.tmp")
+    try:
+        pq.write_table(table, tmp)
+        ms = max(os.stat(tmp).st_mtime_ns // 1_000_000, after_ms + 1)
+        os.utime(tmp, ns=(ms * 1_000_000, ms * 1_000_000))
+        os.replace(tmp, os.path.join(landing_dir, name))
+    except BaseException:
+        if os.path.exists(tmp):
+            os.unlink(tmp)
+        raise
+    return ms
+
+
 def land_blocks(
     spark: SparkSession, messages: Iterable[dict], landing_dir: str, batch_size: int = 500
 ) -> int:
-    """Reader-thread half: append message batches to the parquet landing
-    dir the streaming query tails. Returns rows written."""
+    """Reader-thread half: land each chunk of `batch_size` messages as
+    one parquet file in the landing dir the streaming query tails.
+    Returns rows written.
+
+    Each chunk is built as one Arrow table (missing keys are null, a
+    `block_ts` is read as createDataFrame reads it: naive = local time,
+    aware = its instant), written by pyarrow to a hidden
+    `.part-<first seq>.parquet.tmp` and renamed to `part-<first
+    seq>.parquet`. Spark skips names starting with `.`, so a file is
+    visible only once complete; a type error raises before any file is
+    written. No Spark job runs (except `_seq_counter`'s one read of the
+    max `seq` when a process first lands into an existing dir)."""
     n = 0
     it = iter(messages)
     seq = _seq_counter(spark, landing_dir)
+    os.makedirs(landing_dir, exist_ok=True)
+    with os.scandir(landing_dir) as entries:
+        last_ms = max(
+            (e.stat().st_mtime_ns // 1_000_000 for e in entries if e.name.endswith(".parquet")),
+            default=0,
+        )
     while True:
         chunk = list(itertools.islice(it, batch_size))
         if not chunk:
             return n
-        chunk = [{**m, "seq": next(seq)} for m in chunk]
-        df = spark.createDataFrame(chunk, BLOCK_STREAM_SCHEMA)
-        df.write.mode("append").parquet(landing_dir)
+        seqs = [next(seq) for _ in chunk]
+        table = _chunk_table(chunk, seqs)
+        last_ms = _land_file(table, landing_dir, f"part-{seqs[0]:020d}.parquet", last_ms)
         n += len(chunk)
 
 

@@ -65,10 +65,9 @@ def response_to_message(resp: dict, stream_id: str) -> dict | None:
     if kind == "new":
         clock = resp.get("clock") or {"id": "", "number": 0, "timestamp": None}
         ts = clock.get("timestamp")
+        # aware: the landing writer reads a naive datetime as local time
         block_ts = (
-            datetime.datetime.fromtimestamp(ts, tz=datetime.timezone.utc).replace(
-                tzinfo=None
-            )
+            datetime.datetime.fromtimestamp(ts, tz=datetime.timezone.utc)
             if ts is not None
             else None
         )

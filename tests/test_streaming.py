@@ -229,6 +229,132 @@ def _run_stream(spark, landing, checkpoint, sink_name):
     return spark.table(sink_name)
 
 
+def _max_job_id(spark) -> int:
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()  # job events reach the store async
+    jobs = sc.statusStore().jobsList(None)
+    return max((jobs.apply(i).jobId() for i in range(jobs.size())), default=-1)
+
+
+def _landed(spark, landing):
+    return spark.read.schema(BLOCK_STREAM_SCHEMA).parquet(landing)
+
+
+class TestLanding:
+    """land_blocks writes each chunk as one pyarrow parquet file, renamed
+    into place from a hidden temp name, without a Spark job."""
+
+    def test_one_file_per_chunk_same_values_as_create_dataframe(self, spark, tmpdir):
+        import datetime
+
+        utc = datetime.timezone.utc
+        msgs = [
+            {"stream_id": "s1", "msg_type": "new", "block_num": 1, "block_id": "b1",
+             "block_ts": datetime.datetime(2024, 8, 7, 12, 0, 0, 123456),  # naive
+             "cursor": "c1", "final_block_height": 0, "last_valid_block": None,
+             "payload": '{"v": 1}'},
+            {"stream_id": "s1", "msg_type": "new", "block_num": 2**31 + 7,
+             "block_id": "b2", "block_ts": datetime.datetime(2024, 8, 7, tzinfo=utc),
+             "cursor": "c2", "final_block_height": 2**31, "last_valid_block": None,
+             "payload": None},
+            {"stream_id": None, "msg_type": "new", "block_num": 3, "block_id": None,
+             "block_ts": None, "cursor": None, "final_block_height": None,
+             "last_valid_block": None, "payload": None},
+            {"msg_type": "new", "block_num": 4},  # missing keys land as null
+            {"stream_id": "s1", "msg_type": "undo", "block_num": 2, "block_id": None,
+             "block_ts": None, "cursor": "c1", "final_block_height": None,
+             "last_valid_block": 1, "payload": None},
+        ]
+        landing = f"{tmpdir}/landing"
+        jobs_before = _max_job_id(spark)
+        assert land_blocks(spark, msgs, landing) == len(msgs)
+        assert _max_job_id(spark) == jobs_before  # no Spark job started
+
+        names = os.listdir(landing)
+        assert len(names) == 1 and names[0].endswith(".parquet")
+        assert not names[0].startswith(".")  # no leftover temp file
+
+        got = _landed(spark, landing).orderBy("seq").collect()
+        seqs = [r.seq for r in got]
+        assert seqs == list(range(seqs[0], seqs[0] + len(msgs)))
+        # the same messages through createDataFrame (the old landing path)
+        expected = spark.createDataFrame(
+            [{**m, "seq": q} for m, q in zip(msgs, seqs)], BLOCK_STREAM_SCHEMA
+        ).orderBy("seq")
+        assert got == expected.collect()
+        us = F.unix_micros("block_ts").alias("us")
+        assert (_landed(spark, landing).orderBy("seq").select(us).collect()
+                == expected.select(us).collect())
+
+    def test_chunk_files_stamped_in_seq_order(self, spark, tmpdir, monkeypatch):
+        """The file source orders new files by mtime (ms); chunks written
+        within one millisecond still carry strictly increasing mtimes in
+        seq order, across calls too."""
+        from elric_rs_spark.streaming import source as src
+
+        real_write = src.pq.write_table
+
+        def write_same_ms(table, where, **kw):
+            real_write(table, where, **kw)
+            os.utime(where, ns=(1_700_000_000_000_000_000,) * 2)
+
+        monkeypatch.setattr(src.pq, "write_table", write_same_ms)
+        landing = f"{tmpdir}/landing"
+        land_blocks(spark, _blocks(spark, 30, reorg_depth=3), landing, batch_size=1)
+        land_blocks(spark, _blocks(spark, 30, reorg_depth=3), landing, batch_size=2)
+        names = sorted(os.listdir(landing))
+        assert len(names) == 45
+        mtimes = [os.stat(f"{landing}/{n}").st_mtime_ns // 1_000_000 for n in names]
+        assert all(a < b for a, b in zip(mtimes, mtimes[1:]))
+
+    def test_failed_chunk_leaves_no_file(self, spark, tmpdir, monkeypatch):
+        from elric_rs_spark.streaming import source as src
+
+        landing = f"{tmpdir}/landing"
+        bad = _blocks(spark, 4, reorg_depth=1)
+        bad[3]["block_num"] = "x"
+        with pytest.raises((TypeError, ValueError)):
+            land_blocks(spark, bad, landing, batch_size=2)
+        assert len(os.listdir(landing)) == 1  # the first chunk only
+        assert _landed(spark, landing).count() == 2
+
+        real_write = src.pq.write_table
+
+        def write_then_fail(table, where, **kw):
+            real_write(table, where, **kw)
+            raise OSError("disk full")
+
+        monkeypatch.setattr(src.pq, "write_table", write_then_fail)
+        with pytest.raises(OSError):
+            land_blocks(spark, _blocks(spark, 2, reorg_depth=1), landing)
+        assert len(os.listdir(landing)) == 1  # temp file unlinked
+
+    def test_stray_temp_file_is_never_read(self, spark, tmpdir):
+        """A crash between write and rename leaves a hidden temp file:
+        neither the restart read of the max seq nor the stream sees it."""
+        import pyarrow.parquet as pq
+
+        from elric_rs_spark.streaming import source as src
+
+        landing = f"{tmpdir}/landing"
+        land_blocks(spark, _blocks(spark, 5, reorg_depth=3), landing)
+        stray = src._chunk_table(_blocks(spark, 5, reorg_depth=3), list(range(100, 105)))
+        pq.write_table(stray, f"{landing}/.part-{100:020d}.parquet.tmp")
+        src._DIR_SEQ.clear()  # simulate a fresh process
+        land_blocks(spark, _blocks(spark, 5, reorg_depth=3), landing)
+
+        q = (
+            read_block_stream(spark, landing).writeStream.format("memory")
+            .queryName("landing_stray_tmp")
+            .option("checkpointLocation", f"{tmpdir}/ckpt")
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+        seqs = sorted(r.seq for r in spark.table("landing_stray_tmp").collect())
+        assert seqs == list(range(10))
+
+
 class TestStatefulFinalityStreaming:
     def test_finality_end_to_end(self, spark, tmpdir):
         """40 blocks, watermark trails by 5: every block with block_num <=

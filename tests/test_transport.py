@@ -16,6 +16,8 @@ Covered reference semantics:
 
 from __future__ import annotations
 
+import os
+import time
 from types import SimpleNamespace
 
 import pytest
@@ -249,6 +251,47 @@ class TestResponseToMessage:
             "s",
         )
         assert msg["block_ts"].year == 2024 and msg["block_ts"].month == 8
+
+
+@pytest.fixture()
+def new_york_tz():
+    old = os.environ.get("TZ")
+    os.environ["TZ"] = "America/New_York"
+    time.tzset()
+    yield
+    if old is None:
+        os.environ.pop("TZ", None)
+    else:
+        os.environ["TZ"] = old
+    time.tzset()
+
+
+class TestBlockTsLanding:
+    def test_clock_time_lands_as_its_instant_off_utc(self, spark, tmp_path, new_york_tz):
+        """The wire Clock is an instant: a host UTC offset must not
+        shift it on the way through land_blocks."""
+        from pyspark.sql import functions as F
+
+        from elric_rs_spark.streaming.source import BLOCK_STREAM_SCHEMA, land_blocks
+
+        clock_s = 1722988800  # 2024-08-07T00:00:00Z
+        msg = response_to_message(
+            {
+                "msg_type": "new",
+                "clock": {"id": "b", "number": 1, "timestamp": float(clock_s)},
+                "cursor": "c",
+                "final_block_height": 0,
+                "payload": b"",
+            },
+            "s",
+        )
+        landing = str(tmp_path / "landing")
+        land_blocks(spark, [msg], landing)
+        got = (
+            spark.read.schema(BLOCK_STREAM_SCHEMA).parquet(landing)
+            .select(F.unix_timestamp("block_ts")).first()[0]
+        )
+        assert got == clock_s
 
 
 class TestFullTopologyOverWire:
