@@ -4,9 +4,10 @@
 The reference's performance posture is qualitative — "insert data into
 Clickhouse as fast as possible" (ref README.md:3) with NO published
 numbers — so this records the graft's self-baseline for the full
-wire-to-typed-tables topology: land block change-sets -> tail as a
-stream -> stateful finality buffer -> JSON decode -> composite-PK merge
--> typed cast -> per-table parquet sink (the ClickHouse stand-in).
+wire-to-typed-tables topology: finality buffer on the reader thread ->
+land the final block change-sets -> tail as a stream -> JSON decode ->
+composite-PK merge -> typed cast -> per-table parquet sink (the
+ClickHouse stand-in).
 
 Two rows per block across two tables (the reference's own end-to-end
 test shape, ref loader.rs:358-402). Prints ONE JSON line:

@@ -166,7 +166,6 @@ def cmd_run(args: argparse.Namespace) -> int:
         args.checkpoint or os.path.join(args.out, "_checkpoint"),
         sink,
         available_now=not args.follow,
-        state_partitions=args.state_partitions,
     )
     try:
         with GracefulShutdown(query):
@@ -201,7 +200,6 @@ def build_parser() -> argparse.ArgumentParser:
         help="payload decode path; auto = protobuf for db_out-style sink modules",
     )
     r.add_argument("--mode", choices=("strict", "permissive"), default="strict")
-    r.add_argument("--state-partitions", type=int, default=4)
     r.add_argument(
         "--follow",
         action="store_true",

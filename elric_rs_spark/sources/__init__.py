@@ -20,6 +20,7 @@ from elric_rs_spark.streaming.source import (  # noqa: F401
     fixture_replay,
     land_blocks,
     read_block_stream,
+    resume_cursor,
 )
 from elric_rs_spark.streaming.transport import (  # noqa: F401
     make_substreams_connect,

@@ -10,18 +10,21 @@ Reference semantics (ref loader.rs:24, 82-109, 177-193):
   block_num > last_valid_block. Already-emitted blocks are unaffected —
   undo only ever touches pre-sink state (ref loader.rs:177-193).
 
-`FinalityBuffer` is the pure-Python state machine: the reference model,
-unit-tested against the reference's own three loader tests.
-`apply_finality_stateful` is the form the pipeline runs, via
-`applyInPandasWithState` keyed by stream id with state = the buffered
-blocks. Each stream's buffer is tiny (<=12 rows) so state stays small no
-matter the data volume. Its one kernel, `_replay`, applies the buffer's
-push/undo rules to row positions, and is property-tested against
-`FinalityBuffer` with undos mixed in.
+Finality runs on the reader thread, before landing, as in the
+reference, whose loader keeps the buffer in memory: `source.land_blocks`
+passes each chunk of demuxed messages through `replay_chunk`, which
+keeps one buffer per stream id and lands only the emitted blocks. Undo
+signals and undone blocks never reach disk, so the streaming query needs
+no stateful operator. `FinalityBuffer` is the pure-Python state machine:
+the reference model, unit-tested against the reference's own three
+loader tests. The one kernel, `_replay`, applies the buffer's push/undo
+rules to row positions and is property-tested against `FinalityBuffer`,
+undos included.
 """
 
 from __future__ import annotations
 
+import math
 from collections import deque
 from dataclasses import dataclass, field
 
@@ -69,55 +72,12 @@ class FinalityBuffer:
         return before - len(self.buffer)
 
 
-# ---------------------------------------------------------------------------
-# Distributed form: applyInPandasWithState over a keyed block stream.
-# ---------------------------------------------------------------------------
-
-FINALITY_OUTPUT_SCHEMA = (
-    "stream_id string, block_num long, block_id string, cursor string, "
-    "final_block_height long, payload string"
-)
-FINALITY_STATE_SCHEMA = (
-    "block_num array<long>, block_id array<string>, cursor array<string>, "
-    "final_height array<long>, payload array<string>"
-)
-
-
-_OUTPUT_COLS = [
-    "stream_id",
-    "block_num",
-    "block_id",
-    "cursor",
-    "final_block_height",
-    "payload",
-]
-
-_BUF_COLS = ["block_num", "block_id", "cursor", "final_block_height", "payload"]
-_INT_COLS = {"block_num": "int64", "final_block_height": "int64"}
-
-
-def _sort_arrival(pdf):
-    """Arrival order, not block order: block numbers repeat in the reorg
-    case (an undo shares the dropped block's number; replacement blocks
-    reuse numbers), and pandas' default quicksort is unstable. `seq` is
-    the source's monotonic arrival counter. Rows with null seq (data
-    landed by a pre-seq writer) sort FIRST in their original frame order
-    (they were landed earlier; stable sort preserves file order within
-    them). Frames with NO usable seq at all (column absent, or present
-    but all-null) fall back to a stable block_num sort — a sort is still
-    mandatory there because Spark gives no row-order guarantee after the
-    groupBy shuffle."""
-    if "seq" in pdf.columns and pdf["seq"].notna().any():
-        return pdf.sort_values("seq", kind="stable", na_position="first")
-    return pdf.sort_values("block_num", kind="stable")
-
-
 def _replay(nums: list, undo: list, marks: list, m: int, cap: int):
     """FinalityBuffer.push/undo replayed on row positions.
 
     `nums` holds the block_num of every row: the `m` buffered rows first,
-    then the frame's rows in arrival order. `undo` and `marks` describe
-    the frame's rows only: an undo row drops buffered positions above its
+    then the chunk's rows in arrival order. `undo` and `marks` describe
+    the chunk's rows only: an undo row drops buffered positions above its
     mark (last_valid_block); a new row is appended, then the buffered
     prefix at or below its mark (final_block_height) is emitted (stop at
     the first non-final front — NOT a filter), then the oldest rows past
@@ -138,59 +98,37 @@ def _replay(nums: list, undo: list, marks: list, m: int, cap: int):
     return emit, list(buf)
 
 
-def _finality_func(key, pdf_iter, state):
-    """Grouped-map-with-state kernel: replays FinalityBuffer per stream key.
+def _mark(msg: dict) -> float:
+    w = msg.get("last_valid_block" if msg.get("msg_type") == "undo" else "final_block_height")
+    return -math.inf if w is None else w
 
-    Each frame is sorted into arrival order (`_sort_arrival`), appended
-    to the buffered rows, and replayed on integer lists by `_replay`; the
-    emitted rows and the new buffer are `iloc` slices of that one frame.
-    Undo signals are rows with msg_type='undo' and last_valid_block set;
-    they never reach the output.
-    """
-    import pandas as pd
 
-    (stream_id,) = key
-    buf_pdf = pd.DataFrame(
-        dict(zip(_BUF_COLS, map(list, state.get)))
-        if state.exists
-        else {c: [] for c in _BUF_COLS}
-    ).astype(_INT_COLS)
+def replay_chunk(buffers: dict, chunk: list[dict]) -> tuple[list[dict], dict]:
+    """One chunk of demuxed messages through one FinalityBuffer per
+    stream_id, replayed by `_replay`. `buffers` maps each stream_id to its
+    buffered messages in arrival order and is left untouched. Returns the
+    messages that became final (each stream's in emit order) and the new
+    buffers.
 
-    outs: list[pd.DataFrame] = []
-    for pdf in pdf_iter:
-        pdf = _sort_arrival(pdf)
-        is_undo = pdf["msg_type"] == "undo"
-        marks = pdf["last_valid_block"].where(is_undo, pdf["final_block_height"])
-        combined = pd.concat([buf_pdf, pdf[_BUF_COLS]], ignore_index=True, copy=False)
+    An undo is a message with msg_type 'undo'; every other message is a
+    new block. A null mark (final_block_height, or an undo's
+    last_valid_block) and a null block_num compare false, so a block
+    with a null watermark is only ever overflow-emitted and an undo with
+    a null last_valid_block empties its stream's buffer."""
+    by_stream: dict = {}
+    for msg in chunk:
+        by_stream.setdefault(msg.get("stream_id"), []).append(msg)
+    emitted: list[dict] = []
+    out = dict(buffers)
+    for sid, msgs in by_stream.items():
+        rows = buffers.get(sid, []) + msgs
         emit, keep = _replay(
-            combined["block_num"].tolist(),
-            is_undo.tolist(),
-            marks.tolist(),
-            len(buf_pdf),
+            [math.inf if r.get("block_num") is None else r["block_num"] for r in rows],
+            [r.get("msg_type") == "undo" for r in msgs],
+            [_mark(r) for r in msgs],
+            len(rows) - len(msgs),
             REORG_BUFFER_LEN,
         )
-        emitted = combined.iloc[emit].astype(_INT_COLS)
-        emitted.insert(0, "stream_id", stream_id)
-        outs.append(emitted)
-        buf_pdf = combined.iloc[keep].astype(_INT_COLS).reset_index(drop=True)
-
-    state.update(tuple(buf_pdf[c].tolist() for c in _BUF_COLS))
-    yield pd.concat(outs, ignore_index=True) if outs else pd.DataFrame(
-        columns=_OUTPUT_COLS
-    )
-
-
-def apply_finality_stateful(block_df):
-    """Wire the finality kernel onto a (streaming or batch-test) DataFrame
-    with columns (stream_id, msg_type, block_num, block_id, cursor,
-    final_block_height, last_valid_block)."""
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    return block_df.groupBy("stream_id").applyInPandasWithState(
-        _finality_func,
-        outputStructType=FINALITY_OUTPUT_SCHEMA,
-        stateStructType=FINALITY_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
+        emitted += [rows[p] for p in emit]
+        out[sid] = [rows[p] for p in keep]
+    return emitted, out

@@ -1,8 +1,11 @@
 """The full reference topology as ONE Structured Streaming pipeline
-(SURVEY.md §3 lifecycle): block stream -> finality buffer (T7/T8) ->
-change-set decode (T1) -> field-map + composite-PK merge (T2/T3) ->
-split-by-table (T4) -> typed cast in alphabetical column order (T5/T6) ->
-per-table sink + cursor checkpoint, data first (S5/S6/T9).
+(SURVEY.md §3 lifecycle): landed final blocks -> change-set decode (T1)
+-> field-map + composite-PK merge (T2/T3) -> split-by-table (T4) ->
+typed cast in alphabetical column order (T5/T6) -> per-table sink +
+cursor checkpoint, data first (S5/S6/T9). The finality buffer (T7/T8)
+runs before landing, on the reader thread (`source.land_blocks`), so
+the landing dir holds only final blocks and the query has no stateful
+operator.
 
 `TypedPerTableSink` is the one per-table `foreachBatch` sink. Its
 target picks the writer every append goes through: a directory gets
@@ -35,7 +38,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from elric_rs_spark.cast import typed_cast
-from elric_rs_spark.streaming.finality import apply_finality_stateful
 from elric_rs_spark.streaming.http_sink import ClickHouseHttpWriter
 from elric_rs_spark.streaming.sink import ParquetWriter
 
@@ -172,20 +174,6 @@ def decode_changes_protobuf(block_df: DataFrame, mode: str = "strict") -> DataFr
     )
 
 
-def dedup_block_stream(stream: DataFrame, within: str = "1 hour") -> DataFrame:
-    """Collapse at-least-once upstream deliveries pre-sink: a reconnect
-    resumes from the last cursor and can re-deliver blocks already landed
-    (the reference tolerates this by delegating dedup to ClickHouse
-    ReplacingMergeTree, README.md:9-11). Streaming-native form:
-    `dropDuplicatesWithinWatermark` keyed by (stream_id, block_num,
-    block_id) with an event-time watermark on block_ts — state is bounded
-    by the watermark horizon instead of growing forever, which is the
-    only dedup shape that survives an unbounded stream."""
-    return stream.withWatermark("block_ts", within).dropDuplicatesWithinWatermark(
-        ["stream_id", "block_num", "block_id"]
-    )
-
-
 class TypedPerTableSink:
     """S5/S6/T9 with the reference's typed-cast stage: route change rows
     by table, cast each table's string map to its declared schema
@@ -244,53 +232,20 @@ def run_pipeline(
     checkpoint_dir: str,
     sink: TypedPerTableSink,
     available_now: bool = True,
-    state_partitions: int = 4,
 ):
-    """Wire the whole topology: tail the landing dir, run stateful
-    finality, fan out through the typed per-table sink. Returns the
-    started StreamingQuery.
-
-    `state_partitions` sizes the stateful operator's shuffle: state
-    parallelism is bounded by the number of DISTINCT STREAMS (the
-    groupBy key), not cores — and every state partition costs a state
-    store instance plus a Python state-server round trip PER
-    MICRO-BATCH, even when empty (measured: 4 micro-batches over one
-    stream = 45 s at 32 partitions vs 24 s at 4). Structured Streaming
-    reads `spark.sql.shuffle.partitions` once at first query start and
-    pins it in the checkpoint, so the conf is set around `.start()` and
-    restored immediately — later batches use the checkpointed value;
-    batch queries on the session are unaffected.
-
-    100x-state note: the default HDFS-backed state store keeps every
-    stream's buffer on the executor HEAP. At production state sizes
-    (many streams x deep finality windows), switch the session to the
-    RocksDB provider before the FIRST start — state then lives on local
-    disk with incremental checkpointing:
-      spark.sql.streaming.stateStore.providerClass =
-        org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider
-      spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled = true
-    The provider is pinned in the checkpoint like the shuffle-partition
-    count, so it must be chosen at topology birth, not on restart.
-    Crash-recovery contract (kill -> restart on the same checkpoint:
-    state restored, no loss, read-view exactly-once) is proven in
+    """Wire the whole topology: tail the landing dir, which holds only
+    final blocks, and fan out through the typed per-table sink. Returns
+    the started StreamingQuery. Crash-recovery contract (kill -> restart
+    on the same checkpoint: no loss, read-view exactly-once) is proven in
     tests/test_pipeline.py::TestCheckpointRestart."""
     from elric_rs_spark.streaming.source import read_block_stream
 
-    stream = read_block_stream(spark, landing_dir)
-    finalized = apply_finality_stateful(stream)
     writer = (
-        finalized.writeStream.foreachBatch(sink.write_batch)
-        .outputMode("append")
+        read_block_stream(spark, landing_dir)
+        .writeStream.foreachBatch(sink.write_batch)
         .option("checkpointLocation", checkpoint_dir)
     )
     if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        # the reference's 15s insert cadence (ref loader.rs:58)
-        writer = writer.trigger(processingTime="15 seconds")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        return writer.start()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        return writer.trigger(availableNow=True).start()
+    # the reference's 15s insert cadence (ref loader.rs:58)
+    return writer.trigger(processingTime="15 seconds").start()

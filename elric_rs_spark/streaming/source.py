@@ -10,12 +10,18 @@ Spark-side design: a reader thread drains the upstream iterator into a
 parquet landing directory; Structured Streaming tails that directory with
 `spark.readStream.schema(...).parquet(...)`. This decouples upstream
 liveness from micro-batch cadence (SURVEY.md §7 risk 5) and gives replay
-for free. The reader thread writes each chunk itself with pyarrow, as
-one parquet file renamed into place from a hidden temp name, so landing
-starts no Spark job and no Python worker; the directory is a local path
-on the driver. The gRPC dependency is optional (grpcio need not be
-installed), so the transport is injected as any Python iterator;
-`fixture_replay` provides a deterministic stand-in built from
+for free. The reader thread applies finality itself, as the reference's
+loader does, with one in-memory 12-block buffer per stream
+(`finality.replay_chunk`): only final blocks land, so the landing dir is
+append-only final data and the streaming query is stateless. On restart
+the buffers start empty and the reader resumes upstream from
+`resume_cursor`, the cursor of the last landed block, so upstream
+re-sends what was buffered (ref loader.rs:195-210). Each chunk lands as
+one pyarrow-written parquet file renamed into place from a hidden temp
+name, so landing starts no Spark job and no Python worker; the directory
+is a local path on the driver. The gRPC dependency is optional (grpcio
+need not be installed), so the transport is injected as any Python
+iterator; `fixture_replay` provides a deterministic stand-in built from
 events.parquet.
 """
 
@@ -27,52 +33,76 @@ import itertools
 import os
 import time
 from collections.abc import Callable, Iterable, Iterator
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
+from elric_rs_spark.streaming.finality import replay_chunk
+
 BLOCK_STREAM_SCHEMA = (
-    "stream_id string, msg_type string, block_num long, block_id string, "
-    "block_ts timestamp, cursor string, final_block_height long, "
-    "last_valid_block long, payload string, seq long"
+    "stream_id string, block_num long, block_id string, block_ts timestamp, "
+    "cursor string, final_block_height long, payload string, seq long"
 )
 
-# Monotonic arrival counters stamped by land_blocks, one per landing dir.
-# block_num alone cannot order a micro-batch: an undo shares the dropped
-# block's number and post-reorg blocks REUSE numbers, so sorting by
-# block_num can apply an undo before the same-numbered new block (or
-# after its replacement). The reader thread is the single consumer (same
-# topology as the reference's one gRPC stream), so a per-dir counter is a
-# total arrival order; on process restart it resumes from the max seq
-# already in the landing dir so replayed and new rows never overlap.
-_DIR_SEQ: dict[str, Iterator[int]] = {}
+
+@dataclass
+class _Reader:
+    """Reader-side state of one landing dir: the next arrival number
+    (`seq`), each stream's finality buffer, and the cursor of each
+    stream's last landed block."""
+
+    seq: int
+    cursors: dict[str | None, str | None]
+    buffers: dict[str | None, list[dict]] = field(default_factory=dict)
 
 
-def _seq_counter(spark: SparkSession, landing_dir: str) -> Iterator[int]:
-    # realpath: '/x' and '/x/' (or a symlinked spelling) must share one
-    # counter — two counters over one dir would issue colliding seqs
+# One _Reader per landing dir, keyed by realpath: '/x' and '/x/' (or a
+# symlinked spelling) must share one, since two would issue colliding
+# seqs. The reader thread is the single consumer (same topology as the
+# reference's one gRPC stream), so `seq` is a total arrival order; block_num
+# is not one, since replacement blocks after a reorg reuse numbers.
+_READERS: dict[str, _Reader] = {}
+
+
+def _reader(spark: SparkSession, landing_dir: str) -> _Reader:
+    """The dir's reader state; on first use in a process (or after the
+    dir was deleted) one Spark read recovers the max `seq` and each
+    stream's last landed cursor, with empty buffers, as the reference
+    restarts (ref loader.rs:195-210)."""
     key = os.path.realpath(landing_dir)
-    if key not in _DIR_SEQ:
-        start = 0
+    if key not in _READERS or not os.path.isdir(key):
+        seq, cursors = 0, {}
         # Only a missing dir means "fresh stream". Any other failure
         # (corrupt footer, permissions, transient FS error) must
-        # propagate: silently restarting at 0 over a dir holding higher
-        # seqs would recreate the reorg misordering seq exists to fix.
+        # propagate: restarting seq at 0 over a dir holding higher seqs
+        # would break arrival order.
         if os.path.isdir(key):
-            row = (
+            rows = (
                 spark.read.schema(BLOCK_STREAM_SCHEMA)
                 .parquet(landing_dir)
-                .agg({"seq": "max"})
-                .collect()[0]
+                .groupBy("stream_id")
+                .agg(F.max("seq").alias("seq"), F.max_by("cursor", "seq").alias("cursor"))
+                .collect()
             )
-            if row[0] is not None:
-                start = int(row[0]) + 1
-        _DIR_SEQ[key] = itertools.count(start)
-    return _DIR_SEQ[key]
+            seq = max((r.seq + 1 for r in rows if r.seq is not None), default=0)
+            cursors = {r.stream_id: r.cursor for r in rows}
+        _READERS[key] = _Reader(seq, cursors)
+    return _READERS[key]
+
+
+def resume_cursor(spark: SparkSession, landing_dir: str, stream_id: str) -> str | None:
+    """Cursor of the last block of `stream_id` landed in `landing_dir`,
+    or None. A restarted reader passes it to
+    `ReconnectingReader(latest_cursor=...)`; upstream then re-sends the
+    blocks that were still buffered when the last process stopped
+    (ref main.rs:299-310)."""
+    return _reader(spark, landing_dir).cursors.get(stream_id)
+
 
 # ref substreams_stream.rs:62 — ExponentialBackoff from 10ms, capped 45s
 BACKOFF_INITIAL_S = 0.010
@@ -233,35 +263,50 @@ def _land_file(table: pa.Table, landing_dir: str, name: str, after_ms: int) -> i
 def land_blocks(
     spark: SparkSession, messages: Iterable[dict], landing_dir: str, batch_size: int = 500
 ) -> int:
-    """Reader-thread half: land each chunk of `batch_size` messages as
-    one parquet file in the landing dir the streaming query tails.
-    Returns rows written.
+    """Reader-thread half: pass each chunk of `batch_size` demuxed
+    messages through the dir's finality buffers (`finality.replay_chunk`,
+    one buffer per stream id) and land the blocks that became final as
+    one parquet file, in emit order, each stamped with the next `seq`.
+    Returns rows landed. Undo signals and undone blocks never land; a
+    chunk that emits nothing writes no file; blocks still buffered when
+    `messages` ends stay buffered for the next call on the same dir.
 
-    Each chunk is built as one Arrow table (missing keys are null, a
+    Each file is built as one Arrow table (missing keys are null, a
     `block_ts` is read as createDataFrame reads it: naive = local time,
     aware = its instant), written by pyarrow to a hidden
     `.part-<first seq>.parquet.tmp` and renamed to `part-<first
     seq>.parquet`. Spark skips names starting with `.`, so a file is
     visible only once complete; a type error raises before any file is
-    written. No Spark job runs (except `_seq_counter`'s one read of the
-    max `seq` when a process first lands into an existing dir)."""
-    n = 0
+    written. No Spark job runs (except `_reader`'s one read when a
+    process first lands into an existing dir).
+
+    A failure (upstream, a bad message, a write) drops the dir's reader
+    state, as a crash would: the caller resumes upstream from
+    `resume_cursor`, which re-sends the blocks that were buffered."""
     it = iter(messages)
-    seq = _seq_counter(spark, landing_dir)
+    reader = _reader(spark, landing_dir)
     os.makedirs(landing_dir, exist_ok=True)
     with os.scandir(landing_dir) as entries:
         last_ms = max(
             (e.stat().st_mtime_ns // 1_000_000 for e in entries if e.name.endswith(".parquet")),
             default=0,
         )
-    while True:
-        chunk = list(itertools.islice(it, batch_size))
-        if not chunk:
-            return n
-        seqs = [next(seq) for _ in chunk]
-        table = _chunk_table(chunk, seqs)
-        last_ms = _land_file(table, landing_dir, f"part-{seqs[0]:020d}.parquet", last_ms)
-        n += len(chunk)
+    n = 0
+    try:
+        while chunk := list(itertools.islice(it, batch_size)):
+            emitted, buffers = replay_chunk(reader.buffers, chunk)
+            if emitted:
+                seqs = list(range(reader.seq, reader.seq + len(emitted)))
+                table = _chunk_table(emitted, seqs)
+                last_ms = _land_file(table, landing_dir, f"part-{seqs[0]:020d}.parquet", last_ms)
+                reader.seq += len(emitted)
+                reader.cursors.update((m.get("stream_id"), m.get("cursor")) for m in emitted)
+                n += len(emitted)
+            reader.buffers = buffers
+    except BaseException:
+        _READERS.pop(os.path.realpath(landing_dir), None)
+        raise
+    return n
 
 
 def read_block_stream(spark: SparkSession, landing_dir: str) -> DataFrame:

@@ -56,8 +56,10 @@ def open_grpc_channel(endpoint: str, plaintext: bool = False):
 
 
 def response_to_message(resp: dict, stream_id: str) -> dict | None:
-    """Decoded Response dict -> BLOCK_STREAM_SCHEMA message dict (the
-    landing-dir row shape). Session/progress/skip responses return None
+    """Decoded Response dict -> the message dict `land_blocks` takes: a
+    new block's fields are the landing-dir row shape (BLOCK_STREAM_SCHEMA),
+    plus msg_type and, for an undo, last_valid_block, which the reader's
+    finality buffer consumes. Session/progress/skip responses return None
     (S3 demux, ref substreams_stream.rs:166-215). Payload bytes travel
     base64 in the string payload column; decode_changes_protobuf reverses
     it."""

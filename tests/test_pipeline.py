@@ -373,14 +373,15 @@ class TestMalformedPayloadPolicy:
 class TestCheckpointRestart:
     def test_kill_and_resume_no_loss_no_dup(self, spark, tmpdir):
         """Crash-recovery engine-native (VERDICT r04 next-round #6; ref
-        main.rs:299-310): kill a run_pipeline stream mid-flight, restart
-        against the SAME checkpoint dir, and prove (a) the stateful
-        finality buffer resumes from checkpointed state — blocks that
-        were buffered-unfinalized at the kill flush after restart,
-        (b) the exactly-once read view has every finalized block EXACTLY
-        once (a replayed epoch may double raw rows; the read view must
-        collapse them), (c) cursor recovery returns the latest flushed
-        block of the SECOND run."""
+        main.rs:299-310): kill a run_pipeline stream mid-flight (the
+        engine, not the reader), restart against the SAME checkpoint dir,
+        and prove (a) the file source's checkpoint resumes where the
+        killed query stopped — blocks landed while the engine was down
+        (15..34, finalized by the still-running reader) drain after
+        restart, run-1 files are not re-read, (b) the exactly-once read
+        view has every finalized block EXACTLY once (a replayed epoch may
+        double raw rows; the read view must collapse them), (c) cursor
+        recovery returns the latest flushed block of the SECOND run."""
         import time
 
         landing, ckpt, out = (f"{tmpdir}/{d}" for d in ("landing", "ckpt", "out"))
@@ -418,7 +419,7 @@ class TestCheckpointRestart:
 
         rows = read_exactly_once(spark, out, "approvals", ["owner"]).collect()
         assert sorted(r.block_num for r in rows) == list(range(35))
-        # state survived the kill: blocks buffered at the kill (15..19 at
-        # most) flushed in run 2, not re-ingested from scratch — the file
-        # source's checkpoint must not re-read run-1 files
+        # blocks the reader buffered at the kill (15..19) landed and
+        # flushed in run 2, and the file source's checkpoint did not
+        # re-read run-1 files
         assert load_persisted_cursor(spark, out, "s1") == "34"

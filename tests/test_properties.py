@@ -3,7 +3,8 @@ pyramid lacks entirely (SURVEY.md §5: no property tests upstream).
 
 Pure-Python targets only (the Spark paths are covered by the oracle and
 plan gates): the FinalityBuffer state machine under arbitrary
-push/undo interleavings, and the ClickHouse type-string parser.
+push/undo interleavings, the reader's chunked multi-stream replay
+against it, and the ClickHouse type-string parser.
 """
 
 from __future__ import annotations
@@ -250,6 +251,62 @@ class TestReplayEquivalence:
         )
         assert emit == emitted
         assert keep == [b.payload for b in buf.buffer]
+
+
+class TestChunkedReplay:
+    """land_blocks' finality (`replay_chunk`, chunk by chunk, one buffer
+    per stream id) lands each stream's blocks exactly as a per-stream
+    FinalityBuffer fed the same messages emits them, and leaves the same
+    blocks buffered: chunk boundaries and how the streams interleave do
+    not matter. A null mark compares false, which the model encodes as
+    -inf."""
+
+    @given(
+        st.lists(
+            st.tuples(
+                st.sampled_from(["sA", "sB"]),
+                st.booleans(),  # undo?
+                st.integers(min_value=0, max_value=40),  # block_num
+                # final_block_height, or last_valid_block for an undo
+                st.one_of(st.none(), st.integers(min_value=0, max_value=40)),
+            ),
+            min_size=1,
+            max_size=120,
+        ),
+        st.integers(min_value=1, max_value=50),
+    )
+    @settings(max_examples=400, deadline=None)
+    def test_matches_per_stream_buffers(self, rows, chunk):
+        import math
+
+        from elric_rs_spark.streaming.finality import replay_chunk
+
+        msgs = [
+            {"stream_id": sid, "msg_type": "undo" if undo else "new",
+             "block_num": num, "cursor": str(i),
+             "last_valid_block" if undo else "final_block_height": mark}
+            for i, (sid, undo, num, mark) in enumerate(rows)
+        ]
+        buffers: dict = {}
+        landed: dict = {"sA": [], "sB": []}
+        for lo in range(0, len(msgs), chunk):
+            emitted, buffers = replay_chunk(buffers, msgs[lo:lo + chunk])
+            for m in emitted:
+                landed[m["stream_id"]].append(int(m["cursor"]))
+
+        models = {"sA": FinalityBuffer(), "sB": FinalityBuffer()}
+        expect: dict = {"sA": [], "sB": []}
+        for i, (sid, undo, num, mark) in enumerate(rows):
+            w = -math.inf if mark is None else mark
+            if undo:
+                models[sid].undo(w)
+            else:
+                flushed = models[sid].push(Block(num, "", str(i), w, i))
+                expect[sid] += [b.payload for b in flushed]
+        assert landed == expect
+        for sid, model in models.items():
+            held = [int(m["cursor"]) for m in buffers.get(sid, [])]
+            assert held == [b.payload for b in model.buffer]
 
 
 def test_lm_score_rounding_boundary_margin():

@@ -78,7 +78,7 @@ class TestStreamingWindows:
         out = f"{tmpdir}/out"
         land_blocks(spark, _ts_blocks(60), landing, batch_size=60)
         # second file: one very late row (t = +1 min, far behind wm 54min)
-        late = [dict(_ts_blocks(1)[0], block_num=999,
+        late = [dict(_ts_blocks(1)[0], block_num=999, final_block_height=999,
                      block_ts=BASE + datetime.timedelta(minutes=1))]
 
         def run_once():
@@ -115,11 +115,12 @@ class TestStreamingWindows:
         burst1 = _ts_blocks(5, gap_s=60)  # 12:00..12:04
         burst2 = [
             dict(b, block_num=b["block_num"] + 100,
+                 final_block_height=b["block_num"] + 100,
                  block_ts=b["block_ts"] + datetime.timedelta(minutes=30))
             for b in _ts_blocks(3, gap_s=60)  # 12:30..12:32
         ]
         # closing row far in the future so the watermark closes both
-        closer = [dict(_ts_blocks(1)[0], block_num=500,
+        closer = [dict(_ts_blocks(1)[0], block_num=500, final_block_height=500,
                        block_ts=BASE + datetime.timedelta(hours=2))]
         land_blocks(spark, burst1 + burst2 + closer, landing)
         stream = read_block_stream(spark, landing)

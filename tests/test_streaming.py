@@ -4,7 +4,8 @@ test_process_data) plus Spark-native end-to-end checks:
 
 - FinalityBuffer state machine (pure Python, exact reference semantics)
 - ReconnectingReader backoff/resume (ref substreams_stream.rs:53-149)
-- applyInPandasWithState finality op on a real Structured Streaming query
+- reader-side finality in land_blocks, tailed by a real Structured
+  Streaming query, and a reader restart from resume_cursor
 - TypedPerTableSink fan-out + cursor write ordering + recovery
 """
 
@@ -18,11 +19,7 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
-from elric_rs_spark.streaming.finality import (
-    Block,
-    FinalityBuffer,
-    apply_finality_stateful,
-)
+from elric_rs_spark.streaming.finality import Block, FinalityBuffer
 from elric_rs_spark.streaming.pipeline import TypedPerTableSink
 from elric_rs_spark.streaming.sink import load_persisted_cursor
 from elric_rs_spark.streaming.source import (
@@ -33,6 +30,7 @@ from elric_rs_spark.streaming.source import (
     fixture_replay,
     land_blocks,
     read_block_stream,
+    resume_cursor,
 )
 
 
@@ -170,8 +168,9 @@ class TestReconnectingReader:
 
 
 # ---------------------------------------------------------------------------
-# 3. End-to-end: landing dir -> readStream -> stateful finality -> memory
-#    sink (the Spark-native form of ref loader.rs:358-402 test_process_data).
+# 3. End-to-end: land_blocks (finality on the reader thread) -> landing
+#    dir -> readStream -> memory sink (the Spark-native form of ref
+#    loader.rs:358-402 test_process_data).
 # ---------------------------------------------------------------------------
 
 
@@ -215,10 +214,8 @@ def _blocks(spark, n_blocks: int, reorg_depth: int, undo_at=None, undo_to=None):
 
 
 def _run_stream(spark, landing, checkpoint, sink_name):
-    stream = read_block_stream(spark, landing)
-    finalized = apply_finality_stateful(stream)
     q = (
-        finalized.writeStream.format("memory")
+        read_block_stream(spark, landing).writeStream.format("memory")
         .queryName(sink_name)
         .outputMode("append")
         .option("checkpointLocation", checkpoint)
@@ -241,33 +238,43 @@ def _landed(spark, landing):
 
 
 class TestLanding:
-    """land_blocks writes each chunk as one pyarrow parquet file, renamed
-    into place from a hidden temp name, without a Spark job."""
+    """land_blocks writes each chunk's final blocks as one pyarrow parquet
+    file, renamed into place from a hidden temp name, without a Spark
+    job."""
 
     def test_one_file_per_chunk_same_values_as_create_dataframe(self, spark, tmpdir):
         import datetime
 
+        import pyarrow.parquet as pq
+
         utc = datetime.timezone.utc
-        msgs = [
+        blocks = [
             {"stream_id": "s1", "msg_type": "new", "block_num": 1, "block_id": "b1",
              "block_ts": datetime.datetime(2024, 8, 7, 12, 0, 0, 123456),  # naive
-             "cursor": "c1", "final_block_height": 0, "last_valid_block": None,
+             "cursor": "c1", "final_block_height": 1, "last_valid_block": None,
              "payload": '{"v": 1}'},
             {"stream_id": "s1", "msg_type": "new", "block_num": 2**31 + 7,
              "block_id": "b2", "block_ts": datetime.datetime(2024, 8, 7, tzinfo=utc),
-             "cursor": "c2", "final_block_height": 2**31, "last_valid_block": None,
+             "cursor": "c2", "final_block_height": 2**31 + 7, "last_valid_block": None,
              "payload": None},
             {"stream_id": None, "msg_type": "new", "block_num": 3, "block_id": None,
-             "block_ts": None, "cursor": None, "final_block_height": None,
+             "block_ts": None, "cursor": None, "final_block_height": 3,
              "last_valid_block": None, "payload": None},
-            {"msg_type": "new", "block_num": 4},  # missing keys land as null
+            # missing keys land as null
+            {"msg_type": "new", "block_num": 4, "final_block_height": 4},
+        ]
+        msgs = blocks + [
+            # already-final blocks are past any undo
             {"stream_id": "s1", "msg_type": "undo", "block_num": 2, "block_id": None,
              "block_ts": None, "cursor": "c1", "final_block_height": None,
              "last_valid_block": 1, "payload": None},
+            # a null watermark never finalizes a block
+            {"stream_id": "s2", "msg_type": "new", "block_num": 5, "block_id": "b5",
+             "final_block_height": None},
         ]
         landing = f"{tmpdir}/landing"
         jobs_before = _max_job_id(spark)
-        assert land_blocks(spark, msgs, landing) == len(msgs)
+        assert land_blocks(spark, msgs, landing) == len(blocks)
         assert _max_job_id(spark) == jobs_before  # no Spark job started
 
         names = os.listdir(landing)
@@ -276,10 +283,13 @@ class TestLanding:
 
         got = _landed(spark, landing).orderBy("seq").collect()
         seqs = [r.seq for r in got]
-        assert seqs == list(range(seqs[0], seqs[0] + len(msgs)))
-        # the same messages through createDataFrame (the old landing path)
+        assert seqs == list(range(seqs[0], seqs[0] + len(blocks)))
+        # the undo row and the held-back block are not on disk
+        assert [r.block_num for r in got] == [1, 2**31 + 7, 3, 4]
+        assert "msg_type" not in pq.read_schema(f"{landing}/{names[0]}").names
+        # the same blocks through createDataFrame (the old landing path)
         expected = spark.createDataFrame(
-            [{**m, "seq": q} for m, q in zip(msgs, seqs)], BLOCK_STREAM_SCHEMA
+            [{**m, "seq": q} for m, q in zip(blocks, seqs)], BLOCK_STREAM_SCHEMA
         ).orderBy("seq")
         assert got == expected.collect()
         us = F.unix_micros("block_ts").alias("us")
@@ -300,8 +310,9 @@ class TestLanding:
 
         monkeypatch.setattr(src.pq, "write_table", write_same_ms)
         landing = f"{tmpdir}/landing"
-        land_blocks(spark, _blocks(spark, 30, reorg_depth=3), landing, batch_size=1)
-        land_blocks(spark, _blocks(spark, 30, reorg_depth=3), landing, batch_size=2)
+        # final blocks (watermark = block_num): every chunk lands a file
+        land_blocks(spark, _blocks(spark, 30, reorg_depth=0), landing, batch_size=1)
+        land_blocks(spark, _blocks(spark, 30, reorg_depth=0), landing, batch_size=2)
         names = sorted(os.listdir(landing))
         assert len(names) == 45
         mtimes = [os.stat(f"{landing}/{n}").st_mtime_ns // 1_000_000 for n in names]
@@ -311,7 +322,7 @@ class TestLanding:
         from elric_rs_spark.streaming import source as src
 
         landing = f"{tmpdir}/landing"
-        bad = _blocks(spark, 4, reorg_depth=1)
+        bad = _blocks(spark, 4, reorg_depth=0)
         bad[3]["block_num"] = "x"
         with pytest.raises((TypeError, ValueError)):
             land_blocks(spark, bad, landing, batch_size=2)
@@ -337,11 +348,11 @@ class TestLanding:
         from elric_rs_spark.streaming import source as src
 
         landing = f"{tmpdir}/landing"
-        land_blocks(spark, _blocks(spark, 5, reorg_depth=3), landing)
-        stray = src._chunk_table(_blocks(spark, 5, reorg_depth=3), list(range(100, 105)))
+        land_blocks(spark, _blocks(spark, 5, reorg_depth=0), landing)
+        stray = src._chunk_table(_blocks(spark, 5, reorg_depth=0), list(range(100, 105)))
         pq.write_table(stray, f"{landing}/.part-{100:020d}.parquet.tmp")
-        src._DIR_SEQ.clear()  # simulate a fresh process
-        land_blocks(spark, _blocks(spark, 5, reorg_depth=3), landing)
+        src._READERS.clear()  # simulate a fresh process
+        land_blocks(spark, _blocks(spark, 5, reorg_depth=0), landing)
 
         q = (
             read_block_stream(spark, landing).writeStream.format("memory")
@@ -354,6 +365,21 @@ class TestLanding:
         seqs = sorted(r.seq for r in spark.table("landing_stray_tmp").collect())
         assert seqs == list(range(10))
 
+    def test_deleted_dir_starts_fresh(self, spark, tmpdir):
+        """A landing dir deleted and recreated within one process is a
+        new stream: blocks buffered for the old dir never land in it."""
+        import shutil
+
+        landing = f"{tmpdir}/landing"
+        held = _blocks(spark, 5, reorg_depth=10)[1:]  # 1..4, none final
+        assert land_blocks(spark, held, landing) == 0
+        shutil.rmtree(landing)
+        fresh = [dict(m, block_id=f"new-{m['block_num']}")
+                 for m in _blocks(spark, 3, reorg_depth=0)]
+        assert land_blocks(spark, fresh, landing) == 3
+        got = _landed(spark, landing).orderBy("seq").collect()
+        assert [(r.seq, r.block_id) for r in got] == [(0, "new-0"), (1, "new-1"), (2, "new-2")]
+
 
 class TestStatefulFinalityStreaming:
     def test_finality_end_to_end(self, spark, tmpdir):
@@ -362,7 +388,7 @@ class TestStatefulFinalityStreaming:
         nothing above the tail watermark unless overflow-flushed."""
         landing = f"{tmpdir}/landing"
         n = land_blocks(spark, _blocks(spark, 40, reorg_depth=5), landing)
-        assert n == 40
+        assert n == 35  # rows landed: 35..39 stay in the reader's buffer
         got = _run_stream(spark, landing, f"{tmpdir}/ckpt", "fin_e2e")
         nums = [r.block_num for r in got.orderBy("block_num").collect()]
         # final watermark at block 39 is 34 -> 0..=34 emitted via finality;
@@ -431,61 +457,20 @@ class TestStatefulFinalityStreaming:
     def test_seq_continues_across_process_restart(self, spark, tmpdir):
         """The arrival counter must resume from the max seq already in the
         landing dir after a process restart — a counter restarting at 0
-        would interleave post-restart rows before pre-restart ones in the
-        seq sort, recreating the reorg misordering seq exists to fix."""
+        would reuse the landed files' names and put post-restart rows
+        before pre-restart ones in arrival order."""
         from elric_rs_spark.streaming import source as src
 
         landing = f"{tmpdir}/landing"
-        land_blocks(spark, _blocks(spark, 5, reorg_depth=3), landing)
-        src._DIR_SEQ.clear()  # simulate a fresh process
-        land_blocks(spark, _blocks(spark, 5, reorg_depth=3), landing)
+        land_blocks(spark, _blocks(spark, 5, reorg_depth=0), landing)
+        src._READERS.clear()  # simulate a fresh process
+        land_blocks(spark, _blocks(spark, 5, reorg_depth=0), landing)
         seqs = sorted(
             r.seq for r in spark.read.schema(BLOCK_STREAM_SCHEMA)
             .parquet(landing).select("seq").collect()
         )
         assert len(seqs) == 10 and len(set(seqs)) == 10  # no overlap
         assert seqs == list(range(seqs[0], seqs[0] + 10))  # contiguous
-
-    def test_stream_dedup_of_reconnect_replays(self, spark, tmpdir):
-        """A reconnect re-delivers blocks already seen (at-least-once
-        upstream). dedup_block_stream must collapse the replays inside
-        the watermark horizon so each block reaches the sink once."""
-        import datetime
-
-        from elric_rs_spark.streaming.pipeline import dedup_block_stream
-
-        base = datetime.datetime(2024, 8, 7, 12, 0, 0)
-
-        def blk(n):
-            return {
-                "stream_id": "s1",
-                "msg_type": "new",
-                "block_num": n,
-                "block_id": f"blk-{n}",
-                "block_ts": base + datetime.timedelta(minutes=n),
-                "cursor": str(n),
-                "final_block_height": n,
-                "last_valid_block": None,
-                "payload": None,
-            }
-
-        # blocks 0..9, then a reconnect replays 7..9 (cursor overlap)
-        msgs = [blk(n) for n in range(10)] + [blk(n) for n in range(7, 10)]
-        landing = f"{tmpdir}/landing"
-        land_blocks(spark, msgs, landing)
-        stream = read_block_stream(spark, landing)
-        q = (
-            dedup_block_stream(stream)
-            .writeStream.format("memory")
-            .queryName("dedup_stream")
-            .outputMode("append")
-            .option("checkpointLocation", f"{tmpdir}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        nums = sorted(r.block_num for r in spark.table("dedup_stream").collect())
-        assert nums == list(range(10))  # replays collapsed, no gaps
 
     def test_fixture_replay_shape(self, spark):
         msgs = fixture_replay(spark, "/root/testdata/sf0.001", undo_at=50)
@@ -561,49 +546,138 @@ class TestSink:
         assert data.filter(F.col("epoch_id") == 1).count() == 1
 
 
+def _upstream(msgs, drop_after=None):
+    """`connect(cursor)` over a fixed message list: resumes after the
+    last message carrying `cursor` (an undo carries its last valid
+    block's cursor) and drops the connection once, right after
+    delivering message `drop_after`."""
+
+    def connect(cursor):
+        nonlocal drop_after
+        start = 0
+        if cursor is not None:
+            start = 1 + max(i for i, m in enumerate(msgs) if m.get("cursor") == cursor)
+        for i in range(start, len(msgs)):
+            yield msgs[i]
+            if i == drop_after:
+                drop_after = None
+                raise ConnectionError("upstream reset")
+
+    return connect
+
+
 class TestRestartRecovery:
-    def test_state_survives_restart(self, spark, tmpdir):
-        """SURVEY.md §7 risk 3: buffered (non-final) blocks must live in
-        the checkpointed state store, not driver memory. Run 1 buffers
-        blocks whose watermark hasn't caught up; run 2 (same checkpoint,
-        new query) lands the rest of the stream and must emit the blocks
-        run 1 buffered — no gaps, no duplicates across both runs."""
-        landing = f"{tmpdir}/landing"
-        ckpt = f"{tmpdir}/ckpt"
-        out = f"{tmpdir}/out"
-        msgs = _blocks(spark, 40, reorg_depth=5)
+    """The reader's finality buffers live in memory, as the reference's
+    do (ref loader.rs:195-210): a crash loses them, and the restarted
+    reader resumes upstream from the last landed block."""
 
-        def run_once(batch):
-            land_blocks(spark, batch, landing)
-            stream = read_block_stream(spark, landing)
-            finalized = apply_finality_stateful(stream)
-            q = (
-                finalized.writeStream.format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(120)
+    @staticmethod
+    def _drain(spark, landing, ckpt, out):
+        from tests.test_pipeline import APPROVALS_SCHEMA
 
-        run_once(msgs[:20])  # watermark reaches 14: 0..14 emitted, 15..19 in state
-        first = sorted(
-            r.block_num for r in spark.read.parquet(out).collect()
+        from elric_rs_spark.streaming.pipeline import run_pipeline
+
+        sink = TypedPerTableSink(out, {"approvals": APPROVALS_SCHEMA})
+        run_pipeline(spark, landing, ckpt, sink).awaitTermination(120)
+
+    @staticmethod
+    def _read_view(spark, out):
+        from elric_rs_spark.streaming.sink import read_exactly_once
+
+        return sorted(
+            (r.block_num, r.block_id, r.owner, r.spender, r.amount)
+            for r in read_exactly_once(spark, out, "approvals", ["owner"]).collect()
         )
-        assert first == list(range(15))
 
-        run_once(msgs[20:])  # watermark reaches 34: 15..34 emitted from state
-        final = sorted(r.block_num for r in spark.read.parquet(out).collect())
-        assert final == list(range(35)), "gap or duplicate after restart"
+    def test_reader_crash_loses_nothing(self, spark, tmpdir):
+        """Blocks 15..19 are buffered (not final, so not landed) when the
+        reader process dies. The new process starts with empty buffers,
+        resumes upstream after resume_cursor (block 14), and the sink's
+        read view holds blocks 0..34 exactly once, as a clean run's does."""
+        from tests.test_pipeline import _blocks as _pipeline_blocks
+
+        from elric_rs_spark.streaming import source as src
+
+        msgs = _pipeline_blocks(40, reorg_depth=5)
+        landing, ckpt, out = (f"{tmpdir}/{d}" for d in ("landing", "ckpt", "out"))
+        assert land_blocks(spark, msgs[:20], landing) == 15  # 0..14
+        self._drain(spark, landing, ckpt, out)
+
+        src._READERS.clear()  # the crash: a fresh process
+        cursor = resume_cursor(spark, landing, "s1")
+        assert cursor == "14"
+        reader = ReconnectingReader(_upstream(msgs), latest_cursor=cursor)
+        assert land_blocks(spark, demux(reader), landing) == 20  # 15..34
+        self._drain(spark, landing, ckpt, out)
+
+        got = self._read_view(spark, out)
+        assert [r[0] for r in got] == list(range(35)), "gap or duplicate"
+        clean = f"{tmpdir}/clean"
+        land_blocks(spark, msgs, f"{clean}/landing")
+        self._drain(spark, f"{clean}/landing", f"{clean}/ckpt", f"{clean}/out")
+        assert got == self._read_view(spark, f"{clean}/out")
+
+    def test_failed_landing_resumes_like_a_crash(self, spark, tmpdir):
+        """land_blocks failing mid-stream (here upstream gives up while
+        blocks 15..19 are buffered and 20..24 are in an unfinished chunk)
+        drops the dir's reader state as a crash would, so resuming from
+        resume_cursor in the same process lands every block once."""
+        msgs = _blocks(spark, 40, reorg_depth=5)
+        landing = f"{tmpdir}/landing"
+        reader = ReconnectingReader(_upstream(msgs, drop_after=24), max_attempts=1)
+        with pytest.raises(ConnectionError):
+            land_blocks(spark, demux(reader), landing, batch_size=10)
+        cursor = resume_cursor(spark, landing, "s1")
+        assert cursor == "14"
+        reader = ReconnectingReader(_upstream(msgs), latest_cursor=cursor)
+        land_blocks(spark, demux(reader), landing, batch_size=10)
+        nums = sorted(r.block_num for r in _landed(spark, landing).collect())
+        assert nums == list(range(35))
+
+    def test_reconnect_keeps_buffers(self, spark, tmpdir):
+        """A reconnect inside one process, with an undo in flight (the
+        connection drops right after the undo, which orphans buffered
+        blocks 16..20), lands the same files as an unbroken stream: the
+        reader resumes from the undo's cursor and its buffers survive."""
+        import pyarrow.parquet as pq
+
+        msgs = _blocks(spark, 21, reorg_depth=6, undo_at=20, undo_to=15)
+        undo = next(i for i, m in enumerate(msgs) if m["msg_type"] == "undo")
+        msgs[undo]["cursor"] = "15"  # the undo's last valid cursor
+        msgs += [
+            dict(m, block_id=f"fork-{m['block_num']}", cursor=f"f{m['block_num']}")
+            for m in _blocks(spark, 30, reorg_depth=6)[16:]
+        ]
+
+        def land(name, messages):
+            landing = f"{tmpdir}/{name}"
+            n = land_blocks(spark, demux(messages), landing, batch_size=4)
+            files = sorted(os.listdir(landing))
+            return n, [(f, pq.read_table(f"{landing}/{f}").to_pylist()) for f in files]
+
+        unbroken = land("unbroken", msgs)
+        connects = []
+
+        def connect(cursor):
+            connects.append(cursor)
+            return upstream(cursor)
+
+        upstream = _upstream(msgs, drop_after=undo)
+        broken = land("broken", ReconnectingReader(connect, sleep=lambda s: None))
+        assert connects == [None, "15"]  # resumed behind the reorg
+        assert broken == unbroken
+        rows = [r for _, chunk in unbroken[1] for r in chunk]
+        assert [(r["block_num"], r["block_id"]) for r in rows] == (
+            [(n, f"blk-{n:08d}") for n in range(16)]
+            + [(n, f"fork-{n}") for n in range(16, 24)]
+        )
 
 
 class TestMultiStreamState:
     def test_keyed_state_is_independent(self, spark, tmpdir):
-        """applyInPandasWithState keys state by stream_id: stream A's
-        watermark progress must not flush stream B's buffer. This is the
-        scale-out story — thousands of independent streams, each with its
-        own <=12-block state, sharded across executors by key."""
+        """The reader keeps one buffer per stream_id: stream A's
+        watermark progress must not flush stream B's buffer, even with
+        both streams in one landing dir."""
         landing = f"{tmpdir}/landing"
         msgs = []
         for sid, depth in (("sA", 5), ("sB", 1000)):  # sB never finalizes
@@ -643,8 +717,7 @@ class TestSummingMart:
     def _run(self, spark, landing, ckpt, mart):
         stream = read_block_stream(spark, landing)
         q = (
-            stream.filter(F.col("msg_type") == "new")
-            .writeStream.foreachBatch(mart.write_batch)
+            stream.writeStream.foreachBatch(mart.write_batch)
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
             .start()

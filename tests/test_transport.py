@@ -280,7 +280,7 @@ class TestBlockTsLanding:
                 "msg_type": "new",
                 "clock": {"id": "b", "number": 1, "timestamp": float(clock_s)},
                 "cursor": "c",
-                "final_block_height": 0,
+                "final_block_height": 1,  # final: the block lands
                 "payload": b"",
             },
             "s",
@@ -298,8 +298,8 @@ class TestFullTopologyOverWire:
     def test_grpc_to_typed_tables(self, spark, tmp_path):
         """The COMPLETE reference lifecycle (SURVEY §3) on real wire bytes
         end to end: fake gRPC server (with one mid-stream disconnect) ->
-        ReconnectingReader (cursor resume) -> demux -> land_blocks ->
-        Structured Streaming -> stateful finality -> protobuf decode ->
+        ReconnectingReader (cursor resume) -> demux -> land_blocks
+        (finality) -> Structured Streaming -> protobuf decode ->
         PK merge -> typed cast -> per-table sink -> cursor recovery. The
         Spark-native equivalent of running `elric-rs run` against a live
         endpoint."""
@@ -323,7 +323,9 @@ class TestFullTopologyOverWire:
         reader = ReconnectingReader(connect=connect, sleep=lambda s: None)
         landing = str(tmp_path / "landing")
         n = land_blocks(spark, demux(reader), landing)
-        assert n == 10
+        # block_response(n) watermarks at n-2 -> blocks 0..7 land, 8..9 stay
+        # buffered on the reader
+        assert n == 8
         # reconnect resumed from block 5's cursor
         assert parse_request(server.requests[1])["start_cursor"] == "c5"
 
