@@ -13,6 +13,15 @@ Two rows per block across two tables (the reference's own end-to-end
 test shape, ref loader.rs:358-402). Prints ONE JSON line:
   {"metric": "pipeline_blocks_per_sec", ...}
 
+    python bench_streaming.py [n_blocks] [json|protobuf|http]
+
+`http` decodes JSON like the default and sinks into an in-process
+recording stand-in for ClickHouse's HTTP interface (the mock of
+tests/test_sink.py, reduced to counters) instead of parquet: the JSON
+line adds the rows the stand-in received per second and the POSTs per
+micro-batch. It is the only measurement of the ClickHouse writer, since
+there is no ClickHouse server here.
+
 Not wired into bench.py (the driver contract is one JSON line of query
 timings); run manually and record in BASELINE.md.
 """
@@ -159,6 +168,41 @@ def run_dedup_mode(load_start: float) -> None:
         shutil.rmtree(d, ignore_errors=True)
 
 
+def recording_clickhouse():
+    """Start an HTTP server on localhost that answers every INSERT with
+    200 and counts POSTs and ArrowStream rows per table. Returns (server,
+    counts) with counts = {table: [posts, rows]}."""
+    import threading
+    import urllib.parse
+    from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+
+    import pyarrow as pa
+
+    counts: dict[str, list[int]] = {}
+    lock = threading.Lock()
+
+    class Handler(BaseHTTPRequestHandler):
+        def do_POST(self):
+            query = urllib.parse.parse_qs(
+                urllib.parse.urlparse(self.path).query)["query"][0]
+            body = self.rfile.read(int(self.headers["Content-Length"]))
+            table = query.split("INSERT INTO ", 1)[1].split(" ", 1)[0]
+            rows = pa.ipc.open_stream(body).read_all().num_rows
+            with lock:
+                c = counts.setdefault(table, [0, 0])
+                c[0] += 1
+                c[1] += rows
+            self.send_response(200)
+            self.end_headers()
+
+        def log_message(self, *a):
+            pass
+
+    srv = ThreadingHTTPServer(("127.0.0.1", 0), Handler)
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    return srv, counts
+
+
 def main() -> None:
     load_start = round(os.getloadavg()[0], 2)
     if len(sys.argv) > 1 and sys.argv[1] == "dedup":
@@ -216,7 +260,14 @@ def main() -> None:
         land_s = time.monotonic() - t_land
 
         schema = dict(TRANSFERS_SCHEMA, evt_tx_hash="String", evt_index="UInt32")
-        if decode_mode == "protobuf":
+        server = None
+        if decode_mode == "http":
+            server, posted = recording_clickhouse()
+            sink = TypedPerTableSink(
+                f"http://127.0.0.1:{server.server_port}",
+                {"transfers": schema, "approvals": APPROVALS_SCHEMA},
+            )
+        elif decode_mode == "protobuf":
             from elric_rs_spark.streaming.pipeline import decode_changes_protobuf
 
             sink = TypedPerTableSink(
@@ -239,13 +290,27 @@ def main() -> None:
                               "error": "timeout", "n_blocks": n_blocks}))
             sys.exit(1)
 
-        n_rows = sum(
-            spark.read.parquet(f"{out}/data/{t}").count()
-            for t in ("transfers", "approvals")
-        )
+        http = {}
+        if server is not None:
+            server.shutdown()
+            server.server_close()
+            n_rows = sum(r for t, (_, r) in posted.items() if t != "cursors")
+            batches = posted.get("cursors", [0])[0]  # one cursor POST each
+            http = {
+                "http_batches": batches,
+                "http_posts_per_batch": round(
+                    sum(p for p, _ in posted.values()) / max(batches, 1), 2),
+                "http_posts": {t: p for t, (p, _) in sorted(posted.items())},
+            }
+        else:
+            n_rows = sum(
+                spark.read.parquet(f"{out}/data/{t}").count()
+                for t in ("transfers", "approvals")
+            )
         bps = round(n_blocks / wall, 1)
         idle = load_start < 1.0
-        gated = idle and n_blocks >= FLOOR_MIN_BLOCKS
+        # the floors are calibrated on the parquet sink only
+        gated = idle and n_blocks >= FLOOR_MIN_BLOCKS and decode_mode in FLOOR_BY_MODE
         print(
             json.dumps(
                 {
@@ -258,6 +323,7 @@ def main() -> None:
                     "typed_rows_landed": n_rows,
                     "pipeline_wall_sec": round(wall, 2),
                     "landing_write_sec": round(land_s, 2),
+                    **http,
                     "load_1m_start": load_start,
                     "load_1m_end": round(os.getloadavg()[0], 2),
                     "floor_gate": (

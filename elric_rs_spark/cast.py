@@ -5,6 +5,9 @@ it into the sink schema's types in alphabetical column order
 (ref table_info.rs:73-168; ordering table_info.rs:204-208, main.rs:183).
 The Spark equivalent is one `select` of cast expressions over a
 MapType(String, String) column — fully inside whole-stage codegen, no UDF.
+`typed_columns` builds those expressions (the one cast implementation);
+`typed_cast` is its DataFrame projection, and the streaming sink nests
+them in one struct column per table (streaming/pipeline.py).
 
 Error policy: the reference panics on malformed values (`.unwrap()`
 throughout ref table_info.rs:85-153). Spark casts yield NULL instead, so:
@@ -22,25 +25,20 @@ from pyspark.sql import functions as F
 from elric_rs_spark.types import ColumnType, cast_expr, schema_for
 
 
-def typed_cast(
-    df: DataFrame,
-    map_col: str,
-    columns: dict[str, str],
-    mode: str = "strict",
-) -> DataFrame:
-    """Project a MapType(String,String) column into typed columns.
-
-    `columns` maps column name -> ClickHouse type string. Output columns
-    appear in alphabetical order (the reference's insert-tuple order).
+def typed_columns(
+    row_map: Column, columns: dict[str, str], mode: str = "strict"
+) -> list[Column]:
+    """The typed columns of one MapType(String,String) column, in
+    alphabetical order (the reference's insert-tuple order), each aliased
+    to its name. `columns` maps column name -> ClickHouse type string.
     Missing map keys become NULL — note the reference would mis-align the
     insert tuple in that case (SURVEY.md §1.3); NULL is the sane analogue.
     """
     if mode not in ("strict", "permissive"):
         raise ValueError(f"bad mode {mode!r}")
-    schema = schema_for(columns)
     out: list[Column] = []
-    for name, ct in schema:
-        raw = F.col(map_col).getItem(name)
+    for name, ct in schema_for(columns):
+        raw = row_map.getItem(name)
         typed = cast_expr(raw, ct)
         if mode == "strict":
             # Fail-fast parity with the reference's .unwrap(): a non-null
@@ -54,8 +52,20 @@ def typed_cast(
                 ).cast(typed_null_type(ct)),
             ).otherwise(typed)
         out.append(typed.alias(name))
+    return out
+
+
+def typed_cast(
+    df: DataFrame,
+    map_col: str,
+    columns: dict[str, str],
+    mode: str = "strict",
+) -> DataFrame:
+    """Project a MapType(String,String) column into typed columns
+    (`typed_columns`), keeping every other column of `df` in front."""
+    typed = typed_columns(F.col(map_col), columns, mode)
     keep = [c for c in df.columns if c != map_col]
-    return df.select(*keep, *out)
+    return df.select(*keep, *typed)
 
 
 def typed_null_type(ct: ColumnType):

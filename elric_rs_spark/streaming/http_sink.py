@@ -15,60 +15,61 @@ documented ClickHouse behaviour; the tests run against a recording mock
 (tests/test_sink.py), not a live server.
 
 `pipeline.TypedPerTableSink` picks this writer for an `http(s)://`
-target. Each append posts once per PARTITION from `mapInArrow` (the
-executors ship their own rows as Arrow batches; no rows are collected)
-and sums the acked row counts as the action. Columns go
-in ALPHABETICAL order, the order the reference derives from its schema
-map (ref loader.rs:86-99). Retries stay with Spark: a failed POST fails
-its task, the task failure fails the append, so the sink raises before
-the cursor append and the restarted query replays the epoch.
+target. Inside the sink's one pass, each partition posts one INSERT per
+table it holds rows for (the executors ship their own rows; no rows are
+collected); after the pass the driver posts the cursor rows into
+`cursors`. Columns go in ALPHABETICAL order, the order the reference
+derives from its schema map (ref loader.rs:86-99). Retries stay with
+Spark: a failed POST fails its task, the task failure fails the pass, so
+the sink raises before the cursor POST and the restarted query replays
+the epoch.
 """
 
 from __future__ import annotations
 
+import functools
 import urllib.parse
 import urllib.request
 
 import pyarrow as pa
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-# the reference's end timeout (ref loader.rs:57); read when the POST
-# closure is built, before it ships to the executors
+# the reference's end timeout (ref loader.rs:57); read on the driver
+# when a batch's POST function is built, before it ships to executors
 TIMEOUT_S = 20.0
 
 
+def _post(endpoint: str, timeout: float, table: str, rows: pa.Table,
+          part: int | None = None) -> None:
+    """INSERT `rows` into `table` as one ArrowStream body, columns in
+    alphabetical order. `part`, the partition of the sink's pass, does
+    not enter the INSERT."""
+    rows = rows.select(sorted(rows.column_names))
+    stmt = (f"INSERT INTO {table} ({', '.join(rows.column_names)}) "
+            "FORMAT ArrowStream")
+    out = pa.BufferOutputStream()
+    with pa.ipc.new_stream(out, rows.schema) as w:
+        w.write_table(rows)
+    req = urllib.request.Request(
+        f"{endpoint}/?query={urllib.parse.quote(stmt)}",
+        data=out.getvalue().to_pybytes(), method="POST")
+    req.add_header("Content-Type", "application/octet-stream")
+    with urllib.request.urlopen(req, timeout=timeout) as resp:
+        resp.read()
+
+
 class ClickHouseHttpWriter:
-    """Append DataFrames to ClickHouse tables over HTTP as ArrowStream."""
+    """Insert Arrow rows into ClickHouse tables over HTTP."""
 
     def __init__(self, endpoint: str):
         self.endpoint = endpoint.rstrip("/")  # e.g. http://host:8123
 
-    def append(self, df: DataFrame, table: str) -> int:
-        """INSERT `df` into `table`; returns the rows ClickHouse acked."""
-        cols = sorted(df.columns)
-        stmt = f"INSERT INTO {table} ({', '.join(cols)}) FORMAT ArrowStream"
-        url = f"{self.endpoint}/?query={urllib.parse.quote(stmt)}"
-        timeout = TIMEOUT_S
+    def part_writer(self, epoch_id: int):
+        """`write(table, rows, partition)` for the executors' pass."""
+        return functools.partial(_post, self.endpoint, TIMEOUT_S)
 
-        def _post(batches):
-            batches = [b for b in batches if b.num_rows]
-            if not batches:  # empty partition: nothing to insert
-                return
-            out = pa.BufferOutputStream()
-            with pa.ipc.new_stream(out, batches[0].schema) as w:
-                for b in batches:
-                    w.write_batch(b)
-            req = urllib.request.Request(url, data=out.getvalue().to_pybytes(),
-                                         method="POST")
-            req.add_header("Content-Type", "application/octet-stream")
-            with urllib.request.urlopen(req, timeout=timeout) as resp:
-                resp.read()
-            n = sum(b.num_rows for b in batches)
-            yield pa.RecordBatch.from_pydict({"rows": [n]})
-
-        acked = df.select(*cols).mapInArrow(_post, "rows long")
-        return acked.agg(F.sum("rows")).collect()[0][0] or 0
-
-    def append_cursor(self, df: DataFrame) -> int:
-        return self.append(df, "cursors")
+    def commit(self, epoch_id: int, cursor: pa.Table,
+               empty: dict[str, pa.Schema]) -> None:
+        """After the pass: one POST of the cursor rows. A table without
+        rows gets no INSERT."""
+        if cursor.num_rows:
+            _post(self.endpoint, TIMEOUT_S, "cursors", cursor)

@@ -7,10 +7,13 @@ runs before landing, on the reader thread (`source.land_blocks`), so
 the landing dir holds only final blocks and the query has no stateful
 operator.
 
-`TypedPerTableSink` is the one per-table `foreachBatch` sink. Its
-target picks the writer every append goes through: a directory gets
-`sink.ParquetWriter`, an `http(s)://` ClickHouse endpoint gets
-`http_sink.ClickHouseHttpWriter` (ArrowStream INSERTs).
+`TypedPerTableSink` is the one per-table `foreachBatch` sink, and one
+Spark job writes a micro-batch: one projection casts every table, one
+`mapInArrow` pass writes each partition's rows per table and returns
+row counts and cursor candidates, and the driver writes the cursor
+after the pass. Its target picks the writer: a directory gets
+`sink.ParquetWriter` (pyarrow files), an `http(s)://` ClickHouse
+endpoint gets `http_sink.ClickHouseHttpWriter` (ArrowStream INSERTs).
 
 Two decode paths produce the same (table, fields, pk) intermediate and
 share the merge/cast/sink stages:
@@ -34,17 +37,21 @@ Semantic gotchas preserved (SURVEY.md §2.4):
 
 from __future__ import annotations
 
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark import TaskContext
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
+from pyspark.sql.types import IntegerType, StructField, StructType
 
-from elric_rs_spark.cast import typed_cast
+from elric_rs_spark.cast import typed_columns
+from elric_rs_spark.streaming.admin import detect_log_format, format_log_line
 from elric_rs_spark.streaming.http_sink import ClickHouseHttpWriter
 from elric_rs_spark.streaming.sink import ParquetWriter
 
-CHANGES_JSON_SCHEMA = (
-    "array<struct<table: string, fields: map<string,string>, "
-    "pk: map<string,string>>>"
-)
+_CHANGE = "struct<table: string, fields: map<string,string>, pk: map<string,string>>"
+CHANGES_JSON_SCHEMA = f"array<{_CHANGE}>"
 
 
 def _merged_row_map(fields, pk) -> F.Column:
@@ -62,6 +69,11 @@ def decode_changes(block_df: DataFrame, mode: str = "strict") -> DataFrame:
     """T1+T2+T3: payload -> one row per table-change with the merged
     string->string field map. Pure Catalyst (from_json + explode +
     map_concat) — whole-stage codegen, no Python.
+
+    A block whose payload is NULL decodes to one row for the block
+    itself, with `table` and `row_map` NULL. The sink passes every block
+    through once more with a NULL payload this way, so a block with no
+    change rows still reaches its cursor stats (`TypedPerTableSink`).
 
     Malformed-payload policy (the reference PANICS on a decode failure,
     loader.rs:128-131 `expect`): mode='strict' raises on the first
@@ -84,6 +96,9 @@ def decode_changes(block_df: DataFrame, mode: str = "strict") -> DataFrame:
                 )
             ).cast(CHANGES_JSON_SCHEMA),
         ).otherwise(parsed)
+    parsed = F.when(
+        F.col("payload").isNull(), F.array(F.lit(None).cast(_CHANGE))
+    ).otherwise(parsed)
     changes = block_df.select(
         "stream_id",
         "block_num",
@@ -128,7 +143,8 @@ def decode_changes_protobuf(block_df: DataFrame, mode: str = "strict") -> DataFr
 
     Malformed-payload policy as in `decode_changes`: mode='strict'
     raises on the first payload that fails to decode (bad base64 or bad
-    wire bytes); mode='permissive' skips that block's rows."""
+    wire bytes); mode='permissive' skips that block's rows. A NULL
+    payload decodes to the block's own row, as in `decode_changes`."""
     import base64
 
     from elric_rs_spark.functions.protowire import table_change_rows
@@ -140,13 +156,15 @@ def decode_changes_protobuf(block_df: DataFrame, mode: str = "strict") -> DataFr
                 "table", "fields", "pk",
             )}
             for row in pdf.itertuples(index=False):
-                try:
-                    raw = base64.b64decode(row.payload) if row.payload else b""
-                    changes = table_change_rows(raw)
-                except ValueError:
-                    if mode == "strict":
-                        raise
-                    continue
+                if row.payload is None:  # the block itself
+                    changes = [dict.fromkeys(("table", "fields", "pk"))]
+                else:
+                    try:
+                        changes = table_change_rows(base64.b64decode(row.payload))
+                    except ValueError:
+                        if mode == "strict":
+                            raise
+                        continue
                 for tc in changes:
                     out["stream_id"].append(row.stream_id)
                     out["block_num"].append(row.block_num)
@@ -174,16 +192,82 @@ def decode_changes_protobuf(block_df: DataFrame, mode: str = "strict") -> DataFr
     )
 
 
+# what each partition of the sink's pass returns: one row per table it
+# wrote (rows set) and one per stream it saw (the stream's last block)
+_PASS_STATS = pa.schema([
+    ("table", pa.string()), ("rows", pa.int64()), ("stream_id", pa.string()),
+    ("block_num", pa.int64()), ("block_id", pa.string()), ("cursor", pa.string()),
+])
+
+
+def _pass(tables: list[str], schemas: dict[str, pa.Schema], write, epoch_id: int):
+    """The per-partition function of the sink's pass. Its input rows are
+    change rows (`table` set, the table's typed struct in column
+    `_<index>`) and block rows (`table` null, `cursor` set). It splits
+    the change rows by table, hands each table's rows to `write(table,
+    rows, partition)`, and returns the row counts and each stream's
+    highest (block_num, block_id, cursor)."""
+
+    def run(batches):
+        # the whole partition first: a strict-mode raise while Spark
+        # produces its rows comes before this partition writes anything
+        batches = list(batches)
+        if not batches:
+            return
+        part = TaskContext.get().partitionId()
+        rows = pa.Table.from_batches(batches)
+        stats = {name: [] for name in _PASS_STATS.names}
+
+        def add(**kw):
+            for k, v in stats.items():
+                v.append(kw.get(k))
+
+        for i, t in enumerate(tables):
+            sel = rows.filter(pc.equal(rows["table"], t))
+            if not sel.num_rows:
+                continue
+            typed = sel[f"_{i}"].combine_chunks().flatten()
+            epoch = pa.repeat(pa.scalar(epoch_id, pa.int32()), sel.num_rows)
+            cols = [sel["stream_id"], sel["block_num"], sel["block_id"], *typed, epoch]
+            write(t, pa.Table.from_arrays(cols, names=schemas[t].names)
+                  .cast(schemas[t]), part)
+            add(table=t, rows=sel.num_rows)
+        blocks = rows.filter(pc.is_null(rows["table"]))
+        last = (
+            blocks.sort_by([("block_num", "descending")])
+            .group_by("stream_id", use_threads=False)
+            .aggregate([(k, "first") for k in ("block_num", "block_id", "cursor")])
+        )
+        for s, n, b, c in zip(*(last[k].to_pylist() for k in (
+                "stream_id", "block_num_first", "block_id_first", "cursor_first"))):
+            add(stream_id=s, block_num=n, block_id=b, cursor=c)
+        yield pa.RecordBatch.from_pydict(stats, schema=_PASS_STATS)
+
+    return run
+
+
 class TypedPerTableSink:
     """S5/S6/T9 with the reference's typed-cast stage: route change rows
     by table, cast each table's string map to its declared schema
-    (alphabetical column order), append to the per-table sink, then write
-    the max cursor per stream — data first, cursor second, so a crash can
-    repeat a block but never lose data the cursor claims is done.
+    (alphabetical column order), write every table, then write the max
+    cursor per stream — data first, cursor second, so a crash can repeat
+    a block but never lose data the cursor claims is done.
+
+    One Spark job writes a micro-batch, reading it once. Each block
+    goes through `decode` twice: with its payload (its change rows) and
+    with a NULL payload (one row for the block itself, so a block with
+    no change rows — payload `[]`, NULL, or skipped as malformed in
+    permissive mode — still moves the cursor). One projection casts
+    every table (`cast.typed_columns` nested in one struct per table),
+    and one `mapInArrow` pass runs one Python task per partition of the
+    batch: it writes that partition's rows per table and returns small
+    stats. The driver then writes the cursor from the stats and prints
+    one "batch committed" line (`admin.format_log_line`).
 
     `target` is a directory (parquet: `{target}/data/{table}` and
-    `{target}/cursors`) or an `http(s)://` ClickHouse endpoint (one
-    ArrowStream INSERT per table partition, then one into `cursors`)."""
+    `{target}/cursors`, see `sink.ParquetWriter`) or an `http(s)://`
+    ClickHouse endpoint (one ArrowStream INSERT per table and partition,
+    then one into `cursors`, see `http_sink.ClickHouseHttpWriter`)."""
 
     def __init__(self, target: str, table_schemas: dict[str, dict[str, str]],
                  mode: str = "strict", decode=decode_changes):
@@ -197,33 +281,65 @@ class TypedPerTableSink:
         self.decode = decode  # decode_changes (JSON) or decode_changes_protobuf
 
     def write_batch(self, block_df: DataFrame, epoch_id: int) -> None:
-        block_df = block_df.cache()
-        try:
-            # the sink's strict/permissive mode reaches the decoder too — a
-            # permissive sink must not die on the first malformed payload
-            changes = self.decode(block_df, mode=self.mode).cache()
-            try:
-                for t, schema in sorted(self.table_schemas.items()):
-                    rows = changes.filter(F.col("table") == t).select(
-                        "stream_id", "block_num", "block_id", "row_map"
-                    )
-                    typed = typed_cast(rows, "row_map", schema, mode=self.mode)
-                    self.writer.append(typed.withColumn("epoch_id", F.lit(epoch_id)), t)
-                # cursor AFTER all table writes (ref loader.rs:111-125)
-                cursor = (
-                    block_df.groupBy("stream_id")
-                    .agg(
-                        F.max_by("cursor", "block_num").alias("cursor"),
-                        F.max("block_num").alias("block_num"),
-                        F.max_by("block_id", "block_num").alias("block_id"),
-                    )
-                    .withColumn("epoch_id", F.lit(epoch_id))
-                )
-                self.writer.append_cursor(cursor)
-            finally:
-                changes.unpersist()
-        finally:
-            block_df.unpersist()
+        tables = sorted(self.table_schemas)
+        # every block also with a NULL payload: its own row, the cursor
+        # candidate, rides the same scan as the change rows
+        blocks = block_df.select(
+            "stream_id", "block_num", "block_id", "cursor",
+            F.explode(F.array("payload", F.lit(None).cast("string"))).alias("payload"),
+        )
+        # the sink's strict/permissive mode reaches the decoder too — a
+        # permissive sink must not die on the first malformed payload
+        changes = self.decode(blocks, mode=self.mode)
+        block_row = F.col("table").isNull()
+        typed = changes.filter(block_row | F.col("table").isin(tables)).select(
+            "stream_id", "block_num", "block_id", "table",
+            F.when(block_row, F.col("cursor")).alias("cursor"),
+            *(
+                F.when(
+                    F.col("table") == t,
+                    F.struct(*typed_columns(F.col("row_map"),
+                                            self.table_schemas[t], self.mode)),
+                ).alias(f"_{i}")
+                for i, t in enumerate(tables)
+            ),
+        )
+        schema = typed.schema
+        arrow = {
+            t: to_arrow_schema(StructType([
+                *(schema[c] for c in ("stream_id", "block_num", "block_id")),
+                *schema[f"_{i}"].dataType.fields,
+                StructField("epoch_id", IntegerType()),
+            ]))
+            for i, t in enumerate(tables)
+        }
+        stats = typed.mapInArrow(
+            _pass(tables, arrow, self.writer.part_writer(epoch_id), epoch_id),
+            from_arrow_schema(_PASS_STATS),
+        ).collect()
+        rows = dict.fromkeys(tables, 0)
+        last: dict[str, tuple] = {}
+        for r in stats:
+            if r.table is not None:
+                rows[r.table] += r.rows
+            elif r.stream_id not in last or r.block_num > last[r.stream_id][0]:
+                last[r.stream_id] = (r.block_num, r.block_id, r.cursor)
+        streams = sorted(last)
+        # cursor AFTER all table writes (ref loader.rs:111-125)
+        cursor = pa.table({
+            "stream_id": pa.array(streams, pa.string()),
+            "cursor": pa.array([last[s][2] for s in streams], pa.string()),
+            "block_num": pa.array([last[s][0] for s in streams], pa.int64()),
+            "block_id": pa.array([last[s][1] for s in streams], pa.string()),
+            "epoch_id": pa.array([epoch_id] * len(streams), pa.int32()),
+        })
+        self.writer.commit(epoch_id, cursor,
+                           {t: arrow[t] for t in tables if not rows[t]})
+        fmt = detect_log_format()
+        for s in streams or [None]:
+            print(format_log_line(
+                "batch committed", fmt=fmt, epoch=epoch_id, rows=rows,
+                stream=s, block_num=last[s][0] if s else None), flush=True)
 
 
 def run_pipeline(

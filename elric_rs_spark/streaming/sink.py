@@ -5,31 +5,82 @@ its parquet layout: the exactly-once view and cursor recovery
 `pipeline.TypedPerTableSink` is the one per-table `foreachBatch` sink;
 it picks `ParquetWriter` for a directory target. The layout is one
 parquet dir per table, `{base}/data/{table}`, and the cursor rows in
-`{base}/cursors`, every row tagged with its epoch_id. The sink appends
-data first and the cursor last (ref loader.rs:119-122, 195-210), so a
-crash can repeat a block but never lose data that the cursor claims is
-done (at-least-once write); `read_exactly_once` collapses the replays
-on read, the parquet analogue of the reference's ReplacingMergeTree.
+`{base}/cursors`, every row tagged with its epoch_id. The sink's one
+pass writes each partition's rows per table with pyarrow, as
+`data/{table}/part-<epoch>-<partition>.parquet`; the driver writes the
+cursor last, as `cursors/part-<epoch>.parquet` (ref loader.rs:119-122,
+195-210). Every file goes to a hidden `.…tmp` name first and is renamed
+into place, so a reader never sees half a file, and a replayed epoch or
+a retried task replaces its own files. A crash can still repeat a block
+under the same epoch (a replay with fewer partitions leaves the extra
+files of the first attempt) but never lose data that the cursor claims
+is done; `read_exactly_once` collapses the repeats on read, the parquet
+analogue of the reference's ReplacingMergeTree. Executors write the
+files, so the directory must be one every executor can write.
 """
 
 from __future__ import annotations
 
+import functools
+import os
+import uuid
+
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+def _replace_file(table: pa.Table, directory: str, name: str) -> None:
+    """Write `table` to a hidden temp file in `directory`, then rename it
+    to `name` (replacing a file of that name)."""
+    os.makedirs(directory, exist_ok=True)
+    tmp = os.path.join(directory, f".{name}.{uuid.uuid4().hex[:8]}.tmp")
+    try:
+        pq.write_table(table, tmp)
+        os.replace(tmp, os.path.join(directory, name))
+    except BaseException:
+        if os.path.exists(tmp):
+            os.unlink(tmp)
+        raise
+
+
+def _write_part(base_dir: str, epoch_id: int, table: str, rows: pa.Table,
+                part: int) -> None:
+    _replace_file(rows, f"{base_dir}/data/{table}",
+                  f"part-{epoch_id:020d}-{part:05d}.parquet")
+
+
+def _has_data_file(directory: str) -> bool:
+    try:
+        return any(not n.startswith((".", "_")) for n in os.listdir(directory))
+    except FileNotFoundError:
+        return False
+
+
 class ParquetWriter:
-    """Append DataFrames to `{base_dir}/data/{table}` and
-    `{base_dir}/cursors` as parquet."""
+    """Write one batch's rows as parquet under `{base_dir}/data/{table}`
+    and its cursor rows under `{base_dir}/cursors`."""
 
     def __init__(self, base_dir: str):
         self.base_dir = base_dir
 
-    def append(self, df: DataFrame, table: str) -> None:
-        df.write.mode("append").parquet(f"{self.base_dir}/data/{table}")
+    def part_writer(self, epoch_id: int):
+        """`write(table, rows, partition)` for the executors' pass."""
+        return functools.partial(_write_part, self.base_dir, epoch_id)
 
-    def append_cursor(self, df: DataFrame) -> None:
-        df.write.mode("append").parquet(f"{self.base_dir}/cursors")
+    def commit(self, epoch_id: int, cursor: pa.Table,
+               empty: dict[str, pa.Schema]) -> None:
+        """After the pass: give each table that has no rows in this batch
+        and no file yet a schema-only file, so it reads back as an empty
+        typed table, then write the cursor file."""
+        for table, schema in empty.items():
+            if not _has_data_file(f"{self.base_dir}/data/{table}"):
+                _write_part(self.base_dir, epoch_id, table,
+                            schema.empty_table(), 0)
+        if cursor.num_rows:
+            _replace_file(cursor, f"{self.base_dir}/cursors",
+                          f"part-{epoch_id:020d}.parquet")
 
 
 def read_exactly_once(
@@ -37,7 +88,10 @@ def read_exactly_once(
 ) -> DataFrame:
     """Exactly-once READ view over the at-least-once sink (SURVEY.md §7
     risk 2). foreachBatch can replay a completed epoch after a crash; the
-    sink appends the same rows again tagged with the SAME epoch_id. The
+    replay writes the same rows tagged with the SAME epoch_id, replacing
+    its own files, but a replay with fewer partitions leaves the first
+    attempt's extra files, and a directory can hold several writers'
+    files of one epoch. The
     reference delegates replay collapse to ClickHouse ReplacingMergeTree
     ordered by the primary key (ref README.md:9-11); the parquet analogue
     is dedup-on-read keyed by (epoch_id, block_num, *pk): replayed rows

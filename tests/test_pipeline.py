@@ -187,7 +187,9 @@ class TestExactlyOnceReplay:
         """SURVEY §7 risk 2 (VERDICT r01 next #6): foreachBatch can replay
         a completed epoch after a crash. Re-run the SAME batch through
         TypedPerTableSink with the same epoch_id and prove:
-        (a) the raw sink is at-least-once (rows doubled),
+        (a) a replay of the same batch replaces its own files (rows not
+            doubled; tests/test_pipeline.py::TestSinkEdges covers a replay
+            that cannot replace them all),
         (b) read_exactly_once by (epoch_id, block_num, pk) restores the
             exact pre-replay result — the ReplacingMergeTree semantics the
             reference delegates to ClickHouse (ref README.md:9-11),
@@ -224,7 +226,7 @@ class TestExactlyOnceReplay:
 
         sink.write_batch(batch, epoch_id=3)  # the crash-replay
         raw = spark.read.parquet(f"{out}/data/transfers")
-        assert raw.count() == 10  # at-least-once: appended again
+        assert raw.count() == 5  # same files, replaced
         after = sorted(
             map(repr, read_exactly_once(spark, out, "transfers", pk).collect())
         )
@@ -423,3 +425,203 @@ class TestCheckpointRestart:
         # flushed in run 2, and the file source's checkpoint did not
         # re-read run-1 files
         assert load_persisted_cursor(spark, out, "s1") == "34"
+
+
+_BLOCK_COLS = (
+    "stream_id string, block_num long, block_id string, cursor string, "
+    "payload string"
+)
+TRANSFERS_PK_SCHEMA = dict(TRANSFERS_SCHEMA, evt_tx_hash="String", evt_index="UInt32")
+
+
+def _batch(spark, rows, partitions: int = 2):
+    """A micro-batch as the sink receives it: (stream_id, block_num,
+    block_id, cursor, payload) rows spread over `partitions`."""
+    return spark.createDataFrame(rows, _BLOCK_COLS).repartition(partitions)
+
+
+def _block(n: int, payload: str | None = None, stream: str = "s1"):
+    return (stream, n, f"blk-{n}", str(n), _payload(n) if payload is None else payload)
+
+
+class TestSinkEdges:
+    """Behaviours a one-pass sink could drop without any other test
+    noticing: blocks with no change rows still move the cursor, a table
+    with no rows in a batch still reads back typed, replays and a mixed
+    writer layout read back exactly once."""
+
+    @pytest.mark.parametrize("mode", ["strict", "permissive"])
+    def test_cursor_names_last_block_without_rows(self, spark, tmpdir, mode):
+        rows = [_block(1), _block(2), _block(3, "[]"), ("s1", 4, "blk-4", "4", None)]
+        if mode == "permissive":  # a payload permissive mode skips
+            rows.append(_block(5, "{not json"))
+        out = f"{tmpdir}/out"
+        sink = TypedPerTableSink(
+            out, {"transfers": TRANSFERS_PK_SCHEMA, "approvals": APPROVALS_SCHEMA},
+            mode=mode,
+        )
+        sink.write_batch(_batch(spark, rows), epoch_id=0)
+        approvals = spark.read.parquet(f"{out}/data/approvals")
+        assert sorted(r.block_num for r in approvals.collect()) == [1, 2]
+        assert load_persisted_cursor(spark, out, "s1") == str(len(rows))
+
+    def test_protobuf_cursor_names_last_block_without_rows(self, spark, tmpdir):
+        import base64
+
+        from elric_rs_spark.streaming.pipeline import decode_changes_protobuf
+        from tests.test_protowire import enc_database_changes, enc_table_change
+
+        def wire(*changes):
+            return base64.b64encode(enc_database_changes(*changes)).decode()
+
+        rows = [
+            _block(1, wire(enc_table_change(
+                "approvals", {"owner": "o1", "spender": "s1", "amount": "1"}))),
+            _block(2, wire()),  # a block with no table changes
+            ("s1", 3, "blk-3", "3", None),
+        ]
+        out = f"{tmpdir}/out"
+        sink = TypedPerTableSink(out, {"approvals": APPROVALS_SCHEMA},
+                                 decode=decode_changes_protobuf)
+        sink.write_batch(_batch(spark, rows), epoch_id=0)
+        approvals = spark.read.parquet(f"{out}/data/approvals").collect()
+        assert [(r.block_num, r.owner) for r in approvals] == [(1, "o1")]
+        assert load_persisted_cursor(spark, out, "s1") == "3"
+
+    def test_table_without_rows_reads_back_typed(self, spark, tmpdir):
+        out = f"{tmpdir}/out"
+        catalog = {
+            "approvals": APPROVALS_SCHEMA,
+            "transfers": {"v": "UInt64", "t": "DateTime", "c": "FixedString(8)"},
+        }
+        only_approvals = json.dumps([{"table": "approvals", "pk": {},
+                                      "fields": {"owner": "o", "spender": "s",
+                                                 "amount": "1"}}])
+        TypedPerTableSink(out, catalog).write_batch(
+            _batch(spark, [_block(1, only_approvals)]), epoch_id=0)
+        empty = spark.read.parquet(f"{out}/data/transfers")
+        assert empty.count() == 0
+        assert [(f.name, f.dataType.simpleString()) for f in empty.schema] == [
+            ("stream_id", "string"), ("block_num", "bigint"), ("block_id", "string"),
+            ("c", "binary"), ("t", "timestamp"), ("v", "decimal(20,0)"),
+            ("epoch_id", "int"),
+        ]
+        assert spark.read.parquet(f"{out}/data/approvals").count() == 1
+
+    def test_replay_with_fewer_partitions_reads_exactly_once(self, spark, tmpdir):
+        """A replay whose batch has fewer partitions (2 -> 1) cannot
+        replace every file of the first attempt; the extra rows carry
+        the same epoch and collapse on read."""
+        from elric_rs_spark.streaming.sink import read_exactly_once
+
+        out = f"{tmpdir}/out"
+        sink = TypedPerTableSink(out, {"transfers": TRANSFERS_PK_SCHEMA})
+        rows = [_block(n) for n in range(6)]
+        pk = ["evt_tx_hash", "evt_index"]
+        sink.write_batch(_batch(spark, rows, partitions=2), epoch_id=3)
+        before = sorted(map(repr, read_exactly_once(spark, out, "transfers", pk).collect()))
+        sink.write_batch(_batch(spark, rows, partitions=1), epoch_id=3)
+        assert spark.read.parquet(f"{out}/data/transfers").count() > 6
+        after = sorted(map(repr, read_exactly_once(spark, out, "transfers", pk).collect()))
+        assert after == before and len(after) == 6
+        assert load_persisted_cursor(spark, out, "s1") == "5"
+
+    def test_spark_written_epoch_reads_with_later_epochs(self, spark, tmpdir):
+        """A sink dir holding an epoch written by Spark's own parquet
+        writer (the layout before the one-pass sink) plus epochs written
+        by `TypedPerTableSink` reads back with one schema."""
+        from elric_rs_spark.cast import typed_cast
+        from elric_rs_spark.streaming.pipeline import decode_changes
+        from elric_rs_spark.streaming.sink import read_exactly_once
+
+        out = f"{tmpdir}/out"
+        catalog = {"transfers": TRANSFERS_PK_SCHEMA, "approvals": APPROVALS_SCHEMA}
+        first = _batch(spark, [_block(n) for n in range(3)])
+        changes = decode_changes(first)
+        for t, schema in catalog.items():
+            rows = changes.filter(F.col("table") == t).select(
+                "stream_id", "block_num", "block_id", "row_map")
+            (typed_cast(rows, "row_map", schema).withColumn("epoch_id", F.lit(0))
+             .write.mode("append").parquet(f"{out}/data/{t}"))
+        (first.groupBy("stream_id")
+         .agg(F.max_by("cursor", "block_num").alias("cursor"),
+              F.max("block_num").alias("block_num"),
+              F.max_by("block_id", "block_num").alias("block_id"))
+         .withColumn("epoch_id", F.lit(0))
+         .write.mode("append").parquet(f"{out}/cursors"))
+
+        sink = TypedPerTableSink(out, catalog)
+        sink.write_batch(_batch(spark, [_block(n) for n in range(3, 6)]), epoch_id=1)
+        sink.write_batch(_batch(spark, [_block(n) for n in range(6, 8)]), epoch_id=2)
+
+        pk = ["evt_tx_hash", "evt_index"]
+        view = read_exactly_once(spark, out, "transfers", pk).collect()
+        assert sorted((r.epoch_id, r.block_num) for r in view) == (
+            [(0, n) for n in range(3)] + [(1, n) for n in range(3, 6)]
+            + [(2, 6), (2, 7)])
+        for r in view:  # typed values agree across both writers
+            n = r.block_num
+            assert r.value == str((1 << 200) + n) and r.evt_index == n
+            assert r.contract_address == b"ab" + bytes(6)
+            assert r.evt_block_time.second == n % 60 and r.evt_block_number == n
+        approvals = read_exactly_once(spark, out, "approvals", ["owner"])
+        assert sorted(int(r.amount) for r in approvals.collect()) == [
+            n * 10 for n in range(8)]
+        assert load_persisted_cursor(spark, out, "s1") == "7"
+
+
+class TestOnePass:
+    """One Spark job writes a micro-batch, whatever the catalog size, and
+    the sink's progress line comes from that job's stats."""
+
+    @staticmethod
+    def _jobs_around(spark, fn) -> int:
+        from tests.test_streaming import _max_job_id
+
+        before = _max_job_id(spark)
+        fn()
+        return _max_job_id(spark) - before
+
+    @pytest.mark.parametrize("n_tables", [2, 10])
+    def test_jobs_do_not_grow_with_catalog(self, spark, tmpdir, n_tables):
+        out = f"{tmpdir}/out"
+        catalog = {f"t{i:02d}": {"v": "UInt64", "s": "String"} for i in range(n_tables)}
+        payload = lambda n: json.dumps(  # noqa: E731
+            [{"table": t, "pk": {}, "fields": {"v": str(n), "s": t}} for t in catalog])
+        batch = spark.createDataFrame(
+            [_block(n, payload(n)) for n in range(4)], _BLOCK_COLS)
+        sink = TypedPerTableSink(out, catalog)
+        assert self._jobs_around(spark, lambda: sink.write_batch(batch, epoch_id=0)) == 1
+        for t in catalog:
+            got = spark.read.parquet(f"{out}/data/{t}").collect()
+            assert sorted((r.block_num, int(r.v), r.s) for r in got) == [
+                (n, n, t) for n in range(4)]
+        assert load_persisted_cursor(spark, out, "s1") == "3"
+
+    def test_progress_line_per_batch(self, spark, tmpdir, capsys, monkeypatch):
+        from elric_rs_spark.streaming.admin import format_log_line
+
+        only_approvals = json.dumps([{"table": "approvals", "pk": {},
+                                      "fields": {"owner": "o", "spender": "s",
+                                                 "amount": "1"}}])
+        batch = spark.createDataFrame(
+            [_block(1, only_approvals), _block(2, only_approvals), _block(3, "[]")],
+            _BLOCK_COLS)
+        sink = TypedPerTableSink(
+            f"{tmpdir}/out", {"transfers": TRANSFERS_PK_SCHEMA, "approvals": APPROVALS_SCHEMA})
+        monkeypatch.delenv("K_SERVICE", raising=False)
+        monkeypatch.delenv("KUBERNETES_SERVICE_HOST", raising=False)
+        capsys.readouterr()
+        assert self._jobs_around(spark, lambda: sink.write_batch(batch, epoch_id=4)) == 1
+        rows = {"approvals": 2, "transfers": 0}
+        lines = capsys.readouterr().out.splitlines()
+        assert lines == [format_log_line("batch committed", epoch=4, rows=rows,
+                                         stream="s1", block_num=3)]
+        assert lines[0] == ("batch committed epoch=4 rows={'approvals': 2, "
+                            "'transfers': 0} stream=s1 block_num=3")
+
+        monkeypatch.setenv("K_SERVICE", "loader")  # the prod (JSON) format
+        sink.write_batch(batch, epoch_id=5)
+        assert [json.loads(x) for x in capsys.readouterr().out.splitlines()] == [
+            {"severity": "INFO", "message": "batch committed", "epoch": 5,
+             "rows": rows, "stream": "s1", "block_num": 3}]

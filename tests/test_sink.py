@@ -20,7 +20,6 @@ import pyarrow as pa
 import pytest
 
 from elric_rs_spark.streaming import http_sink
-from elric_rs_spark.streaming.http_sink import ClickHouseHttpWriter
 from elric_rs_spark.streaming.pipeline import TypedPerTableSink, run_pipeline
 from elric_rs_spark.streaming.source import land_blocks
 from tests.test_pipeline import APPROVALS_SCHEMA, TRANSFERS_SCHEMA, _blocks, _payload
@@ -125,25 +124,6 @@ def _batch(spark, nums, partitions: int = 1):
 
 
 CATALOG = {"transfers": {"v": "UInt64"}, "approvals": {"v": "String"}}
-
-
-class TestHttpInserter:
-    def test_insert_statement_and_wire(self, spark, mock_clickhouse):
-        endpoint, rec = mock_clickhouse
-        df = spark.createDataFrame([(7, 10), (8, 20)], "block_num long, amount long")
-        assert ClickHouseHttpWriter(endpoint).append(df.coalesce(1), "transfers") == 2
-        assert len(rec.requests) == 1
-        q, body = rec.requests[0]
-        assert q == "INSERT INTO transfers (amount, block_num) FORMAT ArrowStream"
-        assert _arrow(body).to_pylist() == [
-            {"amount": 10, "block_num": 7}, {"amount": 20, "block_num": 8},
-        ]
-
-    def test_empty_block_posts_nothing(self, spark, mock_clickhouse):
-        endpoint, rec = mock_clickhouse
-        df = spark.createDataFrame([], "a long").repartition(4)
-        assert ClickHouseHttpWriter(endpoint).append(df, "t") == 0
-        assert rec.requests == []
 
 
 class TestHttpSinkRoundTrip:
@@ -304,3 +284,16 @@ class TestLoaderIntoMock:
         assert types["approvals"].field("amount").type == pa.decimal128(20, 0)
         assert types["transfers"].field("contract_address").type == pa.binary()
         assert types["transfers"].field("evt_block_time").type == pa.timestamp("us", tz="UTC")
+
+
+class TestEmptyTable:
+    def test_table_without_rows_posts_nothing(self, spark, mock_clickhouse):
+        """A catalog table with no rows in the batch gets no INSERT; the
+        cursor still goes last."""
+        endpoint, rec = mock_clickhouse
+        batch = _change_blocks(spark, [(n, [("approvals", {"v": str(n)})]) for n in (1, 2)])
+        TypedPerTableSink(endpoint, CATALOG).write_batch(batch.repartition(2), epoch_id=1)
+        order = rec.tables_in_order()
+        assert "transfers" not in order
+        assert order[-1] == "cursors" and set(order[:-1]) == {"approvals"}
+        assert sorted(r["v"] for r in rec.rows("approvals")) == ["1", "2"]

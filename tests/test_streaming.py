@@ -521,15 +521,16 @@ class TestSink:
         assert load_persisted_cursor(spark, tmpdir, "nope") is None
 
     def test_epoch_replay_detectable(self, spark, tmpdir):
-        """Retried epochs re-append with the same epoch_id, so exact-once
-        consumers can dedup on (epoch_id, block_num) — the parquet analogue
-        of ReplacingMergeTree idempotence (README.md:9-11)."""
+        """Retried epochs are written with the same epoch_id (a replay of
+        the same batch replaces its own files), so exact-once consumers
+        can dedup on (epoch_id, block_num) — the parquet analogue of
+        ReplacingMergeTree idempotence (README.md:9-11)."""
         sink = TypedPerTableSink(tmpdir, {"t": {"v": "String"}})
         batch = _change_blocks(spark, [(1, [("t", {"v": "x"})])])
         sink.write_batch(batch, epoch_id=5)
         sink.write_batch(batch, epoch_id=5)  # replay
         df = spark.read.parquet(f"{tmpdir}/data/t")
-        assert df.count() == 2
+        assert df.count() == 1
         dedup = df.dropDuplicates(["epoch_id", "block_num"])
         assert dedup.count() == 1
 
