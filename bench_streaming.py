@@ -19,7 +19,7 @@ test shape, ref loader.rs:358-402). Prints ONE JSON line:
 recording stand-in for ClickHouse's HTTP interface (the mock of
 tests/test_sink.py, reduced to counters) instead of parquet: the JSON
 line adds the rows the stand-in received per second and the POSTs per
-micro-batch. It is the only measurement of the ClickHouse writer, since
+micro-batch (one per table with rows, plus the cursor). It is the only measurement of the ClickHouse writer, since
 there is no ClickHouse server here.
 
 Not wired into bench.py (the driver contract is one JSON line of query
@@ -35,8 +35,10 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tests")
+# this checkout's package and test helpers, wherever it lives
+HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, HERE)
+sys.path.insert(0, os.path.join(HERE, "tests"))
 
 # Throughput floor gate (VERDICT r05 next-round #5): three successive
 # measurements drifted 819 -> 731 -> 653 blocks/s with each step "inside

@@ -17,8 +17,9 @@ writes the per-table parquet layout, streaming/sink.py).
 ClickHouse at startup, table_info.rs:204-208), optionally decodes the
 .spkg package to pick the sink module (S4), then drives the full T1-T9
 topology over the landing directory with graceful-shutdown and the
-reference's progress-log line shape. `--follow` keeps the 15 s insert
-cadence (ref loader.rs:58); the default drains available data and exits
+reference's progress-log line shape, printed from the main thread
+(`admin.log_progress`). `--follow` keeps the 15 s insert cadence (ref
+loader.rs:58); the default drains available data and exits
 (availableNow) — the testable batch-replay mode.
 """
 
@@ -31,6 +32,7 @@ import re
 import sys
 
 from elric_rs_spark.streaming.admin import (
+    detect_log_format,
     format_log_line,
     parse_database_url,
     read_package,
@@ -110,6 +112,7 @@ def cmd_setup(args: argparse.Namespace) -> int:
     print(
         format_log_line(
             "schema setup complete",
+            fmt=detect_log_format(),
             statements=n,
             tables=len(catalog),
             catalog=path,
@@ -133,13 +136,14 @@ def cmd_run(args: argparse.Namespace) -> int:
         print(
             format_log_line(
                 "package loaded",
+                fmt=detect_log_format(),
                 modules=len(pkg.get("modules", [])),
                 sink_module=sink_module or "<unset>",
             )
         )
 
     from elric_rs_spark.session import get_spark
-    from elric_rs_spark.streaming.admin import GracefulShutdown, attach_progress_logger
+    from elric_rs_spark.streaming.admin import GracefulShutdown, log_progress
     from elric_rs_spark.streaming.pipeline import (
         TypedPerTableSink,
         decode_changes,
@@ -148,7 +152,6 @@ def cmd_run(args: argparse.Namespace) -> int:
     )
 
     spark = get_spark("elric_rs_spark_run")
-    listener = attach_progress_logger(spark)
     # the sink module's declared output decides the decode path: the
     # reference consumes `DatabaseChanges` protobuf from `db_out`-style
     # modules (ref substreams.rs:26-78); JSON change-sets are this
@@ -167,12 +170,9 @@ def cmd_run(args: argparse.Namespace) -> int:
         sink,
         available_now=not args.follow,
     )
-    try:
-        with GracefulShutdown(query):
-            query.awaitTermination()
-    finally:
-        spark.streams.removeListener(listener)
-    print(format_log_line("pipeline drained", out=args.out))
+    with GracefulShutdown(query):
+        log_progress(query)
+    print(format_log_line("pipeline drained", fmt=detect_log_format(), out=args.out))
     return 0
 
 

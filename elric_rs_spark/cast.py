@@ -19,6 +19,9 @@ throughout ref table_info.rs:85-153). Spark casts yield NULL instead, so:
 
 from __future__ import annotations
 
+import functools
+import operator
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -53,6 +56,21 @@ def typed_columns(
             ).otherwise(typed)
         out.append(typed.alias(name))
     return out
+
+
+def _malformed(raw: Column, ct: ColumnType) -> Column:
+    """The quarantine rule: a non-NULL string that casts to NULL."""
+    return raw.isNotNull() & cast_expr(raw, ct).isNull()
+
+
+def malformed_value(row_map: Column, columns: dict[str, str]) -> Column:
+    """True when any declared column of `row_map` is malformed (the
+    `typed_cast_split` rule); missing keys are fine."""
+    return functools.reduce(
+        operator.or_,
+        (_malformed(row_map.getItem(name), ct) for name, ct in schema_for(columns)),
+        F.lit(False),
+    )
 
 
 def typed_cast(
@@ -91,10 +109,7 @@ def typed_cast_split(
     and it must never silently vanish either."""
     schema = schema_for(columns)
     flags = [
-        (
-            F.col(map_col).getItem(name).isNotNull()
-            & cast_expr(F.col(map_col).getItem(name), ct).isNull()
-        ).alias(f"__bad_{name}")
+        _malformed(F.col(map_col).getItem(name), ct).alias(f"__bad_{name}")
         for name, ct in schema
     ]
     flagged = df.select("*", *flags)

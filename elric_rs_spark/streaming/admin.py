@@ -1,7 +1,7 @@
 """Operational surface completing the SURVEY.md §2 inventory rows that
 have no query-contract key: S4 (spkg package reader), S8 (schema/DDL
 executor), S11 (database-URL → client options), T10 (graceful shutdown),
-T11 (progress/metrics logging).
+T11 (progress/metrics logging, from the main thread: `log_progress`).
 """
 
 from __future__ import annotations
@@ -139,43 +139,47 @@ def format_log_line(message: str, severity: str = "INFO", fmt: str = "dev",
     return f"{message} {tail}".rstrip()
 
 
-def attach_progress_logger(
-    spark,
+# how long the main thread blocks in awaitTermination between progress
+# checks; a drain that ends sooner returns at once
+POLL_S = 1.0
+
+
+def log_progress(
+    query,
     log: Callable[[str], None] | None = None,
     fmt: str | None = None,
-):
-    """StreamingQueryListener emitting the reference's per-block progress
-    line shape (rows, batch id, duration; loader.rs:164-172). `fmt` is
-    "dev" (plain text), "prod" (Stackdriver JSON), or None to auto-detect
-    from the environment like the reference (logging.rs:22-28). Returns
-    the listener (detach with `spark.streams.removeListener`)."""
-    from pyspark.sql.streaming import StreamingQueryListener
-
+) -> None:
+    """Block until `query` terminates, emitting the reference's progress
+    lines from the calling thread (rows, batch id, duration;
+    loader.rs:164-172): `stream started`, one `stream progress` line per
+    batch from `query.recentProgress`, then `stream terminated` — also
+    when the query fails, whose error then propagates. It polls with
+    `awaitTermination(POLL_S)` and prints each batch once, so a
+    long-running (`--follow`) query reports as it goes. No
+    StreamingQueryListener is involved: nothing crosses Py4J per event.
+    `fmt` is "dev" (plain text), "prod" (Stackdriver JSON), or None to
+    auto-detect from the environment like the reference
+    (logging.rs:22-28)."""
     emit = log or (lambda s: print(s, flush=True))
     use_fmt = fmt or detect_log_format()
+    emit(format_log_line("stream started", fmt=use_fmt, id=str(query.id)))
+    printed = -1
 
-    class _Listener(StreamingQueryListener):
-        def onQueryStarted(self, event):
-            emit(format_log_line("stream started", fmt=use_fmt, id=str(event.id)))
+    def report() -> None:
+        nonlocal printed
+        last = query.lastProgress  # one round trip while nothing is new
+        if last is None or last.batchId <= printed:
+            return
+        for p in query.recentProgress:
+            if p.batchId > printed:
+                emit(format_log_line(
+                    "stream progress", fmt=use_fmt, batch=p.batchId,
+                    rows=p.numInputRows, duration_ms=p.batchDuration))
+                printed = p.batchId
 
-        def onQueryProgress(self, event):
-            p = event.progress
-            emit(
-                format_log_line(
-                    "stream progress",
-                    fmt=use_fmt,
-                    batch=p.batchId,
-                    rows=p.numInputRows,
-                    duration_ms=p.batchDuration,
-                )
-            )
-
-        def onQueryIdle(self, event):
-            pass
-
-        def onQueryTerminated(self, event):
-            emit(format_log_line("stream terminated", fmt=use_fmt, id=str(event.id)))
-
-    listener = _Listener()
-    spark.streams.addListener(listener)
-    return listener
+    try:
+        while not query.awaitTermination(POLL_S):
+            report()
+    finally:
+        report()
+        emit(format_log_line("stream terminated", fmt=use_fmt, id=str(query.id)))

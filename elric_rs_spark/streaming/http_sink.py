@@ -15,34 +15,28 @@ documented ClickHouse behaviour; the tests run against a recording mock
 (tests/test_sink.py), not a live server.
 
 `pipeline.TypedPerTableSink` picks this writer for an `http(s)://`
-target. Inside the sink's one pass, each partition posts one INSERT per
-table it holds rows for (the executors ship their own rows; no rows are
-collected); after the pass the driver posts the cursor rows into
+target. The driver posts one INSERT per table with rows in the batch
+(the reference's one inserter per table), then the cursor rows into
 `cursors`. Columns go in ALPHABETICAL order, the order the reference
-derives from its schema map (ref loader.rs:86-99). Retries stay with
-Spark: a failed POST fails its task, the task failure fails the pass, so
-the sink raises before the cursor POST and the restarted query replays
+derives from its schema map (ref loader.rs:86-99). A failed POST raises
+out of the batch before the cursor POST, so the restarted query replays
 the epoch.
 """
 
 from __future__ import annotations
 
-import functools
 import urllib.parse
 import urllib.request
 
 import pyarrow as pa
 
-# the reference's end timeout (ref loader.rs:57); read on the driver
-# when a batch's POST function is built, before it ships to executors
+# the reference's end timeout (ref loader.rs:57), read at each POST
 TIMEOUT_S = 20.0
 
 
-def _post(endpoint: str, timeout: float, table: str, rows: pa.Table,
-          part: int | None = None) -> None:
+def _post(endpoint: str, table: str, rows: pa.Table) -> None:
     """INSERT `rows` into `table` as one ArrowStream body, columns in
-    alphabetical order. `part`, the partition of the sink's pass, does
-    not enter the INSERT."""
+    alphabetical order."""
     rows = rows.select(sorted(rows.column_names))
     stmt = (f"INSERT INTO {table} ({', '.join(rows.column_names)}) "
             "FORMAT ArrowStream")
@@ -53,7 +47,7 @@ def _post(endpoint: str, timeout: float, table: str, rows: pa.Table,
         f"{endpoint}/?query={urllib.parse.quote(stmt)}",
         data=out.getvalue().to_pybytes(), method="POST")
     req.add_header("Content-Type", "application/octet-stream")
-    with urllib.request.urlopen(req, timeout=timeout) as resp:
+    with urllib.request.urlopen(req, timeout=TIMEOUT_S) as resp:
         resp.read()
 
 
@@ -63,13 +57,12 @@ class ClickHouseHttpWriter:
     def __init__(self, endpoint: str):
         self.endpoint = endpoint.rstrip("/")  # e.g. http://host:8123
 
-    def part_writer(self, epoch_id: int):
-        """`write(table, rows, partition)` for the executors' pass."""
-        return functools.partial(_post, self.endpoint, TIMEOUT_S)
-
-    def commit(self, epoch_id: int, cursor: pa.Table,
-               empty: dict[str, pa.Schema]) -> None:
-        """After the pass: one POST of the cursor rows. A table without
-        rows gets no INSERT."""
+    def commit(self, epoch_id: int, tables: dict[str, pa.Table],
+               cursor: pa.Table) -> None:
+        """One INSERT per table with rows, then one of the cursor rows.
+        A table without rows gets no INSERT."""
+        for table, rows in tables.items():
+            if rows.num_rows:
+                _post(self.endpoint, table, rows)
         if cursor.num_rows:
-            _post(self.endpoint, TIMEOUT_S, "cursors", cursor)
+            _post(self.endpoint, "cursors", cursor)

@@ -8,12 +8,13 @@ the landing dir holds only final blocks and the query has no stateful
 operator.
 
 `TypedPerTableSink` is the one per-table `foreachBatch` sink, and one
-Spark job writes a micro-batch: one projection casts every table, one
-`mapInArrow` pass writes each partition's rows per table and returns
-row counts and cursor candidates, and the driver writes the cursor
-after the pass. Its target picks the writer: a directory gets
-`sink.ParquetWriter` (pyarrow files), an `http(s)://` ClickHouse
-endpoint gets `http_sink.ClickHouseHttpWriter` (ArrowStream INSERTs).
+Spark job reads a micro-batch: one projection casts every table, the
+driver collects it with one `toArrow()`, splits it by table, writes
+each table once and then the cursor. Its target picks the writer: a
+directory gets `sink.ParquetWriter` (pyarrow files), an `http(s)://`
+ClickHouse endpoint gets `http_sink.ClickHouseHttpWriter` (ArrowStream
+INSERTs). `run_pipeline` starts the query; a local checkpoint gets the
+FileSystem-based checkpoint manager (`use_checkpoint_manager`).
 
 Two decode paths produce the same (table, fields, pk) intermediate and
 share the merge/cast/sink stages:
@@ -37,15 +38,14 @@ Semantic gotchas preserved (SURVEY.md §2.4):
 
 from __future__ import annotations
 
+import urllib.parse
+
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark import TaskContext
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
-from pyspark.sql.types import IntegerType, StructField, StructType
 
-from elric_rs_spark.cast import typed_columns
+from elric_rs_spark.cast import malformed_value, typed_columns
 from elric_rs_spark.streaming.admin import detect_log_format, format_log_line
 from elric_rs_spark.streaming.http_sink import ClickHouseHttpWriter
 from elric_rs_spark.streaming.sink import ParquetWriter
@@ -65,10 +65,17 @@ def _merged_row_map(fields, pk) -> F.Column:
     ).otherwise(F.map_concat(fields_clean, pk))
 
 
+def malformed_payload(payload: Column) -> Column:
+    """The malformed-payload rule of the JSON decoder: a non-NULL payload
+    that does not parse as a change list."""
+    return payload.isNotNull() & F.from_json(payload, CHANGES_JSON_SCHEMA).isNull()
+
+
 def decode_changes(block_df: DataFrame, mode: str = "strict") -> DataFrame:
     """T1+T2+T3: payload -> one row per table-change with the merged
     string->string field map. Pure Catalyst (from_json + explode +
-    map_concat) — whole-stage codegen, no Python.
+    map_concat) — whole-stage codegen, no Python. The other columns of
+    `block_df` pass through (the sink carries a per-block flag this way).
 
     A block whose payload is NULL decodes to one row for the block
     itself, with `table` and `row_map` NULL. The sink passes every block
@@ -78,9 +85,8 @@ def decode_changes(block_df: DataFrame, mode: str = "strict") -> DataFrame:
     Malformed-payload policy (the reference PANICS on a decode failure,
     loader.rs:128-131 `expect`): mode='strict' raises on the first
     non-null payload that fails to parse — fail-fast reference parity;
-    mode='permissive' drops malformed rows (use `decode_errors` to
-    quarantine them for inspection, the same split discipline as the
-    typed-cast quarantine)."""
+    mode='permissive' drops malformed rows (`decode_errors` lists them,
+    and the sink counts them, by the `malformed_payload` rule)."""
     parsed = F.from_json("payload", CHANGES_JSON_SCHEMA)
     if mode == "strict":
         # the guard must live INSIDE a consumed expression — a separate
@@ -99,19 +105,11 @@ def decode_changes(block_df: DataFrame, mode: str = "strict") -> DataFrame:
     parsed = F.when(
         F.col("payload").isNull(), F.array(F.lit(None).cast(_CHANGE))
     ).otherwise(parsed)
-    changes = block_df.select(
-        "stream_id",
-        "block_num",
-        "block_id",
-        "cursor",
-        F.explode(parsed).alias("c"),
-    )
+    keep = [c for c in block_df.columns if c != "payload"]
+    changes = block_df.select(*keep, F.explode(parsed).alias("c"))
     merged = _merged_row_map(F.col("c.fields"), F.col("c.pk"))
     return changes.select(
-        "stream_id",
-        "block_num",
-        "block_id",
-        "cursor",
+        *keep,
         F.col("c.table").alias("table"),
         merged.alias("row_map"),
     )
@@ -121,8 +119,7 @@ def decode_errors(block_df: DataFrame) -> DataFrame:
     """The quarantine half of mode='permissive': rows whose non-null
     payload failed to parse, with full provenance (stream/block/cursor)
     — same split discipline as cast.py's quarantine (T5)."""
-    parsed = F.from_json("payload", CHANGES_JSON_SCHEMA)
-    return block_df.filter(F.col("payload").isNotNull() & parsed.isNull()).select(
+    return block_df.filter(malformed_payload(F.col("payload"))).select(
         "stream_id", "block_num", "block_id", "cursor", "payload"
     )
 
@@ -192,58 +189,12 @@ def decode_changes_protobuf(block_df: DataFrame, mode: str = "strict") -> DataFr
     )
 
 
-# what each partition of the sink's pass returns: one row per table it
-# wrote (rows set) and one per stream it saw (the stream's last block)
-_PASS_STATS = pa.schema([
-    ("table", pa.string()), ("rows", pa.int64()), ("stream_id", pa.string()),
-    ("block_num", pa.int64()), ("block_id", pa.string()), ("cursor", pa.string()),
-])
-
-
-def _pass(tables: list[str], schemas: dict[str, pa.Schema], write, epoch_id: int):
-    """The per-partition function of the sink's pass. Its input rows are
-    change rows (`table` set, the table's typed struct in column
-    `_<index>`) and block rows (`table` null, `cursor` set). It splits
-    the change rows by table, hands each table's rows to `write(table,
-    rows, partition)`, and returns the row counts and each stream's
-    highest (block_num, block_id, cursor)."""
-
-    def run(batches):
-        # the whole partition first: a strict-mode raise while Spark
-        # produces its rows comes before this partition writes anything
-        batches = list(batches)
-        if not batches:
-            return
-        part = TaskContext.get().partitionId()
-        rows = pa.Table.from_batches(batches)
-        stats = {name: [] for name in _PASS_STATS.names}
-
-        def add(**kw):
-            for k, v in stats.items():
-                v.append(kw.get(k))
-
-        for i, t in enumerate(tables):
-            sel = rows.filter(pc.equal(rows["table"], t))
-            if not sel.num_rows:
-                continue
-            typed = sel[f"_{i}"].combine_chunks().flatten()
-            epoch = pa.repeat(pa.scalar(epoch_id, pa.int32()), sel.num_rows)
-            cols = [sel["stream_id"], sel["block_num"], sel["block_id"], *typed, epoch]
-            write(t, pa.Table.from_arrays(cols, names=schemas[t].names)
-                  .cast(schemas[t]), part)
-            add(table=t, rows=sel.num_rows)
-        blocks = rows.filter(pc.is_null(rows["table"]))
-        last = (
-            blocks.sort_by([("block_num", "descending")])
-            .group_by("stream_id", use_threads=False)
-            .aggregate([(k, "first") for k in ("block_num", "block_id", "cursor")])
-        )
-        for s, n, b, c in zip(*(last[k].to_pylist() for k in (
-                "stream_id", "block_num_first", "block_id_first", "cursor_first"))):
-            add(stream_id=s, block_num=n, block_id=b, cursor=c)
-        yield pa.RecordBatch.from_pydict(stats, schema=_PASS_STATS)
-
-    return run
+_KEY = ("stream_id", "block_num", "block_id")
+_CHECKPOINT_MANAGER = "spark.sql.streaming.checkpointFileManagerClass"
+_FS_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
 
 
 class TypedPerTableSink:
@@ -253,20 +204,34 @@ class TypedPerTableSink:
     cursor per stream — data first, cursor second, so a crash can repeat
     a block but never lose data the cursor claims is done.
 
-    One Spark job writes a micro-batch, reading it once. Each block
-    goes through `decode` twice: with its payload (its change rows) and
-    with a NULL payload (one row for the block itself, so a block with
-    no change rows — payload `[]`, NULL, or skipped as malformed in
-    permissive mode — still moves the cursor). One projection casts
-    every table (`cast.typed_columns` nested in one struct per table),
-    and one `mapInArrow` pass runs one Python task per partition of the
-    batch: it writes that partition's rows per table and returns small
-    stats. The driver then writes the cursor from the stats and prints
-    one "batch committed" line (`admin.format_log_line`).
+    One Spark job reads a micro-batch, and with the JSON decoder no
+    Python worker runs. Each block goes through `decode` twice: with its
+    payload (its change rows) and with a NULL payload (one row for the
+    block itself, so a block with no change rows — payload `[]`, NULL,
+    or skipped as malformed in permissive mode — still moves the
+    cursor). One projection casts every table (`cast.typed_columns`
+    nested in one struct per table), and the driver collects it with
+    one `toArrow()`: a strict-mode raise fails that collect, before
+    anything is written. The driver splits the Arrow rows by table,
+    writes each table once (the reference's one inserter per table),
+    writes each stream's last block as its cursor, and prints one
+    "batch committed" line (`admin.format_log_line`).
+
+    The collect is bounded by construction: a micro-batch is at most
+    `maxFilesPerTrigger` (8) landed chunks of `land_blocks`' batch size
+    (500 messages by default; `source.read_block_stream`), and its
+    decode and cast run in the executors.
+
+    In permissive mode the same projection flags malformed input, and
+    the line reports it: `quarantined={table: n}` counts rows with a
+    malformed value (`cast.malformed_value`; the value is written as
+    NULL), and with the JSON decoder `malformed_payloads=n` counts blocks
+    whose payload does not parse (the `decode_errors` rule; their change
+    rows are skipped).
 
     `target` is a directory (parquet: `{target}/data/{table}` and
     `{target}/cursors`, see `sink.ParquetWriter`) or an `http(s)://`
-    ClickHouse endpoint (one ArrowStream INSERT per table and partition,
+    ClickHouse endpoint (one ArrowStream INSERT per table with rows,
     then one into `cursors`, see `http_sink.ClickHouseHttpWriter`)."""
 
     def __init__(self, target: str, table_schemas: dict[str, dict[str, str]],
@@ -282,64 +247,106 @@ class TypedPerTableSink:
 
     def write_batch(self, block_df: DataFrame, epoch_id: int) -> None:
         tables = sorted(self.table_schemas)
+        permissive = self.mode == "permissive"
+        # the JSON decoder keeps its input's other columns, so the
+        # malformed-payload flag can ride each block's own row
+        flag_payloads = permissive and self.decode is not decode_changes_protobuf
         # every block also with a NULL payload: its own row, the cursor
         # candidate, rides the same scan as the change rows
-        blocks = block_df.select(
-            "stream_id", "block_num", "block_id", "cursor",
-            F.explode(F.array("payload", F.lit(None).cast("string"))).alias("payload"),
-        )
+        payload, null = F.col("payload"), F.lit(None).cast("string")
+        copies = F.explode(F.array(payload, null)).alias("payload")
+        if flag_payloads:
+            copies = F.inline(F.array(
+                F.struct(payload.alias("payload"), F.lit(False).alias("bad_payload")),
+                F.struct(null.alias("payload"),
+                         malformed_payload(payload).alias("bad_payload")),
+            ))
+        blocks = block_df.select(*_KEY, "cursor", copies)
         # the sink's strict/permissive mode reaches the decoder too — a
         # permissive sink must not die on the first malformed payload
         changes = self.decode(blocks, mode=self.mode)
-        block_row = F.col("table").isNull()
-        typed = changes.filter(block_row | F.col("table").isin(tables)).select(
-            "stream_id", "block_num", "block_id", "table",
+        table, row_map = F.col("table"), F.col("row_map")
+        block_row = table.isNull()
+        flags = []
+        if permissive:
+            flags.append(F.coalesce(*(
+                F.when(table == t, malformed_value(row_map, self.table_schemas[t]))
+                for t in tables
+            )).alias("bad_value"))
+        if flag_payloads:
+            flags.append("bad_payload")
+        rows = changes.filter(block_row | table.isin(tables)).select(
+            *_KEY, "table",
             F.when(block_row, F.col("cursor")).alias("cursor"),
             *(
                 F.when(
-                    F.col("table") == t,
-                    F.struct(*typed_columns(F.col("row_map"),
-                                            self.table_schemas[t], self.mode)),
+                    table == t,
+                    F.struct(*typed_columns(row_map, self.table_schemas[t], self.mode)),
                 ).alias(f"_{i}")
                 for i, t in enumerate(tables)
             ),
+            *flags,
+        ).toArrow()
+
+        epoch = pa.scalar(epoch_id, pa.int32())
+        out: dict[str, pa.Table] = {}
+        quarantined: dict[str, int] = {}
+        for i, t in enumerate(tables):
+            sel = rows.filter(pc.equal(rows["table"], t))
+            schema = pa.schema([*(rows.schema.field(c) for c in _KEY),
+                                *rows.schema.field(f"_{i}").type,
+                                pa.field("epoch_id", pa.int32())])
+            out[t] = pa.Table.from_arrays(
+                [*(sel[c] for c in _KEY), *sel[f"_{i}"].combine_chunks().flatten(),
+                 pa.repeat(epoch, sel.num_rows)], schema=schema)
+            if permissive:
+                quarantined[t] = pc.sum(sel["bad_value"]).as_py() or 0
+        blocks = rows.filter(pc.is_null(rows["table"]))
+        last = (
+            blocks.sort_by([("block_num", "descending")])
+            .group_by("stream_id", use_threads=False)
+            .aggregate([(k, "first") for k in ("block_num", "block_id", "cursor")])
+            .sort_by("stream_id")
         )
-        schema = typed.schema
-        arrow = {
-            t: to_arrow_schema(StructType([
-                *(schema[c] for c in ("stream_id", "block_num", "block_id")),
-                *schema[f"_{i}"].dataType.fields,
-                StructField("epoch_id", IntegerType()),
-            ]))
-            for i, t in enumerate(tables)
-        }
-        stats = typed.mapInArrow(
-            _pass(tables, arrow, self.writer.part_writer(epoch_id), epoch_id),
-            from_arrow_schema(_PASS_STATS),
-        ).collect()
-        rows = dict.fromkeys(tables, 0)
-        last: dict[str, tuple] = {}
-        for r in stats:
-            if r.table is not None:
-                rows[r.table] += r.rows
-            elif r.stream_id not in last or r.block_num > last[r.stream_id][0]:
-                last[r.stream_id] = (r.block_num, r.block_id, r.cursor)
-        streams = sorted(last)
-        # cursor AFTER all table writes (ref loader.rs:111-125)
         cursor = pa.table({
-            "stream_id": pa.array(streams, pa.string()),
-            "cursor": pa.array([last[s][2] for s in streams], pa.string()),
-            "block_num": pa.array([last[s][0] for s in streams], pa.int64()),
-            "block_id": pa.array([last[s][1] for s in streams], pa.string()),
-            "epoch_id": pa.array([epoch_id] * len(streams), pa.int32()),
+            "stream_id": last["stream_id"],
+            "cursor": last["cursor_first"],
+            "block_num": last["block_num_first"],
+            "block_id": last["block_id_first"],
+            "epoch_id": pa.repeat(epoch, last.num_rows),
         })
-        self.writer.commit(epoch_id, cursor,
-                           {t: arrow[t] for t in tables if not rows[t]})
+        # cursor AFTER all table writes (ref loader.rs:111-125)
+        self.writer.commit(epoch_id, out, cursor)
+
+        fields = dict(epoch=epoch_id, rows={t: out[t].num_rows for t in tables})
+        if permissive:
+            fields["quarantined"] = quarantined
+        if flag_payloads:
+            fields["malformed_payloads"] = pc.sum(blocks["bad_payload"]).as_py() or 0
         fmt = detect_log_format()
-        for s in streams or [None]:
-            print(format_log_line(
-                "batch committed", fmt=fmt, epoch=epoch_id, rows=rows,
-                stream=s, block_num=last[s][0] if s else None), flush=True)
+        committed = list(zip(cursor["stream_id"].to_pylist(),
+                             cursor["block_num"].to_pylist()))
+        for s, n in committed or [(None, None)]:
+            print(format_log_line("batch committed", fmt=fmt, **fields,
+                                  stream=s, block_num=n), flush=True)
+
+
+def use_checkpoint_manager(spark, checkpoint_dir: str) -> None:
+    """Pick the checkpoint file manager for a query checkpointing to
+    `checkpoint_dir`. A local path (no scheme, or `file:`) gets Spark's
+    FileSystem-based manager: the default one renames every offset,
+    commit and source-log file through Hadoop's `FileContext`, which
+    without the native Hadoop library forks `readlink` 8 times per
+    rename. A remote checkpoint keeps Spark's default manager (its
+    rename is the atomic one an object store needs).
+
+    Call it before `start()` and leave the conf set: the query creates
+    its offset and commit logs lazily on its own thread, which reads
+    the session conf then."""
+    if urllib.parse.urlparse(checkpoint_dir).scheme in ("", "file"):
+        spark.conf.set(_CHECKPOINT_MANAGER, _FS_CHECKPOINT_MANAGER)
+    elif spark.conf.get(_CHECKPOINT_MANAGER, None) == _FS_CHECKPOINT_MANAGER:
+        spark.conf.unset(_CHECKPOINT_MANAGER)
 
 
 def run_pipeline(
@@ -356,6 +363,7 @@ def run_pipeline(
     tests/test_pipeline.py::TestCheckpointRestart."""
     from elric_rs_spark.streaming.source import read_block_stream
 
+    use_checkpoint_manager(spark, checkpoint_dir)
     writer = (
         read_block_stream(spark, landing_dir)
         .writeStream.foreachBatch(sink.write_batch)

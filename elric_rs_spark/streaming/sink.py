@@ -5,23 +5,19 @@ its parquet layout: the exactly-once view and cursor recovery
 `pipeline.TypedPerTableSink` is the one per-table `foreachBatch` sink;
 it picks `ParquetWriter` for a directory target. The layout is one
 parquet dir per table, `{base}/data/{table}`, and the cursor rows in
-`{base}/cursors`, every row tagged with its epoch_id. The sink's one
-pass writes each partition's rows per table with pyarrow, as
-`data/{table}/part-<epoch>-<partition>.parquet`; the driver writes the
-cursor last, as `cursors/part-<epoch>.parquet` (ref loader.rs:119-122,
+`{base}/cursors`, every row tagged with its epoch_id. The driver writes
+one pyarrow file per table and batch, `data/{table}/part-<epoch>.parquet`,
+then the cursor, `cursors/part-<epoch>.parquet` (ref loader.rs:119-122,
 195-210). Every file goes to a hidden `.…tmp` name first and is renamed
-into place, so a reader never sees half a file, and a replayed epoch or
-a retried task replaces its own files. A crash can still repeat a block
-under the same epoch (a replay with fewer partitions leaves the extra
-files of the first attempt) but never lose data that the cursor claims
-is done; `read_exactly_once` collapses the repeats on read, the parquet
-analogue of the reference's ReplacingMergeTree. Executors write the
-files, so the directory must be one every executor can write.
+into place, so a reader never sees half a file, and a replayed epoch
+replaces its own files. `read_exactly_once` still collapses repeats on
+read, the parquet analogue of the reference's ReplacingMergeTree: a
+directory can hold several writers' files of one epoch. Only the
+driver writes, so the directory need only be driver-writable.
 """
 
 from __future__ import annotations
 
-import functools
 import os
 import uuid
 
@@ -45,12 +41,6 @@ def _replace_file(table: pa.Table, directory: str, name: str) -> None:
         raise
 
 
-def _write_part(base_dir: str, epoch_id: int, table: str, rows: pa.Table,
-                part: int) -> None:
-    _replace_file(rows, f"{base_dir}/data/{table}",
-                  f"part-{epoch_id:020d}-{part:05d}.parquet")
-
-
 def _has_data_file(directory: str) -> bool:
     try:
         return any(not n.startswith((".", "_")) for n in os.listdir(directory))
@@ -65,22 +55,19 @@ class ParquetWriter:
     def __init__(self, base_dir: str):
         self.base_dir = base_dir
 
-    def part_writer(self, epoch_id: int):
-        """`write(table, rows, partition)` for the executors' pass."""
-        return functools.partial(_write_part, self.base_dir, epoch_id)
-
-    def commit(self, epoch_id: int, cursor: pa.Table,
-               empty: dict[str, pa.Schema]) -> None:
-        """After the pass: give each table that has no rows in this batch
-        and no file yet a schema-only file, so it reads back as an empty
-        typed table, then write the cursor file."""
-        for table, schema in empty.items():
-            if not _has_data_file(f"{self.base_dir}/data/{table}"):
-                _write_part(self.base_dir, epoch_id, table,
-                            schema.empty_table(), 0)
+    def commit(self, epoch_id: int, tables: dict[str, pa.Table],
+               cursor: pa.Table) -> None:
+        """Write each table's rows of the batch as one file, then the
+        cursor file. A table without rows gets a schema-only file while
+        its dir has no data file, so it reads back as an empty typed
+        table."""
+        name = f"part-{epoch_id:020d}.parquet"
+        for table, rows in tables.items():
+            directory = f"{self.base_dir}/data/{table}"
+            if rows.num_rows or not _has_data_file(directory):
+                _replace_file(rows, directory, name)
         if cursor.num_rows:
-            _replace_file(cursor, f"{self.base_dir}/cursors",
-                          f"part-{epoch_id:020d}.parquet")
+            _replace_file(cursor, f"{self.base_dir}/cursors", name)
 
 
 def read_exactly_once(
@@ -89,9 +76,8 @@ def read_exactly_once(
     """Exactly-once READ view over the at-least-once sink (SURVEY.md §7
     risk 2). foreachBatch can replay a completed epoch after a crash; the
     replay writes the same rows tagged with the SAME epoch_id, replacing
-    its own files, but a replay with fewer partitions leaves the first
-    attempt's extra files, and a directory can hold several writers'
-    files of one epoch. The
+    its own files, but a directory can hold several writers' files of
+    one epoch (an older layout's per-partition files, say). The
     reference delegates replay collapse to ClickHouse ReplacingMergeTree
     ordered by the primary key (ref README.md:9-11); the parquet analogue
     is dedup-on-read keyed by (epoch_id, block_num, *pk): replayed rows

@@ -180,3 +180,48 @@ class TestRunProtobufDecode:
         assert sorted((r.owner, r.amount) for r in rows) == [
             (f"o{n}", n) for n in range(5)
         ]
+
+
+class TestRunProgress:
+    @pytest.mark.parametrize("fmt", ["dev", "prod"])
+    def test_run_prints_progress_per_batch(self, spark, tmpdir, capsys, monkeypatch, fmt):
+        """`run` prints `stream started`, one `stream progress` line per
+        batch (with its duration_ms) and `stream terminated`, from the
+        main thread, in the dev and the prod format. Ten landed chunks
+        drain in two batches (8 files per trigger)."""
+        from elric_rs_spark.streaming.source import land_blocks
+        from tests.test_pipeline import _blocks
+
+        monkeypatch.delenv("K_SERVICE", raising=False)
+        monkeypatch.delenv("KUBERNETES_SERVICE_HOST", raising=False)
+        if fmt == "prod":
+            monkeypatch.setenv("K_SERVICE", "loader")
+        schema = f"{tmpdir}/schema.sql"
+        with open(schema, "w") as fh:
+            fh.write(DDL)
+        out, landing = f"{tmpdir}/out", f"{tmpdir}/landing"
+        assert main(["setup", "clickhouse://ch:8123/db", schema, "--out", out]) == 0
+        blocks = [dict(b, final_block_height=b["block_num"]) for b in _blocks(10, 0)]
+        for b in blocks:  # one chunk, one file per block
+            land_blocks(spark, [b], landing)
+        capsys.readouterr()
+        assert main(["run", "clickhouse://ch:8123/db", "x.spkg",
+                     "--landing", landing, "--out", out]) == 0
+        lines = capsys.readouterr().out.splitlines()
+        if fmt == "prod":
+            entries = [json.loads(ln) for ln in lines]
+        else:  # "message k=v k=v": the words before the first field
+            entries = [{"message": ln.split("=")[0].rsplit(" ", 1)[0]} for ln in lines]
+        messages = [e["message"] for e in entries]
+        assert messages[0] == "stream started"
+        assert messages[-2:] == ["stream terminated", "pipeline drained"]
+        assert messages.count("stream progress") == messages.count("batch committed") == 2
+        if fmt == "prod":
+            progress = [e for e in entries if e["message"] == "stream progress"]
+            assert [(p["batch"], p["rows"]) for p in progress] == [(0, 8), (1, 2)]
+            assert all(p["duration_ms"] >= 0 for p in progress)
+        else:
+            got = [ln for ln in lines if ln.startswith("stream progress")]
+            assert [ln.rsplit(" duration_ms=", 1)[0] for ln in got] == [
+                "stream progress batch=0 rows=8", "stream progress batch=1 rows=2"]
+            assert all(ln.rsplit("=", 1)[1].isdigit() for ln in got)

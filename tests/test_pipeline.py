@@ -451,19 +451,72 @@ class TestSinkEdges:
     writer layout read back exactly once."""
 
     @pytest.mark.parametrize("mode", ["strict", "permissive"])
-    def test_cursor_names_last_block_without_rows(self, spark, tmpdir, mode):
+    def test_cursor_names_last_block_without_rows(self, spark, tmpdir, mode,
+                                                  capsys, monkeypatch):
+        from elric_rs_spark.streaming.admin import format_log_line
+
         rows = [_block(1), _block(2), _block(3, "[]"), ("s1", 4, "blk-4", "4", None)]
-        if mode == "permissive":  # a payload permissive mode skips
+        counts = {}
+        if mode == "permissive":  # a payload permissive mode skips, and counts
             rows.append(_block(5, "{not json"))
+            counts = dict(quarantined={"approvals": 0, "transfers": 0},
+                          malformed_payloads=1)
         out = f"{tmpdir}/out"
         sink = TypedPerTableSink(
             out, {"transfers": TRANSFERS_PK_SCHEMA, "approvals": APPROVALS_SCHEMA},
             mode=mode,
         )
+        monkeypatch.delenv("K_SERVICE", raising=False)
+        monkeypatch.delenv("KUBERNETES_SERVICE_HOST", raising=False)
+        capsys.readouterr()
         sink.write_batch(_batch(spark, rows), epoch_id=0)
         approvals = spark.read.parquet(f"{out}/data/approvals")
         assert sorted(r.block_num for r in approvals.collect()) == [1, 2]
         assert load_persisted_cursor(spark, out, "s1") == str(len(rows))
+        assert capsys.readouterr().out.splitlines() == [format_log_line(
+            "batch committed", epoch=0, rows={"approvals": 2, "transfers": 2},
+            **counts, stream="s1", block_num=len(rows))]
+
+    def test_permissive_counts_malformed_values(self, spark, tmpdir, capsys,
+                                                monkeypatch):
+        """A malformed typed value is written as NULL and counted per
+        table; the protobuf decoder reports no payload count (its
+        malformed rule runs in Python, not in the projection)."""
+        from elric_rs_spark.streaming.admin import format_log_line
+        from elric_rs_spark.streaming.pipeline import decode_changes_protobuf
+
+        def change(n, amount):
+            return json.dumps([{"table": "approvals", "pk": {}, "fields": {
+                "owner": f"o{n}", "spender": "s", "amount": amount}}])
+
+        rows = [_block(1, change(1, "10")), _block(2, change(2, "x")),
+                _block(3, change(3, "12abc")), _block(4, "{not json")]
+        out = f"{tmpdir}/out"
+        monkeypatch.delenv("K_SERVICE", raising=False)
+        monkeypatch.delenv("KUBERNETES_SERVICE_HOST", raising=False)
+        capsys.readouterr()
+        TypedPerTableSink(out, {"approvals": APPROVALS_SCHEMA}, mode="permissive"
+                          ).write_batch(_batch(spark, rows), epoch_id=0)
+        got = spark.read.parquet(f"{out}/data/approvals").collect()
+        assert sorted((r.owner, r.amount) for r in got) == [
+            ("o1", 10), ("o2", None), ("o3", None)]
+        assert capsys.readouterr().out.splitlines() == [format_log_line(
+            "batch committed", epoch=0, rows={"approvals": 3},
+            quarantined={"approvals": 2}, malformed_payloads=1,
+            stream="s1", block_num=4)]
+
+        import base64
+
+        from tests.test_protowire import enc_database_changes, enc_table_change
+
+        wire = base64.b64encode(enc_database_changes(enc_table_change(
+            "approvals", {"owner": "o5", "spender": "s", "amount": "y"}))).decode()
+        TypedPerTableSink(f"{tmpdir}/pb", {"approvals": APPROVALS_SCHEMA},
+                          mode="permissive", decode=decode_changes_protobuf
+                          ).write_batch(_batch(spark, [_block(5, wire)]), epoch_id=0)
+        assert capsys.readouterr().out.splitlines() == [format_log_line(
+            "batch committed", epoch=0, rows={"approvals": 1},
+            quarantined={"approvals": 1}, stream="s1", block_num=5)]
 
     def test_protobuf_cursor_names_last_block_without_rows(self, spark, tmpdir):
         import base64
@@ -509,9 +562,9 @@ class TestSinkEdges:
         assert spark.read.parquet(f"{out}/data/approvals").count() == 1
 
     def test_replay_with_fewer_partitions_reads_exactly_once(self, spark, tmpdir):
-        """A replay whose batch has fewer partitions (2 -> 1) cannot
-        replace every file of the first attempt; the extra rows carry
-        the same epoch and collapse on read."""
+        """A replay whose batch has fewer partitions (2 -> 1) replaces
+        the first attempt's file: the driver writes one file per table
+        and epoch, whatever the partitioning."""
         from elric_rs_spark.streaming.sink import read_exactly_once
 
         out = f"{tmpdir}/out"
@@ -521,7 +574,7 @@ class TestSinkEdges:
         sink.write_batch(_batch(spark, rows, partitions=2), epoch_id=3)
         before = sorted(map(repr, read_exactly_once(spark, out, "transfers", pk).collect()))
         sink.write_batch(_batch(spark, rows, partitions=1), epoch_id=3)
-        assert spark.read.parquet(f"{out}/data/transfers").count() > 6
+        assert spark.read.parquet(f"{out}/data/transfers").count() == 6
         after = sorted(map(repr, read_exactly_once(spark, out, "transfers", pk).collect()))
         assert after == before and len(after) == 6
         assert load_persisted_cursor(spark, out, "s1") == "5"
@@ -598,6 +651,32 @@ class TestOnePass:
                 (n, n, t) for n in range(4)]
         assert load_persisted_cursor(spark, out, "s1") == "3"
 
+    @pytest.mark.parametrize("mode", ["strict", "permissive"])
+    def test_json_path_runs_no_python(self, spark, tmpdir, monkeypatch, mode):
+        """The JSON path's one job is the driver's `toArrow()` of the cast
+        projection: no Python node in its executed plan, so no Python
+        worker starts."""
+        from pyspark.sql.classic.dataframe import DataFrame
+
+        plans = []
+        to_arrow = DataFrame.toArrow
+
+        def spy(df):
+            plans.append(df._jdf.queryExecution().executedPlan().toString())
+            return to_arrow(df)
+
+        monkeypatch.setattr(DataFrame, "toArrow", spy)
+        sink = TypedPerTableSink(
+            f"{tmpdir}/out",
+            {"transfers": TRANSFERS_PK_SCHEMA, "approvals": APPROVALS_SCHEMA},
+            mode=mode)
+        batch = spark.createDataFrame([_block(n) for n in range(4)], _BLOCK_COLS)
+        assert self._jobs_around(spark, lambda: sink.write_batch(batch, epoch_id=0)) == 1
+        assert len(plans) == 1
+        for node in ("MapInArrow", "MapInPandas", "ArrowEvalPython", "BatchEvalPython",
+                     "PythonUDF"):
+            assert node not in plans[0], node
+
     def test_progress_line_per_batch(self, spark, tmpdir, capsys, monkeypatch):
         from elric_rs_spark.streaming.admin import format_log_line
 
@@ -625,3 +704,35 @@ class TestOnePass:
         assert [json.loads(x) for x in capsys.readouterr().out.splitlines()] == [
             {"severity": "INFO", "message": "batch committed", "epoch": 5,
              "rows": rows, "stream": "s1", "block_num": 3}]
+
+
+class TestCheckpointManager:
+    """A local checkpoint uses Spark's FileSystem-based checkpoint file
+    manager (no `readlink` forks per rename); a remote one keeps Spark's
+    default."""
+
+    KEY = "spark.sql.streaming.checkpointFileManagerClass"
+    FS = ("org.apache.spark.sql.execution.streaming.checkpointing."
+          "FileSystemBasedCheckpointFileManager")
+
+    def test_local_checkpoint_selects_filesystem_manager(self, spark, tmpdir):
+        landing, ckpt, out = (f"{tmpdir}/{d}" for d in ("landing", "ckpt", "out"))
+        land_blocks(spark, _blocks(8, reorg_depth=2), landing)
+        q = run_pipeline(spark, landing, ckpt,
+                         TypedPerTableSink(out, {"approvals": APPROVALS_SCHEMA}))
+        assert q.awaitTermination(120) and q.exception() is None
+        assert spark.conf.get(self.KEY) == self.FS
+        logs = q._jsq.streamingQuery()
+        for log in (logs.offsetLog(), logs.commitLog()):
+            assert log.fileManager().getClass().getName() == self.FS
+        assert load_persisted_cursor(spark, out, "s1") == "5"
+
+    @pytest.mark.parametrize("path,local", [
+        ("/tmp/ckpt", True), ("file:///tmp/ckpt", True),
+        ("hdfs://namenode:8020/ckpt", False), ("s3a://bucket/ckpt", False)])
+    def test_only_local_paths_select_it(self, spark, path, local):
+        from elric_rs_spark.streaming.pipeline import use_checkpoint_manager
+
+        use_checkpoint_manager(spark, "/tmp/ckpt")  # as a local run leaves it
+        use_checkpoint_manager(spark, path)  # starts no query, opens no path
+        assert (spark.conf.get(self.KEY, None) == self.FS) is local

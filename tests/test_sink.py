@@ -2,11 +2,12 @@
 ClickHouse writer — the Spark twin of the reference's recording-mock
 loader test (ref loader.rs:358-402): a local HTTP server records every
 INSERT the sink posts and decodes its ArrowStream body; assertions cover
-typed Arrow fields, alphabetical column order, per-partition data
-inserts arriving BEFORE the cursor insert, epoch-tagged replay
-idempotence, and failure injection (5xx, timeout, one failed partition
-of many): the batch raises, no cursor is posted, and a replay of the
-same epoch posts the rows of a clean run. No live ClickHouse anywhere.
+typed Arrow fields, alphabetical column order, one data insert per
+table arriving BEFORE the cursor insert, epoch-tagged replay
+idempotence, and failure injection (5xx, timeout, the second table
+failing after the first landed): the batch raises, no cursor is posted,
+and a replay of the same epoch posts the rows of a clean run. No live
+ClickHouse anywhere.
 """
 
 from __future__ import annotations
@@ -47,9 +48,8 @@ class _Recorder:
             return self.fail(query, n) if self.fail else None
 
     def heal(self, quiet_s: float = 1.0) -> None:
-        """Drop the failure rules and the log, once the failed batch's
-        other partitions (Spark kills them asynchronously) have gone quiet
-        — a late POST from them must not count toward the replay."""
+        """Drop the failure rules and the log, once the server has gone
+        quiet — a late POST must not count toward the replay."""
         deadline = time.monotonic() + 30
         while time.monotonic() - self.last_at < quiet_s:
             assert time.monotonic() < deadline, "mock never went quiet"
@@ -133,7 +133,7 @@ class TestHttpSinkRoundTrip:
         sink.write_batch(_batch(spark, [7, 8], partitions=2), epoch_id=3)
 
         order = rec.tables_in_order()
-        # data inserts first (any per-partition interleaving), the one
+        # data inserts first (one per table), the one
         # cursor insert strictly LAST (ref loader.rs:119-122 ordering)
         assert order[-1] == "cursors"
         assert set(order[:-1]) == {"approvals", "transfers"}
@@ -220,14 +220,19 @@ class TestFailureInjection:
         )
 
     def test_one_partition_of_many_fails(self, spark, mock_clickhouse):
+        """A batch of 4 partitions still makes one INSERT per table; the
+        second table's INSERT fails after the first table's landed."""
         endpoint, rec = mock_clickhouse
         batch = _batch(spark, range(16), partitions=4)
         assert batch.rdd.getNumPartitions() == 4
-        self._fail_then_replay(
-            rec, endpoint, batch,
-            fail=lambda q, n: 500 if _table(q) == "transfers" and n == 2 else None,
-            match="HTTP Error 500",
-        )
+
+        def fail(q, n):
+            if _table(q) == "transfers":
+                assert rec.tables_in_order() == ["approvals", "transfers"]
+                return 500
+            return None
+
+        self._fail_then_replay(rec, endpoint, batch, fail=fail, match="HTTP Error 500")
 
 
 class TestLoaderIntoMock:
