@@ -1,6 +1,7 @@
-"""Session memos and their build attribution log (VERDICT r11 #7).
+"""Pins, session memos and the memos' build attribution log (VERDICT r11 #7).
 
-Every session-scoped shared build (KMV sketch, CC labels, portable
+`pin` is the one way to materialize a stage that several consumers
+read. Every session-scoped shared build (KMV sketch, CC labels, portable
 pairs, kernel grams, co-purchase edges, IVF celldots, winnow selection)
 goes through `session_memo`, which records the build's name and wall
 seconds here when it actually BUILDS (cache misses only). bench.py
@@ -17,6 +18,7 @@ import time
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.storagelevel import StorageLevel
 
 BUILDS: list[dict] = []
 
@@ -30,12 +32,28 @@ def record(name: str, sec: float) -> None:
     BUILDS.append({"name": name, "sec": round(sec, 3)})
 
 
+def pin(df: DataFrame) -> DataFrame:
+    """Materialize `df` now and return a DataFrame over the stored rows,
+    so every consumer reads them instead of re-running the plan.
+
+    With a checkpoint dir (`setCheckpointDir` or `spark.checkpoint.dir`)
+    the pin is a reliable checkpoint: its files survive executor loss,
+    and `get_spark` has the cleaner delete them once the DataFrame is
+    garbage-collected. Without one it is a DISK_ONLY local checkpoint:
+    one job, blocks on executor disks, never deserialized on the heap
+    (pins kept in memory hit out-of-memory errors at sf30 in r11)."""
+    if df.sparkSession.sparkContext.getCheckpointDir():
+        return df.checkpoint(eager=True)
+    return df.localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+
+
 def session_memo(
     spark: SparkSession, sf_dir: str, name: str, build: Callable[[], DataFrame]
 ) -> DataFrame:
     """`build()` once per (session, sf_dir, name); later calls return
-    the same DataFrame. `build` owns its materialization (checkpoint or
-    table write) — the memo only keys, times and logs it."""
+    the same DataFrame. `build` owns its materialization (a `pin`, or
+    the co-purchase parquet table) — the memo only keys, times and logs
+    it, and keeps the pinned DataFrame alive for the session."""
     app = spark.sparkContext.applicationId
     for key in [k for k in MEMO if k[0] != app]:
         del MEMO[key]

@@ -43,9 +43,10 @@ def typed_columns(
     for name, ct in schema_for(columns):
         raw = row_map.getItem(name)
         typed = cast_expr(raw, ct)
-        if mode == "strict":
+        if mode == "strict" and ct.name != "String":
             # Fail-fast parity with the reference's .unwrap(): a non-null
-            # string that casts to NULL is a malformed value.
+            # string that casts to NULL is a malformed value (a String
+            # cast cannot fail, so it needs no guard).
             typed = F.when(
                 raw.isNotNull() & typed.isNull(),
                 F.raise_error(

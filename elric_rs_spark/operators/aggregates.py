@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from elric_rs_spark.buildlog import session_memo
+from elric_rs_spark.buildlog import pin, session_memo
 from elric_rs_spark.registry import query
 from elric_rs_spark.tables import load_table
 
@@ -172,7 +172,7 @@ KMV_SALTS = 32
 # — so the corpus pass (md5 + salted WindowGroupLimit sort) ran up to
 # SIX times per suite. Built through buildlog.session_memo inside the
 # first consumer's timed region; the sketch is |flags| x K rows, so the
-# localCheckpoint pin is trivially small. Values are unchanged — every
+# pin is trivially small. Values are unchanged — every
 # consumer reads the same rows the standalone build produced.
 
 
@@ -196,7 +196,7 @@ def kmv_flag_sketch_for(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         sf_dir,
         "kmv_flag_sketch",
-        lambda: kmv_flag_sketch_plan(spark, sf_dir).localCheckpoint(),
+        lambda: pin(kmv_flag_sketch_plan(spark, sf_dir)),
     )
 
 

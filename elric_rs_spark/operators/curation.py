@@ -25,8 +25,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
+from elric_rs_spark.buildlog import pin
 from elric_rs_spark.operators.dedup import labels_for, q_dedup_minhash
 from elric_rs_spark.operators.sampling import HASH_EXPR
 from elric_rs_spark.registry import query
@@ -805,18 +805,17 @@ def q_curation_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, sf_dir, "documents")
     cov = substring_coverage(d).select("doc_id", "coverage_ratio")
-    surv = (
+    # surv feeds FIVE branches (candidate chain, both pair sides,
+    # the trim count, the kept rollup); without materialization the
+    # substring-coverage subtree (13x window explode + corpus
+    # window-frequency groupBy) re-executes per branch
+    surv = pin(
         d.join(cov, "doc_id", "left")
         .filter(
             F.col("coverage_ratio").isNull()
             | (F.col("coverage_ratio") < V2_TRIM_COVERAGE)
         )
         .select(d.columns)
-        # surv feeds FIVE branches (candidate chain, both pair sides,
-        # the trim count, the kept rollup); without materialization the
-        # substring-coverage subtree (13x window explode + corpus
-        # window-frequency groupBy) re-executes per branch
-        .localCheckpoint()
     )
     grams = surv.select(
         "doc_id", F.array_distinct(_wng(F.col("text"), 3)).alias("g")
@@ -1477,8 +1476,8 @@ def curation_v4_frames(
     measure each stage boundary's wall and shuffle volume.
 
     packing=False stops after 'clean' (no 'manifest' key): the packing
-    stage carries a localCheckpoint whose RDD creation executes the
-    survivor pipeline under AQE, so consumers that only need an
+    stage carries a pin, which executes the
+    survivor pipeline when it is built, so consumers that only need an
     upstream frame (q_curation_v5 reuses 'uniq') must not build it —
     measured +1.5 s per v5 run when they did (r12)."""
     from pyspark.sql import Window
@@ -1543,15 +1542,14 @@ def curation_v4_frames(
     # r12 (VERDICT r11 #9, applied to v4 and v5): `bucketed` feeds BOTH
     # the per-bucket cumsum AND the bucket-offset aggregate, so Catalyst
     # cloned the entire stage-1..3 pipeline into each branch (the v4
-    # finalized plan held two full survivor builds). The DISK_ONLY
-    # localCheckpoint makes both branches read the SAME RDD, so the
-    # survivor set is computed once per manifest run. (Note: under AQE
-    # even eager=False executes the upstream stages at RDD creation —
-    # that is why the `packing` gate above exists.) Survivor rows are
-    # narrow (ids + counts, never text).
-    bucketed = clean.withColumn(
-        "bucket", F.expr(f"doc_id div {V4_PACK_BUCKET_SPAN}")
-    ).localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
+    # finalized plan held two full survivor builds). The pin makes both
+    # branches read the SAME rows, so the survivor set is computed once
+    # per manifest run (and when the frames are built — that is why the
+    # `packing` gate above exists). Survivor rows are narrow (ids +
+    # counts, never text).
+    bucketed = pin(
+        clean.withColumn("bucket", F.expr(f"doc_id div {V4_PACK_BUCKET_SPAN}"))
+    )
     wloc = (
         Window.partitionBy("bucket")
         .orderBy("doc_id")
@@ -1954,13 +1952,13 @@ def curation_v5_frames(spark: SparkSession, sf_dir: str) -> dict:
 
     split_of = clean.withColumn("split", _split_col(F.col("rep"))).drop("rep")
     # stage 6: per-split token-budget packing (v4's parallel bucketed
-    # cumsum, partitioned by split). Lazy DISK_ONLY pin: `bucketed`
+    # cumsum, partitioned by split). Pinned: `bucketed`
     # feeds both the cumsum and the offset aggregate, and without the
     # pin Catalyst cloned the entire stage-1..5 survivor pipeline into
     # each branch (r12, VERDICT r11 #9 — see curation_v4_frames).
-    bucketed = split_of.withColumn(
-        "bucket", F.expr(f"doc_id div {V4_PACK_BUCKET_SPAN}")
-    ).localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
+    bucketed = pin(
+        split_of.withColumn("bucket", F.expr(f"doc_id div {V4_PACK_BUCKET_SPAN}"))
+    )
     wloc = (
         Window.partitionBy("split", "bucket")
         .orderBy("doc_id")

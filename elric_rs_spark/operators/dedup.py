@@ -22,9 +22,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
-from elric_rs_spark.buildlog import session_memo
+from elric_rs_spark.buildlog import pin, session_memo
 from elric_rs_spark.registry import query
 from elric_rs_spark.tables import load_table
 from elric_rs_spark.functions.hashing import (
@@ -127,15 +126,13 @@ def _kernel_grams_for(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark.sparkContext.defaultParallelism, "doc_id"
         )
         hashed = d.select("doc_id", _token_hashes(F.col("text")).alias("th"))
-        return (
+        return pin(
             hashed.select(
                 "doc_id",
                 F.array_distinct(
                     _grams_from_token_hashes(F.col("th"), 3)
                 ).alias("g"),
-            )
-            .filter(F.size("g") > 0)
-            .localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+            ).filter(F.size("g") > 0)
         )
 
     return session_memo(spark, sf_dir, "kernel_grams", build)
@@ -321,16 +318,16 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # (1) collapse identical signatures: rep = min doc_id; member->rep
     # rows are hamming-0 dup pairs, linear in cluster size.
-    # r11: eager DISK_ONLY pin — clusters feeds two branches
+    # r11: pinned — clusters feeds two branches
     # (member_pairs + the reps->banded blocking chain), and without the
     # pin each branch re-ran the scan -> Arrow vote kernel -> groupBy
     # chain (two full MapInPandas stages in the r11 plan,
     # plans/r11/q_dedup_simhash_{before,after}.txt). The pinned table
     # is at most |docs| rows (distinct signatures + member arrays).
     # Proven row-identical pre/post at sf0.01 and sf0.1.
-    clusters = sigs.groupBy("simhash").agg(
+    clusters = pin(sigs.groupBy("simhash").agg(
         F.min("doc_id").alias("rep"), F.array_sort(F.collect_set("doc_id")).alias("members")
-    ).localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+    ))
     member_pairs = clusters.select(
         F.col("rep").alias("doc_a"),
         F.explode("members").alias("doc_b"),
@@ -602,7 +599,7 @@ def q_dedup_embed_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pair; candidates outnumber vectors, so the per-vector fold + an
     # extra double on the existing join sides is strictly less work.
     # sqrt(nsq) of the same fold over the same array is bit-identical.
-    e = (
+    e = pin(
         load_table(spark, sf_dir, "embeddings")
         .select(
             "vec_id",
@@ -613,7 +610,6 @@ def q_dedup_embed_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
             "nsq", F.aggregate("v", F.lit(0.0), lambda s, x: s + x * x)
         )
         .repartition(spark.sparkContext.defaultParallelism, "vec_id")
-        .localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
     )
     # In-bucket verify (r11 sf30 decade catch — see
     # similarity.lsh_candidate_cosines): the join-back verify attached
@@ -658,11 +654,11 @@ def connected_components(edges: DataFrame) -> DataFrame:
     appears in an edge; `rep` is the component minimum. Isolated
     vertices (no edges) are absent — union them in if needed.
 
-    localCheckpoint per round: an iterative DataFrame loop otherwise
+    A pin per round: an iterative DataFrame loop otherwise
     doubles its lineage every iteration (round k's plan embeds round
     k-1's twice via the two star ops), so the convergence check would
-    recompute an exponentially deep DAG. Checkpointing pins each
-    round's edge set and keeps every round O(|edges|).
+    recompute an exponentially deep DAG. Pinning each round's edge set
+    keeps every round O(|edges|).
     """
     def _sig(df: DataFrame) -> tuple:
         """Order-independent edge-set signature: (count, xor of row
@@ -675,11 +671,11 @@ def connected_components(edges: DataFrame) -> DataFrame:
         ).collect()[0]
         return (row.n, row.h)
 
-    cur = edges.filter(F.col("u") != F.col("v")).distinct().localCheckpoint()
+    cur = pin(edges.filter(F.col("u") != F.col("v")).distinct())
     cur_sig = _sig(cur)
     stable = False
     for _ in range(12):
-        nxt = _small_star(_large_star(cur)).localCheckpoint()
+        nxt = pin(_small_star(_large_star(cur)))
         nxt_sig = _sig(nxt)
         if nxt_sig == cur_sig:
             # signatures agree -> almost certainly converged; verify
@@ -1044,7 +1040,7 @@ _PORTABLE_PAIR_CTES = _portable_pair_ctes()
 # graph, q_dedup_cross_source) and each used to rebuild
 # grams -> signatures -> bands -> verify from scratch — the same
 # re-execution the graph quartet had before VERDICT r04 #3. Same cure:
-# build ONCE per (session, sf_dir), localCheckpoint the (small,
+# build ONCE per (session, sf_dir), pin the (small,
 # pair-sized) result, memoize. The gram/signature stages (the dominant
 # cost) run exactly once per session; the checkpoint materializes only
 # verified pairs, never the corpus-sized gram arrays.
@@ -1055,7 +1051,7 @@ _PORTABLE_PAIR_CTES = _portable_pair_ctes()
 # consumer at any scale — and five queries run it over one of exactly
 # two edge sets (the memoized portable pairs; the xxhash kernel pairs).
 # Built inside the first consumer's timed region, pair-bounded rows
-# pinned via localCheckpoint.
+# pinned.
 
 
 def labels_for(
@@ -1070,7 +1066,7 @@ def labels_for(
         spark,
         sf_dir,
         f"cc_labels_{kind}",
-        lambda: connected_components(edges).localCheckpoint(),
+        lambda: pin(connected_components(edges)),
     )
 
 
@@ -1085,7 +1081,7 @@ def portable_pairs_for(spark: SparkSession, sf_dir: str) -> DataFrame:
         d = load_table(spark, sf_dir, "documents")
         grams_arr = F.array_distinct(_word_ngrams(F.col("text"), 3))
         grams = d.select("doc_id", grams_arr.alias("g")).filter(F.size("g") > 0)
-        return portable_pairs(spark, grams).localCheckpoint()
+        return pin(portable_pairs(spark, grams))
 
     return session_memo(spark, sf_dir, "portable_pairs", build)
 
@@ -1129,15 +1125,12 @@ def portable_pairs(spark: SparkSession, grams: DataFrame) -> DataFrame:
     # optimizer-defeated like the kernel's (#15c disease): the finalized
     # build plan held EIGHT documents scans with only 2 reused — the
     # gram explode+array_distinct re-ran inside the signature chain and
-    # BOTH verify array sides. One eager DISK_ONLY pin materializes the
+    # BOTH verify array sides. One pin materializes the
     # (doc_id, gram-array) table; candidates and both verify sides read
     # pinned rows (full build cold 10.1 -> ~5 s at sf0.1; values
     # bit-identical, full oracle PASS).
     par = spark.sparkContext.defaultParallelism
-    grams = (
-        grams.repartition(par, "doc_id")
-        .localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
-    )
+    grams = pin(grams.repartition(par, "doc_id"))
     cand = _portable_candidates(spark, grams)
     ga = grams.select(F.col("doc_id").alias("doc_a"), F.col("g").alias("ga"))
     gb = grams.select(F.col("doc_id").alias("doc_b"), F.col("g").alias("gb"))
@@ -1728,21 +1721,18 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
                 }
             )
 
-    side0 = (
+    # side0 is the materialized assignment table every downstream
+    # branch (csize, the pair stage, the final rollup) scans — ONE
+    # corpus pass instead of six (guide §3.3: materialize a
+    # multi-consumer intermediate to truncate the plan; recomputing
+    # it would re-cross the Python boundary per branch).
+    side0 = pin(
         e.filter(F.col("embedding").isNotNull() & (F.size("embedding") >= 1))
         .select("vec_id", "embedding")
         .mapInPandas(
             _assign_batches,
             "vec_id long, m array<long>, nsq long, cluster long",
         )
-        # side0 is the materialized assignment table every downstream
-        # branch (csize, the pair stage, the final rollup) scans — ONE
-        # corpus pass instead of six (guide §3.3: materialize a
-        # multi-consumer intermediate to truncate the plan; recomputing
-        # it would re-cross the Python boundary per branch). DISK_ONLY:
-        # corpus-proportional rows must never hold deserialized JVM heap
-        # residency (the sf30 co-purchase OOM lesson, graph.py:55).
-        .localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
     )
     # oversized-cell guard: hash-split clusters above SEMANTIC_CELL_CAP
     # into ceil(n/CAP) md5-keyed sub-cells; the pairwise stage joins on
@@ -2308,7 +2298,7 @@ def q_dedup_embed_lsh_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
         return F.aggregate(col, F.lit(0).cast("long"), fn)
 
     n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    e = (
+    e = pin(
         load_table(spark, sf_dir, "embeddings")
         .select("vec_id", "label", "embedding")
         .filter(F.size("embedding") == EMB_DIM)
@@ -2322,7 +2312,6 @@ def q_dedup_embed_lsh_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn("nsq", _fold(F.col("m"), lambda acc, x: acc + x * x))
         .repartition(n_parts, "vec_id")
-        .localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
     )
     comp = e.select("vec_id", F.posexplode("m").alias("pos", "micro")).select(
         "vec_id",
@@ -2811,7 +2800,7 @@ def q_dedup_stream_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair set by doc_b IS the "judged against earlier docs only" rule.
 
     Scale shape: rides the memoized portable_pairs_for build (one gram/
-    signature pass per session, localCheckpoint-ed pair-sized result)
+    signature pass per session, pinned pair-sized result)
     plus one pair-grain groupBy. The streaming twin in
     streaming/ingest_dedup.py runs the same math incrementally per
     micro-batch against a persisted band index; its cost per batch is

@@ -24,7 +24,7 @@ from pyspark import SparkFiles
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from elric_rs_spark.buildlog import session_memo
+from elric_rs_spark.buildlog import pin, session_memo
 from elric_rs_spark.registry import query
 from elric_rs_spark.session import dir_parquet_bytes
 from elric_rs_spark.tables import load_table
@@ -64,10 +64,11 @@ def copurchase_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
     (session, sf_dir) and reused by every graph query.
 
     Materialization is a session-scoped PARQUET table, not a
-    localCheckpoint: the pair table is linear in the data (measured
+    pin: the pair table is linear in the data (measured
     exactly x-replica growth, 1.19M pairs at sf0.1 -> 358M expanded
     pair rows at sf30, max 16 suppliers/order at every scale) but a
-    checkpoint stores it as deserialized JVM row blocks — ~8 GB of
+    checkpoint in Spark's default storage level kept it as deserialized
+    JVM row blocks — ~8 GB of
     heap at sf30's ~136M distinct pairs — which the round-11 sf30
     triplicate measured as task-level `OutOfMemoryError: Java heap
     space` (intermittent) plus GC-driven superlinear walls (x5.03 for
@@ -76,7 +77,9 @@ def copurchase_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
     read-back scans stay splittable/prunable, AQE is unaffected (no pinned plan,
     the verify-skill cache caveat), and the shape IS the production
     analogue this comment always claimed: an explicit materialized
-    edge table every graph job scans from shared storage."""
+    edge table every graph job scans from shared storage. (`pin` now
+    stores DISK_ONLY, which removes the heap reason; the scan reasons
+    stand, and re-deciding needs an sf10+ run.)"""
     return session_memo(
         spark, sf_dir, "copurchase_edges", lambda: _copurchase_build(spark, sf_dir)
     )
@@ -204,8 +207,6 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The per-iteration big side is the SAME edge-sized table every
     # round. Two physical forms of the identical integer computation,
     # selected by input size (PR_WIDE_INPUT_BYTES above):
-    from pyspark.storagelevel import StorageLevel as _SL
-
     wtot = edges.groupBy("src").agg(F.sum("w").cast("long").alias("w_total"))
     if dir_parquet_bytes(sf_dir) >= PR_WIDE_INPUT_BYTES:
         # WIDE form (sf1+): the pin write dominates at scale (56.5 s of
@@ -220,11 +221,10 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         # map-side (guide §2.3/§3.1).
         wa = wtot.select(F.col("src").alias("a"), F.col("w_total").alias("wta"))
         wb = wtot.select(F.col("src").alias("b"), F.col("w_total").alias("wtb"))
-        upin = (
+        upin = pin(
             raw.join(F.broadcast(wa), "a")
             .join(F.broadcast(wb), "b")
             .select("a", "b", "w", "wta", "wtb")
-            .localCheckpoint(eager=True, storageLevel=_SL.DISK_ONLY)
         )
         nodes = upin.select(F.explode(F.array("a", "b")).alias("node")).distinct()
         n = nodes.agg(F.count(F.lit(1)).alias("n"))
@@ -268,14 +268,11 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     # SMALL form (bench scale): fold w_total into the directed expansion
-    # and pin THAT DISK_ONLY — one barrier for the whole query (vs the
+    # and pin THAT — one barrier for the whole query (vs the
     # old four) — so every iteration's main side and every nested rank
     # broadcast build is a flat read of pinned rows instead of a
-    # re-derivation of the union + wtot join (edge-sized rows on disk
-    # blocks, never JVM heap — the co-purchase discipline).
-    cedges = edges.join(wtot, "src").localCheckpoint(
-        eager=True, storageLevel=_SL.DISK_ONLY
-    )
+    # re-derivation of the union + wtot join.
+    cedges = pin(edges.join(wtot, "src"))
     nodes = cedges.select(F.col("src").alias("node")).distinct()
     n = nodes.agg(F.count(F.lit(1)).alias("n"))
     base = n.select(F.expr(f"(15 * ({PR_SCALE} div n)) div 100").alias("b"))
@@ -451,10 +448,10 @@ def triangle_counts(spark: SparkSession, edges: DataFrame) -> DataFrame:
     # the exchange, so AQE stage reuse fired only partially and the final
     # adaptive plan recomputed the strong-tie build ~90 times (94 parquet
     # scans / 126 shuffles, plans/r11/q_graph_triangles_before.txt). A
-    # localCheckpoint of the thinned oriented list — the same lineage
+    # pin of the thinned oriented list — the same lineage
     # truncation q_graph_linkpred/kcore/labelprop already apply to their
     # edge frames — collapses that to one build (guide §3.3).
-    oriented = oriented_edges(spark, edges).localCheckpoint()
+    oriented = pin(oriented_edges(spark, edges))
     o1 = oriented.select(F.col("u"), F.col("v").alias("y"), F.col("dv").alias("dy"))
     o2 = oriented.select(F.col("u"), F.col("v").alias("z"), F.col("dv").alias("dz"))
     wedges = o1.join(o2, "u").filter(
@@ -535,12 +532,11 @@ def q_graph_labelprop(spark: SparkSession, sf_dir: str) -> DataFrame:
     the directed edge list + one (node, label) vote count + one
     per-node argmax — all equi-joins and keyed aggregates, the same
     join-aggregate-per-round shape as PageRank, with the same
-    localCheckpoint lineage truncation."""
+    pinned lineage truncation."""
     edges = _strong_tie_edges(spark, sf_dir, LPA_W_FRAC)
-    direct = (
+    direct = pin(
         edges.select(F.col("a").alias("node"), F.col("b").alias("nb"))
         .unionAll(edges.select(F.col("b").alias("node"), F.col("a").alias("nb")))
-        .localCheckpoint()
     )
     labels = direct.select("node").distinct().select(
         "node", F.col("node").alias("lab")
@@ -553,13 +549,12 @@ def q_graph_labelprop(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("node", "lab")
             .agg(F.count(F.lit(1)).alias("c"))
         )
-        labels = (
+        labels = pin(
             votes.groupBy("node")
             .agg(
                 F.max(F.struct(F.col("c"), (-F.col("lab")).alias("neg"))).alias("top")
             )
             .select("node", (-F.col("top.neg")).cast("long").alias("lab"))
-            .localCheckpoint()
         )
     return labels.groupBy(F.col("lab").alias("community")).agg(
         F.count(F.lit(1)).alias("n_members"),
@@ -617,8 +612,8 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     core — the graph-side analogue of the dedup family's "keep the
     well-connected cluster representatives" selection.
 
-    Scale shape: reuses the session-shared localCheckpoint-ed
-    co-purchase edge build; each round is one map-side-combinable
+    Scale shape: reuses the session-shared
+    co-purchase edge table; each round is one map-side-combinable
     degree aggregate plus two node-key equi-joins whose right side
     (the survivor set) only shrinks — AQE picks broadcast when it
     fits, and the loop is O(iters) shuffles of a monotonically
@@ -634,11 +629,10 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("d"))
         )
         alive = deg.filter(F.col("d") >= KCORE_K).select("node")
-        edges = (
+        edges = pin(
             edges.join(alive.withColumnRenamed("node", "a"), "a", "left_semi")
             .join(alive.withColumnRenamed("node", "b"), "b", "left_semi")
             .select("a", "b")
-            .localCheckpoint()
         )
     return (
         edges.select(F.col("a").alias("node"))
@@ -697,18 +691,17 @@ def q_graph_linkpred(spark: SparkSession, sf_dir: str) -> DataFrame:
     counting, aimed at the pairs that close no edge — the "suppliers
     that should co-occur" recommendation table.
 
-    Scale shape: reuses the session-shared localCheckpoint-ed edge
-    build; the wedge join is bounded by sum-of-degrees-squared on the
+    Scale shape: reuses the session-shared co-purchase edge
+    table; the wedge join is bounded by sum-of-degrees-squared on the
     THINNED strong-tie graph (the same budget triangle counting pays;
     degree-cap the hub tail at web scale exactly as the dedup family
     caps hot buckets); candidate scoring is a groupBy aggregate plus
     two degree joins and one anti-join against the edge list; the
     top-k is a TakeOrdered, not a global sort."""
     edges = _strong_tie_edges(spark, sf_dir, KCORE_W_FRAC)
-    dirs = (
+    dirs = pin(
         edges.select(F.col("a").alias("node"), F.col("b").alias("nb"))
         .unionAll(edges.select(F.col("b").alias("node"), F.col("a").alias("nb")))
-        .localCheckpoint()
     )
     deg = dirs.groupBy("node").agg(F.count(F.lit(1)).alias("d"))
     d1 = dirs.select(F.col("node").alias("v"), F.col("nb").alias("u"))

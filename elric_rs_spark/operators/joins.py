@@ -12,8 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
-from pyspark.storagelevel import StorageLevel
 
+from elric_rs_spark.buildlog import pin
 from elric_rs_spark.registry import query
 from elric_rs_spark.tables import load_table
 
@@ -893,14 +893,13 @@ def q_join_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     #   against dim — the shape the round-7 experiment proved (never
     #   shuffle unmatched fact rows).
     # All six counts are value-identical to the branch form.
-    f = (
+    f = pin(
         fp.join(broadcast(bits0.withColumn("b0", F.lit(1))), "pos0", "left")
         .join(broadcast(bits1.withColumn("b1", F.lit(1))), "pos1", "left")
         .select(
             "k",
             (F.col("b0").isNotNull() & F.col("b1").isNotNull()).alias("pass_"),
         )
-        .localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
     )
     fact_stats = f.agg(
         F.count(F.lit(1)).alias("n_fact_rows"),

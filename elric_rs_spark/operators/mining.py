@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from elric_rs_spark.buildlog import pin
 from elric_rs_spark.registry import query
 from elric_rs_spark.tables import load_table
 
@@ -162,7 +163,6 @@ def q_assoc_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     # old collect_set, the dictionary joins map bits back to the same
     # brand strings.
     from pyspark.sql import Window as _W
-    from pyspark.storagelevel import StorageLevel
 
     bdict = (
         part.select("p_brand").distinct()
@@ -202,22 +202,17 @@ def q_assoc_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # the distinct-mask histogram is the ONLY materialized intermediate:
     # <= min(|orders|, 2^|brands|) rows, consumed by tot + supp + pairs
-    mcount = (
-        baskets.groupBy("mask")
-        .agg(F.count(F.lit(1)).alias("n_baskets"))
-        .localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
-    )
+    mcount = pin(baskets.groupBy("mask").agg(F.count(F.lit(1)).alias("n_baskets")))
     tot = mcount.agg(F.sum("n_baskets").alias("n_orders"))
     # supp is <= |brands| rows but consumed twice (antecedent and
     # consequent broadcasts) — pin the tiny aggregate so the mask probe
     # runs once, not twice.
-    supp = (
+    supp = pin(
         mcount.join(
             F.broadcast(bdict), F.expr("((mask >> bidx) & 1) = 1")
         )
         .groupBy(F.col("p_brand").alias("brand"))
         .agg(F.sum("n_baskets").alias("n_brand"))
-        .localCheckpoint(eager=True)
     )
     ba = bdict.select(F.col("p_brand").alias("antecedent"), F.col("bidx").alias("ia"))
     bc = bdict.select(F.col("p_brand").alias("consequent"), F.col("bidx").alias("ic"))

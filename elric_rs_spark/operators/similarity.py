@@ -19,9 +19,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
-from elric_rs_spark.buildlog import session_memo
+from elric_rs_spark.buildlog import pin, session_memo
 from elric_rs_spark.registry import query
 from elric_rs_spark.tables import load_table
 from elric_rs_spark.functions.vector import (
@@ -370,18 +369,16 @@ def q_sim_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # verify join sides, member_pairs). ReusedExchange shares only the
     # groupBy's SHUFFLE FILES — the collect_set aggregate itself re-ran
     # per branch (~0.6 s x 3 extra at sf0.1, measured r11; at scale,
-    # three extra corpus-sized aggregates). One DISK_ONLY checkpoint
-    # truncates the plan so every branch reads the materialized rows
-    # (the q_dedup_semantic side0 pattern — corpus-proportional rows
-    # never hold deserialized JVM heap).
-    clusters = (
+    # three extra corpus-sized aggregates). One pin truncates the plan
+    # so every branch reads the materialized rows (the q_dedup_semantic
+    # side0 pattern).
+    clusters = pin(
         e.groupBy(F.xxhash64("v").alias("vh"))
         .agg(
             F.min("vec_id").alias("rep"),
             F.array_sort(F.collect_set("vec_id")).alias("members"),
             F.first("v").alias("v"),
         )
-        .localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
     )
     member_pairs = clusters.select(
         F.col("rep").alias("vec_a"),
@@ -1278,7 +1275,7 @@ def _pivf_anchors(spark: SparkSession) -> DataFrame:
 # used to recompute it from the raw embeddings — the same re-execution the
 # graph quartet (VERDICT r04 #3) and the portable MinHash pair build
 # (VERDICT r05 #4) had. Same cure: build once per (session, sf_dir),
-# localCheckpoint the (n_vecs x cells)-row result, memoize. The
+# pin the (n_vecs x cells)-row result, memoize. The
 # production analogue is a stored assignment table written next to the
 # IVF index.
 
@@ -1289,7 +1286,7 @@ def pivf_celldots_for(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build() -> DataFrame:
         e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-        return _pivf_celldots(spark, _micro_comp(e)).localCheckpoint()
+        return pin(_pivf_celldots(spark, _micro_comp(e)))
 
     return session_memo(spark, sf_dir, "pivf_celldots", build)
 
@@ -1523,7 +1520,7 @@ def _recall_ground_truth(comp: DataFrame):
     # q_sim_ivf_curve vs 17-20 after this plus the band/rank checkpoints) — the same lineage-truncation
     # discipline as q_pagerank; an evaluation harness would persist its
     # ground truth as a table anyway
-    scored = scored.localCheckpoint()
+    scored = pin(scored)
     wnd = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), "vec_id")
     exact = (
         scored.withColumn("rn", F.row_number().over(wnd))
@@ -1629,7 +1626,7 @@ def q_sim_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combinable aggregates + broadcast of the Q-sized side."""
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     comp = _micro_comp(e)
-    banded = _plsh_bands(spark, comp, RECALL_TABLES, RECALL_BITS).localCheckpoint()
+    banded = pin(_plsh_bands(spark, comp, RECALL_TABLES, RECALL_BITS))
     scored, exact = _recall_ground_truth(comp)
     wnd = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), "vec_id")
     qbands = banded.filter(F.col("vec_id") < RECALL_QUERIES).select(
@@ -1775,7 +1772,7 @@ def q_sim_ivf_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     comp = _micro_comp(e)
     celldots = pivf_celldots_for(spark, sf_dir)
     cw = Window.partitionBy("vec_id").orderBy(F.col("dot").desc(), "c")
-    ranked = celldots.withColumn("rn", F.row_number().over(cw)).localCheckpoint()
+    ranked = pin(celldots.withColumn("rn", F.row_number().over(cw)))
     vcell = ranked.filter(F.col("rn") == 1).select("vec_id", F.col("c").alias("cell"))
     qrank = ranked.filter(F.col("vec_id") < RECALL_QUERIES).select(
         F.col("vec_id").alias("q_id"),
@@ -2236,11 +2233,10 @@ def q_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the two tiny tables truncates every branch: exactly TWO corpus
     # passes remain (rel's dot aggregate, cc's candidate gather), and
     # the greedy rerank runs over pinned local rows.
-    cand = (
+    cand = pin(
         rel.withColumn("rn", F.row_number().over(w_rel))
         .filter(F.col("rn") <= MMR_CAND)
         .drop("rn")
-        .localCheckpoint(eager=True)
     )
     # pairwise dots over the union candidate set: <= (queries*M)^2 rows.
     # cc (candidate components, <= queries*M x dim rows) feeds BOTH pd
@@ -2253,7 +2249,7 @@ def q_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
     # still paid (no pruning index), but the explode+shuffle work is
     # now candidate-sized, not corpus-sized.
     ids = cand.select("vec_id").distinct()
-    cc = (
+    cc = pin(
         e.join(F.broadcast(ids), "vec_id")
         .select(
             "vec_id",
@@ -2263,9 +2259,8 @@ def q_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id", "dim",
             F.round(F.col("val") * 1000000).cast("long").alias("micro"),
         )
-        .localCheckpoint(eager=True)
     )
-    pd = (
+    pd = pin(
         cc.select(F.col("vec_id").alias("a"), "dim", F.col("micro").alias("ma"))
         .join(
             F.broadcast(
@@ -2279,7 +2274,6 @@ def q_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("a") != F.col("b"))
         .groupBy("a", "b")
         .agg(F.sum(F.col("ma") * F.col("mb")).alias("d"))
-        .localCheckpoint(eager=True)
     )
     s1 = (
         cand.withColumn("rn", F.row_number().over(w_rel))

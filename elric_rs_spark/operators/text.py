@@ -11,9 +11,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
-from elric_rs_spark.buildlog import session_memo
+from elric_rs_spark.buildlog import pin, session_memo
 from elric_rs_spark.functions.hashing import word_ngrams as _word_ngrams
 from elric_rs_spark.registry import query
 from elric_rs_spark.tables import load_table
@@ -1244,9 +1243,7 @@ def winnow_sel_for(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         sf_dir,
         "winnow_sel",
-        lambda: winnow_sel_plan(spark, sf_dir).localCheckpoint(
-            eager=True, storageLevel=StorageLevel.DISK_ONLY
-        ),
+        lambda: pin(winnow_sel_plan(spark, sf_dir)),
     )
 
 
@@ -1729,7 +1726,7 @@ def q_bpe_learn(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate, a one-row TakeOrdered top pair broadcast back, and a
     row-local replace() rewrite. Rounds chain lazily; nothing is
     collected to the driver. At 256+ merge rounds one would
-    localCheckpoint the dictionary every ~32 rounds to bound plan depth
+    pin the dictionary every ~32 rounds to bound plan depth
     — with {BPE_ITERS} rounds the raw chain is cheaper.
     """
     d = load_table(spark, sf_dir, "documents")
@@ -1941,7 +1938,7 @@ def q_keyword_textrank(spark: SparkSession, sf_dir: str) -> DataFrame:
     (bigram explode + count shuffle); everything after — symmetric
     edge expansion, three join+aggregate rounds — runs on the
     vocabulary-sized edge table (Heaps-law-sublinear in corpus size),
-    with each round's rank vector localCheckpoint-ed to truncate the
+    with each round's rank vector pinned to truncate the
     unrolled lineage (same discipline as graph.py, which measured 25
     redundant scans without it). Per-round totals (`n`, damping base)
     are one-row broadcasts.
@@ -1955,12 +1952,11 @@ def q_keyword_textrank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    edges = (
+    edges = pin(
         bcnt.select(F.col("w1").alias("src"), F.col("w2").alias("dst"), "c")
         .unionAll(bcnt.select(F.col("w2").alias("src"), F.col("w1").alias("dst"), "c"))
         .groupBy("src", "dst")
         .agg(F.sum("c").cast("long").alias("w"))
-        .localCheckpoint()
     )
     nodes = edges.select(F.col("src").alias("node")).distinct()
     n = nodes.agg(F.count(F.lit(1)).alias("n"))
@@ -1975,14 +1971,13 @@ def q_keyword_textrank(spark: SparkSession, sf_dir: str) -> DataFrame:
             .join(wtot, "src")
             .select("dst", F.expr("(rank * w) div w_total").alias("c"))
         )
-        ranks = (
+        ranks = pin(
             contrib.groupBy(F.col("dst").alias("node"))
             .agg(F.sum("c").alias("sc"))
             .crossJoin(F.broadcast(base))
             .select(
                 "node", F.expr("b + (85 * coalesce(sc, 0)) div 100").alias("rank")
             )
-            .localCheckpoint()
         )
     return (
         ranks.select("node", "rank")

@@ -68,6 +68,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from elric_rs_spark.buildlog import pin
 from elric_rs_spark.functions.hashing import word_ngrams
 from elric_rs_spark.operators.dedup import (
     PMH_BUCKET_CAP,
@@ -251,13 +252,11 @@ class IngestDedupIndex:
             "doc_id", F.array_distinct(word_ngrams(F.col("text"), 3)).alias("g")
         ).filter(F.size("g") > 0)
         pb = F.pmod(F.xxhash64("band", "sig"), F.lit(N_INDEX_BUCKETS))
-        # localCheckpoint: bands_b feeds four consumers (pbucket collect,
-        # touched probe, member union, single admission) — materialize
-        # the batch-sized signature set once instead of re-hashing 4x
-        bands_b = (
-            portable_band_signatures(spark, grams_b)
-            .withColumn("pbucket", pb)
-            .localCheckpoint()
+        # bands_b feeds four consumers (pbucket collect, touched probe,
+        # member union, single admission) — materialize the batch-sized
+        # signature set once instead of re-hashing 4x
+        bands_b = pin(
+            portable_band_signatures(spark, grams_b).withColumn("pbucket", pb)
         )
         # the probe's partition-pruning key set: bounded by
         # N_INDEX_BUCKETS values, one batch-sized driver collect (the

@@ -3,7 +3,8 @@
 The driver's synthetic star schema (TESTDATA.md): TPC-H-ish tables plus an
 `events` stream stand-in, `documents` and `embeddings` for the LLM-pipeline
 operators. Loaded as plain parquet scans so Catalyst gets predicate
-pushdown + column pruning for free.
+pushdown + column pruning for free. The schema comes from one pyarrow
+footer read, so loading a table runs no Spark schema-inference job.
 """
 
 from __future__ import annotations
@@ -58,24 +59,26 @@ def _microsecond_copy(path: str) -> str:
     return out
 
 
-def _has_nanos(path: str) -> bool:
-    import pyarrow.parquet as pq
-
-    schema = pq.read_schema(path)
-    import pyarrow as pa
-
-    return any(
-        pa.types.is_timestamp(f.type) and f.type.unit == "ns" for f in schema
-    )
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Scan one fixture table with the schema Spark would infer, built
+    from the file's footer (naive timestamps map to timestamp_ntz when
+    the session's `inferTimestampNTZ` says so, as Spark's inference
+    does)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     path = f"{sf_dir}/{name}.parquet"
-    if _has_nanos(path):
+    schema = pq.read_schema(path)
+    if any(pa.types.is_timestamp(f.type) and f.type.unit == "ns" for f in schema):
         path = _microsecond_copy(path)
-    return spark.read.parquet(path)
+        schema = pq.read_schema(os.path.join(path, "part-0.parquet"))
+    ntz = spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled") == "true"
+    return spark.read.schema(
+        from_arrow_schema(schema, prefer_timestamp_ntz=ntz)
+    ).parquet(path)
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

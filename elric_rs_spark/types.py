@@ -9,8 +9,11 @@ factory per type.
 Fidelity notes (SURVEY.md §1.3):
 - Unsigned ints widen to the next signed Spark type (no unsigned in Spark);
   UInt64 -> Decimal(20,0) to be overflow-safe, UInt128/Int128 -> Decimal(38,0).
+  Each UIntN is bounded to [0, 2^N-1], as the reference's `parse::<uN>()`
+  is; UInt128 (and Int128) further to the 38 digits Decimal(38,0) holds.
 - UInt256/Int256 exceed Decimal(38): kept as canonical decimal strings at
-  the boundary (validated, zero-padding stripped). The reference parses
+  the boundary (validated, zero-padding stripped, bounded to the type's
+  range by digit count, then lexicographically). The reference parses
   Int256 through an unsigned U256 parser — a bug we do NOT replicate; we
   accept a leading '-'.
 - FixedString(N): reference zero-pads bytes to N (ref table_info.rs:140-146);
@@ -26,6 +29,7 @@ from __future__ import annotations
 
 import re
 from dataclasses import dataclass
+from decimal import Decimal
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -100,7 +104,25 @@ def parse_column_type(type_str: str) -> ColumnType:
     raise ValueError(f"unsupported ClickHouse type: {type_str!r}")
 
 
-_U256_MAX = (1 << 256) - 1
+# 2^N-1 per unsigned type. UInt128's is past what Decimal(38,0) holds,
+# so its cast already rejects everything above the 38-digit maximum.
+_UINT_MAX = {
+    "UInt8": (1 << 8) - 1,
+    "UInt16": (1 << 16) - 1,
+    "UInt32": (1 << 32) - 1,
+    "UInt64": Decimal((1 << 64) - 1),
+    "UInt128": None,
+}
+
+
+def _digits_at_most(digits: Column, bound: int) -> Column:
+    """`digits` (canonical, no sign) <= `bound`: fewer digits, or as many
+    and not greater as a string — equal-length digit strings order as
+    their numbers."""
+    b = str(bound)
+    return (F.length(digits) < len(b)) | (
+        (F.length(digits) == len(b)) & (digits <= F.lit(b))
+    )
 
 
 def cast_expr(col: Column, ct: ColumnType) -> Column:
@@ -115,12 +137,22 @@ def cast_expr(col: Column, ct: ColumnType) -> Column:
         # zero-pad bytes to N (ref table_info.rs:140-146); string->binary
         # never fails, so a plain cast is safe
         return F.rpad(col.cast("binary"), ct.fixed_len, bytes([0])).cast("binary")
-    if ct.name in ("UInt256", "Int256"):
+    if ct.name == "UInt256":
         # Exceeds any Spark numeric: keep canonical decimal string.
-        # Strip leading zeros; reject non-digits via nullif-style guard.
+        # Strip leading zeros; reject non-digits and values above 2^256-1.
         canon = F.regexp_replace(col, r"^0+(?=\d)", "")
-        valid = col.rlike(r"^-?\d+$") if ct.name == "Int256" else col.rlike(r"^\d+$")
-        return F.when(valid, canon)
+        return F.when(
+            col.rlike(r"^\d+$") & _digits_at_most(canon, (1 << 256) - 1), canon
+        )
+    if ct.name == "Int256":
+        # Same, signed: the magnitude is at most 2^255 when negative and
+        # 2^255-1 otherwise.
+        canon = F.regexp_replace(col, r"^(-?)0+(?=\d)", "$1")
+        mag = F.regexp_replace(canon, "^-", "")
+        in_range = F.when(
+            canon.startswith("-"), _digits_at_most(mag, 1 << 255)
+        ).otherwise(_digits_at_most(mag, (1 << 255) - 1))
+        return F.when(col.rlike(r"^-?\d+$") & in_range, canon)
     if ct.name == "DateTime":
         # RFC3339 (ref table_info.rs:151-156) and plain 'yyyy-MM-dd HH:mm:ss'
         # both parse via Spark's timestamp cast (ISO-8601 aware). try_cast:
@@ -128,7 +160,13 @@ def cast_expr(col: Column, ct: ColumnType) -> Column:
         # would break permissive mode; strict mode raises its own clearer
         # error from the NULL (see cast.typed_cast).
         return col.try_cast(T.TimestampType())
-    return col.try_cast(ct.spark_type)
+    typed = col.try_cast(ct.spark_type)
+    if ct.name in _UINT_MAX:
+        # the wider signed type also holds negatives and values past
+        # 2^N-1, which the reference's unsigned parse rejects
+        hi = _UINT_MAX[ct.name]
+        return F.when(typed >= 0 if hi is None else typed.between(0, hi), typed)
+    return typed
 
 
 def schema_for(columns: dict[str, str]) -> list[tuple[str, ColumnType]]:

@@ -124,6 +124,44 @@ class TestTypedCast:
         out = typed_cast(df, "m", {"v": "Int256"})
         assert out.collect()[0].v == "-42"
 
+    @pytest.mark.parametrize(
+        "ts, hi, over",
+        [
+            ("UInt8", 255, 256),
+            ("UInt16", 65535, 65536),
+            ("UInt32", (1 << 32) - 1, 1 << 32),
+            ("UInt64", (1 << 64) - 1, 1 << 64),
+            # Decimal(38,0) holds 38 digits, short of 2^128-1
+            ("UInt128", 10**38 - 1, 1 << 128),
+            ("UInt256", (1 << 256) - 1, 1 << 256),
+        ],
+    )
+    def test_unsigned_range(self, spark, ts, hi, over):
+        """The reference's `parse::<uN>()` rejects negatives and values
+        past 2^N-1: strict mode raises on them and permissive mode NULLs
+        them, while 0 and the maximum cast to themselves."""
+        def cast(values, mode):
+            df = spark.createDataFrame([({"v": v},) for v in values],
+                                       "m map<string,string>")
+            return typed_cast(df, "m", {"v": ts}, mode=mode)
+
+        got = [r.v for r in cast(["0", str(hi)], "strict").collect()]
+        assert [str(v) for v in got] == ["0", str(hi)]
+        for bad in (str(over), "-1", "1" + "0" * 78):
+            with pytest.raises(Exception, match="malformed value for column v"):
+                cast([bad], "strict").collect()
+        got = cast([str(over), "-1", "1" + "0" * 78], "permissive").collect()
+        assert [r.v for r in got] == [None, None, None]
+
+    def test_int256_range(self, spark):
+        lo, hi = -(1 << 255), (1 << 255) - 1
+        df = spark.createDataFrame(
+            [({"v": v},) for v in (str(lo), str(hi), str(hi + 1), str(lo - 1), "-007")],
+            "m map<string,string>",
+        )
+        got = typed_cast(df, "m", {"v": "Int256"}, mode="permissive").collect()
+        assert [r.v for r in got] == [str(lo), str(hi), None, None, "-7"]
+
     def test_strict_mode_raises_on_malformed(self, spark):
         df = self._erc20_df(spark, value="not-a-number")
         out = typed_cast(df, "m", ERC20_SCHEMA, mode="strict")

@@ -502,6 +502,130 @@ def test_session_memo_dies_with_its_session():
     assert proc.returncode == 0, proc.stderr[-3000:]
 
 
+class TestPin:
+    """`buildlog.pin` is the one way to pin a stage: an eager DISK_ONLY
+    local checkpoint, or a reliable checkpoint when the app has a
+    checkpoint dir."""
+
+    CC_EDGES = [(1, 2), (2, 3), (4, 5), (6, 6), (7, 8), (8, 9), (9, 7), (10, 11)]
+
+    def test_no_other_checkpoint_call(self):
+        """No `.localCheckpoint(`/`.checkpoint(` call and no StorageLevel
+        import outside `buildlog.pin` (comments and docstrings are not
+        code, so the AST never sees them)."""
+        import ast
+        import pathlib
+
+        pkg = pathlib.Path(__file__).resolve().parent.parent / "elric_rs_spark"
+        calls, imports = [], []
+        for path in sorted(pkg.rglob("*.py")):
+            tree = ast.parse(path.read_text())
+            owner = {}
+            for fn in ast.walk(tree):
+                if isinstance(fn, ast.FunctionDef):
+                    for node in ast.walk(fn):
+                        owner.setdefault(id(node), fn.name)
+            rel = str(path.relative_to(pkg))
+            for node in ast.walk(tree):
+                if (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr in ("localCheckpoint", "checkpoint")
+                ):
+                    calls.append((rel, owner.get(id(node)), node.func.attr))
+                if isinstance(node, (ast.Import, ast.ImportFrom)) and (
+                    "storagelevel" in ast.unparse(node).lower()
+                ):
+                    imports.append(rel)
+        assert sorted(calls) == [
+            ("buildlog.py", "pin", "checkpoint"),
+            ("buildlog.py", "pin", "localCheckpoint"),
+        ]
+        assert [
+            r for r in imports if r.startswith(("operators", "streaming"))
+        ] == []
+
+    def test_local_pin_is_one_job_on_disk(self, spark):
+        from elric_rs_spark.buildlog import pin
+        from tests.test_streaming import _max_job_id
+
+        assert spark.sparkContext.getCheckpointDir() is None
+        jsc = spark.sparkContext._jsc
+        before = set(jsc.getPersistentRDDs().keySet())
+        # no shuffle: AQE would run a stage's map side as a job of its own
+        df = spark.range(0, 1000, 1, 4).selectExpr("id % 7 AS k", "id")
+        jobs = _max_job_id(spark)
+        pinned = pin(df)
+        assert _max_job_id(spark) - jobs == 1
+        rdds = jsc.getPersistentRDDs()
+        levels = [rdds.get(i).getStorageLevel() for i in set(rdds.keySet()) - before]
+        assert [(lv.useDisk(), lv.useMemory(), lv.deserialized()) for lv in levels] == [
+            (True, False, False)
+        ]
+        assert sorted(pinned.collect()) == sorted(df.collect())
+        assert "ExistingRDD" in physical_plan(pinned)
+
+    def test_reliable_pins_give_the_same_rows(self, spark, tmp_path):
+        """With `spark.checkpoint.dir` set, the pins are reliable
+        checkpoints (files under the dir) and the answers are those of
+        local mode."""
+        import json
+        import os
+        import subprocess
+        import sys
+
+        from elric_rs_spark.operators.dedup import connected_components
+
+        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        ckdir = tmp_path / "checkpoints"
+        env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g")
+        env["PYTHONPATH"] = os.pathsep.join(
+            p for p in (root, env.get("PYTHONPATH", "")) if p
+        )
+        env["PYSPARK_SUBMIT_ARGS"] = f"--conf spark.checkpoint.dir={ckdir} pyspark-shell"
+        proc = subprocess.run(
+            [sys.executable, "-c", _RELIABLE_PIN_SCRIPT, SF_DIR, json.dumps(self.CC_EDGES)],
+            cwd=root,
+            env=env,
+            capture_output=True,
+            text=True,
+            timeout=600,
+        )
+        assert proc.returncode == 0, proc.stderr[-3000:]
+        got = json.loads(proc.stdout.splitlines()[-1])
+        assert got["files"] > 0
+        edges = spark.createDataFrame(self.CC_EDGES, "u long, v long")
+        assert got["cc"] == _rows(connected_components(edges))
+        assert got["split"] == _rows(QUERIES["q_split_leakage_safe"](spark, SF_DIR))
+
+
+def _rows(df) -> list:
+    import json
+
+    return json.loads(json.dumps(sorted(map(list, df.collect())), default=str))
+
+
+_RELIABLE_PIN_SCRIPT = """
+import json, os, sys
+from elric_rs_spark.operators.dedup import connected_components
+from elric_rs_spark.session import get_spark
+from tests.test_plans import QUERIES, _rows
+
+sf, edges = sys.argv[1], json.loads(sys.argv[2])
+spark = get_spark("pin_reliable", cpus="2")
+ckdir = spark.sparkContext.getCheckpointDir()
+assert ckdir, "spark.checkpoint.dir did not set the checkpoint dir"
+out = {
+    "cc": _rows(connected_components(spark.createDataFrame(edges, "u long, v long"))),
+    "split": _rows(QUERIES["q_split_leakage_safe"](spark, sf)),
+}
+root = ckdir.removeprefix("file:")
+out["files"] = sum(len(names) for _, _, names in os.walk(root))
+spark.stop()
+print(json.dumps(out))
+"""
+
+
 class TestKmvTwoLevelPlan:
     """The KMV sketch family's bottom-K BUILD must be the salted
     two-level shape (VERDICT r06 #2): the corpus-sized exchange

@@ -10,10 +10,12 @@ CSV timestamp formatting, JSON field reordering, null round-trips.
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
-from elric_rs_spark.tables import load_table
+from elric_rs_spark.tables import TABLES, load_table
 
 SF = "/root/testdata/sf0.001"
 
@@ -252,3 +254,59 @@ class TestSchemaEvolution:
         rows = {r.id: (r.v, r.score) for r in df.collect()}
         assert rows == {1: ("a", None), 2: ("b", None),
                         3: ("c", 30), 4: ("d", 40)}
+
+
+class TestLoadTable:
+    """`load_table` builds the schema from one pyarrow footer read: the
+    schema Spark's own inference gives, without the inference job."""
+
+    @pytest.mark.parametrize("sf_dir", [
+        "/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1",
+        os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                     "perfbench", "fixture"),
+    ])
+    def test_schema_equals_spark_inference(self, spark, sf_dir):
+        for name in TABLES:
+            df = load_table(spark, sf_dir, name)
+            # the file it scans: the ns -> us copy for events
+            (path,) = df.inputFiles()
+            assert df.schema == spark.read.parquet(path).schema, name
+
+    def test_pyarrow_and_spark_written_files(self, spark, tmp_path):
+        import datetime
+        from decimal import Decimal
+
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        d = tmp_path / "sf"
+        d.mkdir()
+        pq.write_table(pa.table(
+            {"o_orderkey": [1, 2], "o_comment": ["a", None]},
+            schema=pa.schema([pa.field("o_orderkey", pa.int64(), nullable=False),
+                              pa.field("o_comment", pa.string())]),
+        ), d / "orders.parquet")
+        ts = datetime.datetime(2024, 8, 7, 1, 2, 3)
+        spark.createDataFrame(
+            [(1, "x", ts, ts, Decimal("1.50")), (2, None, None, None, None)],
+            "c_custkey long, c_name string, c_ts timestamp, c_ntz timestamp_ntz, "
+            "c_bal decimal(12,2)",
+        ).coalesce(1).write.parquet(str(tmp_path / "spark_out"))
+        (part,) = (tmp_path / "spark_out").glob("part-*.parquet")
+        part.rename(d / "customer.parquet")
+        for name in ("orders", "customer"):
+            got = load_table(spark, str(d), name)
+            # Spark writes INT96 timestamps, which pyarrow reads as ns: the
+            # customer scan is the ns -> us copy, as for events
+            (path,) = got.inputFiles()
+            want = spark.read.parquet(path)
+            assert got.schema == want.schema, name
+            assert sorted(got.collect(), key=repr) == sorted(want.collect(), key=repr)
+
+    def test_runs_no_job(self, spark):
+        from tests.test_streaming import _max_job_id
+
+        before = _max_job_id(spark)
+        for name in TABLES:
+            load_table(spark, SF, name)
+        assert _max_job_id(spark) == before

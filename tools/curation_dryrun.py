@@ -90,7 +90,7 @@ def main() -> None:
     shared_frames = None
     if v5:
         # v5's frames construction EAGERLY runs the memoized pair build
-        # + connected components (localCheckpoint per star round) —
+        # + connected components (a pin per star round) —
         # real work that must be on the books. Time it as its own row;
         # the stage writes then share the checkpointed labels, which is
         # exactly the production execution shape (one plan).
