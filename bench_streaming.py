@@ -76,6 +76,23 @@ FLOOR_BY_MODE = {"json": FLOOR_BLOCKS_PER_SEC, "protobuf": 308.0}
 # FAILs inside it.
 DEDUP_FLOOR_DOCS_PER_SEC = 60.0
 DEDUP_N_BATCHES = 10
+# the bytes IngestDedupIndex.epoch_stats records each delivery published
+DEDUP_BYTE_FIELDS = ("verdicts_bytes", "index_bytes", "grams_bytes")
+
+
+def with_running_totals(epochs: list[dict], totals: dict | None = None) -> list[dict]:
+    """Each epoch_stats row plus `<field>_total`, the bytes published up
+    to and including that delivery, counted on from `totals` (which is
+    updated, so a second wave can continue the first wave's totals)."""
+    totals = {} if totals is None else totals
+    rows = []
+    for e in epochs:
+        row = dict(e)
+        for k in DEDUP_BYTE_FIELDS:
+            totals[k] = totals.get(k, 0) + e[k]
+            row[f"{k}_total"] = totals[k]
+        rows.append(row)
+    return rows
 
 
 def run_dedup_mode(load_start: float) -> None:
@@ -86,8 +103,9 @@ def run_dedup_mode(load_start: float) -> None:
     sets the delivery granularity: 10 (default) measures the per-epoch
     fixed-cost regime; 1 over a >=50k-doc corpus measures the MARGINAL
     per-doc cost (VERDICT r08 #2). The JSON carries the per-epoch
-    index-growth curve (probe wall vs persisted state size) — the
-    number that predicts 100 TB probe cost. A trailing `--compact` arg
+    index-growth curve (probe wall vs the bytes each delivery published
+    to each store, with their running totals) — the number that
+    predicts 100 TB probe cost. A trailing `--compact` arg
     runs `IngestDedupIndex.compact_state` after the stream and records
     the fold wall + per-store (files_before, files_after) — the
     delivery-count file-growth lever (one file per touched bucket per
@@ -153,7 +171,7 @@ def run_dedup_mode(load_start: float) -> None:
                     "n_verdicts": n_verdicts,
                     "wall_sec": round(wall, 2),
                     "compact": compact_stats,
-                    "epochs": index.epoch_stats,
+                    "epochs": with_running_totals(index.epoch_stats),
                     "load_1m_start": load_start,
                     "load_1m_end": round(os.getloadavg()[0], 2),
                     "floor_gate": (

@@ -17,26 +17,10 @@ file-level repacking is what Spark controls and what fixes the planner.
 from __future__ import annotations
 
 import math
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-
-def dir_parquet_bytes(path: str) -> int:
-    """Total bytes of *.parquet files under `path`, recursively — a
-    Hive-partitioned table (partitionBy output) keeps its files in
-    key=value subdirectories, so a flat listdir would report 0 bytes
-    and silently collapse the whole table to one file."""
-    total = 0
-    n_files = 0
-    for root, _dirs, names in os.walk(path):
-        for name in names:
-            if name.endswith(".parquet"):
-                total += os.path.getsize(os.path.join(root, name))
-                n_files += 1
-    if n_files == 0:
-        raise FileNotFoundError(f"no *.parquet files under {path!r}")
-    return total
+from elric_rs_spark.storage import parquet_files
 
 
 def compact(
@@ -50,9 +34,14 @@ def compact(
     `out_dir`. With `sort_col`, files are range-partitioned and sorted on
     it (disjoint min/max ranges -> per-file skipping on that column);
     without, a plain round-robin repartition balances file sizes.
-    Returns the file count written."""
+    Returns the file count written. A source without *.parquet files
+    (walked recursively: a Hive-partitioned table keeps them in
+    key=value subdirs) raises FileNotFoundError."""
+    src = parquet_files(src_dir)
+    if not src:
+        raise FileNotFoundError(f"no *.parquet files under {src_dir!r}")
     df: DataFrame = spark.read.parquet(src_dir)
-    n_files = max(1, math.ceil(dir_parquet_bytes(src_dir) / target_bytes))
+    n_files = max(1, math.ceil(sum(src.values()) / target_bytes))
     if sort_col is not None:
         out = df.repartitionByRange(n_files, sort_col).sortWithinPartitions(
             sort_col
@@ -60,9 +49,4 @@ def compact(
     else:
         out = df.repartition(n_files)
     out.write.mode("overwrite").parquet(out_dir)
-    return sum(
-        1
-        for root, _dirs, names in os.walk(out_dir)
-        for n in names
-        if n.endswith(".parquet")
-    )
+    return len(parquet_files(out_dir))

@@ -23,6 +23,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from elric_rs_spark.storage import parquet_files
+
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
@@ -41,31 +43,12 @@ _PARQUET_BYTES_PER_PARTITION = 8 << 20
 
 
 def dir_parquet_bytes(sf_dir: str) -> int:
-    """Total on-disk parquet bytes of a dataset dir (0 if unreadable).
-    The cheap input-size signal behind every scale-adaptive decision
-    here (shuffle partitions, physical-plan form selection)."""
-    try:
-        total = 0
-        for f in os.listdir(sf_dir):
-            if not f.endswith(".parquet"):
-                continue
-            p = os.path.join(sf_dir, f)
-            if os.path.isdir(p):
-                # Spark-written dataset: foo.parquet/ is a DIRECTORY and
-                # getsize would return the ~4KB inode size, silently
-                # disengaging the spill fix — sum the part files instead
-                # (not the _SUCCESS / .crc sidecars)
-                total += sum(
-                    os.path.getsize(os.path.join(root, name))
-                    for root, _, names in os.walk(p)
-                    for name in names
-                    if name.endswith(".parquet")
-                )
-            else:
-                total += os.path.getsize(p)
-    except OSError:
-        return 0
-    return total
+    """Total on-disk parquet bytes of a dataset dir (0 if missing): flat
+    `t.parquet` files and Spark-written `t.parquet/` dirs alike, never
+    the `_SUCCESS` / `.crc` sidecars. The cheap input-size signal behind
+    every scale-adaptive decision here (shuffle partitions,
+    physical-plan form selection)."""
+    return sum(parquet_files(sf_dir).values())
 
 
 def shuffle_partitions_for(sf_dir: str, cpus: str | int | None = None) -> int:

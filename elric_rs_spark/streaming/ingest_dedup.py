@@ -41,26 +41,33 @@ an ``isin`` partition filter — PartitionFilters in the scan, untouched
 buckets never leave disk (plan-gated in tests/test_streaming_dedup.py).
 At 100 TB the same layout holds with a larger N_INDEX_BUCKETS (or
 Delta + z-order on sig); probe cost tracks batch size, not index size.
-Crash replay: every append is epoch-tagged and every read
-de-duplicates, so a replayed foreachBatch epoch (deterministic
-recompute) is absorbed — the SummingMart idempotency pattern
+Crash replay: each delivery publishes one file per store, and one per
+touched bucket in the index, named `part-<epoch>.parquet` and renamed
+into place (storage.publish, the typed sink's write path), so a
+replayed foreachBatch epoch (deterministic recompute) replaces its own
+files; every read still de-duplicates, as SummingMart does
 (streaming/mart.py).
 
-Long-run maintenance: appends leave one file per touched bucket per
-EPOCH, so probe file-count grows with delivery count; ``compact_state``
-(round 9) folds the stores back to one file per bucket between
-deliveries — the routine part-merge every long-lived streaming table
-needs. Replay-safe without a fold watermark because all three stores
-hold membership facts absorbed by the readers' distinct().
+Long-run maintenance: each EPOCH adds one file per touched bucket, so
+probe file-count grows with delivery count; ``compact_state`` (round 9)
+folds the stores back to one file per bucket between deliveries — the
+routine part-merge every long-lived streaming table needs. Replay-safe
+without a fold watermark because all three stores hold membership facts
+absorbed by the readers' distinct().
 """
 
 from __future__ import annotations
 
+import math
 import os
+import time
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
+    ArrayType,
     DoubleType,
     LongType,
     StringType,
@@ -74,6 +81,13 @@ from elric_rs_spark.operators.dedup import (
     PMH_BUCKET_CAP,
     portable_band_signatures,
 )
+from elric_rs_spark.storage import (
+    COMPACTED_EPOCH,
+    guard_missing,
+    parquet_files,
+    publish,
+    swap_in,
+)
 
 # index-store directory partitions: pmod(xxhash64(band, sig), N).
 # 64 keeps sf-scale state at a few files per bucket; the 100 TB form
@@ -82,10 +96,6 @@ from elric_rs_spark.operators.dedup import (
 # count files, independent of total index size).
 N_INDEX_BUCKETS = 64
 
-# reserved epoch id stamped on compaction-folded rows (the SummingMart
-# convention, streaming/mart.py); real foreachBatch epochs are >= 0
-COMPACTED_EPOCH = -1
-
 INDEX_SCHEMA = StructType(
     [
         StructField("band", LongType()),
@@ -93,6 +103,14 @@ INDEX_SCHEMA = StructType(
         StructField("doc_id", LongType()),
         StructField("epoch_id", LongType()),
         StructField("pbucket", LongType()),
+    ]
+)
+
+GRAM_SCHEMA = StructType(
+    [
+        StructField("doc_id", LongType()),
+        StructField("g", ArrayType(StringType())),
+        StructField("epoch_id", LongType()),
     ]
 )
 
@@ -105,6 +123,12 @@ VERDICT_SCHEMA = StructType(
         StructField("epoch_id", LongType()),
     ]
 )
+
+
+def _publish(rows: pa.Table, directory: str, name: str) -> int:
+    """Publish a delivery's `rows` as `directory/name`, or nothing when
+    it has none. Returns the bytes published."""
+    return publish(directory, name, rows) if rows.num_rows else 0
 
 
 class IngestDedupIndex:
@@ -120,19 +144,10 @@ class IngestDedupIndex:
         self.verdicts_path = f"{self.base}/verdicts"
         self._watermark_path = f"{self.base}/ingest_watermark"
         # per-epoch probe accounting (index-growth curve: probe wall vs
-        # persisted state size — the number that predicts 100 TB probe
-        # cost). Driver-side bookkeeping only; no effect on results.
+        # the bytes each delivery published — the number that predicts
+        # 100 TB probe cost). Driver-side bookkeeping only; no effect on
+        # results.
         self.epoch_stats: list[dict] = []
-
-    def _state_bytes(self, path: str) -> int:
-        total = 0
-        for root, _, names in os.walk(path):
-            for n in names:
-                try:
-                    total += os.path.getsize(os.path.join(root, n))
-                except OSError:
-                    pass
-        return total
 
     # -- watermark: enforce the id-ordered-arrival precondition --------
     def _read_watermark(self) -> tuple[int, int]:
@@ -145,38 +160,24 @@ class IngestDedupIndex:
             return -1, -1
 
     def _write_watermark(self, max_id: int, epoch_id: int) -> None:
-        os.makedirs(self.base, exist_ok=True)
-        tmp = f"{self._watermark_path}.tmp"
-        with open(tmp, "w") as f:
-            f.write(f"{max_id}:{epoch_id}")
-        os.replace(tmp, self._watermark_path)
+        publish(*os.path.split(self._watermark_path), f"{max_id}:{epoch_id}")
 
     # -- persisted-state readers (replay-absorbing) --------------------
     @staticmethod
-    def _guard_missing(path: str) -> None:
-        """ADVICE r9 crash-consistency guard: a missing store with a
-        compaction sibling on disk means compact_state died mid-swap —
-        the state EXISTS (in __compact and/or __old) and reading it as
-        empty would silently lose dedup history. Fail loudly instead."""
-        for suffix in ("__compact", "__old"):
-            if os.path.isdir(path + suffix):
-                raise RuntimeError(
-                    f"store {path} is missing but {path + suffix} exists: "
-                    "compact_state was interrupted mid-swap; rename the "
-                    "sibling back into place before resuming ingest"
-                )
-
-    def _read_or_empty(self, spark: SparkSession, path: str, schema) -> DataFrame:
+    def _read_or_empty(spark: SparkSession, path: str, schema) -> DataFrame:
+        """The store at `path` with its declared schema (no inference
+        job), or an empty frame if it was never written. A store that
+        an interrupted compaction left missing raises instead."""
+        guard_missing(path)
         if os.path.isdir(path):
             return spark.read.schema(schema).parquet(path)
-        self._guard_missing(path)
         return spark.createDataFrame([], schema)
 
     def read_index(
         self, spark: SparkSession, pbuckets: list[int] | None = None
     ) -> DataFrame:
-        """(band, sig, doc_id) membership; distinct absorbs epoch
-        replays (a replayed epoch appends identical rows). With
+        """(band, sig, doc_id) membership; distinct absorbs the rows a
+        replayed epoch's files repeat from a fold. With
         `pbuckets`, the scan carries an ``isin`` PartitionFilter over
         the ``pbucket=K/`` layout — only touched bucket directories are
         read (the probe path; plan-gated)."""
@@ -186,23 +187,13 @@ class IngestDedupIndex:
         return df.select("band", "sig", "doc_id").distinct()
 
     def read_grams(self, spark: SparkSession) -> DataFrame:
-        if os.path.isdir(self.grams_path):
-            # one gram-array row per doc; replays duplicate whole rows
-            return (
-                spark.read.parquet(self.grams_path)
-                .select("doc_id", "g")
-                .dropDuplicates(["doc_id"])
-            )
-        self._guard_missing(self.grams_path)
-        from pyspark.sql.types import ArrayType
-
-        gs = StructType(
-            [
-                StructField("doc_id", LongType()),
-                StructField("g", ArrayType(StringType())),
-            ]
+        """One gram-array row per doc; a replayed epoch's file repeats
+        whole rows a fold already holds."""
+        return (
+            self._read_or_empty(spark, self.grams_path, GRAM_SCHEMA)
+            .select("doc_id", "g")
+            .dropDuplicates(["doc_id"])
         )
-        return spark.createDataFrame([], gs)
 
     def read_verdicts(self, spark: SparkSession) -> DataFrame:
         """Union of per-batch verdicts: (doc_id, n_earlier_dups,
@@ -217,15 +208,13 @@ class IngestDedupIndex:
     # -- the foreachBatch handler --------------------------------------
     def process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
         """Judge `batch_df` (doc_id, text) against the persisted index,
-        append verdicts, admit new docs to the index. All heavy work is
-        DataFrame-plan; the only collects are two one-row scalars
-        (batch id range) used for the ordering guard."""
-        import time as _time
-
+        publish its verdicts, admit new docs to the index, store their
+        grams. All judging is DataFrame-plan; the driver collects the
+        batch id range (the ordering guard), the touched buckets, and
+        the three outputs, which it publishes as epoch files in the
+        order verdicts, index, grams, then the watermark."""
         spark = batch_df.sparkSession
-        t_epoch = _time.monotonic()
-        idx_bytes_before = self._state_bytes(self.index_path)
-        grams_bytes_before = self._state_bytes(self.grams_path)
+        t_epoch = time.monotonic()
         rng = batch_df.agg(
             F.min("doc_id").alias("lo"),
             F.max("doc_id").alias("hi"),
@@ -236,8 +225,8 @@ class IngestDedupIndex:
         max_seen, last_epoch = self._read_watermark()
         if epoch_id == last_epoch:
             # foreachBatch replay of a committed epoch (crash between
-            # our appends and the checkpoint commit): recompute is
-            # deterministic and reads de-duplicate, so re-running is
+            # our writes and the checkpoint commit): recompute is
+            # deterministic and replaces its own files, so re-running is
             # safe — but skipping is cheaper.
             return
         if rng["lo"] <= max_seen:
@@ -248,13 +237,14 @@ class IngestDedupIndex:
                 "finality buffer)"
             )
 
+        epoch = F.lit(int(epoch_id)).cast("long")
         grams_b = batch_df.select(
             "doc_id", F.array_distinct(word_ngrams(F.col("text"), 3)).alias("g")
         ).filter(F.size("g") > 0)
         pb = F.pmod(F.xxhash64("band", "sig"), F.lit(N_INDEX_BUCKETS))
-        # bands_b feeds four consumers (pbucket collect, touched probe,
-        # member union, single admission) — materialize the batch-sized
-        # signature set once instead of re-hashing 4x
+        # bands_b feeds three consumers (pbucket collect, touched probe,
+        # member union) — materialize the batch-sized signature set once
+        # instead of re-hashing per consumer
         bands_b = pin(
             portable_band_signatures(spark, grams_b).withColumn("pbucket", pb)
         )
@@ -276,12 +266,9 @@ class IngestDedupIndex:
         # bucket. Existing ids are all < batch ids (watermark guard), so
         # existing members always survive the slice — admission only
         # fills the remaining cap slots, lowest batch ids first.
+        # collect_set also absorbs a replayed epoch's own index rows.
         ds = F.slice(F.array_sort(F.collect_set("doc_id")), 1, self.cap)
-        buckets = (
-            members.groupBy("band", "sig")
-            .agg(ds.alias("ds"))
-            .filter(F.size("ds") > 1)
-        )
+        buckets = members.groupBy("band", "sig").agg(ds.alias("ds"))
         pair_expr = F.flatten(
             F.transform(
                 F.col("ds"),
@@ -293,7 +280,8 @@ class IngestDedupIndex:
         )
         lo = int(rng["lo"])
         cand = (
-            buckets.select(F.explode(pair_expr).alias("p"))
+            buckets.filter(F.size("ds") > 1)
+            .select(F.explode(pair_expr).alias("p"))
             .select("p.doc_a", "p.doc_b")
             # only pairs whose LATER member is in this batch are new;
             # earlier-earlier pairs were emitted by previous epochs
@@ -302,7 +290,7 @@ class IngestDedupIndex:
         )
         # exact Jaccard verification against gram sets: doc_a may be an
         # index doc (gram store) or an earlier batch doc (batch grams).
-        # dropDuplicates: after a crash between the gram-store append and
+        # dropDuplicates: after a crash between the gram-store write and
         # the watermark write, the replayed epoch reads its own batch docs
         # from the store AND unions grams_b — without the dedup, ga holds
         # two rows per batch doc and same-batch pairs join twice, doubling
@@ -329,65 +317,44 @@ class IngestDedupIndex:
                 F.min("doc_a").alias("first_partner"),
                 F.max("jaccard").alias("best_jaccard"),
             )
-            .withColumn("epoch_id", F.lit(int(epoch_id)))
+            .withColumn("epoch_id", epoch)
         )
-        # admitted newcomers = slice members that are batch docs
+        # admitted newcomers = slice members that are batch docs; a
+        # bucket's single member (first touched by one batch doc) has no
+        # pair but is admitted too, or the next batch would miss it
         admitted = (
             buckets.select("band", "sig", F.explode("ds").alias("doc_id"))
             .filter(F.col("doc_id") >= lo)
-            .withColumn("epoch_id", F.lit(int(epoch_id)))
-        )
-        # buckets touched for the FIRST time by a single batch doc never
-        # enter `buckets` (size 1 filter) — admit those members too, or
-        # the next batch would miss them
-        singles = (
-            bands_b.join(
-                members.groupBy("band", "sig")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .filter(F.col("n") > 1)
-                .select("band", "sig"),
-                ["band", "sig"],
-                "left_anti",
-            )
-            .select("band", "sig", "doc_id")
-            .withColumn("epoch_id", F.lit(int(epoch_id)))
-        )
-        verdicts.write.mode("append").parquet(self.verdicts_path)
-        # repartition on the partition key first: hash-partitioning puts
-        # each pbucket's rows in exactly ONE task, so the dynamic-
-        # partition write emits at most one file per touched bucket per
-        # epoch. Without it every shuffle task writes a sliver into
-        # every bucket dir — measured 2.8x wall blowup from file-count
-        # explosion (~2k files/epoch) at the sf0.1 calibration scale.
-        (
-            admitted.unionByName(singles)
+            .withColumn("epoch_id", epoch)
             .withColumn("pbucket", pb)
-            .repartition("pbucket")
-            .write.mode("append")
-            .partitionBy("pbucket")
-            .parquet(self.index_path)
         )
-        grams_b.withColumn("epoch_id", F.lit(int(epoch_id))).write.mode(
-            "append"
-        ).parquet(self.grams_path)
+        name = f"part-{int(epoch_id):020d}.parquet"
+        stats = {"epoch_id": int(epoch_id), "n_docs": int(rng["n"])}
+        stats["verdicts_bytes"] = _publish(
+            verdicts.toArrow(), self.verdicts_path, name
+        )
+        rows = admitted.toArrow()
+        stats["index_bytes"] = sum(
+            _publish(
+                rows.filter(pc.equal(rows["pbucket"], k)).drop_columns("pbucket"),
+                f"{self.index_path}/pbucket={k}",
+                name,
+            )
+            for k in pc.unique(rows["pbucket"]).to_pylist()
+        )
+        stats["grams_bytes"] = _publish(
+            grams_b.withColumn("epoch_id", epoch).toArrow(), self.grams_path, name
+        )
         self._write_watermark(int(rng["hi"]), int(epoch_id))
-        self.epoch_stats.append(
-            {
-                "epoch_id": int(epoch_id),
-                "n_docs": int(rng["n"]),
-                "wall_sec": round(_time.monotonic() - t_epoch, 2),
-                "index_bytes_before": idx_bytes_before,
-                "grams_bytes_before": grams_bytes_before,
-            }
-        )
-
+        stats["wall_sec"] = round(time.monotonic() - t_epoch, 2)
+        self.epoch_stats.append(stats)
 
     # -- table maintenance ----------------------------------------------
     def compact_state(self, spark: SparkSession) -> dict:
-        """Fold the epoch-appended stores: band index to ONE file per
+        """Fold the epoch-written stores: band index to ONE file per
         pbucket, gram store and verdicts to ~128 MB-target files.
 
-        Why a long-lived pipeline needs this: every epoch appends at
+        Why a long-lived pipeline needs this: every epoch writes at
         most one file per TOUCHED bucket, so after E deliveries a probe
         that partition-prunes to B buckets still opens O(B*E) files —
         footer reads and scan planning grow with delivery count even
@@ -397,86 +364,42 @@ class IngestDedupIndex:
         streaming table needs (plans/compaction.py rationale).
 
         Why it is replay-safe WITHOUT SummingMart's watermark dance
-        (mart.py:69-91): index/gram/verdict rows are MEMBERSHIP FACTS,
-        not summed partials — every reader distincts or dropDuplicates,
-        so a crash-replayed epoch appending duplicate rows after a fold
-        is absorbed exactly as before, and the fold itself only
-        collapses physical duplicates. The ingest watermark file is
-        untouched, so the ordering guard and the committed-epoch
-        short-circuit behave identically. NOT safe concurrently with an
-        active writer on the same base_dir (same contract as
-        SummingMart.compact)."""
-        import math
-        import shutil
+        (mart.py): index/gram/verdict rows are MEMBERSHIP FACTS, not
+        summed partials — every reader distincts or dropDuplicates, so a
+        crash-replayed epoch writing its files again after a fold is
+        absorbed exactly as before, and the fold itself only collapses
+        physical duplicates. The ingest watermark file is untouched, so
+        the ordering guard and the committed-epoch short-circuit behave
+        identically. Each store is swapped in crash-safely
+        (storage.swap_in). NOT safe concurrently with an active writer
+        on the same base_dir (same contract as SummingMart.compact).
 
+        Verdicts dedup on ALL contract columns (ADVICE r9): keying on
+        doc_id alone would silently collapse a divergent replayed
+        verdict row — exactly the divergence read_verdicts().distinct()
+        exists to surface — so the fold collapses physical duplicates
+        only and then ASSERTS one row per doc_id, failing loudly on a
+        real divergence instead of picking an arbitrary winner."""
         stats: dict = {}
-        fold_epoch = F.lit(int(COMPACTED_EPOCH))
-
-        def _n_files(path: str) -> int:
-            return sum(
-                1
-                for root, _d, names in os.walk(path)
-                for n in names
-                if n.endswith(".parquet")
-            )
-
-        def _swap_in(tmp: str, dst: str) -> None:
-            """Crash-safe store swap (ADVICE r9): the old rmtree-then-move
-            left a window where the store path was MISSING and readers
-            silently treated the state as empty. Move the old dir aside
-            first, move tmp into place, then delete the aside copy — a
-            crash in any window leaves either the main dir intact or a
-            `__compact` sibling that _read_or_empty refuses to read past,
-            so lost-state can only fail LOUDLY, never silently."""
-            old = f"{dst}__old"
-            if os.path.isdir(old):
-                shutil.rmtree(old)  # leftover from a prior completed swap
-            os.rename(dst, old)
-            os.rename(tmp, dst)
-            shutil.rmtree(old)
-
-        if os.path.isdir(self.index_path):
-            before = _n_files(self.index_path)
-            folded = (
-                spark.read.schema(INDEX_SCHEMA)
-                .parquet(self.index_path)
-                .dropDuplicates(["band", "sig", "doc_id"])
-                .withColumn("epoch_id", fold_epoch)
-            )
-            tmp = f"{self.index_path}__compact"
-            # hash-partition on the layout key: each pbucket lands in
-            # exactly one task -> exactly one file per bucket dir (the
-            # same file-count rule as the process_batch append)
-            (
-                folded.repartition("pbucket")
-                .write.mode("overwrite")
-                .partitionBy("pbucket")
-                .parquet(tmp)
-            )
-            # aside-swap (crash-safe; an object store would write a
-            # versioned prefix + manifest instead)
-            _swap_in(tmp, self.index_path)
-            stats["index_files"] = (before, _n_files(self.index_path))
-
-        # verdicts dedup on ALL contract columns (ADVICE r9): keying on
-        # doc_id alone would silently collapse a divergent replayed
-        # verdict row — exactly the divergence read_verdicts().distinct()
-        # exists to surface — so compaction folds physical duplicates
-        # only and then ASSERTS one row per doc_id, failing loudly on a
-        # real divergence instead of picking an arbitrary winner.
-        for path, key, label in (
-            (self.grams_path, ["doc_id"], "grams_files"),
+        for path, schema, key, label in (
+            (self.index_path, INDEX_SCHEMA, ["band", "sig", "doc_id"], "index_files"),
+            (self.grams_path, GRAM_SCHEMA, ["doc_id"], "grams_files"),
             (
                 self.verdicts_path,
+                VERDICT_SCHEMA,
                 ["doc_id", "n_earlier_dups", "first_partner", "best_jaccard"],
                 "verdicts_files",
             ),
         ):
             if not os.path.isdir(path):
                 continue
-            before = _n_files(path)
-            df = spark.read.parquet(path).dropDuplicates(key)
-            if label == "verdicts_files":
+            before = parquet_files(path)
+            df = (
+                self._read_or_empty(spark, path, schema)
+                .dropDuplicates(key)
+                .withColumn("epoch_id", F.lit(COMPACTED_EPOCH).cast("long"))
+            )
+            if path == self.verdicts_path:
                 div = (
                     df.groupBy("doc_id")
                     .agg(F.count(F.lit(1)).alias("n"))
@@ -490,13 +413,17 @@ class IngestDedupIndex:
                         "a replayed epoch produced conflicting verdict rows; "
                         "refusing to compact (inspect read_verdicts() output)"
                     )
-            if "epoch_id" in df.columns:
-                df = df.withColumn("epoch_id", fold_epoch)
-            n_out = max(1, math.ceil(self._state_bytes(path) / (128 << 20)))
             tmp = f"{path}__compact"
-            df.repartition(n_out).write.mode("overwrite").parquet(tmp)
-            _swap_in(tmp, path)
-            stats[label] = (before, _n_files(path))
+            if path == self.index_path:
+                # hash-partition on the layout key: each pbucket lands in
+                # exactly one task -> exactly one file per bucket dir
+                out = df.repartition("pbucket").write.partitionBy("pbucket")
+            else:
+                n_out = max(1, math.ceil(sum(before.values()) / (128 << 20)))
+                out = df.repartition(n_out).write
+            out.mode("overwrite").parquet(tmp)
+            swap_in(tmp, path)
+            stats[label] = (len(before), len(parquet_files(path)))
         return stats
 
 

@@ -23,12 +23,12 @@ aggregate. Properties:
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
-# reserved epoch id for compaction-folded rows; real epochs are >= 0
-COMPACTED_EPOCH = -1
+from elric_rs_spark.storage import COMPACTED_EPOCH, guard_missing, publish, swap_in
 
 
 class SummingMart:
@@ -43,7 +43,10 @@ class SummingMart:
         self.value_col = value_col
 
     def write_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        """foreachBatch half: append this epoch's per-key partial sums."""
+        """foreachBatch half: append this epoch's per-key partial sums.
+        Refuses a store that an interrupted compaction left missing:
+        appending to a fresh one would hide the folded history."""
+        guard_missing(self.path)
         (
             batch_df.groupBy(*self.key_cols)
             .agg(
@@ -78,6 +81,7 @@ class SummingMart:
         surviving (key, epoch) row. The compaction watermark closes the
         hole — every partial with epoch_id <= watermark is already
         inside the folded row and is dropped here."""
+        guard_missing(self.path)
         parts = spark.read.parquet(self.path)
         wm = self._read_watermark()
         if wm >= 0:
@@ -109,17 +113,11 @@ class SummingMart:
         )
         tmp = f"{self.path}__compact"
         merged.write.mode("overwrite").parquet(tmp)
-        # atomic-enough swap for a local/test fs; object stores would
-        # write a new versioned prefix and flip a manifest instead
-        import shutil
-
-        shutil.rmtree(self.path)
-        shutil.move(tmp, self.path)
+        swap_in(tmp, self.path)
         # watermark AFTER the swap: a crash between swap and watermark
         # write leaves the old watermark, which only risks re-dropping
         # nothing (the folded rows carry COMPACTED_EPOCH); a crash
         # before the swap leaves both untouched
         new_wm = max(self._read_watermark(), top if top is not None else -1)
         if new_wm >= 0:
-            with open(self._watermark_path(), "w") as f:
-                f.write(str(new_wm))
+            publish(*os.path.split(self._watermark_path()), str(new_wm))

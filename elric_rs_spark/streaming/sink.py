@@ -19,26 +19,12 @@ driver writes, so the directory need only be driver-writable.
 from __future__ import annotations
 
 import os
-import uuid
 
 import pyarrow as pa
-import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _replace_file(table: pa.Table, directory: str, name: str) -> None:
-    """Write `table` to a hidden temp file in `directory`, then rename it
-    to `name` (replacing a file of that name)."""
-    os.makedirs(directory, exist_ok=True)
-    tmp = os.path.join(directory, f".{name}.{uuid.uuid4().hex[:8]}.tmp")
-    try:
-        pq.write_table(table, tmp)
-        os.replace(tmp, os.path.join(directory, name))
-    except BaseException:
-        if os.path.exists(tmp):
-            os.unlink(tmp)
-        raise
+from elric_rs_spark.storage import publish
 
 
 def _has_data_file(directory: str) -> bool:
@@ -65,9 +51,9 @@ class ParquetWriter:
         for table, rows in tables.items():
             directory = f"{self.base_dir}/data/{table}"
             if rows.num_rows or not _has_data_file(directory):
-                _replace_file(rows, directory, name)
+                publish(directory, name, rows)
         if cursor.num_rows:
-            _replace_file(cursor, f"{self.base_dir}/cursors", name)
+            publish(f"{self.base_dir}/cursors", name, cursor)
 
 
 def read_exactly_once(

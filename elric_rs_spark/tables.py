@@ -13,6 +13,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from elric_rs_spark.storage import publish
+
 TABLES = (
     "region",
     "nation",
@@ -27,7 +29,11 @@ TABLES = (
 )
 
 
-_NS_CACHE_DIR = "/root/repo/.scratch/us_parquet_cache"
+# inside this checkout (gitignored), so every copy of the repo keeps its own
+_NS_CACHE_DIR = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    ".scratch", "us_parquet_cache",
+)
 
 
 def _microsecond_copy(path: str) -> str:
@@ -36,26 +42,33 @@ def _microsecond_copy(path: str) -> str:
     session was *created* with the legacy nanosAsLong conf — not an option
     when the caller owns the session. Convert ns -> us once via pyarrow
     into a content-addressed cache and read that. Truncation matches what
-    DuckDB/Python expose (microseconds)."""
+    DuckDB/Python expose (microseconds). pyarrow also reads a Spark-written
+    INT96 column as naive ns; INT96 holds an instant, so its copy is
+    `timestamp[us, UTC]`, which Spark types `timestamp`, as it does the
+    INT96 column. Cache entries are named without a leading `_` or `.`,
+    which Spark would skip."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     st = os.stat(path)
-    key = f"{path.replace('/', '_')}_{st.st_mtime_ns}_{st.st_size}"
+    key = f"{st.st_mtime_ns}_{st.st_size}_{os.path.abspath(path).replace('/', '_')}"
     out = os.path.join(_NS_CACHE_DIR, key)
-    done = os.path.join(out, "_SUCCESS")
-    if not os.path.exists(done):
-        os.makedirs(out, exist_ok=True)
-        table = pq.read_table(path)
+    if not os.path.exists(os.path.join(out, "part-0.parquet")):
+        footer = pq.ParquetFile(path)
+        int96 = {
+            c.path
+            for c in map(footer.schema.column, range(len(footer.schema)))
+            if c.physical_type == "INT96"
+        }
+        table = footer.read()
         fields = []
         for f in table.schema:
             if pa.types.is_timestamp(f.type) and f.type.unit == "ns":
-                fields.append(pa.field(f.name, pa.timestamp("us", tz=f.type.tz)))
+                tz = "UTC" if f.name in int96 else f.type.tz
+                fields.append(pa.field(f.name, pa.timestamp("us", tz=tz)))
             else:
                 fields.append(f)
-        table = table.cast(pa.schema(fields), safe=False)
-        pq.write_table(table, os.path.join(out, "part-0.parquet"))
-        open(done, "w").close()
+        publish(out, "part-0.parquet", table.cast(pa.schema(fields), safe=False))
     return out
 
 

@@ -8,10 +8,13 @@
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
 from elric_rs_spark.functions.skew import salted_join
+from tests.conftest import SF_DIR
 from elric_rs_spark.plans.inspect import formatted_plan, physical_plan
 
 
@@ -2138,7 +2141,8 @@ class TestCompaction:
 
         import pyarrow.parquet as pq
 
-        from elric_rs_spark.plans.compaction import compact, dir_parquet_bytes
+        from elric_rs_spark.plans.compaction import compact
+        from elric_rs_spark.storage import parquet_files
         from pyspark.sql import functions as F
 
         src = str(tmp_path / "small")
@@ -2149,7 +2153,7 @@ class TestCompaction:
         ).repartition(64).write.parquet(src)
         n_src = sum(1 for n in os.listdir(src) if n.endswith(".parquet"))
         assert n_src == 64
-        total = dir_parquet_bytes(src)
+        total = sum(parquet_files(src).values())
         n_out = compact(spark, src, out, target_bytes=total // 4 + 1, sort_col="k")
         assert n_out <= 4
         assert spark.read.parquet(out).count() == 64_000
@@ -2178,7 +2182,8 @@ class TestCompaction:
         recursively, and an empty source must raise, not return 0."""
         import pytest
 
-        from elric_rs_spark.plans.compaction import compact, dir_parquet_bytes
+        from elric_rs_spark.plans.compaction import compact
+        from elric_rs_spark.storage import parquet_files
         from pyspark.sql import functions as F
 
         src = str(tmp_path / "hive")
@@ -2188,13 +2193,13 @@ class TestCompaction:
             (F.col("id") % 4).alias("part"),
             F.sha2(F.col("id").cast("string"), 256).alias("pad"),
         ).repartition(16).write.partitionBy("part").parquet(src)
-        total = dir_parquet_bytes(src)
+        total = sum(parquet_files(src).values())
         assert total > 0
         n_out = compact(spark, src, out, target_bytes=total // 4 + 1)
         assert 2 <= n_out <= 4, n_out
         assert spark.read.parquet(out).count() == 32_000
         with pytest.raises(FileNotFoundError):
-            dir_parquet_bytes(str(tmp_path / "hive" / "_nope_"))
+            compact(spark, str(tmp_path / "hive" / "_nope_"), str(tmp_path / "nope_out"))
 
 
 class TestAdaptiveBandBitsIntegerForm:
@@ -3030,6 +3035,23 @@ class TestShufflePartitionsFor:
         (d / "._SUCCESS.crc").write_bytes(b"c" * 8)
         (tmp_path / "flat.parquet").write_bytes(b"x" * 24)
         assert dir_parquet_bytes(str(tmp_path)) == 1024
+
+    @pytest.mark.parametrize("sf_dir,want", [
+        (os.path.join(os.path.dirname(SF_DIR), "sf0.001"), 462_880),
+        (os.path.join(os.path.dirname(SF_DIR), "sf0.01"), 1_873_666),
+        (os.path.join(os.path.dirname(SF_DIR), "sf0.1"), 17_504_410),
+        (os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                      "perfbench", "fixture"), 1_873_666),
+    ])
+    def test_fixture_bytes_keep_pagerank_form(self, sf_dir, want):
+        """The fixture sizes the parquet walker reports, all under
+        PR_WIDE_INPUT_BYTES, so q_pagerank keeps its narrow-input form
+        at every scale the tests and the benchmark run."""
+        from elric_rs_spark.operators.graph import PR_WIDE_INPUT_BYTES
+        from elric_rs_spark.session import dir_parquet_bytes
+
+        assert dir_parquet_bytes(sf_dir) == want
+        assert want < PR_WIDE_INPUT_BYTES
 
     def test_missing_dir_falls_back_to_cpus(self):
         from elric_rs_spark.session import shuffle_partitions_for

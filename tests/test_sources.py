@@ -302,6 +302,16 @@ class TestLoadTable:
             want = spark.read.parquet(path)
             assert got.schema == want.schema, name
             assert sorted(got.collect(), key=repr) == sorted(want.collect(), key=repr)
+        # INT96 holds an instant: typed `timestamp`, as Spark reads the
+        # original file, with the same values
+        from pyspark.sql.types import TimestampNTZType, TimestampType
+
+        got = load_table(spark, str(d), "customer")
+        assert got.schema["c_ts"].dataType == TimestampType()
+        assert got.schema["c_ntz"].dataType == TimestampNTZType()
+        spark_read = spark.read.parquet(str(d / "customer.parquet"))
+        assert got.schema == spark_read.schema
+        assert sorted(got.collect(), key=repr) == sorted(spark_read.collect(), key=repr)
 
     def test_runs_no_job(self, spark):
         from tests.test_streaming import _max_job_id

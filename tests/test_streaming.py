@@ -818,6 +818,49 @@ class TestSummingMart:
         assert got5 == expect5
 
 
+    def test_interrupted_compaction_is_refused(self, spark, tmpdir, monkeypatch):
+        """A crash between the compaction swap's steps leaves the store
+        missing next to its `__compact` sibling. The restarted writer
+        must refuse it: appending a fresh store would turn
+        [('a', 3, 3), ('b', 6, 3)] into [('a', 1, 1)], with the folded
+        history left unread in the sibling."""
+        import os
+
+        from elric_rs_spark.streaming.mart import SummingMart
+
+        class Crash(Exception):
+            pass
+
+        mart = SummingMart(str(tmpdir), ["k"], "v")
+        for e in range(3):
+            batch = spark.createDataFrame([("a", 1), ("b", 2)], "k string, v long")
+            mart.write_batch(batch, e)
+        assert sorted(tuple(r) for r in mart.read(spark).collect()) == [
+            ("a", 3, 3), ("b", 6, 3)]
+
+        rename = os.rename
+
+        def crash_before_move_in(src, dst):
+            if str(src).endswith("__compact"):
+                raise Crash(src)
+            return rename(src, dst)
+
+        monkeypatch.setattr(os, "rename", crash_before_move_in)
+        with pytest.raises(Crash):
+            mart.compact(spark)
+        monkeypatch.undo()
+        assert not os.path.isdir(mart.path)
+        assert os.path.isdir(f"{mart.path}__compact")
+
+        restarted = SummingMart(str(tmpdir), ["k"], "v")
+        batch = spark.createDataFrame([("a", 1)], "k string, v long")
+        with pytest.raises(RuntimeError, match="interrupted"):
+            restarted.write_batch(batch, 3)
+        with pytest.raises(RuntimeError, match="interrupted"):
+            restarted.read(spark)
+        assert not os.path.isdir(mart.path)
+
+
 class TestStreamStreamIntervalJoin:
     """Stream-stream INNER join with watermarks + a time-range condition
     (the attribution join: each purchase matches clicks by the same user

@@ -295,3 +295,85 @@ def test_compaction_folds_files_and_preserves_semantics(spark, tmp_path):
     before = _rows(a.read_verdicts(spark))
     a.process_batch(_mk_batch(spark, batches[2]), epoch_id=2)
     assert _rows(a.read_verdicts(spark)) == before
+
+
+def _store_files(idx):
+    """Every file under each store, as paths relative to the store."""
+    import os
+
+    return {
+        path: sorted(
+            os.path.relpath(os.path.join(r, n), path)
+            for r, _d, ns in os.walk(path)
+            for n in ns
+        )
+        for path in (idx.verdicts_path, idx.index_path, idx.grams_path)
+    }
+
+
+def test_partial_commit_replay_replaces_its_own_files(spark, tmp_path):
+    """A delivery publishes one epoch-named file per store (one per
+    touched bucket in the index): a replay after a crash before the
+    watermark write replaces those files instead of adding copies, and
+    leaves the index rows as they were. Docs 3..14 share no bucket with
+    any other doc, so their buckets are single-member on first delivery
+    and hold their own index rows on the replay, in pbucket dirs the
+    replay also rewrites for docs 1 and 2: they must stay admitted."""
+    idx = IngestDedupIndex(str(tmp_path / "state"))
+    idx.process_batch(_mk_batch(spark, [(0, DUP_TEXT)]), epoch_id=0)
+    with open(idx._watermark_path) as f:
+        wm_committed = f.read()
+    unique = [
+        (i, f"document {i} alone says " + " ".join(f"u{i}w{j}" for j in range(12)))
+        for i in range(3, 15)
+    ]
+    b1 = _mk_batch(spark, [(1, DUP_TEXT), (2, DUP_TEXT), *unique])
+    idx.process_batch(b1, epoch_id=1)
+    files = _store_files(idx)
+    index = _rows(idx.read_index(spark))
+    assert {r[2] for r in index} == set(range(15))
+    assert all(len(names) > 0 for names in files.values()), files
+    with open(idx._watermark_path, "w") as f:
+        f.write(wm_committed)
+    idx.process_batch(b1, epoch_id=1)
+    assert _store_files(idx) == files
+    assert _rows(idx.read_index(spark)) == index
+
+
+def test_gram_store_read_runs_no_job(spark, tmp_path):
+    """The gram store is read with its declared schema: no schema
+    inference job."""
+    from tests.test_streaming import _max_job_id
+
+    idx = IngestDedupIndex(str(tmp_path / "state"))
+    idx.process_batch(_mk_batch(spark, [(0, DUP_TEXT)]), epoch_id=0)
+    before = _max_job_id(spark)
+    grams = idx.read_grams(spark)
+    assert _max_job_id(spark) == before
+    assert grams.schema.simpleString() == "struct<doc_id:bigint,g:array<string>>"
+
+
+# Spark jobs of one delivery (the second of two sf0.001 halves, so the
+# probe reads a persisted index and gram store), local[8]: 29 with the
+# driver publishing epoch files, 34 when three DataFrameWriter appends
+# wrote the stores and the gram store was read with schema inference
+DELIVERY_JOB_CEILING = 29
+
+
+def test_delivery_job_ceiling(spark, tmp_path):
+    from tests.test_streaming import _max_job_id
+
+    docs = (
+        spark.read.parquet(f"{SF_DIR}/documents.parquet")
+        .select("doc_id", "text")
+        .orderBy("doc_id")
+        .collect()
+    )
+    half = len(docs) // 2
+    idx = IngestDedupIndex(str(tmp_path / "state"))
+    idx.process_batch(_mk_batch(spark, docs[:half]), epoch_id=0)
+    batch = _mk_batch(spark, docs[half:])
+    before = _max_job_id(spark)
+    idx.process_batch(batch, epoch_id=1)
+    jobs = _max_job_id(spark) - before
+    assert jobs <= DELIVERY_JOB_CEILING, jobs

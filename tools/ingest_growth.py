@@ -13,8 +13,10 @@ and stream the first half (availableNow), compact_state, land and
 stream the rest against the SAME state+checkpoint (FileStreamSource
 resumes from the checkpoint; the fold rewrote store files but
 membership facts are identical). Print one JSON line with per-epoch
-walls, store sizes, fold stats, and a verdict-count cross-check against
-a single-pass reference run at the same granularity.
+walls, the bytes each delivery published to each store and their
+running totals across both waves, fold stats, and a verdict-count
+cross-check against a single-pass reference run at the same
+granularity.
 
 Usage: python tools/ingest_growth.py [sf_dir] [n_batches]
 Defaults: .scratch/sf3 30 (150k docs, 5k-doc deliveries).
@@ -29,7 +31,8 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+# this checkout's package and bench helpers, wherever it lives
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def land(docs, landing: str, lo_batch: int, hi_batch: int, per: int, t_mt: float) -> None:
@@ -42,6 +45,7 @@ def land(docs, landing: str, lo_batch: int, hi_batch: int, per: int, t_mt: float
 
 
 def main() -> None:
+    from bench_streaming import with_running_totals
     from elric_rs_spark.session import get_spark
     from elric_rs_spark.streaming.ingest_dedup import run_ingest_dedup_stream
 
@@ -98,6 +102,7 @@ def main() -> None:
             + got_verdicts.exceptAll(ref_verdicts).count()
         )
 
+        totals: dict = {}
         print(
             json.dumps(
                 {
@@ -111,8 +116,8 @@ def main() -> None:
                     "wave2_wall_sec": wave2_wall,
                     "n_verdicts": n_verdicts,
                     "verdict_diff_vs_single_pass": diff,
-                    "epochs_wave1": wave1_epochs,
-                    "epochs_wave2": index2.epoch_stats,
+                    "epochs_wave1": with_running_totals(wave1_epochs, totals),
+                    "epochs_wave2": with_running_totals(index2.epoch_stats, totals),
                     "load_1m_end": round(os.getloadavg()[0], 2),
                 }
             )
