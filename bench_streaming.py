@@ -108,8 +108,8 @@ def run_dedup_mode(load_start: float) -> None:
     predicts 100 TB probe cost. A trailing `--compact` arg
     runs `IngestDedupIndex.compact_state` after the stream and records
     the fold wall + per-store (files_before, files_after) — the
-    delivery-count file-growth lever (one file per touched bucket per
-    epoch until the fold collapses it)."""
+    delivery-count file-growth lever (one file per store per epoch
+    until the fold collapses it)."""
     import tempfile as _tf
 
     from elric_rs_spark.session import get_spark

@@ -53,7 +53,7 @@ def typed_columns(
                     F.concat(
                         F.lit(f"malformed value for column {name}: "), raw
                     )
-                ).cast(typed_null_type(ct)),
+                ).cast(ct.spark_type),
             ).otherwise(typed)
         out.append(typed.alias(name))
     return out
@@ -85,15 +85,6 @@ def typed_cast(
     typed = typed_columns(F.col(map_col), columns, mode)
     keep = [c for c in df.columns if c != map_col]
     return df.select(*keep, *typed)
-
-
-def typed_null_type(ct: ColumnType):
-    """Spark type used for the raise_error branch so both when-branches agree."""
-    from pyspark.sql import types as T
-
-    if ct.name == "FixedString":
-        return T.BinaryType()
-    return ct.spark_type
 
 
 def typed_cast_split(

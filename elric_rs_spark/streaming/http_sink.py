@@ -10,7 +10,9 @@ FORMAT ArrowStream` (docs.clickhouse.com/interfaces/http +
 /interfaces/formats). ArrowStream carries its own schema, so no Spark ->
 ClickHouse type table is kept here: ClickHouse casts each Arrow field to
 the declared column type on insert (decimal128(20,0) -> UInt64, binary
--> FixedString(8), timestamp[us, UTC] -> DateTime, ...). That cast is
+-> FixedString(8), timestamp[us, UTC] -> DateTime, ...). UInt128,
+Int128, UInt256 and Int256 travel as canonical decimal strings, which
+ClickHouse parses into the declared wide integer. That cast is
 documented ClickHouse behaviour; the tests run against a recording mock
 (tests/test_sink.py), not a live server.
 

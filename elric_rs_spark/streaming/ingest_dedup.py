@@ -32,28 +32,27 @@ Scale shape per batch: batch-side work is batch-sized (signatures,
 grams); the index probe is a broadcast-semi join (batch bands broadcast,
 index scanned — no index shuffle); the bucket re-slice groups ONLY the
 affected buckets (left-semi pruned), each bounded at cap + batch
-members. The index store is BUCKETED (round 9, VERDICT r08 #2): rows
-land under ``pbucket=K/`` directory partitions where
-``pbucket = pmod(xxhash64(band, sig), N_INDEX_BUCKETS)``, and the probe
-computes the batch's touched pbucket set (bounded by
-N_INDEX_BUCKETS, one batch-sized collect) and reads the index through
-an ``isin`` partition filter — PartitionFilters in the scan, untouched
-buckets never leave disk (plan-gated in tests/test_streaming_dedup.py).
-At 100 TB the same layout holds with a larger N_INDEX_BUCKETS (or
-Delta + z-order on sig); probe cost tracks batch size, not index size.
-Crash replay: each delivery publishes one file per store, and one per
-touched bucket in the index, named `part-<epoch>.parquet` and renamed
-into place (storage.publish, the typed sink's write path), so a
-replayed foreachBatch epoch (deterministic recompute) replaces its own
-files; every read still de-duplicates, as SummingMart does
-(streaming/mart.py).
+members. All three stores are FLAT directories of the same form:
+each delivery publishes exactly one file per store (band index, gram
+store, verdicts), named `part-<epoch>.parquet` and renamed into place
+(storage.publish, the typed sink's write path), so a replayed
+foreachBatch epoch (deterministic recompute) replaces its own files;
+every read still de-duplicates, as SummingMart does
+(streaming/mart.py). The index is not split into hash buckets on disk:
+with band signatures spread uniformly, a 25-doc delivery already
+touches most of 64 hash buckets and a 250-doc one all of them, so a
+bucket filter would prune nothing. The probe's real filter is the
+broadcast left-semi on the batch's (band, sig) set. A state dir
+written before this layout holds one hash-bucket subdirectory per
+bucket under ``band_index/``; it is not migrated: rebuild it by
+replaying the deliveries into an empty state dir.
 
-Long-run maintenance: each EPOCH adds one file per touched bucket, so
-probe file-count grows with delivery count; ``compact_state`` (round 9)
-folds the stores back to one file per bucket between deliveries — the
-routine part-merge every long-lived streaming table needs. Replay-safe
-without a fold watermark because all three stores hold membership facts
-absorbed by the readers' distinct().
+Long-run maintenance: each EPOCH adds one file per store, so probe
+file-count grows with delivery count; ``compact_state`` folds all
+three stores the same way, back to ~128 MB-target files, between
+deliveries — the routine part-merge every long-lived streaming table
+needs. Replay-safe without a fold watermark because all three stores
+hold membership facts absorbed by the readers' distinct().
 """
 
 from __future__ import annotations
@@ -63,7 +62,6 @@ import os
 import time
 
 import pyarrow as pa
-import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -89,20 +87,12 @@ from elric_rs_spark.storage import (
     swap_in,
 )
 
-# index-store directory partitions: pmod(xxhash64(band, sig), N).
-# 64 keeps sf-scale state at a few files per bucket; the 100 TB form
-# raises this with index size (target: one bucket ~ one task's worth
-# of index rows, so a batch probe reads |touched buckets| ~ batch-band
-# count files, independent of total index size).
-N_INDEX_BUCKETS = 64
-
 INDEX_SCHEMA = StructType(
     [
         StructField("band", LongType()),
         StructField("sig", StringType()),
         StructField("doc_id", LongType()),
         StructField("epoch_id", LongType()),
-        StructField("pbucket", LongType()),
     ]
 )
 
@@ -173,18 +163,14 @@ class IngestDedupIndex:
             return spark.read.schema(schema).parquet(path)
         return spark.createDataFrame([], schema)
 
-    def read_index(
-        self, spark: SparkSession, pbuckets: list[int] | None = None
-    ) -> DataFrame:
+    def read_index(self, spark: SparkSession) -> DataFrame:
         """(band, sig, doc_id) membership; distinct absorbs the rows a
-        replayed epoch's files repeat from a fold. With
-        `pbuckets`, the scan carries an ``isin`` PartitionFilter over
-        the ``pbucket=K/`` layout — only touched bucket directories are
-        read (the probe path; plan-gated)."""
-        df = self._read_or_empty(spark, self.index_path, INDEX_SCHEMA)
-        if pbuckets is not None:
-            df = df.filter(F.col("pbucket").isin([int(b) for b in pbuckets]))
-        return df.select("band", "sig", "doc_id").distinct()
+        replayed epoch's files repeat from a fold."""
+        return (
+            self._read_or_empty(spark, self.index_path, INDEX_SCHEMA)
+            .select("band", "sig", "doc_id")
+            .distinct()
+        )
 
     def read_grams(self, spark: SparkSession) -> DataFrame:
         """One gram-array row per doc; a replayed epoch's file repeats
@@ -210,9 +196,9 @@ class IngestDedupIndex:
         """Judge `batch_df` (doc_id, text) against the persisted index,
         publish its verdicts, admit new docs to the index, store their
         grams. All judging is DataFrame-plan; the driver collects the
-        batch id range (the ordering guard), the touched buckets, and
-        the three outputs, which it publishes as epoch files in the
-        order verdicts, index, grams, then the watermark."""
+        batch id range (the ordering guard) and the three outputs,
+        which it publishes as epoch files in the order verdicts, index,
+        grams, then the watermark."""
         spark = batch_df.sparkSession
         t_epoch = time.monotonic()
         rng = batch_df.agg(
@@ -241,21 +227,11 @@ class IngestDedupIndex:
         grams_b = batch_df.select(
             "doc_id", F.array_distinct(word_ngrams(F.col("text"), 3)).alias("g")
         ).filter(F.size("g") > 0)
-        pb = F.pmod(F.xxhash64("band", "sig"), F.lit(N_INDEX_BUCKETS))
-        # bands_b feeds three consumers (pbucket collect, touched probe,
-        # member union) — materialize the batch-sized signature set once
-        # instead of re-hashing per consumer
-        bands_b = pin(
-            portable_band_signatures(spark, grams_b).withColumn("pbucket", pb)
-        )
-        # the probe's partition-pruning key set: bounded by
-        # N_INDEX_BUCKETS values, one batch-sized driver collect (the
-        # same bookkeeping class as the ordering-guard scalars above)
-        touched_pb = [
-            r["pbucket"]
-            for r in bands_b.select("pbucket").distinct().collect()
-        ]
-        idx = self.read_index(spark, pbuckets=touched_pb)
+        # bands_b feeds two consumers (touched probe, member union) —
+        # materialize the batch-sized signature set once instead of
+        # re-hashing per consumer
+        bands_b = pin(portable_band_signatures(spark, grams_b))
+        idx = self.read_index(spark)
         # existing members of AFFECTED buckets only (left-semi prune);
         # the batch band set is small — broadcast it, never shuffle the
         # index
@@ -326,22 +302,13 @@ class IngestDedupIndex:
             buckets.select("band", "sig", F.explode("ds").alias("doc_id"))
             .filter(F.col("doc_id") >= lo)
             .withColumn("epoch_id", epoch)
-            .withColumn("pbucket", pb)
         )
         name = f"part-{int(epoch_id):020d}.parquet"
         stats = {"epoch_id": int(epoch_id), "n_docs": int(rng["n"])}
         stats["verdicts_bytes"] = _publish(
             verdicts.toArrow(), self.verdicts_path, name
         )
-        rows = admitted.toArrow()
-        stats["index_bytes"] = sum(
-            _publish(
-                rows.filter(pc.equal(rows["pbucket"], k)).drop_columns("pbucket"),
-                f"{self.index_path}/pbucket={k}",
-                name,
-            )
-            for k in pc.unique(rows["pbucket"]).to_pylist()
-        )
+        stats["index_bytes"] = _publish(admitted.toArrow(), self.index_path, name)
         stats["grams_bytes"] = _publish(
             grams_b.withColumn("epoch_id", epoch).toArrow(), self.grams_path, name
         )
@@ -351,17 +318,16 @@ class IngestDedupIndex:
 
     # -- table maintenance ----------------------------------------------
     def compact_state(self, spark: SparkSession) -> dict:
-        """Fold the epoch-written stores: band index to ONE file per
-        pbucket, gram store and verdicts to ~128 MB-target files.
+        """Fold each epoch-written store (band index, gram store,
+        verdicts) to ~128 MB-target files.
 
-        Why a long-lived pipeline needs this: every epoch writes at
-        most one file per TOUCHED bucket, so after E deliveries a probe
-        that partition-prunes to B buckets still opens O(B*E) files —
-        footer reads and scan planning grow with delivery count even
-        though the pruned BYTES stay batch-proportional. Folding
-        restores O(B) files per probe. Run it between deliveries (e.g.
-        every N epochs); at 100 TB this is the routine part-merge every
-        streaming table needs (plans/compaction.py rationale).
+        Why a long-lived pipeline needs this: every epoch writes one
+        file per store, so after E deliveries a probe opens E index and
+        E gram files — footer reads and scan planning grow with
+        delivery count. Folding restores a size-proportional file
+        count. Run it between deliveries (e.g. every N epochs); at
+        100 TB this is the routine part-merge every streaming table
+        needs (plans/compaction.py rationale).
 
         Why it is replay-safe WITHOUT SummingMart's watermark dance
         (mart.py): index/gram/verdict rows are MEMBERSHIP FACTS, not
@@ -414,14 +380,8 @@ class IngestDedupIndex:
                         "refusing to compact (inspect read_verdicts() output)"
                     )
             tmp = f"{path}__compact"
-            if path == self.index_path:
-                # hash-partition on the layout key: each pbucket lands in
-                # exactly one task -> exactly one file per bucket dir
-                out = df.repartition("pbucket").write.partitionBy("pbucket")
-            else:
-                n_out = max(1, math.ceil(sum(before.values()) / (128 << 20)))
-                out = df.repartition(n_out).write
-            out.mode("overwrite").parquet(tmp)
+            n_out = max(1, math.ceil(sum(before.values()) / (128 << 20)))
+            df.repartition(n_out).write.mode("overwrite").parquet(tmp)
             swap_in(tmp, path)
             stats[label] = (len(before), len(parquet_files(path)))
         return stats

@@ -26,6 +26,12 @@ from pyspark.sql import functions as F
 
 from elric_rs_spark.storage import publish
 
+# the cursor rows `pipeline.TypedPerTableSink` commits after each batch
+CURSOR_SCHEMA = (
+    "stream_id string, cursor string, block_num long, block_id string, "
+    "epoch_id int"
+)
+
 
 def _has_data_file(directory: str) -> bool:
     try:
@@ -86,13 +92,17 @@ def read_exactly_once(
 
 
 def load_persisted_cursor(spark, base_dir: str, stream_id: str) -> str | None:
-    """S7 cursor recovery (ref main.rs:299-310): latest cursor by block_num."""
-    try:
-        df = spark.read.parquet(f"{base_dir}/cursors")
-    except Exception:
+    """S7 cursor recovery (ref main.rs:299-310): latest cursor by
+    block_num, read with the cursor's declared schema. Only a missing
+    `cursors` dir means "no cursor": an unreadable one raises, since
+    restarting from the beginning would replay every committed block."""
+    path = f"{base_dir}/cursors"
+    if not os.path.isdir(path):
         return None
     rows = (
-        df.filter(F.col("stream_id") == stream_id)
+        spark.read.schema(CURSOR_SCHEMA)
+        .parquet(path)
+        .filter(F.col("stream_id") == stream_id)
         .orderBy(F.col("block_num").desc())
         .limit(1)
         .collect()

@@ -25,7 +25,8 @@ import base64
 import datetime
 from collections.abc import Callable, Iterable
 
-from elric_rs_spark.functions.protowire import decode_package, encode_request
+from elric_rs_spark.functions.protowire import encode_request
+from elric_rs_spark.streaming.admin import read_package
 from elric_rs_spark.streaming.source import FatalStreamError
 
 BLOCKS_METHOD = "/sf.substreams.rpc.v2.Stream/Blocks"
@@ -131,7 +132,7 @@ def make_substreams_connect(
     it (ref substreams.rs:55-71)."""
     if modules_raw is None:
         modules_raw = (
-            decode_package_file(spkg_path)["modules_raw"] if spkg_path else b""
+            read_package(spkg_path)["modules_raw"] if spkg_path else b""
         )
     metadata = [("authorization", token)] if token else None
 
@@ -175,8 +176,3 @@ def _deserialize_response(data: bytes) -> dict:
     from elric_rs_spark.functions.protowire import decode_response
 
     return decode_response(data)
-
-
-def decode_package_file(path: str) -> dict:
-    with open(path, "rb") as fh:
-        return decode_package(fh.read())

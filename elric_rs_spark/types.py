@@ -8,13 +8,13 @@ factory per type.
 
 Fidelity notes (SURVEY.md §1.3):
 - Unsigned ints widen to the next signed Spark type (no unsigned in Spark);
-  UInt64 -> Decimal(20,0) to be overflow-safe, UInt128/Int128 -> Decimal(38,0).
-  Each UIntN is bounded to [0, 2^N-1], as the reference's `parse::<uN>()`
-  is; UInt128 (and Int128) further to the 38 digits Decimal(38,0) holds.
-- UInt256/Int256 exceed Decimal(38): kept as canonical decimal strings at
-  the boundary (validated, zero-padding stripped, bounded to the type's
-  range by digit count, then lexicographically). The reference parses
-  Int256 through an unsigned U256 parser — a bug we do NOT replicate; we
+  UInt64 -> Decimal(20,0) to be overflow-safe. Each UIntN is bounded to
+  [0, 2^N-1], as the reference's `parse::<uN>()` is.
+- UInt128/Int128 and UInt256/Int256 exceed Decimal(38,0) (at most
+  10^38-1): kept as canonical decimal strings at the boundary
+  (validated, zero-padding stripped, bounded to the type's full range
+  by digit count, then lexicographically). The reference parses Int256
+  through an unsigned U256 parser — a bug we do NOT replicate; we
   accept a leading '-'.
 - FixedString(N): reference zero-pads bytes to N (ref table_info.rs:140-146);
   Spark-side: binary rpad with zero bytes.
@@ -46,13 +46,13 @@ _SIMPLE_TYPES: dict[str, T.DataType] = {
     "UInt16": T.IntegerType(),
     "UInt32": T.LongType(),
     "UInt64": T.DecimalType(20, 0),
-    "UInt128": T.DecimalType(38, 0),
+    "UInt128": T.StringType(),
     "UInt256": T.StringType(),
     "Int8": T.ByteType(),
     "Int16": T.ShortType(),
     "Int32": T.IntegerType(),
     "Int64": T.LongType(),
-    "Int128": T.DecimalType(38, 0),
+    "Int128": T.StringType(),
     "Int256": T.StringType(),
     "Float32": T.FloatType(),
     "Float64": T.DoubleType(),
@@ -104,15 +104,17 @@ def parse_column_type(type_str: str) -> ColumnType:
     raise ValueError(f"unsupported ClickHouse type: {type_str!r}")
 
 
-# 2^N-1 per unsigned type. UInt128's is past what Decimal(38,0) holds,
-# so its cast already rejects everything above the 38-digit maximum.
+# 2^N-1 per unsigned type held in a wider Spark numeric
 _UINT_MAX = {
     "UInt8": (1 << 8) - 1,
     "UInt16": (1 << 16) - 1,
     "UInt32": (1 << 32) - 1,
     "UInt64": Decimal((1 << 64) - 1),
-    "UInt128": None,
 }
+
+# bit width of the integer types kept as canonical decimal strings
+_STRING_UINT_BITS = {"UInt128": 128, "UInt256": 256}
+_STRING_INT_BITS = {"Int128": 128, "Int256": 256}
 
 
 def _digits_at_most(digits: Column, bound: int) -> Column:
@@ -137,21 +139,21 @@ def cast_expr(col: Column, ct: ColumnType) -> Column:
         # zero-pad bytes to N (ref table_info.rs:140-146); string->binary
         # never fails, so a plain cast is safe
         return F.rpad(col.cast("binary"), ct.fixed_len, bytes([0])).cast("binary")
-    if ct.name == "UInt256":
-        # Exceeds any Spark numeric: keep canonical decimal string.
-        # Strip leading zeros; reject non-digits and values above 2^256-1.
+    if ct.name in _STRING_UINT_BITS:
+        # Exceeds Decimal(38,0): keep canonical decimal string. Strip
+        # leading zeros; reject non-digits and values above 2^N-1.
+        hi = (1 << _STRING_UINT_BITS[ct.name]) - 1
         canon = F.regexp_replace(col, r"^0+(?=\d)", "")
-        return F.when(
-            col.rlike(r"^\d+$") & _digits_at_most(canon, (1 << 256) - 1), canon
-        )
-    if ct.name == "Int256":
-        # Same, signed: the magnitude is at most 2^255 when negative and
-        # 2^255-1 otherwise.
+        return F.when(col.rlike(r"^\d+$") & _digits_at_most(canon, hi), canon)
+    if ct.name in _STRING_INT_BITS:
+        # Same, signed: the magnitude is at most 2^(N-1) when negative
+        # and 2^(N-1)-1 otherwise.
+        neg_max = 1 << (_STRING_INT_BITS[ct.name] - 1)
         canon = F.regexp_replace(col, r"^(-?)0+(?=\d)", "$1")
         mag = F.regexp_replace(canon, "^-", "")
         in_range = F.when(
-            canon.startswith("-"), _digits_at_most(mag, 1 << 255)
-        ).otherwise(_digits_at_most(mag, (1 << 255) - 1))
+            canon.startswith("-"), _digits_at_most(mag, neg_max)
+        ).otherwise(_digits_at_most(mag, neg_max - 1))
         return F.when(col.rlike(r"^-?\d+$") & in_range, canon)
     if ct.name == "DateTime":
         # RFC3339 (ref table_info.rs:151-156) and plain 'yyyy-MM-dd HH:mm:ss'
@@ -164,8 +166,7 @@ def cast_expr(col: Column, ct: ColumnType) -> Column:
     if ct.name in _UINT_MAX:
         # the wider signed type also holds negatives and values past
         # 2^N-1, which the reference's unsigned parse rejects
-        hi = _UINT_MAX[ct.name]
-        return F.when(typed >= 0 if hi is None else typed.between(0, hi), typed)
+        return F.when(typed.between(0, _UINT_MAX[ct.name]), typed)
     return typed
 
 

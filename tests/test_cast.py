@@ -35,7 +35,7 @@ class TestParser:
             ("String", "String", T.StringType()),
             ("UInt8", "UInt8", T.ShortType()),
             ("UInt64", "UInt64", T.DecimalType(20, 0)),
-            ("UInt128", "UInt128", T.DecimalType(38, 0)),
+            ("UInt128", "UInt128", T.StringType()),
             ("UInt256", "UInt256", T.StringType()),
             ("Int8", "Int8", T.ByteType()),
             ("Int64", "Int64", T.LongType()),
@@ -131,8 +131,7 @@ class TestTypedCast:
             ("UInt16", 65535, 65536),
             ("UInt32", (1 << 32) - 1, 1 << 32),
             ("UInt64", (1 << 64) - 1, 1 << 64),
-            # Decimal(38,0) holds 38 digits, short of 2^128-1
-            ("UInt128", 10**38 - 1, 1 << 128),
+            ("UInt128", (1 << 128) - 1, 1 << 128),
             ("UInt256", (1 << 256) - 1, 1 << 256),
         ],
     )
@@ -153,13 +152,14 @@ class TestTypedCast:
         got = cast([str(over), "-1", "1" + "0" * 78], "permissive").collect()
         assert [r.v for r in got] == [None, None, None]
 
-    def test_int256_range(self, spark):
-        lo, hi = -(1 << 255), (1 << 255) - 1
+    @pytest.mark.parametrize("ts, bits", [("Int128", 128), ("Int256", 256)])
+    def test_signed_range(self, spark, ts, bits):
+        lo, hi = -(1 << (bits - 1)), (1 << (bits - 1)) - 1
         df = spark.createDataFrame(
             [({"v": v},) for v in (str(lo), str(hi), str(hi + 1), str(lo - 1), "-007")],
             "m map<string,string>",
         )
-        got = typed_cast(df, "m", {"v": "Int256"}, mode="permissive").collect()
+        got = typed_cast(df, "m", {"v": ts}, mode="permissive").collect()
         assert [r.v for r in got] == [str(lo), str(hi), None, None, "-7"]
 
     def test_strict_mode_raises_on_malformed(self, spark):

@@ -520,6 +520,27 @@ class TestSink:
         assert load_persisted_cursor(spark, tmpdir, "s1") == "8"
         assert load_persisted_cursor(spark, tmpdir, "nope") is None
 
+    def test_cursor_recovery_reads_declared_schema(self, spark, tmpdir):
+        """A missing `cursors` dir is "no cursor"; the load of a present
+        one runs only its own collect job (no schema inference)."""
+        assert load_persisted_cursor(spark, tmpdir, "s1") is None
+        sink = TypedPerTableSink(tmpdir, {"transfers": {"v": "String"}})
+        sink.write_batch(
+            _change_blocks(spark, [(7, [("transfers", {"v": "7"})])]), epoch_id=0
+        )
+        before = _max_job_id(spark)
+        assert load_persisted_cursor(spark, tmpdir, "s1") == "7"
+        assert _max_job_id(spark) - before == 1
+
+    def test_unreadable_cursor_raises(self, spark, tmpdir):
+        """A corrupt cursor file must not read as "no cursor", which
+        would restart the stream from the beginning."""
+        os.makedirs(f"{tmpdir}/cursors")
+        with open(f"{tmpdir}/cursors/part-{0:020d}.parquet", "wb") as f:
+            f.write(b"not a parquet file")
+        with pytest.raises(Exception, match="FAILED_READ_FILE"):
+            load_persisted_cursor(spark, tmpdir, "s1")
+
     def test_epoch_replay_detectable(self, spark, tmpdir):
         """Retried epochs are written with the same epoch_id (a replay of
         the same batch replaces its own files), so exact-once consumers

@@ -201,54 +201,13 @@ def test_verdicts_match_oracle_sql(spark, tmp_path):
         assert g[3] == pytest.approx(w[3], abs=1e-6)
 
 
-def test_index_probe_prunes_partitions(spark, tmp_path):
-    """VERDICT r08 #2: the persisted band index is BUCKETED
-    (pbucket=K/ directory partitions on pmod(xxhash64(band, sig), N));
-    the per-batch probe reads it through an isin PartitionFilter, so
-    untouched bucket directories never leave disk. Gate BOTH halves:
-    the filter appears as a PartitionFilter on the scan, and the pruned
-    read returns exactly the touched buckets' rows."""
-    from elric_rs_spark.plans.inspect import formatted_plan
-    from elric_rs_spark.streaming.ingest_dedup import N_INDEX_BUCKETS
-
-    idx = IngestDedupIndex(str(tmp_path / "state"))
-    # 40 distinct texts -> band signatures spread across many pbuckets
-    rows = [
-        (i, f"unique document number {i} with body " + " ".join(
-            f"w{i}x{j}" for j in range(12)))
-        for i in range(40)
-    ]
-    idx.process_batch(_mk_batch(spark, rows), epoch_id=0)
-    all_pb = sorted(
-        r[0]
-        for r in spark.read.parquet(idx.index_path)
-        .select("pbucket").distinct().collect()
-    )
-    assert len(all_pb) > 4, f"fixture spread too narrow: {all_pb}"
-    probe_pb = all_pb[:2]
-    probed = idx.read_index(spark, pbuckets=probe_pb)
-    fp = formatted_plan(probed)
-    part_lines = [ln for ln in fp.splitlines() if "PartitionFilters" in ln]
-    assert part_lines and "pbucket" in part_lines[0], fp
-    # value half: pruned read == full read filtered to the same buckets
-    full = spark.read.parquet(idx.index_path)
-    want = (
-        full.filter(full.pbucket.isin([int(b) for b in probe_pb]))
-        .select("band", "sig", "doc_id").distinct()
-    )
-    assert _rows(probed) == _rows(want)
-    assert probed.count() > 0
-    # sanity: bucket ids stay in range
-    assert all(0 <= b < N_INDEX_BUCKETS for b in all_pb)
-
-
 def test_compaction_folds_files_and_preserves_semantics(spark, tmp_path):
-    """compact_state (round 9): fold the epoch-appended stores to one
-    file per pbucket (index) without changing ANY observable state.
-    Twin protocol: index A is compacted mid-stream, index B never is;
-    after the same three epochs their verdicts and memberships must be
-    value-identical, A's post-fold file count must equal its pbucket
-    dir count, and a replayed committed epoch must still be absorbed."""
+    """compact_state (round 9): fold the epoch-written stores without
+    changing ANY observable state. Twin protocol: index A is compacted
+    mid-stream, index B never is; after the same three epochs their
+    verdicts and memberships must be value-identical, A's index must
+    fold to one file, and a replayed committed epoch must still be
+    absorbed."""
     import os
 
     def _pq_files(path):
@@ -272,12 +231,8 @@ def test_compaction_folds_files_and_preserves_semantics(spark, tmp_path):
 
     files_before = len(_pq_files(a.index_path))
     stats = a.compact_state(spark)
-    # one file per touched pbucket directory
-    n_dirs = sum(
-        1 for d in os.listdir(a.index_path) if d.startswith("pbucket=")
-    )
-    assert stats["index_files"] == (files_before, n_dirs)
-    assert len(_pq_files(a.index_path)) == n_dirs
+    assert stats["index_files"] == (files_before, 1)
+    assert len(_pq_files(a.index_path)) == 1
     # fold changed no observable state
     assert _rows(a.read_verdicts(spark)) == _rows(b.read_verdicts(spark))
     assert _rows(a.read_index(spark)) == _rows(b.read_index(spark))
@@ -312,13 +267,13 @@ def _store_files(idx):
 
 
 def test_partial_commit_replay_replaces_its_own_files(spark, tmp_path):
-    """A delivery publishes one epoch-named file per store (one per
-    touched bucket in the index): a replay after a crash before the
-    watermark write replaces those files instead of adding copies, and
-    leaves the index rows as they were. Docs 3..14 share no bucket with
-    any other doc, so their buckets are single-member on first delivery
-    and hold their own index rows on the replay, in pbucket dirs the
-    replay also rewrites for docs 1 and 2: they must stay admitted."""
+    """A delivery publishes one epoch-named file per store: a replay
+    after a crash before the watermark write replaces those files
+    instead of adding copies, and leaves the index rows as they were.
+    Docs 3..14 share no bucket with any other doc, so their buckets are
+    single-member on first delivery and hold their own index rows on
+    the replay, in the file the replay also rewrites for docs 1 and 2:
+    they must stay admitted."""
     idx = IngestDedupIndex(str(tmp_path / "state"))
     idx.process_batch(_mk_batch(spark, [(0, DUP_TEXT)]), epoch_id=0)
     with open(idx._watermark_path) as f:
@@ -340,6 +295,24 @@ def test_partial_commit_replay_replaces_its_own_files(spark, tmp_path):
     assert _rows(idx.read_index(spark)) == index
 
 
+def test_each_delivery_publishes_one_index_file(spark, tmp_path):
+    """N deliveries leave exactly N files in the band index (and in the
+    gram store): one flat epoch file per store per delivery, however
+    many band buckets a delivery touches."""
+    idx = IngestDedupIndex(str(tmp_path / "state"))
+    n = 3
+    for e in range(n):
+        rows = [
+            (i, f"doc {i} alone says " + " ".join(f"d{i}w{j}" for j in range(12)))
+            for i in range(10 * e, 10 * e + 10)
+        ]
+        idx.process_batch(_mk_batch(spark, rows), epoch_id=e)
+    files = _store_files(idx)
+    want = [f"part-{e:020d}.parquet" for e in range(n)]
+    assert files[idx.index_path] == want
+    assert files[idx.grams_path] == want
+
+
 def test_gram_store_read_runs_no_job(spark, tmp_path):
     """The gram store is read with its declared schema: no schema
     inference job."""
@@ -354,10 +327,12 @@ def test_gram_store_read_runs_no_job(spark, tmp_path):
 
 
 # Spark jobs of one delivery (the second of two sf0.001 halves, so the
-# probe reads a persisted index and gram store), local[8]: 29 with the
-# driver publishing epoch files, 34 when three DataFrameWriter appends
-# wrote the stores and the gram store was read with schema inference
-DELIVERY_JOB_CEILING = 29
+# probe reads a persisted index and gram store), local[8]: 22 with a
+# flat band index (one epoch file per store), 29 when the index was
+# split into 64 hash-bucket dirs and each probe collected its touched
+# buckets first, 34 when three DataFrameWriter appends wrote the stores
+# and the gram store was read with schema inference
+DELIVERY_JOB_CEILING = 22
 
 
 def test_delivery_job_ceiling(spark, tmp_path):
