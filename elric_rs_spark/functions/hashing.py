@@ -153,3 +153,14 @@ def minhash_signature(gram_hashes_col: Column) -> list[Column]:
         F.array_min(F.transform(gram_hashes_col, minhash_k_fn(k))).alias(f"mh_{k}")
         for k in range(MINHASH_K)
     ]
+
+
+def hex13_sql(expr: str) -> str:
+    """DuckDB: first 13 hex chars of md5-expression `expr` as a BIGINT
+    (< 2^52) — all INTEGER-LITERAL weights so the arithmetic never
+    leaves BIGINT (the q_agg_approx_portable construction)."""
+    return " + ".join(
+        f"(strpos('0123456789abcdef', substring({expr}, {i}, 1)) - 1)"
+        f" * {16 ** (13 - i)}"
+        for i in range(1, 14)
+    )

@@ -1,5 +1,13 @@
 """Vector (embedding) expression library — cosine/dot/norm over
-array<double> columns with built-in higher-order functions.
+array<double> columns, exact integer dots over micro-unit arrays, and the
+all-pairs expansion of a sorted array, all with built-in higher-order
+functions.
+
+Fused kernels: a kernel that dots each vector against a small fixed set
+of integer arrays (LSH hyperplanes, IVF anchors) projects `micro_array`
+once per vector, cross-joins the set as a broadcast, and evaluates
+`int_dot` per row. No per-dimension explode and no (vector, plane)
+aggregate: the rows out are the rows the kernel needs.
 
 Scale note: HOF lambdas evaluate interpreted (outside whole-stage
 codegen). At 64 dims that costs microseconds per row and avoids any
@@ -30,3 +38,36 @@ def norm_l2(a) -> Column:
 
 def cosine(a, b) -> Column:
     return dot(a, b) / (norm_l2(a) * norm_l2(b))
+
+
+def micro_array(col) -> Column:
+    """Each component as exact BIGINT micro-units,
+    round(cast(x as double) * 1e6): every sum over them is
+    order-independent and engine-exact."""
+    return F.transform(col, lambda x: F.round(x.cast("double") * 1000000).cast("long"))
+
+
+def int_dot(a, b) -> Column:
+    """BIGINT dot of two integer arrays with SQL SUM semantics, so it
+    equals the exploded component join + SUM: NULL products are skipped,
+    the dot is NULL when no product is non-NULL, and positions past the
+    shorter array pair with NULL (a 65th component against a 64-dim
+    plane adds nothing)."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x * y),
+        F.lit(None).cast("long"),
+        lambda acc, p: F.coalesce(acc + p, acc, p),
+    )
+
+
+def sorted_pairs(arr, make) -> Column:
+    """Every i < j pair of array `arr` as `make(arr[i], arr[j])`, in
+    order: sort `arr` first and each pair comes out (smaller, larger)."""
+    return F.flatten(
+        F.transform(
+            arr,
+            lambda x, i: F.transform(
+                F.slice(arr, i + 2, F.size(arr)), lambda y: make(x, y)
+            ),
+        )
+    )

@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from elric_rs_spark.buildlog import pin, session_memo
+from elric_rs_spark.functions.hashing import hex13_sql
 from elric_rs_spark.registry import query
 from elric_rs_spark.tables import load_table
 
@@ -1270,14 +1271,6 @@ def q_sketch_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
 _KMV_FULL = 1 << 52
 
 
-def _hex13_sql(col: str) -> str:
-    return " + ".join(
-        f"(strpos('0123456789abcdef', substring({col}, {i}, 1)) - 1)"
-        f" * {16 ** (13 - i)}"
-        for i in range(1, 14)
-    )
-
-
 @query(
     "q_sketch_intersect",
     oracle=f"""
@@ -1294,7 +1287,7 @@ kept AS (SELECT flag, h FROM bottom WHERE rn <= {KMV_K}),
 thr AS (
   SELECT flag, CAST(count(*) AS BIGINT) AS k_used,
          CASE WHEN count(*) < {KMV_K} THEN {_KMV_FULL}
-              ELSE ({_hex13_sql("max(h)")}) END AS v_thr
+              ELSE ({hex13_sql("max(h)")}) END AS v_thr
   FROM kept GROUP BY flag
 ),
 pairs AS (
@@ -1304,7 +1297,7 @@ pairs AS (
 ),
 common AS (
   SELECT a.flag AS flag_a, b.flag AS flag_b, a.h,
-         ({_hex13_sql("a.h")}) AS vh
+         ({hex13_sql("a.h")}) AS vh
   FROM kept a JOIN kept b ON a.h = b.h AND a.flag < b.flag
 ),
 stats AS (

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from elric_rs_spark.buildlog import pin
+from elric_rs_spark.functions.hashing import hex13_sql
 from elric_rs_spark.operators.dedup import labels_for, q_dedup_minhash
 from elric_rs_spark.operators.sampling import HASH_EXPR
 from elric_rs_spark.registry import query
@@ -860,12 +861,6 @@ QLOGIT_BUCKETS = 256
 QLOGIT_SPAN = 2001  # weights uniform in [-1000, 1000] milli-nats
 
 
-def _qlogit_hex13(expr: str) -> str:
-    from elric_rs_spark.operators.similarity import _hex13_sql
-
-    return _hex13_sql(expr)
-
-
 @query(
     "q_quality_logit",
     oracle=f"""
@@ -875,7 +870,7 @@ WITH toks AS (
 ),
 w AS (
   SELECT printf('%02x', i) AS bucket,
-         ({_qlogit_hex13("md5('w' || printf('%02x', i))")}) % {QLOGIT_SPAN}
+         ({hex13_sql("md5('w' || printf('%02x', i))")}) % {QLOGIT_SPAN}
            - 1000 AS w_mnat
   FROM range(0, {QLOGIT_BUCKETS}) t(i)
 ),
@@ -964,7 +959,7 @@ WITH toks AS (
 ),
 w AS (
   SELECT printf('%02x', i) AS bucket,
-         ({_qlogit_hex13("md5('w' || printf('%02x', i))")}) % {QLOGIT_SPAN}
+         ({hex13_sql("md5('w' || printf('%02x', i))")}) % {QLOGIT_SPAN}
            - 1000 AS w_mnat
   FROM range(0, {QLOGIT_BUCKETS}) t(i)
 ),
@@ -1174,7 +1169,7 @@ WITH toks AS (
 ),
 w AS (
   SELECT printf('%02x', i) AS bucket,
-         ({_qlogit_hex13("md5('w' || printf('%02x', i))")}) % {QLOGIT_SPAN}
+         ({hex13_sql("md5('w' || printf('%02x', i))")}) % {QLOGIT_SPAN}
            - 1000 AS w_mnat
   FROM range(0, {QLOGIT_BUCKETS}) t(i)
 ),
@@ -1382,7 +1377,7 @@ WITH toks AS (
 ),
 w AS (
   SELECT printf('%02x', i) AS bucket,
-         ({_qlogit_hex13("md5('w' || printf('%02x', i))")}) % {QLOGIT_SPAN}
+         ({hex13_sql("md5('w' || printf('%02x', i))")}) % {QLOGIT_SPAN}
            - 1000 AS w_mnat
   FROM range(0, {QLOGIT_BUCKETS}) t(i)
 ),
@@ -1597,9 +1592,7 @@ SPLIT_VAL_PCT = 90
 
 def _split_oracle() -> str:
     from elric_rs_spark.operators.dedup import _PORTABLE_PAIR_CTES
-    from elric_rs_spark.operators.similarity import _hex13_sql
-
-    hex13 = _hex13_sql("md5('split:' || CAST(rep AS VARCHAR))")
+    hex13 = hex13_sql("md5('split:' || CAST(rep AS VARCHAR))")
     return f"""
 WITH RECURSIVE {_PORTABLE_PAIR_CTES},
 edges AS (
@@ -1748,10 +1741,8 @@ def q_split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _curation_v5_oracle() -> str:
     from elric_rs_spark.operators.dedup import _PORTABLE_PAIR_CTES
-    from elric_rs_spark.operators.similarity import _hex13_sql
-
     split_md5 = "md5('split:' || CAST(rep AS VARCHAR))"
-    split_b = f"({_hex13_sql(split_md5)}) % 100"
+    split_b = f"({hex13_sql(split_md5)}) % 100"
     split_case = f"""CASE WHEN {split_b} < {SPLIT_TRAIN_PCT} THEN 'train'
               WHEN {split_b} < {SPLIT_VAL_PCT} THEN 'val'
               ELSE 'test' END"""
@@ -1773,7 +1764,7 @@ labels AS (
 qtoks AS (SELECT doc_id, unnest(t) AS tok FROM toks),
 w AS (
   SELECT printf('%02x', i) AS bucket,
-         ({_qlogit_hex13("md5('w' || printf('%02x', i))")}) % {QLOGIT_SPAN}
+         ({hex13_sql("md5('w' || printf('%02x', i))")}) % {QLOGIT_SPAN}
            - 1000 AS w_mnat
   FROM range(0, {QLOGIT_BUCKETS}) t(i)
 ),

@@ -31,11 +31,13 @@ from elric_rs_spark.functions.hashing import (
     LSH_ROWS,
     MINHASH_K,
     grams_from_token_hashes as _grams_from_token_hashes,
+    hex13_sql,
     minhash_min_aggs as _minhash_min_aggs,
     rotl64 as _rotl64,
     token_hashes as _token_hashes,
     word_ngrams as _word_ngrams,
 )
+from elric_rs_spark.functions.vector import sorted_pairs
 
 
 @query(
@@ -196,14 +198,9 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # Bucket docs sharing a band signature; emit ordered in-bucket pairs.
     ds = F.array_sort(F.collect_set("doc_id"))
-    pair_expr = F.flatten(
-        F.transform(
-            F.col("ds"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ds"), i + 2, F.size(F.col("ds"))),
-                lambda y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
-            ),
-        )
+    pair_expr = sorted_pairs(
+        "ds",
+        lambda x, y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
     )
     cand = (
         banded.groupBy("band_id", "band_sig")
@@ -367,20 +364,15 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # (3) in-bucket ordered pairs, signatures carried in the bucket
     ds = F.array_sort(F.collect_set(F.struct("doc_id", "simhash")))
-    pair_expr = F.flatten(
-        F.transform(
-            F.col("ds"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ds"), i + 2, F.size(F.col("ds"))),
-                lambda y: F.struct(
-                    x["doc_id"].alias("doc_a"),
-                    y["doc_id"].alias("doc_b"),
-                    F.bit_count(x["simhash"].bitwiseXOR(y["simhash"])).alias(
-                        "hamming"
-                    ),
-                ),
+    pair_expr = sorted_pairs(
+        "ds",
+        lambda x, y: F.struct(
+            x["doc_id"].alias("doc_a"),
+            y["doc_id"].alias("doc_b"),
+            F.bit_count(x["simhash"].bitwiseXOR(y["simhash"])).alias(
+                "hamming"
             ),
-        )
+        ),
     )
     cross_pairs = (
         banded.groupBy("chunk_id", "chunk")
@@ -869,7 +861,7 @@ PMH_CONSTS = _pmh_consts()
 
 def _hex7_sql(expr: str, start: int) -> str:
     """DuckDB: 7 hex chars of `expr` starting at 1-based `start` as a
-    BIGINT (< 2^28) — integer-literal weights, the _hex13_sql pattern."""
+    BIGINT (< 2^28) — integer-literal weights, the hex13_sql pattern."""
     return " + ".join(
         f"(strpos('0123456789abcdef', substring({expr}, {start + i}, 1)) - 1)"
         f" * {16 ** (6 - i)}"
@@ -959,14 +951,9 @@ def _portable_candidates(spark: SparkSession, grams: DataFrame) -> DataFrame:
     bands = portable_band_signatures(spark, grams)
     # slice of the sorted member set = the cap's keep-lowest-ids rule
     ds = F.slice(F.array_sort(F.collect_set("doc_id")), 1, PMH_BUCKET_CAP)
-    pair_expr = F.flatten(
-        F.transform(
-            F.col("ds"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ds"), i + 2, F.size(F.col("ds"))),
-                lambda y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
-            ),
-        )
+    pair_expr = sorted_pairs(
+        "ds",
+        lambda x, y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
     )
     return (
         bands.groupBy("band", "sig")
@@ -1375,14 +1362,9 @@ def q_dedup_simhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.explode(F.array(*combo_structs)).alias("c")
     ).select("doc_id", "c.chunk", "c.piece")
     ds = F.array_sort(F.collect_set("doc_id"))
-    pair_expr = F.flatten(
-        F.transform(
-            F.col("ds"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ds"), i + 2, F.size(F.col("ds"))),
-                lambda y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
-            ),
-        )
+    pair_expr = sorted_pairs(
+        "ds",
+        lambda x, y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
     )
     cand = (
         chunks.groupBy("chunk", "piece")
@@ -1499,12 +1481,6 @@ SEMANTIC_T_DEN_SQ = 400
 SEMANTIC_CELL_CAP = 512
 
 
-def _semantic_hex13(expr: str) -> str:
-    from elric_rs_spark.operators.similarity import _hex13_sql
-
-    return _hex13_sql(expr)
-
-
 @query(
     "q_dedup_semantic",
     oracle=f"""
@@ -1545,7 +1521,7 @@ csize AS (
 ),
 subs AS (
   SELECT a.vec_id, a.cluster,
-         ({_semantic_hex13("md5('s' || a.vec_id)")})
+         ({hex13_sql("md5('s' || a.vec_id)")})
            % ((c.n_c + {SEMANTIC_CELL_CAP - 1}) // {SEMANTIC_CELL_CAP}) AS sub
   FROM assign a JOIN csize c ON c.cluster = a.cluster
 ),
@@ -2140,7 +2116,7 @@ def substring_coverage(d: DataFrame) -> DataFrame:
 # sf30's 600k) bucket occupancy grows with n again and pair volume goes
 # QUADRATIC (measured: ~8M capped candidate pairs at sf10 -> 74.5M at
 # sf30, 9.3x for 3x data). The fix drops the single-BIGINT pack: each
-# table's key is aggregated DIRECTLY over its own plane slice
+# table's key is built DIRECTLY from its own plane slice
 # (key_t = sum of [dot_{t*bits+j} >= 0] << j), so the width cap is now
 # per-TABLE (24 bits = 268M expected vectors per table before the next
 # ceiling — and lifting it further is one constant). Plane work is
@@ -2166,22 +2142,32 @@ PDLSH_BUCKET_CAP = 256
 # log2 in their own libm, and a 1-ulp difference near an integer result
 # would flip the band width between engines and break bit-identical
 # grading. Value-identical to the log2 form for every n >= 1.
+# A higher floor (q_sim_lsh_portable's 8) counts only the thresholds
+# above it, so both widths come from this one rule.
 PDLSH_BIT_THRESHOLDS = [
     (1 << (b - 1)) * PDLSH_TARGET_BUCKET
     for b in range(PDLSH_MIN_BITS + 1, PDLSH_MAX_BITS + 1)
 ]
-_PDLSH_BITS_SQL = f"CAST({PDLSH_MIN_BITS} + " + " + ".join(
-    f"(CASE WHEN count(*) > {t} THEN 1 ELSE 0 END)"
-    for t in PDLSH_BIT_THRESHOLDS
-) + " AS BIGINT)"
 
 
-def _pdlsh_bits_col():
-    """Spark aggregate-expression form of _PDLSH_BITS_SQL (same
-    thresholds, same integer arithmetic)."""
+def _pdlsh_bits_sql(min_bits: int) -> str:
+    """DuckDB aggregate: the band width of a corpus of count(*) vectors,
+    at least min_bits."""
+    return f"CAST({min_bits} + " + " + ".join(
+        f"(CASE WHEN count(*) > {t} THEN 1 ELSE 0 END)"
+        for t in PDLSH_BIT_THRESHOLDS[min_bits - PDLSH_MIN_BITS :]
+    ) + " AS BIGINT)"
+
+
+_PDLSH_BITS_SQL = _pdlsh_bits_sql(PDLSH_MIN_BITS)
+
+
+def _pdlsh_bits_col(min_bits: int = PDLSH_MIN_BITS):
+    """Spark aggregate-expression form of _pdlsh_bits_sql(min_bits)
+    (same thresholds, same integer arithmetic)."""
     cnt = F.count(F.lit(1))
-    bits = F.lit(PDLSH_MIN_BITS)
-    for t in PDLSH_BIT_THRESHOLDS:
+    bits = F.lit(min_bits)
+    for t in PDLSH_BIT_THRESHOLDS[min_bits - PDLSH_MIN_BITS :]:
         bits = bits + F.when(cnt > t, F.lit(1)).otherwise(F.lit(0))
     return bits.cast("long")
 
@@ -2267,11 +2253,13 @@ def q_dedup_embed_lsh_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-components (bit-identical bucket membership), integer
     cross-products for the cosine, ties at the top-20 cut line broken
     on (vec_a, vec_b). Scale shape mirrors the production kernel —
-    signature via broadcast weight join + one map-side-combined (vec,
-    plane) aggregate, candidates from (table, key) bucket groupBy,
-    exact cosine touches candidates only, final top-20 is TakeOrdered —
-    with the band width derived IN-PLAN from the corpus size (one-row
-    count broadcast; see the PDLSH constants comment for the measured
+    per-table keys from one projection per (vector, table) against a
+    broadcast of the table's plane arrays (similarity.portable_lsh_bands,
+    shared with q_sim_lsh_portable and q_sim_recall), candidates from
+    (table, key) bucket groupBy, exact cosine touches candidates only,
+    final top-20 is TakeOrdered — with the band width derived IN-PLAN
+    from the corpus size (one-row count broadcast; see the PDLSH
+    constants comment for the measured
     sf1 quadratic blow-up that fixed bits=4 produced, and the round-9
     sf30 pack-ceiling finding that moved key aggregation per-TABLE) and
     a deterministic PDLSH_BUCKET_CAP guard on pathological buckets.
@@ -2280,187 +2268,29 @@ def q_dedup_embed_lsh_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     filtered ONCE at the source (not just at the verify stage), so
     candidate generation and the verify join see the same vector set;
     the oracle applies the identical predicate (wf CTE)."""
-    from elric_rs_spark.operators.similarity import EMB_DIM
+    from elric_rs_spark.operators.similarity import (
+        EMB_DIM,
+        _micro_arrays,
+        portable_lsh_pairs,
+    )
 
     # r12 (VERDICT r11 #6 — the kernel twin's r11 pin applied here):
-    # the finalized plan held FOUR embeddings scans (comp for the
-    # signature chain, nb's count, both verify array sides; 2 reused) —
-    # the same optimizer-defeated sharing as q_dedup_minhash's grams.
-    # ONE eager DISK_ONLY pin materializes the cast micro arrays +
-    # per-vector nsq fold + label; everything downstream (components,
-    # band-width count, both verify sides, the final label join)
-    # derives from the pinned rows. micro == round(cast(x as double)
-    # * 1e6) per element exactly as _micro_comp computed it, so every
-    # downstream integer is bit-identical; proven row-identical pre/post
-    # at sf0.001/0.01 (full oracle) and the plan shows 0 embeddings
-    # scans in the query body.
-    def _fold(col, fn):
-        return F.aggregate(col, F.lit(0).cast("long"), fn)
-
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    # the finalized plan held FOUR embeddings scans (the signature
+    # chain, nb's count, both verify array sides; 2 reused) — the same
+    # optimizer-defeated sharing as q_dedup_minhash's grams. ONE eager
+    # DISK_ONLY pin materializes the micro arrays, the per-vector nsq
+    # and the label; the bands, the band-width count, both verify sides
+    # and the final label join all read the pinned rows, and the plan
+    # shows 0 embeddings scans in the query body.
     e = pin(
-        load_table(spark, sf_dir, "embeddings")
-        .select("vec_id", "label", "embedding")
-        .filter(F.size("embedding") == EMB_DIM)
-        .select(
-            "vec_id",
-            "label",
-            F.transform(
-                "embedding",
-                lambda x: F.round(x.cast("double") * 1000000).cast("long"),
-            ).alias("m"),
+        _micro_arrays(
+            load_table(spark, sf_dir, "embeddings")
+            .select("vec_id", "label", "embedding")
+            .filter(F.size("embedding") == EMB_DIM)
         )
-        .withColumn("nsq", _fold(F.col("m"), lambda acc, x: acc + x * x))
-        .repartition(n_parts, "vec_id")
-    )
-    comp = e.select("vec_id", F.posexplode("m").alias("pos", "micro")).select(
-        "vec_id",
-        (F.col("pos") + 1).cast("long").alias("d"),
-        "micro",
-    )
-    # corpus-adaptive band width, derived inside the plan by integer
-    # threshold counting (see PDLSH_BIT_THRESHOLDS — no cross-engine libm)
-    nb = e.agg(_pdlsh_bits_col().alias("bits"))
-    # md5 ±1-sign weight table (same (p, d) seed family as the 16-plane
-    # _plsh_bands signature; planes 0..15 coincide), trimmed IN-PLAN to
-    # the tables*bits planes this corpus actually needs
-    dims = spark.range(1, EMB_DIM + 1).select(F.col("id").alias("d"))
-    planes = spark.range(PDLSH_MAX_PLANES).select(
-        F.col("id").cast("int").alias("p")
-    )
-    sign_src = F.md5(
-        F.concat(F.col("p").cast("string"), F.lit("#"), F.col("d").cast("string"))
-    )
-    w = (
-        planes.crossJoin(dims)
-        .select(
-            "p",
-            "d",
-            F.when(
-                F.substring(sign_src, 1, 1).isin(*"01234567"), F.lit(1)
-            ).otherwise(F.lit(-1)).cast("long").alias("w"),
-        )
-        .crossJoin(F.broadcast(nb))
-        .filter(F.col("p") < F.lit(PDLSH_TABLES) * F.col("bits"))
-        .select("p", "d", "w")
-    )
-    dots = (
-        comp.join(F.broadcast(w), "d")
-        .groupBy("vec_id", "p")
-        .agg(F.sum(F.col("micro") * F.col("w")).alias("dot"))
-    )
-    # per-table key aggregated DIRECTLY over the table's plane slice
-    # (key_t bit j = sign of plane t*bits+j) — no single-BIGINT
-    # signature pack, hence no 4*bits <= 63 width ceiling
-    bands = (
-        dots.crossJoin(F.broadcast(nb))
-        .groupBy("vec_id", F.expr("p div bits").cast("long").alias("t"))
-        .agg(
-            F.sum(
-                F.when(
-                    F.col("dot") >= 0,
-                    F.expr(
-                        "shiftleft(CAST(1 AS BIGINT), CAST(p % bits AS INT))"
-                    ),
-                ).otherwise(F.lit(0).cast("long"))
-            ).alias("key")
-        )
-    )
-    from pyspark.sql import Window as _W
-
-    banded = (
-        bands.withColumn(
-            "rn",
-            F.row_number().over(
-                _W.partitionBy("t", "key").orderBy("vec_id")
-            ),
-        )
-        .filter(F.col("rn") <= PDLSH_BUCKET_CAP)
-        .drop("rn")
-    )
-    ds = F.array_sort(F.collect_set("vec_id"))
-    pair_expr = F.flatten(
-        F.transform(
-            F.col("ds"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ds"), i + 2, F.size(F.col("ds"))),
-                lambda y: F.struct(x.alias("vec_a"), y.alias("vec_b")),
-            ),
-        )
-    )
-    cand = (
-        banded.groupBy("t", "key")
-        .agg(ds.alias("ds"))
-        .filter(F.size("ds") > 1)
-        .select(F.explode(pair_expr).alias("pr"))
-        .select("pr.vec_a", "pr.vec_b")
-        .distinct()
-    )
-    # exact-cosine verify in ARRAY form (the q_dedup_semantic r5 fix,
-    # applied here by the round-9 sf30 triplicate): the component-row
-    # form pushed |cand| x 64 rows (1.08B at sf30, ~43 GB of sort-merge
-    # state on the 16g heap) through the verify join — measured 6.0x
-    # wall for 3x data where the design bound is 3.43x. One packed
-    # micro-array per vector joins each pair ONCE; the BIGINT zip_with
-    # dot and the per-side norm folds are the same exact-integer sums in
-    # a different evaluation order-independent grouping, so cosine is
-    # bit-identical. The oracle keeps its component CTE.
-    #
-    # (e is already length-filtered at the source — see the docstring's
-    # fixed-length precondition — so zip_with never null-pads and the
-    # candidate and verify stages see the same vector set.)
-    # Per-VECTOR squared norm folded once in the pin (r11, guide §4.2)
-    # instead of per candidate pair in the verify: candidates outnumber
-    # vectors, so the per-pair saa/sbb re-folds were redundant work. The
-    # nsq column rides the EXISTING shuffle-hash join sides (one extra
-    # BIGINT next to the m array) — no separate norm table, so the
-    # VERDICT r9 #3 corpus-broadcast cliff still cannot occur. The fold
-    # is the identical exact-integer sum over the identical array, so
-    # saa/sbb (and hence cosine) are bit-identical.
-    marr = e.select("vec_id", "m", "nsq")
-
-    sab = _fold(F.zip_with("ma", "mb", lambda x, y: x * y), lambda acc, x: acc + x)
-    saa = F.col("nsq_a")
-    sbb = F.col("nsq_b")
-    # SHUFFLE_HASH on the vector side: below the broadcast threshold AQE
-    # broadcasts it anyway, above it (sf30's 312 MB array table) the
-    # default SMJ would SORT the pair side with attached arrays (~12 GB
-    # at sf30 — measured 82 s vs 6 s at sf10, a 13.7x cliff for 2.8x
-    # pairs). Hash-building the per-partition vector slice streams the
-    # pairs unsorted; at any corpus size the build side is
-    # |vectors|/shuffle_partitions rows.
-    prods = (
-        cand.join(
-            marr.select(
-                F.col("vec_id").alias("vec_a"),
-                F.col("m").alias("ma"),
-                F.col("nsq").alias("nsq_a"),
-            ).hint("shuffle_hash"),
-            "vec_a",
-        )
-        .join(
-            marr.select(
-                F.col("vec_id").alias("vec_b"),
-                F.col("m").alias("mb"),
-                F.col("nsq").alias("nsq_b"),
-            ).hint("shuffle_hash"),
-            "vec_b",
-        )
-        .select(
-            "vec_a",
-            "vec_b",
-            sab.alias("sab"),
-            saa.alias("saa"),
-            sbb.alias("sbb"),
-        )
-    )
-    cosine = F.round(
-        F.col("sab").cast("double")
-        / (F.sqrt(F.col("saa").cast("double")) * F.sqrt(F.col("sbb").cast("double"))),
-        6,
     )
     return (
-        prods.withColumn("cosine", cosine)
+        portable_lsh_pairs(spark, e, PDLSH_TABLES, PDLSH_MIN_BITS)
         .join(e.select(F.col("vec_id").alias("vec_a"), "label"), "vec_a")
         .select("vec_a", "vec_b", "label", "cosine")
         .orderBy(F.col("cosine").desc(), "vec_a", "vec_b")

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from elric_rs_spark.buildlog import pin, session_memo
+from elric_rs_spark.functions.vector import sorted_pairs
 from elric_rs_spark.registry import query
 from elric_rs_spark.session import dir_parquet_bytes
 from elric_rs_spark.tables import load_table
@@ -102,15 +103,7 @@ def _copurchase_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.array_sort(F.collect_set("l_suppkey")).alias("ss"))
         .filter(F.size("ss") > 1)
     )
-    pair_expr = F.flatten(
-        F.transform(
-            F.col("ss"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ss"), i + 2, F.size(F.col("ss"))),
-                lambda y: F.struct(x.alias("a"), y.alias("b")),
-            ),
-        )
-    )
+    pair_expr = sorted_pairs("ss", lambda x, y: F.struct(x.alias("a"), y.alias("b")))
     raw = (
         per_order.select(F.explode(pair_expr).alias("p"))
         .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))

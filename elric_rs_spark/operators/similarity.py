@@ -17,26 +17,33 @@ so results are reproducible with no RNG state anywhere.
 
 from __future__ import annotations
 
+import hashlib
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from elric_rs_spark.buildlog import pin, session_memo
+from elric_rs_spark.functions.hashing import hex13_sql
+from elric_rs_spark.operators.dedup import (
+    PDLSH_BUCKET_CAP,
+    PDLSH_MAX_BITS,
+    PDLSH_MAX_PLANES,
+    PDLSH_TABLES,
+    _pdlsh_bits_col,
+    _pdlsh_bits_sql,
+)
 from elric_rs_spark.registry import query
 from elric_rs_spark.tables import load_table
 from elric_rs_spark.functions.vector import (
     as_double as _as_double,
     dot as _dot,
+    int_dot,
+    micro_array,
     norm_l2 as _norm,
+    sorted_pairs,
 )
 
 EMB_DIM = 64
-# Multi-table banding: 4 independent tables x 16 hyperplanes each. One
-# 64-bit sign signature is computed per vector; each 16-bit chunk is one
-# table's bucket key. 16-bit keys make buckets cluster-sized (2^16 keys
-# per table) instead of the round-1 quadratic 2^8=256-bucket layout.
-LSH_TABLES = 4
-LSH_TABLE_BITS = 16
-LSH_PLANES = LSH_TABLES * LSH_TABLE_BITS  # 64
 
 
 @query(
@@ -76,7 +83,7 @@ def q_sim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _hyperplanes(n_planes: int = LSH_PLANES):
+def _hyperplanes(n_planes: int):
     """n_planes deterministic pseudo-random hyperplanes as array literals:
     component (p, d) = hash-derived value in [-1, 1]. Extending n_planes
     never changes existing planes (the seed is per-(p, d))."""
@@ -94,61 +101,6 @@ def _hyperplanes(n_planes: int = LSH_PLANES):
     return [[h64(p, d) for d in range(EMB_DIM)] for p in range(n_planes)]
 
 
-def _plane_df(spark: SparkSession, n_planes: int = LSH_PLANES):
-    """The hyperplanes as a broadcastable (p, d, w) long-form table —
-    the matmul-by-join layout (plane id, dimension, weight)."""
-    rows = [
-        (p, d, w)
-        for p, row in enumerate(_hyperplanes(n_planes))
-        for d, w in enumerate(row)
-    ]
-    return spark.createDataFrame(rows, "p int, d int, w double")
-
-
-def hyperplane_signatures(spark: SparkSession, vecs: DataFrame,
-                          id_col: str = "vec_id", vec_col: str = "v") -> DataFrame:
-    """64-bit sign signature per vector (bit p = sign of dot with plane p),
-    computed as a broadcast matmul: posexplode dims -> broadcast-join the
-    plane table -> groupBy (id, p) partial-sum -> bit_or assembly.
-
-    Why not 64 per-plane `dot()` expressions: HOF lambdas evaluate
-    interpreted and a 64-wide dot tree is both slow to plan-compile and
-    slow to run (round-1 measured trap). The join form stays in
-    whole-stage codegen with map-side combine, and at cluster scale the
-    only shuffle is the (id, p) partial-sum reusing the id partitioning."""
-    el = vecs.select(id_col, F.posexplode(vec_col).alias("d", "val"))
-    dots = (
-        el.join(F.broadcast(_plane_df(spark)), "d")
-        .groupBy(id_col, "p")
-        .agg(F.sum(F.col("val") * F.col("w")).alias("dot"))
-    )
-    # shiftleft() in the Python API takes only a literal shift; the SQL
-    # form accepts a column for the per-row plane index
-    bit = F.when(
-        F.col("dot") >= 0, F.expr("shiftleft(CAST(1 AS BIGINT), p)")
-    ).otherwise(F.lit(0).cast("long"))
-    return dots.groupBy(id_col).agg(F.bit_or(bit).alias("sig"))
-
-
-def lsh_band_keys(sig_df: DataFrame, id_col: str = "vec_id") -> DataFrame:
-    """Explode the 64-bit signature into LSH_TABLES (t, key) band rows —
-    one 16-bit chunk per independent table (same pigeonhole shape as
-    SimHash's chunk blocking in dedup.py)."""
-    mask = (1 << LSH_TABLE_BITS) - 1
-    chunk_structs = [
-        F.struct(
-            F.lit(t).alias("t"),
-            F.shiftrightunsigned("sig", LSH_TABLE_BITS * t)
-            .bitwiseAND(F.lit(mask))
-            .alias("key"),
-        )
-        for t in range(LSH_TABLES)
-    ]
-    return sig_df.select(
-        id_col, F.explode(F.array(*chunk_structs)).alias("b")
-    ).select(id_col, "b.t", "b.key")
-
-
 def _lsh_banded(spark: SparkSession, vecs: DataFrame, id_col: str,
                 vec_col: str, nb: DataFrame, carry: str | None) -> DataFrame:
     """(id, t, key [, vec, nsq]) band rows from the shared Arrow GEMM
@@ -158,8 +110,6 @@ def _lsh_banded(spark: SparkSession, vecs: DataFrame, id_col: str,
     table), so downstream bucket verify never joins arrays onto pair
     rows (lsh_candidate_cosines)."""
     import numpy as np
-
-    from elric_rs_spark.operators.dedup import PDLSH_MAX_PLANES, PDLSH_TABLES
 
     planes_np = np.asarray(_hyperplanes(PDLSH_MAX_PLANES), dtype=np.float64)
 
@@ -226,12 +176,12 @@ def lsh_candidate_cosines(spark: SparkSession, vecs: DataFrame,
     bit-identical to the join-back form. A pair can surface from up to
     PDLSH_TABLES buckets, always with the identical cosine — callers
     dedup and apply their own rounding/threshold."""
-    nb = vecs.agg(_pdlsh_bits_col_imported().alias("bits"))
+    nb = vecs.agg(_pdlsh_bits_col().alias("bits"))
     banded = _lsh_banded(spark, vecs, id_col, vec_col, nb, carry=nsq_col)
     ds = F.slice(
         F.array_sort(F.collect_set(F.struct(id_col, vec_col, nsq_col))),
         1,
-        256,
+        PDLSH_BUCKET_CAP,
     )
 
     def _cos(x, y):
@@ -242,18 +192,13 @@ def lsh_candidate_cosines(spark: SparkSession, vecs: DataFrame,
         )
         return dot / (F.sqrt(x[nsq_col]) * F.sqrt(y[nsq_col]))
 
-    pair_expr = F.flatten(
-        F.transform(
-            F.col("ds"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ds"), i + 2, F.size(F.col("ds"))),
-                lambda y: F.struct(
-                    x[id_col].alias("id_a"),
-                    y[id_col].alias("id_b"),
-                    _cos(x, y).alias("cosine"),
-                ),
-            ),
-        )
+    pair_expr = sorted_pairs(
+        "ds",
+        lambda x, y: F.struct(
+            x[id_col].alias("id_a"),
+            y[id_col].alias("id_b"),
+            _cos(x, y).alias("cosine"),
+        ),
     )
     return (
         banded.groupBy("t", "key")
@@ -262,12 +207,6 @@ def lsh_candidate_cosines(spark: SparkSession, vecs: DataFrame,
         .select(F.explode(pair_expr).alias("p"))
         .select("p.id_a", "p.id_b", "p.cosine")
     )
-
-
-def _pdlsh_bits_col_imported():
-    from elric_rs_spark.operators.dedup import _pdlsh_bits_col
-
-    return _pdlsh_bits_col()
 
 
 def lsh_candidate_pairs(spark: SparkSession, vecs: DataFrame,
@@ -286,9 +225,9 @@ def lsh_candidate_pairs(spark: SparkSession, vecs: DataFrame,
     twin). Per-table keys are aggregated directly over each table's
     plane slice (key_t bit j = sign of plane t*bits+j), never packed
     into one 64-bit signature, so there is no 4*bits <= 63 ceiling. The
-    hyperplane family stays the engine-internal float h64 seed (planes
-    0..63 coincide with the legacy hyperplane_signatures planes); only
-    the banding geometry is shared with the md5-sign portable twin.
+    hyperplane family stays the engine-internal float h64 seed
+    (_hyperplanes); only the banding geometry is shared with the
+    md5-sign portable twin.
 
     The 256-member deterministic cap (lowest ids kept — the
     PDLSH_BUCKET_CAP rule) bounds pathological buckets. Honesty note
@@ -297,12 +236,6 @@ def lsh_candidate_pairs(spark: SparkSession, vecs: DataFrame,
     in this rows-only kernel); with adaptive width the expected max
     bucket is back near the ~16-member target and the cap is a
     worst-case guard again, not a working truncation."""
-    from elric_rs_spark.operators.dedup import (
-        PDLSH_MAX_PLANES,
-        PDLSH_TABLES,
-        _pdlsh_bits_col,
-    )
-
     nb = vecs.agg(_pdlsh_bits_col().alias("bits"))
     # Band keys in ONE Arrow-vectorized pass (r11, guide §4.2): the old
     # form exploded every vector to 64 dim rows, broadcast-joined the
@@ -319,15 +252,10 @@ def lsh_candidate_pairs(spark: SparkSession, vecs: DataFrame,
     # its first row. Empty/null vectors are filtered exactly as the
     # explode form dropped them (no dim rows -> no dots -> no bands).
     banded = _lsh_banded(spark, vecs, id_col, vec_col, nb, carry=None)
-    ds = F.slice(F.array_sort(F.collect_set(id_col)), 1, 256)
-    pair_expr = F.flatten(
-        F.transform(
-            F.col("ds"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ds"), i + 2, F.size(F.col("ds"))),
-                lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-            ),
-        )
+    ds = F.slice(F.array_sort(F.collect_set(id_col)), 1, PDLSH_BUCKET_CAP)
+    pair_expr = sorted_pairs(
+        "ds",
+        lambda x, y: F.struct(x.alias("id_a"), y.alias("id_b")),
     )
     return (
         banded.groupBy("t", "key")
@@ -347,16 +275,18 @@ def q_sim_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     1. collapse EXACT-duplicate vectors to a representative first
        (xxhash64 of the array; the SimHash trick from dedup.py) — a
        templated corpus cannot explode any bucket with identical rows;
-    2. 4 independent tables x 16-plane sign buckets via one 64-bit
-       signature (hyperplane_signatures — broadcast matmul, codegen);
+    2. 4 independent tables of sign-bucket keys, each `bits` planes
+       wide (the corpus-adaptive PDLSH width), from one Arrow GEMM pass
+       (_lsh_banded via lsh_candidate_cosines);
     3. candidates from ONE groupBy per (table, key) bucket — never an
        all-pairs self-join;
     4. exact cosine verification on candidates only, >= 0.35.
     Collapsed members rejoin as (rep, member, cosine 1.0) rows.
 
     Recall is tuned for near-DUPLICATES (the dedup regime): per table a
-    pair collides with prob p^16 where p = 1 - theta/pi, so recall
-    1-(1-p^16)^4 is ~0.8 at cosine 0.98, ~0.3 at 0.9, negligible by 0.5.
+    pair collides with prob p^bits where p = 1 - theta/pi, so recall is
+    1-(1-p^bits)^4 (at 16 bits ~0.8 at cosine 0.98, ~0.3 at 0.9,
+    negligible by 0.5).
     Mid-similarity mining (cosine ~0.4) is deliberately out of scope for
     banding — that regime belongs to q_sim_ivf's probe search, which
     bounds work by cells probed instead of collision luck."""
@@ -901,9 +831,7 @@ def q_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ~3x the hash cost, which is why the xxhash64 forms stay the at-scale
 # path (the exact trade q_dedup_minhash_portable documents).
 
-PLSH_PLANES = 16   # 2 tables x 8-bit sign chunks
 PLSH_TABLES = 2
-PLSH_BITS = 8
 PLSH_THRESHOLD = 0.35  # same verify threshold as q_sim_lsh
 
 # Corpus-adaptive band width for q_sim_lsh_portable (round-10: the sf10
@@ -917,39 +845,10 @@ PLSH_THRESHOLD = 0.35  # same verify threshold as q_sim_lsh
 # — including both driver grading scales — keeps the original 2x8-bit
 # keys and BIT-IDENTICAL output.
 PLSH_MIN_BITS = 8
-PLSH_MAX_BITS = 24
-PLSH_TARGET_BUCKET = 16
-PLSH_MAX_PLANES = PLSH_TABLES * PLSH_MAX_BITS
-PLSH_BUCKET_CAP = 256
-PLSH_BIT_THRESHOLDS = [
-    (1 << (b - 1)) * PLSH_TARGET_BUCKET
-    for b in range(PLSH_MIN_BITS + 1, PLSH_MAX_BITS + 1)
-]
-_PLSH_BITS_SQL = f"CAST({PLSH_MIN_BITS} + " + " + ".join(
-    f"(CASE WHEN count(*) > {t} THEN 1 ELSE 0 END)"
-    for t in PLSH_BIT_THRESHOLDS
-) + " AS BIGINT)"
 
 
-def _plsh_bits_col():
-    """Spark aggregate-expression form of _PLSH_BITS_SQL (same
-    thresholds, same integer arithmetic)."""
-    cnt = F.count(F.lit(1))
-    bits = F.lit(PLSH_MIN_BITS)
-    for t in PLSH_BIT_THRESHOLDS:
-        bits = bits + F.when(cnt > t, F.lit(1)).otherwise(F.lit(0))
-    return bits.cast("long")
-
-
-def _hex13_sql(expr: str) -> str:
-    """DuckDB: first 13 hex chars of md5-expression `expr` as a BIGINT
-    (< 2^52) — all INTEGER-LITERAL weights so the arithmetic never
-    leaves BIGINT (the q_agg_approx_portable construction)."""
-    return " + ".join(
-        f"(strpos('0123456789abcdef', substring({expr}, {i}, 1)) - 1)"
-        f" * {16 ** (13 - i)}"
-        for i in range(1, 14)
-    )
+def _md5_hex(s: str) -> str:
+    return hashlib.md5(s.encode()).hexdigest()
 
 
 def _micro_comp(e: DataFrame) -> DataFrame:
@@ -978,57 +877,117 @@ def _micro_comp(e: DataFrame) -> DataFrame:
     )
 
 
-def _plsh_bands(
-    spark: SparkSession,
-    comp: DataFrame,
-    tables: int = PLSH_TABLES,
-    bits: int = PLSH_BITS,
+def _micro_arrays(e: DataFrame) -> DataFrame:
+    """e with `embedding` replaced by its micro-unit array `m`
+    (micro_array: the same integers _micro_comp yields per component)
+    and `nsq`, its squared norm by int_dot. Repartitioned on vec_id
+    before the projection, for the reason _micro_comp gives. A NULL or
+    empty embedding yields no row, as it yields no component rows."""
+    n_parts = int(e.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return (
+        e.filter(F.size("embedding") > 0)
+        .repartition(n_parts, "vec_id")
+        .withColumn("m", micro_array("embedding"))
+        .drop("embedding")
+        .withColumn("nsq", int_dot("m", "m"))
+    )
+
+
+def portable_lsh_bands(
+    spark: SparkSession, marr: DataFrame, tables: int, min_bits: int, max_bits: int
 ) -> DataFrame:
-    """(vec_id, t, key) band rows of the md5-portable sign-hyperplane
-    signature — the shared blocking stage of q_sim_lsh_portable and
-    q_sim_recall. Hyperplane component (p, d) is a ±1 sign from one md5
-    hex digit; dots run over exact BIGINT micro-components, so band
-    membership is bit-identical across engines. The SAME 16-plane
-    signature can be re-banded: (tables, bits) chooses the
-    precision/recall point — q_sim_lsh_portable uses 2x8-bit (high
-    precision), q_sim_recall measures the 4x4-bit layout."""
-    dims = spark.range(1, EMB_DIM + 1).select(F.col("id").alias("d"))
-    planes = spark.range(PLSH_PLANES).select(F.col("id").cast("int").alias("p"))
-    sign_src = F.md5(
-        F.concat(F.col("p").cast("string"), F.lit("#"), F.col("d").cast("string"))
-    )
-    w = planes.crossJoin(dims).select(
-        "p",
-        "d",
-        F.when(
-            F.substring(sign_src, 1, 1).isin(*"01234567"), F.lit(1)
-        ).otherwise(F.lit(-1)).cast("long").alias("w"),
-    )
-    dots = (
-        comp.join(F.broadcast(w), "d")
-        .groupBy("vec_id", "p")
-        .agg(F.sum(F.col("micro") * F.col("w")).alias("dot"))
-    )
-    sig = dots.groupBy("vec_id").agg(
-        F.sum(
-            F.when(
-                F.col("dot") >= 0, F.expr("shiftleft(CAST(1 AS BIGINT), p)")
-            ).otherwise(F.lit(0).cast("long"))
-        ).alias("sig")
-    )
-    mask = (1 << bits) - 1
-    chunks = [
-        F.struct(
-            F.lit(t).alias("t"),
-            F.shiftrightunsigned("sig", bits * t)
-            .bitwiseAND(F.lit(mask))
-            .alias("key"),
-        )
-        for t in range(tables)
+    """(vec_id, t, key) rows of the md5 ±1 sign-hyperplane LSH over the
+    micro arrays of `marr` (_micro_arrays) — the one banding stage of
+    q_sim_lsh_portable, q_dedup_embed_lsh_portable and q_sim_recall.
+
+    Plane p's component d is +1 when the first hex digit of md5('p#d')
+    is 0-7 and -1 otherwise (the oracles' `w` CTE), and key_t's bit j is
+    set when the dot with plane t*bits + j is >= 0 (a NULL dot sets 0).
+    bits is the PDLSH threshold count over `marr`, clamped to
+    [min_bits, max_bits]; when the two are equal it is that constant
+    and no count runs. Each vector crosses a broadcast of `tables` rows,
+    each holding its table's plane arrays, and one projection computes
+    the key with int_dot: no component explode and no per-plane
+    aggregate, and each dot equals the oracle's component SUM."""
+    planes = [
+        [1 if _md5_hex(f"{p}#{d}")[0] in "01234567" else -1 for d in range(1, EMB_DIM + 1)]
+        for p in range(tables * max_bits)
     ]
-    return sig.select(
-        "vec_id", F.explode(F.array(*chunks)).alias("b")
-    ).select("vec_id", "b.t", "b.key")
+    tabs = spark.createDataFrame(
+        [(t, planes) for t in range(tables)], "t long, w array<array<bigint>>"
+    )
+    if min_bits == max_bits:
+        bits = F.lit(min_bits)
+    else:
+        nb = marr.agg(_pdlsh_bits_col(min_bits).alias("bits"))
+        tabs = tabs.crossJoin(F.broadcast(nb))
+        bits = F.col("bits")
+    tabs = tabs.select("t", F.slice("w", F.col("t") * bits + 1, bits).alias("w"))
+    one = F.lit(1).cast("long")
+    key = F.aggregate(
+        F.transform(
+            "w",
+            lambda w, j: F.when(
+                int_dot("m", w) >= 0, F.call_function("shiftleft", one, j)
+            ).otherwise(0),
+        ),
+        F.lit(0).cast("long"),
+        lambda acc, b: acc + b,
+    )
+    return marr.crossJoin(F.broadcast(tabs)).select("vec_id", "t", key.alias("key"))
+
+
+def portable_lsh_pairs(
+    spark: SparkSession, marr: DataFrame, tables: int, min_bits: int
+) -> DataFrame:
+    """(vec_a, vec_b, cosine) with vec_a < vec_b: every pair that shares
+    a bucket of portable_lsh_bands (width min_bits..PDLSH_MAX_BITS),
+    each bucket capped to its PDLSH_BUCKET_CAP lowest vec_ids (the
+    oracles' rn <= cap), verified by the exact integer cosine
+    int_dot(ma, mb) / (sqrt(nsq_a) * sqrt(nsq_b)) rounded to 6 places.
+    `marr` (_micro_arrays) must be length-filtered by the caller, so
+    candidate generation and the verify see the same vector set.
+
+    The verify carries one micro array per side into each pair row: the
+    component-row form pushed |cand| x 64 rows (1.08B at sf30, ~43 GB of
+    sort-merge state) through the verify join. SHUFFLE_HASH on each
+    vector side: below the broadcast threshold AQE broadcasts it anyway;
+    above it (sf30's 312 MB array table) the default sort-merge join
+    would sort the pair side with the arrays attached (measured 82 s vs
+    6 s at sf10, a 13.7x cliff for 2.8x pairs). The build side is
+    |vectors|/shuffle_partitions rows at any corpus size, and no
+    corpus-sized table is ever broadcast (VERDICT r9 #3)."""
+    bands = portable_lsh_bands(spark, marr, tables, min_bits, PDLSH_MAX_BITS)
+    ds = F.slice(F.array_sort(F.collect_set("vec_id")), 1, PDLSH_BUCKET_CAP)
+    pair_expr = sorted_pairs(
+        "ds", lambda x, y: F.struct(x.alias("vec_a"), y.alias("vec_b"))
+    )
+    cand = (
+        bands.groupBy("t", "key")
+        .agg(ds.alias("ds"))
+        .filter(F.size("ds") > 1)
+        .select(F.explode(pair_expr).alias("pr"))
+        .select("pr.vec_a", "pr.vec_b")
+        .distinct()
+    )
+
+    def side(s: str) -> DataFrame:
+        return marr.select(
+            F.col("vec_id").alias(f"vec_{s}"),
+            F.col("m").alias(f"m{s}"),
+            F.col("nsq").alias(f"nsq_{s}"),
+        ).hint("shuffle_hash")
+
+    cosine = F.round(
+        int_dot("ma", "mb").cast("double")
+        / (F.sqrt(F.col("nsq_a").cast("double")) * F.sqrt(F.col("nsq_b").cast("double"))),
+        6,
+    )
+    return (
+        cand.join(side("a"), "vec_a")
+        .join(side("b"), "vec_b")
+        .select("vec_a", "vec_b", cosine.alias("cosine"))
+    )
 
 
 @query(
@@ -1043,14 +1002,14 @@ comp AS (
   FROM wf, range(1, 65) t(i)
 ),
 nb AS (
-  SELECT {_PLSH_BITS_SQL} AS bits
+  SELECT {_pdlsh_bits_sql(PLSH_MIN_BITS)} AS bits
   FROM wf
 ),
 w AS (
   SELECT p, i AS d,
          CASE WHEN strpos('01234567', substring(md5(p || '#' || i), 1, 1)) > 0
               THEN 1 ELSE -1 END AS w
-  FROM range(0, {PLSH_MAX_PLANES}) pp(p), range(1, 65) t(i), nb
+  FROM range(0, {PLSH_TABLES * PDLSH_MAX_BITS}) pp(p), range(1, 65) t(i), nb
   WHERE p < {PLSH_TABLES} * nb.bits
 ),
 dots AS (
@@ -1076,7 +1035,7 @@ cand AS (
   FROM members b1
   JOIN members b2 ON b1.t = b2.t AND b1.key = b2.key
                  AND b1.vec_id < b2.vec_id
-  WHERE b1.rn <= {PLSH_BUCKET_CAP} AND b2.rn <= {PLSH_BUCKET_CAP}
+  WHERE b1.rn <= {PDLSH_BUCKET_CAP} AND b2.rn <= {PDLSH_BUCKET_CAP}
 ),
 prods AS (
   SELECT c.vec_a, c.vec_b,
@@ -1108,19 +1067,17 @@ def q_sim_lsh_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     this is a real LSH, not a mock.
 
     ROUND-10 rewrite (the deferred sf10 coverage run measured the fixed
-    2x8-bit form at 21.4 s sf1 -> DNF > 900 s sf10): band width is now
-    CORPUS-ADAPTIVE with per-table key aggregation — the identical
-    geometry as q_dedup_embed_lsh_portable (see the PDLSH constants
-    comment in dedup.py), with MIN_BITS = 8 so both grading scales keep
-    the original keys and bit-identical output — plus the 256-member
+    2x8-bit form at 21.4 s sf1 -> DNF > 900 s sf10): band width is
+    CORPUS-ADAPTIVE — the identical geometry as
+    q_dedup_embed_lsh_portable (see the PDLSH constants comment in
+    dedup.py), with MIN_BITS = 8 so both grading scales keep the
+    original keys and bit-identical output. Bands, the 256-member
     deterministic bucket cap (lowest vec_ids, replayed by the oracle)
-    and the ARRAY-FORM verify from the round-9 sf30 work: one packed
-    BIGINT micro-array per vector joins each candidate pair once via
-    SHUFFLE_HASH (build side = |vectors|/partitions at any scale; the
-    old component-row form pushed |cand| x 64 rows through two
-    sort-merge joins), with sab/saa/sbb folded inline from the arrays
-    the pair rows already carry (never a corpus-sized norm broadcast —
-    VERDICT r9 #3).
+    and the array-form integer verify are portable_lsh_pairs: one
+    projection per (vector, table) against broadcast plane arrays, and
+    one micro array per side joined onto each candidate pair, with the
+    NULL-skipping int_dot for sab and the prefolded per-vector norms
+    (never a corpus-sized norm broadcast — VERDICT r9 #3).
 
     FIXED-LENGTH PRECONDITION (ADVICE r10): ragged / null embeddings are
     filtered ONCE at the source, so candidate generation and the verify
@@ -1134,116 +1091,8 @@ def q_sim_lsh_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", "embedding")
         .filter(F.size("embedding") == EMB_DIM)
     )
-    comp = _micro_comp(e)
-    nb = e.agg(_plsh_bits_col().alias("bits"))
-    dims = spark.range(1, EMB_DIM + 1).select(F.col("id").alias("d"))
-    planes = spark.range(PLSH_MAX_PLANES).select(F.col("id").cast("int").alias("p"))
-    sign_src = F.md5(
-        F.concat(F.col("p").cast("string"), F.lit("#"), F.col("d").cast("string"))
-    )
-    w = (
-        planes.crossJoin(dims)
-        .select(
-            "p",
-            "d",
-            F.when(
-                F.substring(sign_src, 1, 1).isin(*"01234567"), F.lit(1)
-            ).otherwise(F.lit(-1)).cast("long").alias("w"),
-        )
-        .crossJoin(F.broadcast(nb))
-        .filter(F.col("p") < F.lit(PLSH_TABLES) * F.col("bits"))
-        .select("p", "d", "w")
-    )
-    dots = (
-        comp.join(F.broadcast(w), "d")
-        .groupBy("vec_id", "p")
-        .agg(F.sum(F.col("micro") * F.col("w")).alias("dot"))
-    )
-    bands = (
-        dots.crossJoin(F.broadcast(nb))
-        .groupBy("vec_id", F.expr("p div bits").cast("long").alias("t"))
-        .agg(
-            F.sum(
-                F.when(
-                    F.col("dot") >= 0,
-                    F.expr("shiftleft(CAST(1 AS BIGINT), CAST(p % bits AS INT))"),
-                ).otherwise(F.lit(0).cast("long"))
-            ).alias("key")
-        )
-    )
-    from pyspark.sql import Window as _W
-
-    banded = (
-        bands.withColumn(
-            "rn",
-            F.row_number().over(_W.partitionBy("t", "key").orderBy("vec_id")),
-        )
-        .filter(F.col("rn") <= PLSH_BUCKET_CAP)
-        .drop("rn")
-    )
-    ds = F.array_sort(F.collect_set("vec_id"))
-    pair_expr = F.flatten(
-        F.transform(
-            F.col("ds"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ds"), i + 2, F.size(F.col("ds"))),
-                lambda y: F.struct(x.alias("vec_a"), y.alias("vec_b")),
-            ),
-        )
-    )
-    cand = (
-        banded.groupBy("t", "key")
-        .agg(ds.alias("ds"))
-        .filter(F.size("ds") > 1)
-        .select(F.explode(pair_expr).alias("pr"))
-        .select("pr.vec_a", "pr.vec_b")
-        .distinct()
-    )
-    # array-form verify (e is already length-filtered at the source, so
-    # zip_with never null-pads and Spark/oracle see the same vector set)
-    marr = e.select(
-        "vec_id",
-        F.transform(
-            "embedding",
-            lambda x: F.round(x.cast("double") * 1000000).cast("long"),
-        ).alias("m"),
-    )
-
-    def _fold(col, fn):
-        return F.aggregate(col, F.lit(0).cast("long"), fn)
-
-    sab = _fold(F.zip_with("ma", "mb", lambda x, y: x * y), lambda acc, x: acc + x)
-    saa = _fold(F.col("ma"), lambda acc, x: acc + x * x)
-    sbb = _fold(F.col("mb"), lambda acc, x: acc + x * x)
-    prods = (
-        cand.join(
-            marr.select(F.col("vec_id").alias("vec_a"), F.col("m").alias("ma"))
-            .hint("shuffle_hash"),
-            "vec_a",
-        )
-        .join(
-            marr.select(F.col("vec_id").alias("vec_b"), F.col("m").alias("mb"))
-            .hint("shuffle_hash"),
-            "vec_b",
-        )
-        .select(
-            "vec_a",
-            "vec_b",
-            sab.alias("sab"),
-            saa.alias("saa"),
-            sbb.alias("sbb"),
-        )
-    )
-    cosine = F.round(
-        F.col("sab").cast("double")
-        / (F.sqrt(F.col("saa").cast("double")) * F.sqrt(F.col("sbb").cast("double"))),
-        6,
-    )
-    return (
-        prods.withColumn("cosine", cosine)
-        .filter(F.col("cosine") >= PLSH_THRESHOLD)
-        .select("vec_a", "vec_b", "cosine")
-    )
+    pairs = portable_lsh_pairs(spark, _micro_arrays(e), PLSH_TABLES, PLSH_MIN_BITS)
+    return pairs.filter(F.col("cosine") >= PLSH_THRESHOLD)
 
 
 PIVF_CELLS = 16
@@ -1251,22 +1100,28 @@ PIVF_NPROBE = 4
 PIVF_MOD = 2_000_001  # anchor components uniform in [-1e6, 1e6]
 
 
-def _pivf_anchors(spark: SparkSession) -> DataFrame:
-    """(c, d, a): md5-derived coarse-anchor components, uniform integers
-    in [-1e6, 1e6] — O(cells x dims) rows, always broadcast."""
-    cs = spark.range(PIVF_CELLS).select(F.col("id").cast("int").alias("c"))
-    dims = spark.range(1, EMB_DIM + 1).select(F.col("id").alias("d"))
-    hx = F.md5(
-        F.concat(
-            F.lit("a"), F.col("c").cast("string"), F.lit("#"), F.col("d").cast("string")
-        )
-    )
-    return cs.crossJoin(dims).select(
-        "c",
-        "d",
+def _pivf_anchor_rows() -> list[tuple[int, list[int]]]:
+    """(c, [a_1..a_64]) per coarse cell: component (c, d) is the first 13
+    hex digits of md5('a{c}#{d}') mod PIVF_MOD minus 1e6, a uniform
+    integer in [-1e6, 1e6] (the oracles' anchors CTE)."""
+    return [
         (
-            F.conv(F.substring(hx, 1, 13), 16, 10).cast("long") % PIVF_MOD - 1000000
-        ).alias("a"),
+            c,
+            [
+                int(_md5_hex(f"a{c}#{d}")[:13], 16) % PIVF_MOD - 1000000
+                for d in range(1, EMB_DIM + 1)
+            ],
+        )
+        for c in range(PIVF_CELLS)
+    ]
+
+
+def _pivf_anchors(spark: SparkSession) -> DataFrame:
+    """(c, d, a): _pivf_anchor_rows as component rows for the PQ residual
+    joins — O(cells x dims) rows, always broadcast."""
+    return spark.createDataFrame(
+        [(c, d, a) for c, arr in _pivf_anchor_rows() for d, a in enumerate(arr, 1)],
+        "c int, d long, a long",
     )
 
 
@@ -1286,21 +1141,20 @@ def pivf_celldots_for(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build() -> DataFrame:
         e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-        return pin(_pivf_celldots(spark, _micro_comp(e)))
+        return pin(_pivf_celldots(spark, _micro_arrays(e)))
 
     return session_memo(spark, sf_dir, "pivf_celldots", build)
 
 
-def _pivf_celldots(spark: SparkSession, comp: DataFrame) -> DataFrame:
+def _pivf_celldots(spark: SparkSession, marr: DataFrame) -> DataFrame:
     """(vec_id, c, dot): exact BIGINT dot of every vector against every
     md5-derived coarse anchor — the shared assignment stage of
-    q_sim_ivf_portable and q_sim_ivf_curve. Anchors broadcast
-    (O(cells x dims)); the aggregate is map-side combined."""
-    anchors = _pivf_anchors(spark)
-    return (
-        comp.join(F.broadcast(anchors), "d")
-        .groupBy("vec_id", "c")
-        .agg(F.sum(F.col("micro") * F.col("a")).alias("dot"))
+    q_sim_ivf_portable, q_sim_ivf_curve and q_sim_ivfpq. The PIVF_CELLS
+    anchor arrays broadcast and each (vector, cell) row is one int_dot
+    projection over the micro arrays of `marr` (_micro_arrays)."""
+    anchors = spark.createDataFrame(_pivf_anchor_rows(), "c int, a array<bigint>")
+    return marr.crossJoin(F.broadcast(anchors)).select(
+        "vec_id", "c", int_dot("m", "a").alias("dot")
     )
 
 
@@ -1318,7 +1172,7 @@ h AS (
   FROM range(0, {PIVF_CELLS}) cc(c), range(1, 65) t(i)
 ),
 anchors AS (
-  SELECT c, d, ({_hex13_sql('hx')}) % {PIVF_MOD} - 1000000 AS a FROM h
+  SELECT c, d, ({hex13_sql('hx')}) % {PIVF_MOD} - 1000000 AS a FROM h
 ),
 celldots AS (
   SELECT comp.vec_id, a.c, SUM(comp.micro * a.a) AS dot
@@ -1543,7 +1397,7 @@ w AS (
   SELECT p, i AS d,
          CASE WHEN strpos('01234567', substring(md5(p || '#' || i), 1, 1)) > 0
               THEN 1 ELSE -1 END AS w
-  FROM range(0, {PLSH_PLANES}) pp(p), range(1, 65) t(i)
+  FROM range(0, {RECALL_TABLES * RECALL_BITS}) pp(p), range(1, 65) t(i)
 ),
 dots AS (
   SELECT c.vec_id, w.p, SUM(c.micro * w.w) AS dot
@@ -1626,7 +1480,11 @@ def q_sim_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combinable aggregates + broadcast of the Q-sized side."""
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     comp = _micro_comp(e)
-    banded = pin(_plsh_bands(spark, comp, RECALL_TABLES, RECALL_BITS))
+    banded = pin(
+        portable_lsh_bands(
+            spark, _micro_arrays(e), RECALL_TABLES, RECALL_BITS, RECALL_BITS
+        )
+    )
     scored, exact = _recall_ground_truth(comp)
     wnd = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), "vec_id")
     qbands = banded.filter(F.col("vec_id") < RECALL_QUERIES).select(
@@ -1682,7 +1540,7 @@ h AS (
   FROM range(0, {PIVF_CELLS}) cc(c), range(1, 65) t(i)
 ),
 anchors AS (
-  SELECT c, d, ({_hex13_sql('hx')}) % {PIVF_MOD} - 1000000 AS a FROM h
+  SELECT c, d, ({hex13_sql('hx')}) % {PIVF_MOD} - 1000000 AS a FROM h
 ),
 celldots AS (
   SELECT comp.vec_id, a.c, SUM(comp.micro * a.a) AS dot
@@ -1955,7 +1813,7 @@ h0 AS (
   SELECT c, i AS d, md5('k' || c || '#' || i) AS hx
   FROM range(0, {KM_CELLS}) cc(c), range(1, 65) t(i)
 ),
-cent0 AS (SELECT c, d, ({_hex13_sql('hx')}) % {KM_INIT_MOD} - 1000000 AS m FROM h0)
+cent0 AS (SELECT c, d, ({hex13_sql('hx')}) % {KM_INIT_MOD} - 1000000 AS m FROM h0)
 """
 
 
@@ -2500,7 +2358,7 @@ h AS (
   FROM range(0, {PIVF_CELLS}) cc(c), range(1, 65) t(i)
 ),
 anchors AS (
-  SELECT c, d, ({_hex13_sql('hx')}) % {PIVF_MOD} - 1000000 AS a FROM h
+  SELECT c, d, ({hex13_sql('hx')}) % {PIVF_MOD} - 1000000 AS a FROM h
 ),
 celldots AS (
   SELECT comp.vec_id, a.c, SUM(comp.micro * a.a) AS dot
@@ -2703,7 +2561,7 @@ WITH comp AS (
 ),
 signs AS (
   SELECT j, i AS d,
-         1 - 2 * (({_hex13_sql("md5('r' || j || '#' || i)")}) % 2) AS r
+         1 - 2 * (({hex13_sql("md5('r' || j || '#' || i)")}) % 2) AS r
   FROM range(0, {RP_K}) jj(j), range(1, 65) t(i)
 ),
 proj AS (

@@ -10,9 +10,10 @@ finality watermark (`final_block_height`).
 
 from __future__ import annotations
 
+import hashlib
 import os
-import tempfile
 
+from pyspark import SparkFiles
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -128,9 +129,16 @@ GROUP BY event_type
 def q_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S5 sink semantics, batch-checkable: write the table through the
     parquet sink (the test stand-in for the ClickHouse inserter), read it
-    back, aggregate — proving the write path loses nothing."""
+    back, aggregate — proving the write path loses nothing. The sink dir
+    lives under the session's SparkFiles root, keyed by sf_dir (the
+    graph._copurchase_build rule): it dies with the session, and two
+    sessions never write into each other's files."""
     ev = load_table(spark, sf_dir, "events")
-    out_dir = os.path.join(tempfile.gettempdir(), "elric_rs_spark_sink_roundtrip")
+    out_dir = os.path.join(
+        SparkFiles.getRootDirectory(),
+        "sink_roundtrip",
+        hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12],
+    )
     ev.write.mode("overwrite").parquet(out_dir)
     back = spark.read.parquet(out_dir)
     return back.groupBy("event_type").agg(

@@ -75,6 +75,7 @@ from pyspark.sql.types import (
 
 from elric_rs_spark.buildlog import pin
 from elric_rs_spark.functions.hashing import word_ngrams
+from elric_rs_spark.functions.vector import sorted_pairs
 from elric_rs_spark.operators.dedup import (
     PMH_BUCKET_CAP,
     portable_band_signatures,
@@ -245,14 +246,9 @@ class IngestDedupIndex:
         # collect_set also absorbs a replayed epoch's own index rows.
         ds = F.slice(F.array_sort(F.collect_set("doc_id")), 1, self.cap)
         buckets = members.groupBy("band", "sig").agg(ds.alias("ds"))
-        pair_expr = F.flatten(
-            F.transform(
-                F.col("ds"),
-                lambda x, i: F.transform(
-                    F.slice(F.col("ds"), i + 2, F.size(F.col("ds"))),
-                    lambda y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
-                ),
-            )
+        pair_expr = sorted_pairs(
+            "ds",
+            lambda x, y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
         )
         lo = int(rng["lo"])
         cand = (

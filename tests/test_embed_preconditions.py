@@ -17,6 +17,10 @@ VERDICT r10 "What's wrong" #4:
   ValueError naming the block and the upstream-sharding fix (planted
   oversized block via monkeypatch, since 2M real rows would swamp the
   suite).
+- A NULL component inside a 64-dim vector passes the length predicate;
+  the integer dots skip it the way the oracle's SUMs do (the shared
+  LSH verify used to turn that vector's cosines NULL and drop its
+  pairs).
 """
 
 from __future__ import annotations
@@ -35,31 +39,16 @@ registry.load_all()
 SRC_SF = "/root/testdata/sf0.001"
 
 
-@pytest.fixture(scope="module")
-def ragged_sf(tmp_path_factory):
-    """An sf-dir whose embeddings table contains 12 well-formed 64-dim
-    vectors (two labels, deliberately correlated so q_dedup_embed's
-    > 0.4 cosine threshold yields rows), one ragged 32-dim vector, and
-    one NULL embedding. Every other table symlinks sf0.001 (the oracle
-    harness binds views for all tables up front)."""
-    d = tmp_path_factory.mktemp("ragged_sf")
-    for f in os.listdir(SRC_SF):
-        if f != "embeddings.parquet":
-            os.symlink(os.path.join(SRC_SF, f), d / f)
-
-    rng = np.random.default_rng(7)
-    base = {5: rng.normal(size=64), 6: rng.normal(size=64)}
-    rows = []
-    for vec_id in range(12):
-        label = 5 if vec_id < 6 else 6
-        v = base[label] + 0.35 * rng.normal(size=64)
-        rows.append((vec_id, [float(x) for x in v.astype(np.float32)], label))
-    rows.append((100, [0.5] * 32, 5))  # ragged: half-length
-    rows.append((101, None, 6))  # null embedding
-
+def _embeddings_sf(d, rows) -> str:
+    """Write `rows` (vec_id, embedding, label) as the embeddings table of
+    sf-dir `d`; every other table symlinks sf0.001 (the oracle harness
+    binds views for all tables up front)."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    for f in os.listdir(SRC_SF):
+        if f != "embeddings.parquet":
+            os.symlink(os.path.join(SRC_SF, f), d / f)
     tbl = pa.table(
         {
             "vec_id": pa.array([r[0] for r in rows], pa.int64()),
@@ -73,17 +62,80 @@ def ragged_sf(tmp_path_factory):
     return str(d)
 
 
+def _correlated_rows():
+    """12 well-formed 64-dim vectors in two labels, deliberately
+    correlated so q_dedup_embed's > 0.4 cosine threshold yields rows."""
+    rng = np.random.default_rng(7)
+    base = {5: rng.normal(size=64), 6: rng.normal(size=64)}
+    rows = []
+    for vec_id in range(12):
+        label = 5 if vec_id < 6 else 6
+        v = base[label] + 0.35 * rng.normal(size=64)
+        rows.append((vec_id, [float(x) for x in v.astype(np.float32)], label))
+    return rows
+
+
+@pytest.fixture(scope="module")
+def ragged_sf(tmp_path_factory):
+    """An sf-dir whose embeddings table contains the 12 correlated
+    vectors, one ragged 32-dim vector, and one NULL embedding."""
+    rows = _correlated_rows()
+    rows.append((100, [0.5] * 32, 5))  # ragged: half-length
+    rows.append((101, None, 6))  # null embedding
+    return _embeddings_sf(tmp_path_factory.mktemp("ragged_sf"), rows)
+
+
+@pytest.fixture(scope="module")
+def null_component_sf(tmp_path_factory):
+    """The 12 correlated vectors, one of them (vec_id 3) with a single
+    NULL component: it passes the len(embedding) = 64 source predicate,
+    and every dot over it must skip the NULL the way SQL SUM does."""
+    rows = _correlated_rows()
+    rows[3][1][10] = None
+    return _embeddings_sf(tmp_path_factory.mktemp("null_component_sf"), rows)
+
+
 @pytest.mark.parametrize(
     "name",
-    ["q_dedup_embed", "q_dedup_embed_lsh_portable", "q_sim_lsh_portable"],
+    [
+        "q_dedup_embed",
+        "q_dedup_embed_lsh_portable",
+        "q_sim_lsh_portable",
+        "q_sim_recall",
+        "q_sim_ivf_portable",
+        "q_sim_ivf_curve",
+        "q_sim_ivfpq",
+    ],
 )
 def test_ragged_corpus_matches_oracle(spark, ragged_sf, name):
     """Spark and DuckDB agree on a corpus with ragged + null embeddings:
-    both apply the same fixed-length source predicate, so neither the
-    old np.stack crash (q_dedup_embed) nor the old verify-only-filter
-    silent pair drop (the LSH twins) can recur."""
+    the LSH twins and q_dedup_embed apply the same fixed-length source
+    predicate, so neither the old np.stack crash (q_dedup_embed) nor the
+    old verify-only-filter silent pair drop (the LSH twins) can recur;
+    the recall and IVF queries keep every vector, so their fused dots
+    must match the oracle's component SUMs over partial dimensions and
+    give a NULL embedding no row."""
     df = registry.QUERIES[name](spark, ragged_sf)
     problems = compare(name, df, registry.ORACLES[name], ragged_sf)
+    assert not problems, "\n".join(problems)
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "q_sim_lsh_portable",
+        "q_dedup_embed_lsh_portable",
+        "q_sim_recall",
+        "q_sim_ivf_portable",
+    ],
+)
+def test_null_component_matches_oracle(spark, null_component_sf, name):
+    """A NULL component inside a 64-dim vector: the oracle's SUMs skip
+    it, so the integer dots and the verify's cosine must skip it too
+    instead of turning the whole vector's dots NULL (which dropped every
+    pair of that vector from the LSH twins)."""
+    df = registry.QUERIES[name](spark, null_component_sf)
+    problems = compare(name, df, registry.ORACLES[name], null_component_sf)
     assert not problems, "\n".join(problems)
 
 

@@ -149,26 +149,23 @@ def test_no_cached_plans(spark, name):
 def test_lsh_bucket_sizes_bounded(spark):
     """The round-1 scale-killer gate (VERDICT r01 #3): q_sim_lsh's
     in-bucket pairing is quadratic in bucket size, so buckets must stay
-    cluster-sized — far below corpus size. With 4 tables x 16-bit keys a
-    bucket approaching n means the banding degenerated to all-pairs."""
+    cluster-sized — far below corpus size. Checked on the banding
+    q_sim_lsh runs (_lsh_banded at the corpus-adaptive PDLSH width, as
+    lsh_candidate_pairs and lsh_candidate_cosines call it): a bucket
+    approaching n means the banding degenerated to all-pairs."""
     from pyspark.sql import functions as F
 
     from elric_rs_spark.functions.vector import as_double
-    from elric_rs_spark.operators.similarity import (
-        hyperplane_signatures,
-        lsh_band_keys,
-    )
+    from elric_rs_spark.operators.dedup import _pdlsh_bits_col
+    from elric_rs_spark.operators.similarity import _lsh_banded
     from elric_rs_spark.tables import load_table
 
     e = load_table(spark, SF_DIR, "embeddings").select(
         "vec_id", as_double("embedding").alias("v")
     )
     n = e.count()
-    sizes = (
-        lsh_band_keys(hyperplane_signatures(spark, e))
-        .groupBy("t", "key")
-        .count()
-    )
+    nb = e.agg(_pdlsh_bits_col().alias("bits"))
+    sizes = _lsh_banded(spark, e, "vec_id", "v", nb, carry=None).groupBy("t", "key").count()
     max_bucket = sizes.agg(F.max("count")).collect()[0][0]
     assert max_bucket <= max(8, n // 10), (
         f"LSH bucket of {max_bucket} rows vs corpus {n} — quadratic blowup"

@@ -948,3 +948,18 @@ class TestStreamStreamIntervalJoin:
             (r.click_id, r.amount) for r in spark.table("attr_join").collect()
         )
         assert got == [(100, 50.0), (102, 70.0)]
+
+
+def test_sink_roundtrip_leaves_no_fixed_tmp_dir(spark, tmp_path, monkeypatch):
+    """q_sink_roundtrip's sink dir lives under the session's SparkFiles
+    root, keyed by sf_dir: nothing named elric_rs_spark_sink_roundtrip
+    is left in the system temp dir, where it would outlive the session
+    and be shared by every concurrent session."""
+    from elric_rs_spark import registry
+    from tests.conftest import SF_DIR
+
+    registry.load_all()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    rows = registry.QUERIES["q_sink_roundtrip"](spark, SF_DIR).collect()
+    assert rows
+    assert not (pathlib.Path(tempfile.gettempdir()) / "elric_rs_spark_sink_roundtrip").exists()
