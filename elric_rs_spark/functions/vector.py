@@ -1,13 +1,18 @@
-"""Vector (embedding) expression library — cosine/dot/norm over
-array<double> columns, exact integer dots over micro-unit arrays, and the
-all-pairs expansion of a sorted array, all with built-in higher-order
-functions.
+"""Vector (embedding) expression library — dot/norm over array<double>
+columns, exact integer sums, dots and squared distances over micro-unit
+arrays, the per-dimension-sum assembly, and the all-pairs expansion of
+a sorted array, all with built-in higher-order functions.
 
-Fused kernels: a kernel that dots each vector against a small fixed set
-of integer arrays (LSH hyperplanes, IVF anchors) projects `micro_array`
-once per vector, cross-joins the set as a broadcast, and evaluates
-`int_dot` per row. No per-dimension explode and no (vector, plane)
-aggregate: the rows out are the rows the kernel needs.
+One kernel form: every integer dot, norm and squared distance is a
+projection over `micro_array` rows. A kernel that scores each vector
+against a small set of integer arrays (LSH hyperplanes, IVF anchors,
+query vectors, centroids, PQ codebooks) cross-joins the set as a
+broadcast and evaluates `int_dot` / `int_sqdist` per row, so the rows
+out are the rows the kernel needs: no per-dimension explode, no
+(vector, set member) aggregate. Only an operator that is itself a
+per-dimension sum (a centroid, a k-means update, a PQ codebook) explodes
+a vector into component rows; `dim_arrays` folds its sums back into
+arrays for the projections.
 
 Scale note: HOF lambdas evaluate interpreted (outside whole-stage
 codegen). At 64 dims that costs microseconds per row and avoids any
@@ -18,7 +23,7 @@ matmul over Arrow batches) — the call sites keep the same shape.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -36,15 +41,20 @@ def norm_l2(a) -> Column:
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda s, v: s + v * v))
 
 
-def cosine(a, b) -> Column:
-    return dot(a, b) / (norm_l2(a) * norm_l2(b))
-
-
 def micro_array(col) -> Column:
     """Each component as exact BIGINT micro-units,
     round(cast(x as double) * 1e6): every sum over them is
     order-independent and engine-exact."""
     return F.transform(col, lambda x: F.round(x.cast("double") * 1000000).cast("long"))
+
+
+def int_sum(arr) -> Column:
+    """BIGINT sum of an integer array with SQL SUM semantics: NULL
+    elements are skipped, and the sum is NULL when no element is
+    non-NULL (an empty array included)."""
+    return F.aggregate(
+        arr, F.lit(None).cast("long"), lambda acc, x: F.coalesce(acc + x, acc, x)
+    )
 
 
 def int_dot(a, b) -> Column:
@@ -53,11 +63,42 @@ def int_dot(a, b) -> Column:
     the dot is NULL when no product is non-NULL, and positions past the
     shorter array pair with NULL (a 65th component against a 64-dim
     plane adds nothing)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(None).cast("long"),
-        lambda acc, p: F.coalesce(acc + p, acc, p),
+    return int_sum(F.zip_with(a, b, lambda x, y: x * y))
+
+
+def int_sqdist(a, b) -> Column:
+    """BIGINT squared L2 distance with int_dot's SUM semantics: the
+    exploded component join + SUM((x - y)^2)."""
+    return int_sum(F.zip_with(a, b, lambda x, y: (x - y) * (x - y)))
+
+
+def dim_arrays(
+    rows: DataFrame, keys: list[str], value: str, inner: str | None = None
+) -> DataFrame:
+    """(key…, a) from per-dimension (key…, d, value) sum rows: `a` holds
+    each key's values in d order. A key's dims must be contiguous from
+    its first one — true of any sum over vector components, since each
+    vector contributes a prefix of the dims — so a[i] is dim first + i.
+
+    With `inner`, one of the keys, the rows group by the other keys and
+    `a` is array<struct<inner, a>> in `inner` order: the same arrays,
+    nested, still one aggregate (a PQ codebook per subspace)."""
+    if inner is None:
+        return rows.groupBy(*keys).agg(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("d", value))), lambda s: s[value]
+            ).alias("a")
+        )
+    outer = [k for k in keys if k != inner]
+    s = F.array_sort(F.collect_list(F.struct(inner, "d", value)))
+    nested = F.transform(
+        F.array_distinct(F.transform("s", lambda x: x[inner])),
+        lambda k: F.struct(
+            k.alias(inner),
+            F.transform(F.filter("s", lambda x: x[inner] == k), lambda x: x[value]).alias("a"),
+        ),
     )
+    return rows.groupBy(*outer).agg(s.alias("s")).select(*outer, nested.alias("a"))
 
 
 def sorted_pairs(arr, make) -> Column:

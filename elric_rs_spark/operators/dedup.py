@@ -37,7 +37,7 @@ from elric_rs_spark.functions.hashing import (
     token_hashes as _token_hashes,
     word_ngrams as _word_ngrams,
 )
-from elric_rs_spark.functions.vector import sorted_pairs
+from elric_rs_spark.functions.vector import dim_arrays, sorted_pairs
 
 
 @query(
@@ -517,10 +517,12 @@ def q_dedup_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
         ids = pdf["vec_id"].to_numpy()
         label = int(pdf["label"].iloc[0])
         # micro-int components in float64: round half away from zero,
-        # matching Spark/DuckDB round() on doubles (np.round is half-even)
+        # matching Spark/DuckDB round() on doubles (np.round is half-even);
+        # a NULL component (NaN here) becomes 0, which adds what the
+        # oracle's SUM adds for it: nothing
         m = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["embedding"]])
         t = m * 1e6
-        micro = np.where(t >= 0, np.floor(t + 0.5), np.ceil(t - 0.5))
+        micro = np.nan_to_num(np.where(t >= 0, np.floor(t + 0.5), np.ceil(t - 0.5)))
         nsq = (micro * micro).sum(axis=1)  # exact integer-valued doubles
         rnorm = np.sqrt(nsq)
         outs = []
@@ -1610,22 +1612,14 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     cent = sums.select(
         "c_label", "dim", F.expr("(s - pmod(s, n)) div n").alias("icent")
     )
-    # Assemble each centroid into a dim-ascending array (dims per label
-    # are contiguous 1..max_member_len — posexplode of an array yields
-    # every prefix dim — so array position i IS dim i+1). The k x dims
-    # centroid table is collected to the driver (the q_sim_ivf_trained
-    # precedent: driver-side math over k centroids, independent of
-    # corpus size) and closed over by the assignment kernel below.
-    cent_rows = (
-        cent.groupBy("c_label")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("dim", "icent"))),
-                lambda s: s["icent"],
-            ).alias("cvec")
-        )
-        .collect()
-    )
+    # Assemble each centroid into a dim-ascending array (dim_arrays:
+    # array position i IS dim i+1). The k x dims centroid table is
+    # collected to the driver (the q_sim_ivf_trained precedent:
+    # driver-side math over k centroids, independent of corpus size)
+    # and closed over by the assignment kernel below.
+    cent_rows = dim_arrays(
+        cent.withColumnRenamed("dim", "d"), ["c_label"], "icent"
+    ).collect()
     # Assignment + milli quantization + norm in ONE Arrow-vectorized
     # pass over the corpus (guide §4.2: hand whole batches to NumPy
     # instead of interpreted expression trees — the old zip_with/
@@ -1643,7 +1637,7 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     labels_sorted = sorted(cent_rows, key=lambda r: r["c_label"])
     c_labels = [int(r["c_label"]) for r in labels_sorted]
-    c_vecs = [list(r["cvec"]) for r in labels_sorted]
+    c_vecs = [list(r["a"]) for r in labels_sorted]
     c_dim = max((len(v) for v in c_vecs), default=0)
     c_mat = np.zeros((len(c_vecs), c_dim), dtype=np.float64)
     for i, v in enumerate(c_vecs):
@@ -1652,9 +1646,11 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def _milli(col):
         """round-half-away-from-zero to milli ints, matching Spark/
-        DuckDB round() on doubles (np.round is half-even)."""
+        DuckDB round() on doubles (np.round is half-even); a NULL
+        component (NaN) becomes 0, which every dot and norm then skips
+        the way the oracle's SUMs do."""
         t = col * 1000.0
-        return np.where(t >= 0, np.floor(t + 0.5), np.ceil(t - 0.5))
+        return np.nan_to_num(np.where(t >= 0, np.floor(t + 0.5), np.ceil(t - 0.5)))
 
     def _assign_batches(batches):
         import pandas as pd

@@ -19,7 +19,7 @@ from __future__ import annotations
 
 import hashlib
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from elric_rs_spark.buildlog import pin, session_memo
@@ -36,8 +36,11 @@ from elric_rs_spark.registry import query
 from elric_rs_spark.tables import load_table
 from elric_rs_spark.functions.vector import (
     as_double as _as_double,
+    dim_arrays,
     dot as _dot,
     int_dot,
+    int_sqdist,
+    int_sum,
     micro_array,
     norm_l2 as _norm,
     sorted_pairs,
@@ -541,7 +544,8 @@ def q_embed_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     before any arithmetic — float32 ops differ across engines, doubles
     widened from the same float32 bits do not. The checked columns are
     integer summaries of the full quantized vector, so the oracle
-    verifies every element's rounding without hashing a float array."""
+    verifies every element's rounding without hashing a float array;
+    like the oracle's list aggregates they skip a NULL component."""
     e = load_table(spark, sf_dir, "embeddings")
     v = _as_double(F.col("embedding"))
     maxabs = F.array_max(F.transform(v, lambda x: F.abs(x)))
@@ -552,15 +556,14 @@ def q_embed_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("v"), lambda x: F.round(x * 127.0 / F.col("maxabs")).cast("long")
     )
     d = d.select("vec_id", F.round("maxabs", 6).alias("maxabs"), qv.alias("qv"))
-    zero = F.lit(0).cast("long")
     return (
         d.select(
             "vec_id",
             "maxabs",
             F.array_min("qv").alias("q_min"),
             F.array_max("qv").alias("q_max"),
-            F.aggregate("qv", zero, lambda acc, x: acc + x).alias("q_sum"),
-            F.aggregate("qv", zero, lambda acc, x: acc + F.abs(x)).alias("q_l1"),
+            int_sum("qv").alias("q_sum"),
+            int_sum(F.transform("qv", F.abs)).alias("q_l1"),
         )
         .orderBy("vec_id")
         .limit(100)
@@ -591,21 +594,15 @@ def q_embed_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
     — summing raw doubles would make the centroid depend on partition
     order. The final division happens once, identically, on both engines.
 
-    Scale shape: posexplode fans each vector into 64 component rows, then
-    ONE map-side-combined groupBy on (label, dim) — 640 output groups
-    regardless of corpus size; no joins, no windows. This is the same
-    aggregate shape a distributed k-means iteration uses, so it stands in
-    for the q_sim_ivf_trained assignment step at full scale.
+    Scale shape: a per-dimension sum, so the micro array explodes into
+    component rows (_micro_comp), then ONE map-side-combined groupBy on
+    (label, dim) — 640 output groups regardless of corpus size; no
+    joins, no windows. This is the same aggregate shape a distributed
+    k-means update uses (q_sim_ivf_trained_portable's _km_update).
     """
     e = load_table(spark, sf_dir, "embeddings")
-    comp = e.select(
-        "label", F.posexplode(F.col("embedding")).alias("pos", "val")
-    ).select(
-        "label",
-        (F.col("pos") + 1).cast("long").alias("dim"),
-        F.round(F.col("val").cast("double") * 1000000).cast("long").alias("micro"),
-    )
-    return comp.groupBy("label", "dim").agg(
+    comp = _micro_comp(e.select("label", micro_array("embedding").alias("m")))
+    return comp.groupBy("label", F.col("d").alias("dim")).agg(
         F.count(F.lit(1)).alias("n"),
         F.round(
             F.sum("micro").cast("double") / 1000000 / F.count(F.lit(1)), 6
@@ -668,34 +665,27 @@ def q_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     (|micro| < 2^21, 64 dims × 10 centroids < 2^48 — ANSI-safe).
     Argmax breaks ties on the smaller label via one max(struct).
 
-    Scale shape: the centroid table is O(labels × dims) — broadcast; the
-    fan-out is rows × labels with NO shuffle until the per-vector argmax
-    aggregate (map-side combinable: one struct-max per vec per
-    partition), then a tiny confusion-matrix rollup. The same plan runs
-    a billion vectors: no windows, no self-joins."""
-    e = load_table(spark, sf_dir, "embeddings")
-    comp = e.select(
-        "vec_id",
-        "label",
-        F.posexplode(F.col("embedding")).alias("pos", "val"),
-    ).select(
-        "vec_id",
-        "label",
-        (F.col("pos") + 1).cast("long").alias("dim"),
-        F.round(F.col("val").cast("double") * 1000000).cast("long").alias("micro"),
+    Scale shape: the centroids are a per-dimension sum over the
+    component rows, folded into one array per label (dim_arrays) and
+    broadcast; each (vector, label) score is one int_dot projection over
+    the micro arrays, with NO shuffle until the per-vector argmax
+    aggregate (the arrays are already partitioned on vec_id), then a
+    tiny confusion-matrix rollup. The same plan runs a billion vectors:
+    no windows, no self-joins."""
+    e = load_table(spark, sf_dir, "embeddings").select("vec_id", "label", "embedding")
+    marr = _micro_arrays(e)
+    sums = (
+        _micro_comp(marr)
+        .groupBy(F.col("label").alias("c_label"), "d")
+        .agg(F.sum("micro").alias("s"), F.count(F.lit(1)).alias("n"))
     )
-    sums = comp.groupBy(F.col("label").alias("c_label"), "dim").agg(
-        F.sum("micro").alias("s"), F.count(F.lit(1)).alias("n")
+    cent = dim_arrays(
+        sums.select("c_label", "d", F.expr("(s - pmod(s, n)) div n").alias("icent")),
+        ["c_label"],
+        "icent",
     )
-    cent = sums.select(
-        "c_label",
-        "dim",
-        F.expr("(s - pmod(s, n)) div n").alias("icent"),
-    )
-    scores = (
-        comp.join(F.broadcast(cent), "dim")
-        .groupBy("vec_id", "label", "c_label")
-        .agg(F.sum(F.col("micro") * F.col("icent")).alias("score"))
+    scores = marr.crossJoin(F.broadcast(cent)).select(
+        "vec_id", "label", "c_label", int_dot("m", "a").alias("score")
     )
     best = scores.groupBy("vec_id", "label").agg(
         F.max(F.struct(F.col("score"), (-F.col("c_label")).alias("neg_label"))).alias(
@@ -714,9 +704,77 @@ def q_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 PQ_M = 8       # subvectors per embedding (64 dims -> 8 dims each)
 PQ_K = 16      # codes per subspace
+PQ_DIM = EMB_DIM // PQ_M
 # engine-portable bucket hash (pure BIGINT arithmetic, same constants as
 # operators/sampling.py): vec_id -> training bucket in [0, PQ_K)
 _PQ_BUCKET = f"((vec_id % 1000003) * 2654435761 + 12345) % 4294967296 % {PQ_K}"
+
+
+def _pq_books(comp: DataFrame) -> DataFrame:
+    """(sub, book) from (vec_id, d, micro) component rows (_micro_comp):
+    subspace sub's codebook as array<struct<code, a>> in code order. Code
+    k's centroid `a` holds the pmod-floor-divided integer means of
+    training bucket k's components (_PQ_BUCKET), one per dimension of
+    the subspace — a per-dimension sum, the one PQ stage that explodes."""
+    sums = comp.groupBy(
+        F.expr(f"(d - 1) div {PQ_DIM}").alias("sub"),
+        F.expr(_PQ_BUCKET).cast("long").alias("code"),
+        "d",
+    ).agg(F.sum("micro").alias("s"), F.count(F.lit(1)).alias("n"))
+    return dim_arrays(
+        sums.select("sub", "code", "d", F.expr("(s - pmod(s, n)) div n").alias("icent")),
+        ["sub", "code"],
+        "icent",
+        inner="code",
+    ).withColumnRenamed("a", "book")
+
+
+def _pq_subspaces(vecs: DataFrame, arr: str, books: DataFrame, *keep: str) -> DataFrame:
+    """(keep…, sub, x, book): the slice x of integer array `arr` in each
+    subspace sub of every vector, next to that subspace's codebook
+    (_pq_books, broadcast). A subspace past a ragged vector's end gives
+    no row, as it gives no component rows; one whose components are all
+    NULL does, and its distances are NULL."""
+    x = F.slice(arr, F.col("sub") * PQ_DIM + 1, PQ_DIM)
+    return (
+        vecs.crossJoin(F.broadcast(books))
+        .select(*keep, "sub", x.alias("x"), "book")
+        .filter(F.size("x") > 0)
+    )
+
+
+def _pq_dists():
+    """x's int_sqdist to every code of its subspace's book, as
+    array<struct<code, sse>> in code order."""
+    return F.transform(
+        "book",
+        lambda b: F.struct(b["code"].alias("code"), int_sqdist("x", b["a"]).alias("sse")),
+    )
+
+
+def _pq_encode(subs: DataFrame, *keep: str) -> DataFrame:
+    """(keep…, sub, code, sse): the nearest code per _pq_subspaces row,
+    taken in the projection: least sse, ties to the smaller code, a NULL
+    distance last (the oracles' ORDER BY sse, code)."""
+    best = F.array_min(
+        F.transform(
+            _pq_dists(),
+            lambda p: F.struct(
+                p["sse"].isNull().alias("nul"), p["sse"].alias("sse"), p["code"].alias("code")
+            ),
+        )
+    )
+    return subs.select(*keep, "sub", best.alias("top")).select(
+        *keep, "sub", "top.code", "top.sse"
+    )
+
+
+def _pq_lut(subs: DataFrame, *keep: str) -> DataFrame:
+    """(keep…, sub, code, part): the ADC lookup table of each
+    _pq_subspaces row — its distance to every code of the subspace."""
+    return subs.select(*keep, "sub", F.explode(_pq_dists()).alias("l")).select(
+        *keep, "sub", "l.code", F.col("l.sse").alias("part")
+    )
 
 
 @query(
@@ -771,51 +829,19 @@ def q_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     distances are exact BIGINT SSEs, argmin ties break on code. The
     oracle replays the identical integer pipeline.
 
-    Scale shape: the codebook is M*K*8 = 1024 small rows — broadcast;
-    encode is explode + broadcast join + two keyed aggregates (the
-    argmin is a max(struct) — map-side combinable). No pairwise
-    vector-vector work anywhere; a billion vectors encode in one pass."""
-    e = load_table(spark, sf_dir, "embeddings")
-    comp = e.select(
-        "vec_id",
-        F.posexplode(F.col("embedding")).alias("pos", "val"),
-    ).select(
-        "vec_id",
-        F.expr("pos div 8").alias("m"),
-        (F.col("pos") + 1).cast("long").alias("dim"),
-        F.expr(_PQ_BUCKET).cast("long").alias("bucket"),
-        F.round(F.col("val").cast("double") * 1000000).cast("long").alias("micro"),
-    )
-    book = (
-        comp.groupBy("m", F.col("bucket").alias("code"), "dim")
-        .agg(F.sum("micro").alias("s"), F.count(F.lit(1)).alias("n"))
-        .select(
-            "m",
-            "code",
-            "dim",
-            F.expr("(s - pmod(s, n)) div n").alias("icent"),
-        )
-    )
-    diff = F.col("micro") - F.col("icent")
-    dists = (
-        comp.join(F.broadcast(book), ["m", "dim"])
-        .groupBy("vec_id", "m", "code")
-        .agg(F.sum(diff * diff).alias("sse"))
-    )
-    best = dists.groupBy("vec_id", "m").agg(
-        F.min(F.struct(F.col("sse"), F.col("code"))).alias("top")
-    )
-    return (
-        best.select(
-            "m",
-            F.col("top.code").alias("code"),
-            F.col("top.sse").alias("sse"),
-        )
-        .groupBy("m", "code")
-        .agg(
-            F.count(F.lit(1)).alias("n_vecs"),
-            F.sum("sse").alias("total_sse"),
-        )
+    Scale shape: the codebook is trained from the component rows (a
+    per-dimension sum, M*K*8 = 1024 groups) and broadcast as M rows of K
+    code arrays; encode is one projection per (vector, subspace) over
+    the micro arrays that takes the argmin over the K code distances in
+    place — no component fan-out, no (vector, subspace, code) aggregate,
+    no pairwise vector-vector work anywhere; a billion vectors encode in
+    one pass."""
+    e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    marr = _micro_arrays(e)
+    books = _pq_books(_micro_comp(marr))
+    codes = _pq_encode(_pq_subspaces(marr, "m", books))
+    return codes.groupBy(F.col("sub").alias("m"), "code").agg(
+        F.count(F.lit(1)).alias("n_vecs"), F.sum("sse").alias("total_sse")
     )
 
 
@@ -851,14 +877,15 @@ def _md5_hex(s: str) -> str:
     return hashlib.md5(s.encode()).hexdigest()
 
 
-def _micro_comp(e: DataFrame) -> DataFrame:
-    """(vec_id, d, micro): 1-based dimension index, component scaled to
-    exact integer micro-units — BIGINT from here on, so every downstream
-    sum is order-independent and engine-exact.
+def _micro_arrays(e: DataFrame) -> DataFrame:
+    """e with `embedding` replaced by its micro-unit array `m`
+    (micro_array) and `nsq`, its squared norm by int_dot. A NULL or
+    empty embedding yields no row, as it yields no component rows.
 
-    The input is repartitioned on vec_id BEFORE the explode: parallelism
-    of every downstream expansion (the 64x dim fan-out, then plane/anchor
-    fan-outs of 16-900x) must never key off the WRITER's file/row-group
+    The input is repartitioned on vec_id BEFORE the projection:
+    parallelism of every downstream fan-out (plane, anchor, query,
+    centroid or codebook broadcasts of 8-900x, and _micro_comp's 64x
+    component rows) must never key off the WRITER's file/row-group
     layout. The round-9 sf30 decade caught exactly that: embeddings
     parquet written as ONE row group put the whole 2.15B-row 56-plane
     expansion of q_dedup_embed_lsh_portable into a single task (53+ min
@@ -866,23 +893,9 @@ def _micro_comp(e: DataFrame) -> DataFrame:
     exchange moved is just the raw (vec_id, embedding) rows — orders of
     magnitude smaller than what it parallelizes — and branching plans
     share it via ReusedExchange. Partition count = the session's
-    data-proportional spark.sql.shuffle.partitions (session.py rule)."""
-    n_parts = int(e.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    return e.repartition(n_parts, "vec_id").select(
-        "vec_id", F.posexplode(F.col("embedding")).alias("pos", "val")
-    ).select(
-        "vec_id",
-        (F.col("pos") + 1).cast("long").alias("d"),
-        F.round(F.col("val").cast("double") * 1000000).cast("long").alias("micro"),
-    )
-
-
-def _micro_arrays(e: DataFrame) -> DataFrame:
-    """e with `embedding` replaced by its micro-unit array `m`
-    (micro_array: the same integers _micro_comp yields per component)
-    and `nsq`, its squared norm by int_dot. Repartitioned on vec_id
-    before the projection, for the reason _micro_comp gives. A NULL or
-    empty embedding yields no row, as it yields no component rows."""
+    data-proportional spark.sql.shuffle.partitions (session.py rule). A
+    pure per-row projection (q_embed_outlier's norms) needs no
+    repartition."""
     n_parts = int(e.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     return (
         e.filter(F.size("embedding") > 0)
@@ -890,6 +903,41 @@ def _micro_arrays(e: DataFrame) -> DataFrame:
         .withColumn("m", micro_array("embedding"))
         .drop("embedding")
         .withColumn("nsq", int_dot("m", "m"))
+    )
+
+
+def _micro_comp(vecs: DataFrame, arr: str = "m") -> DataFrame:
+    """(…, d, micro): the integer array `arr` of `vecs` (_micro_arrays'
+    `m`, or a residual of it) as one row per component, 1-based d, with
+    the other columns but `nsq` carried. The only explode of a vector:
+    only per-dimension sums use it (a centroid, the k-means update, a
+    PQ codebook); every dot, norm and distance is a projection over the
+    arrays (functions/vector.py)."""
+    keep = [c for c in vecs.columns if c not in (arr, "nsq")]
+    # outer + pos filter: posexplode's rows, without the size(m) > 0
+    # filter Catalyst infers for a plain explode and pushes below the
+    # vec_id repartition, which would keep the branches from sharing it
+    return (
+        vecs.select(*keep, F.posexplode_outer(arr).alias("pos", "micro"))
+        .filter(F.col("pos").isNotNull())
+        .select(*keep, (F.col("pos") + 1).cast("long").alias("d"), "micro")
+    )
+
+
+def _cosine(dot: Column, na: Column, nb: Column) -> Column:
+    """The exact integer cosine dot / (sqrt(na) * sqrt(nb)), rounded to
+    6 places."""
+    return F.round(
+        dot.cast("double") / (F.sqrt(na.cast("double")) * F.sqrt(nb.cast("double"))), 6
+    )
+
+
+def _shared_nsq(m: str, nsq: str, other: str) -> Column:
+    """The squares of array `m` summed over the positions array `other`
+    has too — the norm a component join of the two vectors sums: `nsq`
+    unless `m` is the longer one."""
+    return F.when(F.size(m) <= F.size(other), F.col(nsq)).otherwise(
+        int_dot(m, F.slice(m, 1, F.size(other)))
     )
 
 
@@ -978,11 +1026,7 @@ def portable_lsh_pairs(
             F.col("nsq").alias(f"nsq_{s}"),
         ).hint("shuffle_hash")
 
-    cosine = F.round(
-        int_dot("ma", "mb").cast("double")
-        / (F.sqrt(F.col("nsq_a").cast("double")) * F.sqrt(F.col("nsq_b").cast("double"))),
-        6,
-    )
+    cosine = _cosine(int_dot("ma", "mb"), F.col("nsq_a"), F.col("nsq_b"))
     return (
         cand.join(side("a"), "vec_a")
         .join(side("b"), "vec_b")
@@ -1100,29 +1144,23 @@ PIVF_NPROBE = 4
 PIVF_MOD = 2_000_001  # anchor components uniform in [-1e6, 1e6]
 
 
-def _pivf_anchor_rows() -> list[tuple[int, list[int]]]:
-    """(c, [a_1..a_64]) per coarse cell: component (c, d) is the first 13
-    hex digits of md5('a{c}#{d}') mod PIVF_MOD minus 1e6, a uniform
-    integer in [-1e6, 1e6] (the oracles' anchors CTE)."""
+def _md5_int_rows(prefix: str, n: int) -> list[list[int]]:
+    """n rows of EMB_DIM integers: component (c, d) is the first 13 hex
+    digits of md5('{prefix}{c}#{d}') (the oracles' hex13_sql)."""
     return [
-        (
-            c,
-            [
-                int(_md5_hex(f"a{c}#{d}")[:13], 16) % PIVF_MOD - 1000000
-                for d in range(1, EMB_DIM + 1)
-            ],
-        )
-        for c in range(PIVF_CELLS)
+        [int(_md5_hex(f"{prefix}{c}#{d}")[:13], 16) for d in range(1, EMB_DIM + 1)]
+        for c in range(n)
     ]
 
 
-def _pivf_anchors(spark: SparkSession) -> DataFrame:
-    """(c, d, a): _pivf_anchor_rows as component rows for the PQ residual
-    joins — O(cells x dims) rows, always broadcast."""
-    return spark.createDataFrame(
-        [(c, d, a) for c, arr in _pivf_anchor_rows() for d, a in enumerate(arr, 1)],
-        "c int, d long, a long",
-    )
+def _pivf_anchor_rows() -> list[tuple[int, list[int]]]:
+    """(c, [a_1..a_64]) per coarse cell: component (c, d) is
+    md5('a{c}#{d}')'s hex13 mod PIVF_MOD minus 1e6, a uniform integer in
+    [-1e6, 1e6] (the oracles' anchors CTE)."""
+    return [
+        (c, [h % PIVF_MOD - 1000000 for h in row])
+        for c, row in enumerate(_md5_int_rows("a", PIVF_CELLS))
+    ]
 
 
 # The coarse assignment (vec x cell exact dots) is shared by three graded
@@ -1218,15 +1256,16 @@ def q_sim_ivf_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-components — every stage replays bit-for-bit in DuckDB.
 
     Scale shape mirrors q_sim_ivf: anchors are an O(cells x dims)
-    broadcast; assignment is one map-side-combinable (vec, cell)
-    aggregate; probing is a broadcast semi-join (partition pruning when
-    the corpus is written partitionBy(cell)); exact cosine touches
-    probed cells only; the final top-10 is a TakeOrdered, not a global
-    sort."""
+    broadcast and each (vector, cell) dot one int_dot projection
+    (pivf_celldots); assignment is one per-vector argmax aggregate;
+    probing is a broadcast semi-join (partition pruning when the corpus
+    is written partitionBy(cell)); the exact cosine is one projection
+    per vector against the broadcast query array; the final top-10 is a
+    TakeOrdered, not a global sort."""
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "label", "embedding"
     )
-    comp = _micro_comp(e)
+    marr = _micro_arrays(e)
     celldots = pivf_celldots_for(spark, sf_dir)
     best = celldots.groupBy("vec_id").agg(
         F.max(F.struct(F.col("dot"), (-F.col("c")).alias("nc"))).alias("top")
@@ -1238,26 +1277,17 @@ def q_sim_ivf_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(PIVF_NPROBE)
         .select(F.col("c").cast("long").alias("cell"))
     )
-    qc = comp.filter(F.col("vec_id") == 0).select("d", F.col("micro").alias("qmicro"))
-    prods = (
-        comp.filter(F.col("vec_id") != 0)
-        .join(F.broadcast(qc), "d")
-        .groupBy("vec_id")
-        .agg(
-            F.sum(F.col("micro") * F.col("qmicro")).alias("svq"),
-            F.sum(F.col("micro") * F.col("micro")).alias("svv"),
-            F.sum(F.col("qmicro") * F.col("qmicro")).alias("sqq"),
-        )
+    q = marr.filter(F.col("vec_id") == 0).select(
+        F.col("m").alias("qm"), F.col("nsq").alias("qnsq")
     )
-    cosine = F.round(
-        F.col("svq").cast("double")
-        / (F.sqrt(F.col("svv").cast("double")) * F.sqrt(F.col("sqq").cast("double"))),
-        6,
+    cosine = _cosine(
+        int_dot("m", "qm"), _shared_nsq("m", "nsq", "qm"), _shared_nsq("qm", "qnsq", "m")
     )
     return (
-        prods.join(vcell, "vec_id")
+        marr.filter(F.col("vec_id") != 0)
+        .crossJoin(F.broadcast(q))
+        .join(vcell, "vec_id")
         .join(F.broadcast(probe), "cell", "left_semi")
-        .join(e.select("vec_id", "label"), "vec_id")
         .select("vec_id", "label", "cell", cosine.alias("cosine"))
         .orderBy(F.col("cosine").desc(), "vec_id")
         .limit(10)
@@ -1294,15 +1324,15 @@ def q_embed_outlier(spark: SparkSession, sf_dir: str) -> DataFrame:
     float variance would be partition-order-dependent; the median of
     exact BIGINTs interpolates identically in both engines.
 
-    Scale shape: norms are one map-side-combined aggregate; the two
-    medians here are EXACT single-group percentiles (fine at gate
-    scale, and what the oracle can replay) — the 100 TB kernel swaps
-    them for approx_percentile, which changes two scalars, not the
-    plan. Flagging is a broadcast of two one-row tables."""
-    e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    comp = _micro_comp(e)
-    norms = comp.groupBy("vec_id").agg(
-        F.sum(F.col("micro") * F.col("micro")).alias("normsq")
+    Scale shape: each norm is one per-row int_dot projection over the
+    micro array (no shuffle); the two medians here are EXACT
+    single-group percentiles (fine at gate scale, and what the oracle
+    can replay) — the 100 TB kernel swaps them for approx_percentile,
+    which changes two scalars, not the plan. Flagging is a broadcast of
+    two one-row tables."""
+    e = load_table(spark, sf_dir, "embeddings").filter(F.size("embedding") > 0)
+    norms = e.select("vec_id", micro_array("embedding").alias("m")).select(
+        "vec_id", int_dot("m", "m").alias("normsq")
     )
     med = norms.agg(F.percentile("normsq", F.lit(0.5)).alias("med"))
     d = norms.crossJoin(F.broadcast(med)).withColumn(
@@ -1330,41 +1360,24 @@ RECALL_TABLES = 4
 RECALL_BITS = 4
 
 
-def _recall_ground_truth(comp: DataFrame):
+def _recall_ground_truth(marr: DataFrame):
     """(scored, exact): exact integer-cosine scores of every corpus
     vector against the fixed RECALL_QUERIES probe set, and the exact
     top-RECALL_K per query — the shared ground-truth stage of
-    q_sim_recall and q_sim_ivf_curve. Broadcast of the constant-Q query
-    side; cosine rounded once to 6dp, ranks tie-broken on vec_id."""
-    norms = comp.groupBy("vec_id").agg(
-        F.sum(F.col("micro") * F.col("micro")).alias("nn")
-    )
-    qcomp = comp.filter(F.col("vec_id") < RECALL_QUERIES).select(
-        F.col("vec_id").alias("q_id"), "d", F.col("micro").alias("qmicro")
-    )
-    scores = (
-        comp.join(F.broadcast(qcomp), "d")
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .groupBy("q_id", "vec_id")
-        .agg(F.sum(F.col("qmicro") * F.col("micro")).alias("sab"))
-    )
-    qnorms = norms.filter(F.col("vec_id") < RECALL_QUERIES).select(
-        F.col("vec_id").alias("q_id"), F.col("nn").alias("qnn")
+    q_sim_recall and q_sim_ivf_curve. The constant-Q query arrays
+    broadcast and each (query, vector) score is one int_dot projection
+    over the micro arrays of `marr` (_micro_arrays) with their nsq
+    norms; cosine rounded once to 6dp, ranks tie-broken on vec_id."""
+    q = marr.filter(F.col("vec_id") < RECALL_QUERIES).select(
+        F.col("vec_id").alias("q_id"), F.col("m").alias("qm"), F.col("nsq").alias("qnsq")
     )
     scored = (
-        scores.join(F.broadcast(qnorms), "q_id")
-        .join(norms, "vec_id")
+        marr.crossJoin(F.broadcast(q))
+        .filter(F.col("vec_id") != F.col("q_id"))
         .select(
             "q_id",
             "vec_id",
-            F.round(
-                F.col("sab").cast("double")
-                / (
-                    F.sqrt(F.col("qnn").cast("double"))
-                    * F.sqrt(F.col("nn").cast("double"))
-                ),
-                6,
-            ).alias("cosine"),
+            _cosine(int_dot("qm", "m"), F.col("qnsq"), F.col("nsq")).alias("cosine"),
         )
     )
     # materialize the scored table once: exact ranking, candidate
@@ -1473,19 +1486,18 @@ def q_sim_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     Both sides are deterministic: exact integer micro-dot products,
     cosine rounded once to 6dp, ranks tie-broken on vec_id — so the
     oracle replays ground truth, candidates, and the recall numbers
-    bit-for-bit. Scale shape: ground truth is O(Q·N) with a FIXED
-    sampled query set (the standard evaluation harness — Q is a
-    constant, not a corpus fraction), candidates come from the band
-    join (bucket-bounded, never a corpus self-join), and every stage is
-    map-side-combinable aggregates + broadcast of the Q-sized side."""
+    bit-for-bit. Scale shape: ground truth is O(Q·N) int_dot
+    projections against a broadcast of a FIXED sampled query set (the
+    standard evaluation harness — Q is a constant, not a corpus
+    fraction), candidates come from the band join (bucket-bounded,
+    never a corpus self-join), and the rest is map-side-combinable
+    aggregates over Q-sized sides."""
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    comp = _micro_comp(e)
+    marr = _micro_arrays(e)
     banded = pin(
-        portable_lsh_bands(
-            spark, _micro_arrays(e), RECALL_TABLES, RECALL_BITS, RECALL_BITS
-        )
+        portable_lsh_bands(spark, marr, RECALL_TABLES, RECALL_BITS, RECALL_BITS)
     )
-    scored, exact = _recall_ground_truth(comp)
+    scored, exact = _recall_ground_truth(marr)
     wnd = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), "vec_id")
     qbands = banded.filter(F.col("vec_id") < RECALL_QUERIES).select(
         F.col("vec_id").alias("q_id"), "t", "key"
@@ -1506,7 +1518,7 @@ def q_sim_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     hits = exact.join(approx, ["q_id", "vec_id"]).groupBy("q_id").agg(
         F.count(F.lit(1)).alias("n_hits")
     )
-    qset = comp.filter(F.col("vec_id") < RECALL_QUERIES).select(
+    qset = marr.filter(F.col("vec_id") < RECALL_QUERIES).select(
         F.col("vec_id").alias("q_id")
     ).distinct()
     return (
@@ -1625,9 +1637,9 @@ def q_sim_ivf_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     stages instead of re-running the index 4 times. Every quantity is
     exact-integer or once-rounded, so DuckDB replays the full curve
     bit-for-bit. Scale shape: constant-Q evaluation harness — broadcast
-    query set, map-side-combinable aggregates, no corpus self-join."""
+    query arrays scored by one int_dot projection per (query, vector),
+    map-side-combinable aggregates, no corpus self-join."""
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    comp = _micro_comp(e)
     celldots = pivf_celldots_for(spark, sf_dir)
     cw = Window.partitionBy("vec_id").orderBy(F.col("dot").desc(), "c")
     ranked = pin(celldots.withColumn("rn", F.row_number().over(cw)))
@@ -1637,7 +1649,7 @@ def q_sim_ivf_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c").alias("cell"),
         F.col("rn").alias("probe_rank"),
     )
-    scored, exact = _recall_ground_truth(comp)
+    scored, exact = _recall_ground_truth(_micro_arrays(e))
     cand = (
         scored.join(vcell, "vec_id")
         .join(F.broadcast(qrank), ["q_id", "cell"])
@@ -1716,7 +1728,10 @@ def q_embed_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: zero shuffles — per-row array math (posexplode + one
     map-side-combinable groupBy on vec_id, which AQE coalesces back to
     the input partitioning); no joins, no windows, runs at any corpus
-    size as a pure scan."""
+    size as a pure scan. It keeps the component form: the array
+    projection (micro_array, then int_sum over the squares and the
+    head's) measured slower at sf10 (200,000 vectors, 4 cores, three
+    alternating runs: 4.4/4.9/6.5 s against 4.0/3.1/2.8 s)."""
     e = load_table(spark, sf_dir, "embeddings")
     comp = e.select(
         "vec_id", F.posexplode(F.col("embedding")).alias("pos", "val")
@@ -1759,19 +1774,15 @@ KM_CELLS = 8
 KM_INIT_MOD = PIVF_MOD  # init components uniform in [-1e6, 1e6]
 
 
-def _km_assign(comp: DataFrame, cent: DataFrame) -> DataFrame:
+def _km_assign(marr: DataFrame, cent: DataFrame) -> DataFrame:
     """(vec_id, c, sse): nearest centroid by exact-BIGINT squared L2,
     tie to the smaller cell id. |micro - m| < 3e6, squared < 9e12, x64
-    dims < 6e14 — ANSI-safe. Centroids broadcast; the distance aggregate
-    is map-side combinable; argmin is one struct-max per vector."""
-    dists = (
-        comp.join(F.broadcast(cent), "d")
-        .groupBy("vec_id", "c")
-        .agg(
-            F.sum(
-                (F.col("micro") - F.col("m")) * (F.col("micro") - F.col("m"))
-            ).alias("sse")
-        )
+    dims < 6e14 — ANSI-safe. The centroid arrays broadcast, each
+    (vector, cell) distance is one int_sqdist projection over the micro
+    arrays of `marr`, and the argmin is one struct-max per vector (the
+    arrays are already partitioned on vec_id)."""
+    dists = marr.crossJoin(F.broadcast(cent)).select(
+        "vec_id", "c", int_sqdist("m", "a").alias("sse")
     )
     best = dists.groupBy("vec_id").agg(
         F.max(
@@ -1790,21 +1801,24 @@ def _km_assign(comp: DataFrame, cent: DataFrame) -> DataFrame:
 
 
 def _km_update(comp: DataFrame, assign: DataFrame, cent_prev: DataFrame) -> DataFrame:
-    """New centroid (c, d, m) = pmod-floor-divided integer mean of the
-    members' micro-components; cells with no members keep their previous
-    centroid (the COALESCE branch — standard empty-cluster handling)."""
+    """New centroid (c, a): per dimension, the pmod-floor-divided integer
+    mean of the members' micro components (`comp`, _micro_comp rows);
+    a dimension no member has a non-NULL component in, and every
+    dimension of a cell with no members, keeps the previous value (the
+    COALESCE branch — standard empty-cluster handling)."""
     sums = (
         comp.join(assign.select("vec_id", "c"), "vec_id")
         .groupBy("c", "d")
         .agg(F.sum("micro").alias("s"), F.count(F.lit(1)).alias("n"))
     )
-    upd = sums.select(
-        "c", "d", F.expr("(s - pmod(s, n)) div n").alias("m_new")
-    )
-    return (
-        cent_prev.withColumnRenamed("m", "m_prev")
-        .join(upd, ["c", "d"], "left")
-        .select("c", "d", F.coalesce("m_new", "m_prev").alias("m"))
+    upd = dim_arrays(
+        sums.select("c", "d", F.expr("(s - pmod(s, n)) div n").alias("m_new")),
+        ["c"],
+        "m_new",
+    ).withColumnRenamed("a", "a_new")
+    kept = F.zip_with("a", F.coalesce("a_new", "a"), lambda p, n: F.coalesce(n, p))
+    return cent_prev.join(upd, "c", "left").select(
+        "c", F.slice(kept, 1, F.size("a")).alias("a")
     )
 
 
@@ -1895,27 +1909,24 @@ def q_sim_ivf_trained_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     within-cell distortion, so a wrong assignment OR a wrong centroid
     update fails the value hash.
 
-    Scale shape: centroids are O(cells x dims) — always broadcast; each
-    assignment is one map-side-combinable (vec, cell) aggregate; each
-    update is one (cell, dim) aggregate over corpus rows. Iterations
+    Scale shape: centroids are O(cells x dims) arrays — always
+    broadcast; each assignment is one int_sqdist projection per
+    (vector, cell) and a per-vector argmax; each update is one
+    per-dimension (cell, dim) sum over the component rows. Iterations
     are a fixed constant (2 here; production trains on a bounded sample
     like q_sim_ivf_trained, so iteration cost is sample-sized, never
     corpus-sized). avg_sse is floor-divided per cell — a per-cell MEAN,
     not a raw sum, so the statistic stays in BIGINT range at any corpus
     size (a raw SSE sum would overflow near ~3e4 vecs/cell x 6e14)."""
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    comp = _micro_comp(e)
-
-    cells = spark.range(KM_CELLS).select(F.col("id").cast("int").alias("c"))
-    dims = spark.range(1, EMB_DIM + 1).select(F.col("id").alias("d"))
-    hx = F.md5(
-        F.concat(F.lit("k"), F.col("c").cast("string"), F.lit("#"),
-                 F.col("d").cast("string"))
-    )
-    cent = cells.crossJoin(dims).select(
-        "c", "d",
-        (F.conv(F.substring(hx, 1, 13), 16, 10).cast("long") % KM_INIT_MOD
-         - 1000000).alias("m"),
+    marr = _micro_arrays(e)
+    comp = _micro_comp(marr)
+    cent = spark.createDataFrame(
+        [
+            (c, [h % KM_INIT_MOD - 1000000 for h in row])
+            for c, row in enumerate(_md5_int_rows("k", KM_CELLS))
+        ],
+        "c int, a array<bigint>",
     )
     # r11 measured-and-rejected (guide §1.1 empirical loop): pinning
     # cent per iteration (localCheckpoint) looks like it should cut the
@@ -1940,9 +1951,9 @@ def q_sim_ivf_trained_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (semantic/embed dedup), not on per-row linear passes against a
     # broadcast this small.
     for _ in range(2):  # unrolled on the oracle side as _km_sql_iter(1..2)
-        assign = _km_assign(comp, cent)
+        assign = _km_assign(marr, cent)
         cent = _km_update(comp, assign, cent)
-    final = _km_assign(comp, cent)
+    final = _km_assign(marr, cent)
     return (
         final.groupBy(F.col("c").cast("long").alias("cell"))
         .agg(F.sum("sse").alias("ssum"), F.count(F.lit(1)).alias("n_vecs"))
@@ -2053,85 +2064,55 @@ def q_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle agree bit-for-bit.
 
     Scale shape: the retrieval stage is the q_sim_topk pattern (a
-    broadcast O(queries x dim) table against one corpus scan, map-side
-    combinable per-(qid, vec) dot aggregation, per-query top-M window
-    over M<<corpus rows); at 100 TB you swap in the IVF probe for the
-    scan without touching the rerank. The rerank stage only ever sees
+    broadcast of the query arrays against one corpus scan, one int_dot
+    projection per (query, vector), a per-query top-M window over
+    M<<corpus rows); at 100 TB you swap in the IVF probe for the scan
+    without touching the rerank. The rerank stage only ever sees
     queries x M rows and a <= (queries*M)^2-row pairwise-dot table —
     corpus-independent, and each greedy step is a keyed window over M
     rows, not an iterative driver loop."""
-    e = load_table(spark, sf_dir, "embeddings")
-    comp = e.select(
-        "vec_id",
-        F.posexplode(_as_double(F.col("embedding"))).alias("dim", "val"),
-    ).select(
-        "vec_id", "dim",
-        F.round(F.col("val") * 1000000).cast("long").alias("micro"),
-    )
-    qcomp = (
-        comp.filter(F.col("vec_id") < MMR_QUERIES)
-        .select(
-            F.col("vec_id").alias("qid"), "dim",
-            F.col("micro").alias("qmicro"),
-        )
+    e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    marr = _micro_arrays(e)
+    q = marr.filter(F.col("vec_id") < MMR_QUERIES).select(
+        F.col("vec_id").alias("qid"), F.col("m").alias("qm")
     )
     rel = (
-        comp.join(F.broadcast(qcomp), "dim")
+        marr.crossJoin(F.broadcast(q))
         .filter(F.col("vec_id") != F.col("qid"))
-        .groupBy("qid", "vec_id")
-        .agg(F.sum(F.col("micro") * F.col("qmicro")).alias("rel"))
+        .select("qid", "vec_id", int_dot("m", "qm").alias("rel"))
     )
     w_rel = Window.partitionBy("qid").orderBy(F.col("rel").desc(), "vec_id")
     # r11 (guide §3.3/§5): cand and pd are QUERY-sized (<= queries*M and
     # <= (queries*M)^2 rows) but every consumer below re-derived them
     # from scratch — cand feeds ids/s1/step2/step3 and pd feeds
     # step2/step3 twice, so the initial plan re-ran the corpus
-    # posexplode+dot subtree 19x per side (38 embeddings scans, 77
-    # exchanges — plans/r11/q_mmr_diversify_before.txt). Materializing
-    # the two tiny tables truncates every branch: exactly TWO corpus
-    # passes remain (rel's dot aggregate, cc's candidate gather), and
-    # the greedy rerank runs over pinned local rows.
+    # dot subtree 19x per side (38 embeddings scans, 77 exchanges —
+    # plans/r11/q_mmr_diversify_before.txt). Materializing the two tiny
+    # tables truncates every branch: exactly TWO corpus passes remain
+    # (rel's dots, cc's candidate gather), and the greedy rerank runs
+    # over pinned local rows.
     cand = pin(
         rel.withColumn("rn", F.row_number().over(w_rel))
         .filter(F.col("rn") <= MMR_CAND)
         .drop("rn")
     )
-    # pairwise dots over the union candidate set: <= (queries*M)^2 rows.
-    # cc (candidate components, <= queries*M x dim rows) feeds BOTH pd
-    # join sides — pin it so the gather pass runs once, not twice.
-    # r12 (VERDICT r11 #4): gather by joining the UN-exploded embedding
-    # rows first, THEN posexplode the <= queries*M survivors — the old
-    # form joined against `comp` (the full-corpus posexplode), so the
-    # gather re-ran the 64x row explosion over every vector; Catalyst
-    # cannot push a join below a Generate. One corpus-scan's I/O is
-    # still paid (no pruning index), but the explode+shuffle work is
-    # now candidate-sized, not corpus-sized.
+    # pairwise dots over the union candidate set: <= (queries*M)^2 rows,
+    # one int_dot projection per pair of candidate arrays. cc (the
+    # <= queries*M candidate arrays) feeds BOTH pd sides — pin it so the
+    # gather pass runs once, not twice. The gather joins the raw rows
+    # and projects the micro arrays of the survivors only: no
+    # repartition for a candidate-sized set.
     ids = cand.select("vec_id").distinct()
     cc = pin(
-        e.join(F.broadcast(ids), "vec_id")
-        .select(
-            "vec_id",
-            F.posexplode(_as_double(F.col("embedding"))).alias("dim", "val"),
-        )
-        .select(
-            "vec_id", "dim",
-            F.round(F.col("val") * 1000000).cast("long").alias("micro"),
+        e.join(F.broadcast(ids), "vec_id").select(
+            "vec_id", micro_array("embedding").alias("m")
         )
     )
     pd = pin(
-        cc.select(F.col("vec_id").alias("a"), "dim", F.col("micro").alias("ma"))
-        .join(
-            F.broadcast(
-                cc.select(
-                    F.col("vec_id").alias("b"), "dim",
-                    F.col("micro").alias("mb"),
-                )
-            ),
-            "dim",
-        )
+        cc.select(F.col("vec_id").alias("a"), F.col("m").alias("ma"))
+        .crossJoin(F.broadcast(cc.select(F.col("vec_id").alias("b"), F.col("m").alias("mb"))))
         .filter(F.col("a") != F.col("b"))
-        .groupBy("a", "b")
-        .agg(F.sum(F.col("ma") * F.col("mb")).alias("d"))
+        .select("a", "b", int_dot("ma", "mb").alias("d"))
     )
     s1 = (
         cand.withColumn("rn", F.row_number().over(w_rel))
@@ -2267,59 +2248,27 @@ def q_sim_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     and exact BIGINT squared distances as q_pq_encode; ADC sums and the
     (adc, vec_id) rank order replay bit-for-bit in the oracle.
 
-    Scale shape: codebook (1,024 rows) and per-query LUTs
+    Scale shape: codebook (8 rows of 16 code arrays) and per-query LUTs
     (queries x 8 x 16 rows) broadcast — both bounded by PQ geometry,
     not data. The corpus-proportional cost is the ENCODE, not the
-    search: the broadcast codebook join fans each component row out to
-    its K = 16 candidate codes before the (vec, m, code) SSE aggregate
-    — N x dims x K multiply-adds, map-side combined; that is the same
-    multiply count FAISS spends in BLAS for PQ encode, and it amortizes
-    across every later query because search touches only the 8-byte
-    codes (a broadcast-LUT join + map-side ADC reduce + query-
+    search: one projection per (vector, subspace) takes the argmin over
+    its K = 16 code distances in place — N x dims x K multiply-adds, the
+    same multiply count FAISS spends in BLAS for PQ encode — and it
+    amortizes across every later query because search touches only the
+    8-byte codes (a broadcast-LUT join + map-side ADC reduce + query-
     partitioned top-k window over an aggregate-shrunk set). At 100 TB
     the codes are a stored table written once by the encode job; the
     per-query cost is independent of vector width."""
-    e = load_table(spark, sf_dir, "embeddings")
-    comp = e.select(
-        "vec_id",
-        F.posexplode(F.col("embedding")).alias("pos", "val"),
-    ).select(
-        "vec_id",
-        F.expr("pos div 8").alias("m"),
-        (F.col("pos") + 1).cast("long").alias("dim"),
-        F.expr(_PQ_BUCKET).cast("long").alias("bucket"),
-        F.round(F.col("val").cast("double") * 1000000).cast("long").alias("micro"),
-    )
-    book = (
-        comp.groupBy("m", F.col("bucket").alias("code"), "dim")
-        .agg(F.sum("micro").alias("s"), F.count(F.lit(1)).alias("n"))
-        .select(
-            "m",
-            "code",
-            "dim",
-            F.expr("(s - pmod(s, n)) div n").alias("icent"),
-        )
-    )
-    diff = F.col("micro") - F.col("icent")
-    dists = (
-        comp.join(F.broadcast(book), ["m", "dim"])
-        .groupBy("vec_id", "m", "code")
-        .agg(F.sum(diff * diff).alias("sse"))
-    )
-    codes = (
-        dists.groupBy("vec_id", "m")
-        .agg(F.min(F.struct(F.col("sse"), F.col("code"))).alias("top"))
-        .select("vec_id", "m", F.col("top.code").alias("code"))
-    )
-    qdiff = F.col("micro") - F.col("icent")
-    lut = (
-        comp.filter(F.col("vec_id") < PQ_SEARCH_QUERIES)
-        .join(F.broadcast(book), ["m", "dim"])
-        .groupBy(F.col("vec_id").alias("qid"), "m", "code")
-        .agg(F.sum(qdiff * qdiff).alias("part"))
+    e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    marr = _micro_arrays(e)
+    subs = _pq_subspaces(marr, "m", _pq_books(_micro_comp(marr)), "vec_id")
+    lut = _pq_lut(
+        subs.filter(F.col("vec_id") < PQ_SEARCH_QUERIES).withColumnRenamed("vec_id", "qid"),
+        "qid",
     )
     adc = (
-        codes.join(F.broadcast(lut), ["m", "code"])
+        _pq_encode(subs, "vec_id")
+        .join(F.broadcast(lut), ["sub", "code"])
         .filter(F.col("vec_id") != F.col("qid"))
         .groupBy("qid", "vec_id")
         .agg(F.sum("part").alias("adc"))
@@ -2442,14 +2391,16 @@ def q_sim_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: anchors (cells x dims) and the per-cell LUTs
     (nprobe x 8 x 16 rows) broadcast — both bounded by index geometry;
-    residual encoding is one broadcast join + two map-side-combined
-    aggregates over the corpus; at serving scale the (cell, m, code)
-    table is written partitionBy(cell) so the probe semi-join becomes
-    partition pruning (the q_sim_ivf stored-index pattern), and the ADC
-    join touches only nprobe/cells of the data. Final top-k is a
-    TakeOrdered over the aggregate-shrunk candidate set."""
+    each residual is one zip_with against the vector's anchor array,
+    the codebook one per-dimension sum over the residual components,
+    and encoding one projection per (vector, subspace) with the argmin
+    in place; at serving scale the (cell, m, code) table is written
+    partitionBy(cell) so the probe semi-join becomes partition pruning
+    (the q_sim_ivf stored-index pattern), and the ADC join touches only
+    nprobe/cells of the data. Final top-k is a TakeOrdered over the
+    aggregate-shrunk candidate set."""
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    comp = _micro_comp(e)
+    marr = _micro_arrays(e)
     celldots = pivf_celldots_for(spark, sf_dir)
     best = celldots.groupBy("vec_id").agg(
         F.max(F.struct(F.col("dot"), (-F.col("c")).alias("nc"))).alias("top")
@@ -2469,62 +2420,26 @@ def q_sim_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(PIVF_NPROBE)
         .select(F.col("c").alias("cell"))
     )
-    anchors = _pivf_anchors(spark)
-    res = (
-        comp.join(vcell, "vec_id")
-        .join(
-            F.broadcast(anchors.withColumnRenamed("c", "cell")),
-            ["cell", "d"],
-        )
-        .select(
-            "vec_id",
-            "cell",
-            "d",
-            F.expr("(d - 1) div 8").alias("m"),
-            F.expr(_PQ_BUCKET).cast("long").alias("bucket"),
-            (F.col("micro") - F.col("a")).alias("rm"),
-        )
+    anchors = F.broadcast(
+        spark.createDataFrame(_pivf_anchor_rows(), "cell int, a array<bigint>")
     )
-    book = (
-        res.groupBy("m", F.col("bucket").alias("code"), "d")
-        .agg(F.sum("rm").alias("s"), F.count(F.lit(1)).alias("n"))
-        .select("m", "code", "d", F.expr("(s - pmod(s, n)) div n").alias("icent"))
-    )
-    rdiff = F.col("rm") - F.col("icent")
-    dists = (
-        res.join(F.broadcast(book), ["m", "d"])
-        .groupBy("vec_id", "m", "code")
-        .agg(F.sum(rdiff * rdiff).alias("sse"))
-    )
-    codes = (
-        dists.groupBy("vec_id", "m")
-        .agg(F.min(F.struct(F.col("sse"), F.col("code"))).alias("top"))
-        .select("vec_id", "m", F.col("top.code").alias("code"))
-    )
+    # the residual exists where both the vector and its 64-dim anchor do
+    resid = F.slice(
+        F.zip_with("m", "a", lambda x, y: x - y), 1, F.least(F.size("m"), F.size("a"))
+    ).alias("r")
+    res = marr.join(vcell, "vec_id").join(anchors, "cell").select("vec_id", "cell", resid)
+    books = _pq_books(_micro_comp(res, "r"))
+    codes = _pq_encode(_pq_subspaces(res, "r", books, "vec_id", "cell"), "vec_id", "cell")
     qres = (
-        comp.filter(F.col("vec_id") == 0)
+        marr.filter(F.col("vec_id") == 0)
         .crossJoin(F.broadcast(probe))
-        .join(
-            F.broadcast(anchors.withColumnRenamed("c", "cell")),
-            ["cell", "d"],
-        )
-        .select(
-            "cell",
-            "d",
-            F.expr("(d - 1) div 8").alias("m"),
-            (F.col("micro") - F.col("a")).alias("qr"),
-        )
+        .join(anchors, "cell")
+        .select("cell", resid)
     )
-    qdiff = F.col("qr") - F.col("icent")
-    lut = (
-        qres.join(F.broadcast(book), ["m", "d"])
-        .groupBy("cell", "m", "code")
-        .agg(F.sum(qdiff * qdiff).alias("part"))
-    )
+    lut = _pq_lut(_pq_subspaces(qres, "r", books, "cell"), "cell")
     adc = (
         codes.filter(F.col("vec_id") != 0)
-        .join(vcell, "vec_id")
-        .join(F.broadcast(lut), ["cell", "m", "code"])
+        .join(F.broadcast(lut), ["cell", "sub", "code"])
         .groupBy("vec_id", "cell")
         .agg(F.sum("part").alias("adc"))
     )
@@ -2613,69 +2528,40 @@ def q_embed_rp(spark: SparkSession, sf_dir: str) -> DataFrame:
     distortion is visible in the result (the acceptance check a
     pre-filter deployment runs).
 
-    Scale shape: the sign matrix is a {RP_K} x 64 literal-bounded
-    broadcast; projection is one map-side-combinable (vec, j) aggregate
-    over the component explode — corpus-linear, shuffle-free until the
-    16-row-per-vector aggregate; scoring joins the 16-row query
-    projection broadcast-style. Integer dots both sides; the only
+    Scale shape: the {RP_K} md5 sign arrays broadcast as one row and
+    each vector's projection is one projection of {RP_K} int_dots over
+    its micro array — corpus-linear, shuffle-free; scoring is one
+    projection per vector against the broadcast query row (its
+    projection and its micro array). Integer dots both sides; the only
     rounding is the final 6dp cosine, identical in both engines.
     """
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    comp = _micro_comp(e)
-    js = spark.range(RP_K).select(F.col("id").cast("int").alias("j"))
-    dims = spark.range(1, EMB_DIM + 1).select(F.col("id").alias("d"))
-    hx = F.md5(
-        F.concat(
-            F.lit("r"), F.col("j").cast("string"), F.lit("#"), F.col("d").cast("string")
-        )
-    )
-    signs = js.crossJoin(dims).select(
-        "j",
-        "d",
-        (
-            F.lit(1)
-            - F.lit(2) * (F.conv(F.substring(hx, 1, 13), 16, 10).cast("long") % 2)
-        ).alias("r"),
+    signs = spark.createDataFrame(
+        [([[1 - 2 * (h % 2) for h in row] for row in _md5_int_rows("r", RP_K)],)],
+        "r array<array<bigint>>",
     )
     proj = (
-        comp.join(F.broadcast(signs), "d")
-        .groupBy("vec_id", "j")
-        .agg(F.sum(F.col("micro") * F.col("r")).alias("p"))
+        _micro_arrays(e)
+        .crossJoin(F.broadcast(signs))
+        .select("vec_id", "m", "nsq", F.transform("r", lambda w: int_dot("m", w)).alias("p"))
     )
-    qp = proj.filter(F.col("vec_id") == RP_QUERY).select("j", F.col("p").alias("qv"))
-    scores = (
+    q = proj.filter(F.col("vec_id") == RP_QUERY).select(
+        F.col("m").alias("qm"), F.col("nsq").alias("qnsq"), F.col("p").alias("qp")
+    )
+    joined = (
         proj.filter(F.col("vec_id") != RP_QUERY)
-        .join(F.broadcast(qp), "j")
-        .groupBy("vec_id")
-        .agg(
-            F.sum(F.col("p") * F.col("qv")).alias("pdot"),
-            F.sum(F.col("p") * F.col("p")).alias("pvv"),
-            F.sum(F.col("qv") * F.col("qv")).alias("pqq"),
+        .crossJoin(F.broadcast(q))
+        .select(
+            "vec_id",
+            _cosine(int_dot("p", "qp"), int_dot("p", "p"), int_dot("qp", "qp")).alias(
+                "proj_cosine"
+            ),
+            _cosine(
+                int_dot("m", "qm"),
+                _shared_nsq("m", "nsq", "qm"),
+                _shared_nsq("qm", "qnsq", "m"),
+            ).alias("exact_cosine"),
         )
-    )
-    qc = comp.filter(F.col("vec_id") == RP_QUERY).select(
-        "d", F.col("micro").alias("qmicro")
-    )
-    exact = (
-        comp.filter(F.col("vec_id") != RP_QUERY)
-        .join(F.broadcast(qc), "d")
-        .groupBy("vec_id")
-        .agg(
-            F.sum(F.col("micro") * F.col("qmicro")).alias("svq"),
-            F.sum(F.col("micro") * F.col("micro")).alias("svv"),
-            F.sum(F.col("qmicro") * F.col("qmicro")).alias("sqq"),
-        )
-    )
-    pcos = F.col("pdot").cast("double") / (
-        F.sqrt(F.col("pvv").cast("double")) * F.sqrt(F.col("pqq").cast("double"))
-    )
-    ecos = F.col("svq").cast("double") / (
-        F.sqrt(F.col("svv").cast("double")) * F.sqrt(F.col("sqq").cast("double"))
-    )
-    joined = scores.join(exact, "vec_id").select(
-        "vec_id",
-        F.round(pcos, 6).alias("proj_cosine"),
-        F.round(ecos, 6).alias("exact_cosine"),
     )
     top = joined.orderBy(F.col("proj_cosine").desc(), "vec_id").limit(RP_TOPK)
     w = Window.orderBy(F.col("proj_cosine").desc(), "vec_id")

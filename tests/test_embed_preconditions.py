@@ -95,16 +95,44 @@ def null_component_sf(tmp_path_factory):
     return _embeddings_sf(tmp_path_factory.mktemp("null_component_sf"), rows)
 
 
+@pytest.fixture(scope="module")
+def null_component_small_sf(tmp_path_factory):
+    """null_component_sf's corpus scaled by 0.1, inside q_dedup_semantic's
+    documented milli-component domain (|milli| <= ~530; the unscaled
+    N(0,1) components reach ~2,800), with the same single NULL
+    component in vec_id 3."""
+    rows = [(v, [0.1 * x for x in emb], label) for v, emb, label in _correlated_rows()]
+    rows[3][1][10] = None
+    return _embeddings_sf(tmp_path_factory.mktemp("null_component_small_sf"), rows)
+
+
+# Every query whose integer dots, norms, distances or per-dimension sums
+# run over the micro arrays (functions/vector.py); each keeps every
+# vector the oracle keeps.
+FUSED_KERNEL_QUERIES = [
+    "q_sim_recall",
+    "q_sim_ivf_portable",
+    "q_sim_ivf_curve",
+    "q_sim_ivfpq",
+    "q_embed_outlier",
+    "q_embed_norm",
+    "q_embed_rp",
+    "q_embed_centroid",
+    "q_mmr_diversify",
+    "q_kmeans_assign",
+    "q_sim_ivf_trained_portable",
+    "q_pq_encode",
+    "q_sim_pq_search",
+]
+
+
 @pytest.mark.parametrize(
     "name",
     [
         "q_dedup_embed",
         "q_dedup_embed_lsh_portable",
         "q_sim_lsh_portable",
-        "q_sim_recall",
-        "q_sim_ivf_portable",
-        "q_sim_ivf_curve",
-        "q_sim_ivfpq",
+        *FUSED_KERNEL_QUERIES,
     ],
 )
 def test_ragged_corpus_matches_oracle(spark, ragged_sf, name):
@@ -112,9 +140,10 @@ def test_ragged_corpus_matches_oracle(spark, ragged_sf, name):
     the LSH twins and q_dedup_embed apply the same fixed-length source
     predicate, so neither the old np.stack crash (q_dedup_embed) nor the
     old verify-only-filter silent pair drop (the LSH twins) can recur;
-    the recall and IVF queries keep every vector, so their fused dots
-    must match the oracle's component SUMs over partial dimensions and
-    give a NULL embedding no row."""
+    the fused-kernel queries keep every vector, so their array dots,
+    norms and distances must match the oracle's component SUMs over
+    partial dimensions (a PQ subspace past the ragged end gives no code)
+    and give a NULL embedding no row."""
     df = registry.QUERIES[name](spark, ragged_sf)
     problems = compare(name, df, registry.ORACLES[name], ragged_sf)
     assert not problems, "\n".join(problems)
@@ -125,17 +154,29 @@ def test_ragged_corpus_matches_oracle(spark, ragged_sf, name):
     [
         "q_sim_lsh_portable",
         "q_dedup_embed_lsh_portable",
-        "q_sim_recall",
-        "q_sim_ivf_portable",
+        "q_dedup_embed",
+        "q_embed_quantize",
+        *FUSED_KERNEL_QUERIES,
     ],
 )
 def test_null_component_matches_oracle(spark, null_component_sf, name):
     """A NULL component inside a 64-dim vector: the oracle's SUMs skip
     it, so the integer dots and the verify's cosine must skip it too
     instead of turning the whole vector's dots NULL (which dropped every
-    pair of that vector from the LSH twins)."""
+    pair of that vector from the LSH twins, and q_embed_quantize's
+    sums), and q_dedup_embed's numpy kernel must add nothing for it."""
     df = registry.QUERIES[name](spark, null_component_sf)
     problems = compare(name, df, registry.ORACLES[name], null_component_sf)
+    assert not problems, "\n".join(problems)
+
+
+def test_semantic_null_component_matches_oracle(spark, null_component_small_sf):
+    """q_dedup_semantic's numpy kernels skip a NULL component as the
+    oracle's SUMs do; it used to reach the pair stage as int64 garbage
+    and trip the cell-dot domain guard."""
+    name = "q_dedup_semantic"
+    df = registry.QUERIES[name](spark, null_component_small_sf)
+    problems = compare(name, df, registry.ORACLES[name], null_component_small_sf)
     assert not problems, "\n".join(problems)
 
 

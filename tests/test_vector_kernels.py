@@ -1,12 +1,12 @@
-"""The fused integer dot (functions/vector.py int_dot over micro_array)
-against the exploded component form it replaced, kept here as the
-reference: posexplode every vector into (vec_id, d, micro) rows
-(similarity._micro_comp), join the broadcast component rows of the
-other side on d, and SUM per key. SQL SUM skips NULL products, is NULL
-when every product is NULL, and a vector with no component rows gets no
-row at all; the fused form must give the same rows on the edge cases
-the fixtures never hold: a NULL array, an empty array, all-NULL
-components, a short array and one past 64 dimensions.
+"""The fused integer kernels (functions/vector.py int_sum / int_dot /
+int_sqdist over micro_array) against the exploded component form they
+replaced, kept here as the reference: posexplode every vector into
+(vec_id, d, micro) rows, join the broadcast component rows of the other
+side on d, and SUM per key. SQL SUM skips NULL products, is NULL when
+every product is NULL, and a vector with no component rows gets no row
+at all; the fused form must give the same rows on the edge cases the
+fixtures never hold: a NULL array, an empty array, all-NULL components,
+a short array and one past 64 dimensions.
 """
 
 from __future__ import annotations
@@ -16,11 +16,11 @@ import hashlib
 import pytest
 from pyspark.sql import functions as F
 
-from elric_rs_spark.functions.vector import int_dot, micro_array
+from elric_rs_spark.functions.vector import dim_arrays, int_dot, int_sqdist, int_sum
 from elric_rs_spark.operators.similarity import (
     _micro_arrays,
     _micro_comp,
-    _pivf_anchors,
+    _pivf_anchor_rows,
     _pivf_celldots,
     portable_lsh_bands,
 )
@@ -45,11 +45,26 @@ def _rows(df, *cols):
     return sorted(tuple(r[c] for c in cols) for r in df.collect())
 
 
+def _exploded(e):
+    """The reference component rows (vec_id, d, micro): one row per
+    component of each embedding, rounded to micro-units the way the
+    oracles round."""
+    return e.select("vec_id", F.posexplode("embedding").alias("pos", "val")).select(
+        "vec_id",
+        (F.col("pos") + 1).cast("long").alias("d"),
+        F.round(F.col("val").cast("double") * 1000000).cast("long").alias("micro"),
+    )
+
+
 def _exploded_celldots(spark, e):
     """The removed exploded form of _pivf_celldots."""
+    anchors = spark.createDataFrame(
+        [(c, d, a) for c, arr in _pivf_anchor_rows() for d, a in enumerate(arr, 1)],
+        "c int, d long, a long",
+    )
     return (
-        _micro_comp(e)
-        .join(F.broadcast(_pivf_anchors(spark)), "d")
+        _exploded(e)
+        .join(F.broadcast(anchors), "d")
         .groupBy("vec_id", "c")
         .agg(F.sum(F.col("micro") * F.col("a")).alias("dot"))
     )
@@ -82,12 +97,70 @@ def test_int_dot_sum_semantics(spark):
     assert got == {0: 100, 1: None, 2: 14, 3: None}
 
 
+def test_int_sum_sum_semantics(spark):
+    """int_sum is SQL SUM over the elements: NULLs skipped, NULL when no
+    element is non-NULL."""
+    df = spark.createDataFrame(
+        [
+            (0, None),
+            (1, []),
+            (2, [None, None]),
+            (3, [1, None, -3]),
+            (4, [2, 5]),
+        ],
+        "k int, a array<bigint>",
+    )
+    got = dict((r.k, r.s) for r in df.select("k", int_sum("a").alias("s")).collect())
+    assert got == {0: None, 1: None, 2: None, 3: -2, 4: 7}
+
+
+def test_int_sqdist_sum_semantics(spark):
+    df = spark.createDataFrame(
+        [
+            (0, [1, None, 3], [0, 20, 5]),
+            (1, [None, None], [1, 2]),
+            (2, [1, 2, 3], [4, 5]),  # positions past the shorter array add 0
+        ],
+        "k int, a array<bigint>, b array<bigint>",
+    )
+    got = dict(
+        (r.k, r.d) for r in df.select("k", int_sqdist("a", "b").alias("d")).collect()
+    )
+    assert got == {0: 5, 1: None, 2: 18}
+
+
 def test_micro_array_matches_micro_comp(spark, edge_vecs):
-    exploded = _rows(_micro_comp(edge_vecs), "vec_id", "d", "micro")
-    fused = edge_vecs.select(
-        "vec_id", F.posexplode(micro_array("embedding")).alias("pos", "micro")
-    ).select("vec_id", (F.col("pos") + 1).alias("d"), "micro")
+    """_micro_comp over _micro_arrays gives exactly the reference
+    component rows: NULL and empty embeddings give none."""
+    exploded = _rows(_exploded(edge_vecs), "vec_id", "d", "micro")
+    fused = _micro_comp(_micro_arrays(edge_vecs))
     assert _rows(fused, "vec_id", "d", "micro") == exploded
+
+
+def test_dim_arrays_fold_per_dimension_sums(spark, edge_vecs):
+    """dim_arrays puts each key's per-dimension sums in d order, so an
+    int_dot against the folded arrays equals the component join + SUM;
+    a dimension whose components are all NULL sums to NULL in place."""
+    comp = _exploded(edge_vecs).withColumn("g", F.col("vec_id") % 2)
+    sums = comp.groupBy("g", "d").agg(F.sum("micro").alias("s"))
+    want = _rows(
+        comp.join(F.broadcast(sums.withColumnRenamed("g", "k")), "d")
+        .groupBy("vec_id", "k")
+        .agg(F.sum(F.col("micro") * F.col("s")).alias("dot")),
+        "vec_id",
+        "k",
+        "dot",
+    )
+    arrs = dim_arrays(sums, ["g"], "s").withColumnRenamed("g", "k")
+    got = _rows(
+        _micro_arrays(edge_vecs)
+        .crossJoin(F.broadcast(arrs))
+        .select("vec_id", "k", int_dot("m", "a").alias("dot")),
+        "vec_id",
+        "k",
+        "dot",
+    )
+    assert got == want
 
 
 def test_lsh_bands_match_exploded_form(spark, edge_vecs):
@@ -104,7 +177,7 @@ def test_lsh_bands_match_exploded_form(spark, edge_vecs):
         "p int, d long, w long",
     )
     dots = (
-        _micro_comp(edge_vecs)
+        _exploded(edge_vecs)
         .join(F.broadcast(w), "d")
         .groupBy("vec_id", "p")
         .agg(F.sum(F.col("micro") * F.col("w")).alias("dot"))
