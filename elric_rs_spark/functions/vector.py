@@ -12,7 +12,10 @@ out are the rows the kernel needs: no per-dimension explode, no
 (vector, set member) aggregate. Only an operator that is itself a
 per-dimension sum (a centroid, a k-means update, a PQ codebook) explodes
 a vector into component rows; `dim_arrays` folds its sums back into
-arrays for the projections.
+arrays for the projections. Measured exceptions keep their component
+form because the array form ran slower at sf10 (similarity.py gives
+the numbers): `q_embed_norm` and `q_embed_centroid` (inline explode and
+rounding), and `q_sim_ivfpq`'s residual encode and lookup table.
 
 Scale note: HOF lambdas evaluate interpreted (outside whole-stage
 codegen). At 64 dims that costs microseconds per row and avoids any
@@ -72,33 +75,16 @@ def int_sqdist(a, b) -> Column:
     return int_sum(F.zip_with(a, b, lambda x, y: (x - y) * (x - y)))
 
 
-def dim_arrays(
-    rows: DataFrame, keys: list[str], value: str, inner: str | None = None
-) -> DataFrame:
+def dim_arrays(rows: DataFrame, keys: list[str], value: str) -> DataFrame:
     """(key…, a) from per-dimension (key…, d, value) sum rows: `a` holds
     each key's values in d order. A key's dims must be contiguous from
     its first one — true of any sum over vector components, since each
-    vector contributes a prefix of the dims — so a[i] is dim first + i.
-
-    With `inner`, one of the keys, the rows group by the other keys and
-    `a` is array<struct<inner, a>> in `inner` order: the same arrays,
-    nested, still one aggregate (a PQ codebook per subspace)."""
-    if inner is None:
-        return rows.groupBy(*keys).agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("d", value))), lambda s: s[value]
-            ).alias("a")
-        )
-    outer = [k for k in keys if k != inner]
-    s = F.array_sort(F.collect_list(F.struct(inner, "d", value)))
-    nested = F.transform(
-        F.array_distinct(F.transform("s", lambda x: x[inner])),
-        lambda k: F.struct(
-            k.alias(inner),
-            F.transform(F.filter("s", lambda x: x[inner] == k), lambda x: x[value]).alias("a"),
-        ),
+    vector contributes a prefix of the dims — so a[i] is dim first + i."""
+    return rows.groupBy(*keys).agg(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("d", value))), lambda s: s[value]
+        ).alias("a")
     )
-    return rows.groupBy(*outer).agg(s.alias("s")).select(*outer, nested.alias("a"))
 
 
 def sorted_pairs(arr, make) -> Column:

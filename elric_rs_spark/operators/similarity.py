@@ -594,15 +594,24 @@ def q_embed_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
     — summing raw doubles would make the centroid depend on partition
     order. The final division happens once, identically, on both engines.
 
-    Scale shape: a per-dimension sum, so the micro array explodes into
-    component rows (_micro_comp), then ONE map-side-combined groupBy on
-    (label, dim) — 640 output groups regardless of corpus size; no
-    joins, no windows. This is the same aggregate shape a distributed
-    k-means update uses (q_sim_ivf_trained_portable's _km_update).
+    Scale shape: a per-dimension sum — posexplode, then ONE
+    map-side-combined groupBy on (label, dim) — 640 output groups
+    regardless of corpus size; no joins, no windows. This is the same
+    aggregate shape a distributed k-means update uses
+    (q_sim_ivf_trained_portable's _km_update). It rounds inline rather
+    than through micro_array + _micro_comp, which ran slower at sf10
+    (200,000 vectors, 4 cores, the query alone in a fresh session,
+    three alternating pairs: 7.1/7.1/7.0 s against 6.8/5.7/6.2 s).
     """
     e = load_table(spark, sf_dir, "embeddings")
-    comp = _micro_comp(e.select("label", micro_array("embedding").alias("m")))
-    return comp.groupBy("label", F.col("d").alias("dim")).agg(
+    comp = e.select(
+        "label", F.posexplode(F.col("embedding")).alias("pos", "val")
+    ).select(
+        "label",
+        (F.col("pos") + 1).cast("long").alias("dim"),
+        F.round(F.col("val").cast("double") * 1000000).cast("long").alias("micro"),
+    )
+    return comp.groupBy("label", "dim").agg(
         F.count(F.lit(1)).alias("n"),
         F.round(
             F.sum("micro").cast("double") / 1000000 / F.count(F.lit(1)), 6
@@ -710,23 +719,45 @@ PQ_DIM = EMB_DIM // PQ_M
 _PQ_BUCKET = f"((vec_id % 1000003) * 2654435761 + 12345) % 4294967296 % {PQ_K}"
 
 
+def _pq_centroids(comp: DataFrame) -> DataFrame:
+    """(sub, code, d, icent) from (vec_id, d, micro) component rows
+    (_micro_comp): code k's centroid component in dimension d of
+    subspace sub, the pmod-floor-divided integer mean of training bucket
+    k's components (_PQ_BUCKET) — a per-dimension sum, the one PQ stage
+    that explodes."""
+    return (
+        comp.groupBy(
+            F.expr(f"(d - 1) div {PQ_DIM}").alias("sub"),
+            F.expr(_PQ_BUCKET).cast("long").alias("code"),
+            "d",
+        )
+        .agg(F.sum("micro").alias("s"), F.count(F.lit(1)).alias("n"))
+        .select("sub", "code", "d", F.expr("(s - pmod(s, n)) div n").alias("icent"))
+    )
+
+
 def _pq_books(comp: DataFrame) -> DataFrame:
-    """(sub, book) from (vec_id, d, micro) component rows (_micro_comp):
-    subspace sub's codebook as array<struct<code, a>> in code order. Code
-    k's centroid `a` holds the pmod-floor-divided integer means of
-    training bucket k's components (_PQ_BUCKET), one per dimension of
-    the subspace — a per-dimension sum, the one PQ stage that explodes."""
-    sums = comp.groupBy(
-        F.expr(f"(d - 1) div {PQ_DIM}").alias("sub"),
-        F.expr(_PQ_BUCKET).cast("long").alias("code"),
-        "d",
-    ).agg(F.sum("micro").alias("s"), F.count(F.lit(1)).alias("n"))
-    return dim_arrays(
-        sums.select("sub", "code", "d", F.expr("(s - pmod(s, n)) div n").alias("icent")),
-        ["sub", "code"],
-        "icent",
-        inner="code",
-    ).withColumnRenamed("a", "book")
+    """(sub, book): _pq_centroids as one codebook per subspace,
+    array<struct<code, a>> in code order with `a` in d order. One
+    aggregate per subspace collects its sorted (code, d, icent) rows;
+    the projection splits them per code (each code's dims are a prefix,
+    as in dim_arrays)."""
+    rows = F.array_sort(F.collect_list(F.struct("code", "d", "icent")))
+    book = F.transform(
+        F.array_distinct(F.transform("rows", lambda x: x["code"])),
+        lambda k: F.struct(
+            k.alias("code"),
+            F.transform(
+                F.filter("rows", lambda x: x["code"] == k), lambda x: x["icent"]
+            ).alias("a"),
+        ),
+    )
+    return (
+        _pq_centroids(comp)
+        .groupBy("sub")
+        .agg(rows.alias("rows"))
+        .select("sub", book.alias("book"))
+    )
 
 
 def _pq_subspaces(vecs: DataFrame, arr: str, books: DataFrame, *keep: str) -> DataFrame:
@@ -909,10 +940,14 @@ def _micro_arrays(e: DataFrame) -> DataFrame:
 def _micro_comp(vecs: DataFrame, arr: str = "m") -> DataFrame:
     """(…, d, micro): the integer array `arr` of `vecs` (_micro_arrays'
     `m`, or a residual of it) as one row per component, 1-based d, with
-    the other columns but `nsq` carried. The only explode of a vector:
-    only per-dimension sums use it (a centroid, the k-means update, a
-    PQ codebook); every dot, norm and distance is a projection over the
-    arrays (functions/vector.py)."""
+    the other columns but `nsq` carried. The one shared explode of a
+    vector: per-dimension sums use it (the k-means centroids and
+    update, a PQ codebook); every dot, norm and distance is a projection
+    over the arrays (functions/vector.py). Measured exceptions, each
+    slower at sf10 in the array form (see their docstrings):
+    q_embed_norm and q_embed_centroid explode and round inline, and
+    q_sim_ivfpq's residual encode and LUT sum squares over this
+    helper's rows."""
     keep = [c for c in vecs.columns if c not in (arr, "nsq")]
     # outer + pos filter: posexplode's rows, without the size(m) > 0
     # filter Catalyst infers for a plain explode and pushes below the
@@ -1729,9 +1764,10 @@ def q_embed_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combinable groupBy on vec_id, which AQE coalesces back to
     the input partitioning); no joins, no windows, runs at any corpus
     size as a pure scan. It keeps the component form: the array
-    projection (micro_array, then int_sum over the squares and the
-    head's) measured slower at sf10 (200,000 vectors, 4 cores, three
-    alternating runs: 4.4/4.9/6.5 s against 4.0/3.1/2.8 s)."""
+    projection (micro_array, then int_dot over the array and its head
+    slice, no aggregate) ran slower at sf10 (200,000 vectors, 4 cores,
+    the query alone in a fresh session, five alternating pairs:
+    16.6/15.5/10.9/10.5/10.2 s against 11.9/11.1/9.9/8.1/7.6 s)."""
     e = load_table(spark, sf_dir, "embeddings")
     comp = e.select(
         "vec_id", F.posexplode(F.col("embedding")).alias("pos", "val")
@@ -2391,10 +2427,16 @@ def q_sim_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: anchors (cells x dims) and the per-cell LUTs
     (nprobe x 8 x 16 rows) broadcast — both bounded by index geometry;
-    each residual is one zip_with against the vector's anchor array,
-    the codebook one per-dimension sum over the residual components,
-    and encoding one projection per (vector, subspace) with the argmin
-    in place; at serving scale the (cell, m, code) table is written
+    residual encoding is one broadcast join + two map-side-combined
+    aggregates over the residual components, with the cell carried in
+    the aggregate keys so the codes need no second join to vcell. It
+    keeps the component form: the fused projection (a zip_with residual,
+    then _pq_encode's argmin) ran slower at sf10 (200,000 vectors, 4
+    cores, five alternating runs: 75.0/128.3/67.4/73.8/65.0 s against
+    66.3/68.5/75.7/65.1/64.5 s for the component form before the cell
+    was carried, which this form beats: 42.9/48.3/49.1/40.3/40.8 s
+    against 57.6/60.9/65.3/82.8/56.4 s); at serving scale the
+    (cell, m, code) table is written
     partitionBy(cell) so the probe semi-join becomes partition pruning
     (the q_sim_ivf stored-index pattern), and the ADC join touches only
     nprobe/cells of the data. Final top-k is a TakeOrdered over the
@@ -2420,28 +2462,40 @@ def q_sim_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(PIVF_NPROBE)
         .select(F.col("c").alias("cell"))
     )
+    # the residual encode and the LUT stay in component form (measured,
+    # see the docstring)
     anchors = F.broadcast(
-        spark.createDataFrame(_pivf_anchor_rows(), "cell int, a array<bigint>")
+        _micro_comp(spark.createDataFrame(_pivf_anchor_rows(), "cell int, m array<bigint>"))
+        .withColumnRenamed("micro", "a")
     )
-    # the residual exists where both the vector and its 64-dim anchor do
-    resid = F.slice(
-        F.zip_with("m", "a", lambda x, y: x - y), 1, F.least(F.size("m"), F.size("a"))
-    ).alias("r")
-    res = marr.join(vcell, "vec_id").join(anchors, "cell").select("vec_id", "cell", resid)
-    books = _pq_books(_micro_comp(res, "r"))
-    codes = _pq_encode(_pq_subspaces(res, "r", books, "vec_id", "cell"), "vec_id", "cell")
-    qres = (
-        marr.filter(F.col("vec_id") == 0)
-        .crossJoin(F.broadcast(probe))
-        .join(anchors, "cell")
-        .select("cell", resid)
+    comp = _micro_comp(marr)
+
+    def resid(rows: DataFrame) -> DataFrame:
+        return rows.join(anchors, ["cell", "d"]).withColumn("micro", F.col("micro") - F.col("a"))
+
+    res = resid(comp.join(vcell, "vec_id"))
+    book = F.broadcast(_pq_centroids(res))
+
+    def sse(rows: DataFrame, *keys: str) -> DataFrame:
+        diff = F.col("micro") - F.col("icent")
+        return (
+            rows.join(book, "d")
+            .groupBy(*keys, "sub", "code")
+            .agg(F.sum(diff * diff).alias("sse"))
+        )
+
+    codes = (
+        sse(res, "vec_id", "cell")
+        .groupBy("vec_id", "cell", "sub")
+        .agg(F.min(F.struct("sse", "code")).alias("top"))
+        .select("vec_id", "cell", "sub", "top.code")
     )
-    lut = _pq_lut(_pq_subspaces(qres, "r", books, "cell"), "cell")
+    lut = sse(resid(comp.filter(F.col("vec_id") == 0).crossJoin(F.broadcast(probe))), "cell")
     adc = (
         codes.filter(F.col("vec_id") != 0)
         .join(F.broadcast(lut), ["cell", "sub", "code"])
         .groupBy("vec_id", "cell")
-        .agg(F.sum("part").alias("adc"))
+        .agg(F.sum("sse").alias("adc"))
     )
     top = adc.orderBy("adc", "vec_id").limit(IVFPQ_TOPK)
     w = Window.orderBy("adc", "vec_id")
